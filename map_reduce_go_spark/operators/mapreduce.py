@@ -20,10 +20,15 @@ Two execution strategies:
   (src/mr/worker.go:113-134) — same per-key memory bound, so the same
   caveat applies at 100 TB: fine for bounded values-per-key, wrong for
   giant hot keys.
-- ``strategy="pandas"``: Arrow-batched ``applyInPandas`` over a (key,value)
-  DataFrame. Keeps the logical plan visible to Catalyst/AQE (skewed key
-  groups get split shuffle-side) and moves data Python-side in columnar
-  batches instead of pickled rows — the scale path for Python hooks.
+- ``strategy="pandas"``: the reference's reduce task over Arrow batches.
+  ``mapInPandas`` maps; the (key, value) rows are hash-partitioned into
+  ``n_reduce`` partitions, sorted by key within each, and one
+  ``mapInPandas`` pass per partition walks runs of equal keys, calling
+  ``reduce_fn`` once per run (src/mr/worker.go:136-156). A run may span
+  Arrow batches; only the current key's values are held in Python, the
+  same per-key memory bound as ``rdd``. A hot key still lands in one
+  reduce task: AQE splits skew only in joins and rebalances. Data moves
+  Python-side in columnar batches instead of pickled rows.
 
 Prefer the native DataFrame queries in :mod:`.mrapps` whenever semantics
 allow; this module exists for arbitrary user hooks.
@@ -32,6 +37,8 @@ allow; this module exists for arbitrary user hooks.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
+from itertools import groupby
+from operator import itemgetter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -88,17 +95,30 @@ def map_reduce(
                         out_v.append(v)
                 yield pd.DataFrame({"key": out_k, "value": out_v})
 
-        def reduce_group(pdf):
-            key = pdf["key"].iloc[0]
-            return pd.DataFrame(
-                {"key": [key], "value": [reduce_fn(key, list(pdf["value"]))]}
-            )
+        def reduce_partition(batches):
+            # Rows arrive sorted by key; a run of one key may continue in
+            # the next batch, so the open run is carried across batches.
+            run_key, run_values = None, []
+            for pdf in batches:
+                out_k, out_v = [], []
+                for key, pairs in groupby(zip(pdf["key"], pdf["value"]), itemgetter(0)):
+                    if run_values and key != run_key:
+                        out_k.append(run_key)
+                        out_v.append(reduce_fn(run_key, run_values))
+                        run_values = []
+                    run_key = key
+                    run_values.extend(v for _, v in pairs)
+                yield pd.DataFrame({"key": out_k, "value": out_v})
+            if run_values:
+                yield pd.DataFrame(
+                    {"key": [run_key], "value": [reduce_fn(run_key, run_values)]}
+                )
 
         kv = corpus.mapInPandas(map_partition, schema=KV_SCHEMA)
         return (
             kv.repartition(n_reduce, "key")
-            .groupBy("key")
-            .applyInPandas(reduce_group, schema=KV_SCHEMA)
+            .sortWithinPartitions("key")
+            .mapInPandas(reduce_partition, schema=KV_SCHEMA)
         )
     raise ValueError(f"unknown strategy {strategy!r}")
 

@@ -12,6 +12,15 @@ local[32] test box but chosen to be the *same* knobs you would set on a
   Arrow-batched, never row-pickled.
 - shuffle.partitions: 2x cores locally; on a real cluster you would size it
   so each post-shuffle partition is ~128 MB (AQE coalesces down from there).
+
+Python workers start from :mod:`map_reduce_go_spark.pyworker` (set as
+``spark.python.daemon.module``): Spark's own daemon behind a guard that
+stops ``importlib.invalidate_caches()``, which every task calls, from
+re-reading the unchanged ``pyspark.zip`` directory once per package
+imported from it (14 or more re-reads per task on CPython below 3.13). The daemon and the hooks it runs import this
+package, so :func:`get_spark` appends the package root to ``PYTHONPATH``
+before the JVM starts; workers then import the engine from any working
+directory.
 """
 
 from __future__ import annotations
@@ -72,9 +81,7 @@ def _ensure_protobuf_runtime() -> None:
         # protobuf's documented version-check escape hatch is set
         # process-wide (the one-minor-older runtime is wire-compatible
         # for the TWS protocol; see docstring).
-        os.environ["PYTHONPATH"] = (
-            (os.environ.get("PYTHONPATH", "") + os.pathsep + path).lstrip(os.pathsep)
-        )
+        _append_to_pythonpath(path)
         os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
         import warnings
 
@@ -85,6 +92,16 @@ def _ensure_protobuf_runtime() -> None:
             stacklevel=2,
         )
         return
+
+
+def _append_to_pythonpath(path: str) -> None:
+    """Append ``path`` to ``PYTHONPATH`` unless it is there. Python workers
+    take their environment from the JVM's, which snapshots ours at session
+    start, so this must run before the JVM launches. Appended, never
+    prepended, so the entries already there keep precedence."""
+    entries = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if path not in entries:
+        os.environ["PYTHONPATH"] = os.pathsep.join([*entries, path])
 
 
 def get_spark(
@@ -98,6 +115,9 @@ def get_spark(
     ``SPARK_GRAFT_CPUS`` controls local parallelism (driver contract);
     defaults to all cores.
     """
+    # The worker daemon (pyworker) and the hooks it runs import this
+    # package; ahead of the protobuf fallback, which vendors other packages.
+    _append_to_pythonpath(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     _ensure_protobuf_runtime()
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -127,6 +147,7 @@ def get_spark(
         # Quiet progress bars in test output.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "map_reduce_go_spark.pyworker")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,6 +1,8 @@
 """Order-insensitive result comparison mimicking the driver's correctness
 gate: row count + schema (column names) + value comparison with columns
-sorted by name and rows sorted canonically.
+sorted by name and rows sorted canonically; and the sequential in-process
+MapReduce the generic engine is diffed against (the reference's
+mrsequential).
 """
 
 from __future__ import annotations
@@ -46,3 +48,15 @@ def compare(spark_df, duck_rel, name: str = "query") -> None:
     srows, drows = canonical_rows(sp), canonical_rows(dk)
     for i, (a, b) in enumerate(zip(srows, drows)):
         assert a == b, f"{name}: first differing row #{i}:\n  spark={a}\n  duck ={b}"
+
+
+def sequential_map_reduce(docs, map_fn, reduce_fn) -> dict:
+    """Run the two hooks in-process over ``[(filename, contents)]``: every
+    key's values in emission order, one ``reduce_fn`` call per key."""
+    from collections import defaultdict
+
+    groups = defaultdict(list)
+    for fname, contents in docs:
+        for k, v in map_fn(fname, contents):
+            groups[k].append(v)
+    return {k: reduce_fn(k, vs) for k, vs in groups.items()}

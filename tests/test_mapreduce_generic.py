@@ -12,6 +12,7 @@ import pytest
 from map_reduce_go_spark.operators import mapreduce as mr
 from map_reduce_go_spark.operators.mrapps import inverted_index, wordcount
 from map_reduce_go_spark.sources.readers import corpus_from_documents
+from tests.oracle_compare import sequential_map_reduce
 
 
 def kv_dict(df):
@@ -53,6 +54,54 @@ def test_generic_crash_dataflow(spark, corpus):
     n_docs = corpus.count()
     assert out["d"] == " ".join(["xyzzy"] * n_docs)
     assert out["a"].split(" ") == sorted(out["a"].split(" "))
+
+
+def _run_both(spark, docs, map_fn, reduce_fn, strategy):
+    """(engine rows, sequential in-process result) for the same hooks."""
+    corpus = spark.createDataFrame(docs, "filename string, contents string")
+    rows = mr.map_reduce(spark, corpus, map_fn, reduce_fn, n_reduce=3, strategy=strategy)
+    return rows.collect(), sequential_map_reduce(docs, map_fn, reduce_fn)
+
+
+@pytest.mark.parametrize("strategy", ["rdd", "pandas"])
+def test_null_values_reach_reduce(spark, strategy):
+    """A NULL value is a value: reduce_fn sees it, as the reference's
+    reduce sees every emitted pair."""
+    docs = [("d0", "ant bee ant cat"), ("d1", "bee ant"), ("d2", "cat")]
+
+    def null_map(filename, contents):
+        return [(w, None if i % 2 else filename) for i, w in enumerate(contents.split())]
+
+    def null_reduce(key, values):
+        return f"{sum(v is None for v in values)}/{len(values)}"
+
+    rows, want = _run_both(spark, docs, null_map, null_reduce, strategy)
+    assert {r["key"]: r["value"] for r in rows} == want
+    assert want["ant"] == "1/3"
+
+
+@pytest.mark.parametrize("strategy", ["rdd", "pandas"])
+def test_empty_corpus_gives_no_rows(spark, strategy):
+    rows, want = _run_both(spark, [], mr.wc_map, mr.wc_reduce, strategy)
+    assert rows == [] and want == {}
+
+
+@pytest.mark.parametrize("strategy", ["rdd", "pandas"])
+def test_key_spanning_arrow_batches_reduced_once(spark, strategy):
+    """With 7-row Arrow batches the hot key's 200 values span ~30 batches
+    of its reduce partition; it must still reach reduce_fn as one run."""
+    words = ["ant", "bee", "cat", "dog", "eel"]
+    docs = [(f"d{i}", "hot " * 20 + words[i % 5]) for i in range(10)]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    previous = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        rows, want = _run_both(spark, docs, mr.wc_map, mr.wc_reduce, strategy)
+    finally:
+        spark.conf.set(conf, previous)
+    assert sorted(r["key"] for r in rows) == sorted(want)
+    assert {r["key"]: r["value"] for r in rows} == want
+    assert want["hot"] == "200"
 
 
 def test_text_sink_roundtrip(spark, corpus, tmp_path):

@@ -20,6 +20,7 @@ from pyspark.sql.functions import pandas_udf
 
 from map_reduce_go_spark.operators import mapreduce as mr
 from map_reduce_go_spark.sources.readers import load_table
+from tests.oracle_compare import sequential_map_reduce
 
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
@@ -67,16 +68,6 @@ def test_pandas_udf_matches_builtin(spark, sf_dir):
     assert both.where(F.col("py") != F.col("jvm")).count() == 0
 
 
-def _python_mapreduce(corpus, map_fn, reduce_fn):
-    from collections import defaultdict
-
-    groups = defaultdict(list)
-    for fname, contents in corpus:
-        for k, v in map_fn(fname, contents):
-            groups[k].append(v)
-    return {k: reduce_fn(k, vs) for k, vs in groups.items()}
-
-
 @st.composite
 def corpora(draw):
     n = draw(st.integers(min_value=1, max_value=5))
@@ -101,7 +92,7 @@ def test_generic_engine_matches_python_reference(spark, corpus, strategy):
             spark, df, mr.wc_map, mr.wc_reduce, n_reduce=4, strategy=strategy
         ).collect()
     }
-    want = _python_mapreduce(corpus, mr.wc_map, mr.wc_reduce)
+    want = sequential_map_reduce(corpus, mr.wc_map, mr.wc_reduce)
     assert got == want
 
 
