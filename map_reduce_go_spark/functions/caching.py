@@ -49,16 +49,9 @@ def clear_memos() -> None:
         memo.clear()
 
 
-def fixture_key(spark: SparkSession, sf_dir: str, *tables: str) -> tuple:
-    """Memo key for per-fixture state: (applicationId, resolved dir,
-    max mtime_ns of each named table's parquet tree).
-
-    applicationId scopes session-bound state (checkpointed DataFrames)
-    to the session that built it; the mtime component makes an
-    IN-SESSION fixture regeneration at the same path rebuild instead of
-    serving the previous corpus's index (VERDICT r5 #3 — the latent
-    stale-codebook bug). The 100 TB analog is versioning a persisted
-    index by corpus snapshot id."""
+def fixture_stamp(sf_dir: str, *tables: str) -> tuple:
+    """(resolved dir, max mtime_ns of each named table's parquet tree); 0
+    for a table that does not exist. Needs no session."""
     import os
 
     root = os.path.realpath(sf_dir)
@@ -73,7 +66,20 @@ def fixture_key(spark: SparkSession, sf_dir: str, *tables: str) -> tuple:
         elif os.path.exists(p):
             newest = os.stat(p).st_mtime_ns
         stamps.append(newest)
-    return (spark.sparkContext.applicationId, root, *stamps)
+    return (root, *stamps)
+
+
+def fixture_key(spark: SparkSession, sf_dir: str, *tables: str) -> tuple:
+    """Memo key for per-fixture state: (applicationId, resolved dir,
+    max mtime_ns of each named table's parquet tree).
+
+    applicationId scopes session-bound state (checkpointed DataFrames)
+    to the session that built it; the mtime component makes an
+    IN-SESSION fixture regeneration at the same path rebuild instead of
+    serving the previous corpus's index (VERDICT r5 #3 — the latent
+    stale-codebook bug). The 100 TB analog is versioning a persisted
+    index by corpus snapshot id."""
+    return (spark.sparkContext.applicationId, *fixture_stamp(sf_dir, *tables))
 
 
 def tracked_cache(df: DataFrame) -> DataFrame:

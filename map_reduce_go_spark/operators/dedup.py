@@ -560,11 +560,21 @@ _CLUSTER_J = 0.5  # near-dup edge threshold
 
 
 def _near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric (src, dst) edges: candidate pairs with Jaccard >= threshold."""
+    """Symmetric (src, dst) edges: candidate pairs with Jaccard >= threshold.
+
+    Both directions come out of one generator over each pair, so the
+    shingle -> minhash -> band self-join -> Jaccard chain is planned and
+    run once (a union of the two directions would run it twice)."""
     pairs = dedup_minhash_lsh(spark, sf_dir).where(F.col("jaccard") >= _CLUSTER_J)
-    fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    rev = pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    return fwd.unionByName(rev)
+    a, b = F.col("doc_a"), F.col("doc_b")
+    return pairs.select(
+        F.inline(
+            F.array(
+                F.struct(a.alias("src"), b.alias("dst")),
+                F.struct(b.alias("src"), a.alias("dst")),
+            )
+        )
+    )
 
 
 # CTE chain shared by the cluster-family oracles: LSH candidates -> exact
@@ -652,67 +662,84 @@ _LABEL_CACHE: dict[tuple[str, str], DataFrame] = register_memo({})
 
 
 def _converged_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster label of every doc with at least one near-dup edge, memoized
+    per fixture (see ``_LABEL_CACHE``).
+
+    Jobs: the edge checkpoint (the LSH chain, run once; ~11 jobs, as AQE
+    runs each shuffle stage as a job of its own), then the propagation of
+    :func:`_propagate_min_labels`: 2 jobs for the one-hop seed and ~4 per
+    round. Clusters of diameter at most d take at most d rounds after the
+    seed: d - 1 to reach the fixed point and one to see the label-sum stop
+    moving (clusters that are all pairs: one round, 6 propagation jobs)."""
     from map_reduce_go_spark.functions.caching import fixture_key
 
     # (appId, path, documents mtime): appId scopes the checkpointed
     # frame to its session; the mtime makes an in-session fixture
     # regeneration rebuild (same policy as the IVF/PQ codebook memos).
     key = fixture_key(spark, sf_dir, "documents")
-    if key in _LABEL_CACHE:
-        return _LABEL_CACHE[key]
+    if key not in _LABEL_CACHE:
+        edges = _near_dup_edges(spark, sf_dir).localCheckpoint()
+        _LABEL_CACHE[key] = _propagate_min_labels(edges)
+    return _LABEL_CACHE[key]
 
-    edges = _near_dup_edges(spark, sf_dir).localCheckpoint()
-    # Iterate ONLY over graph nodes (docs with at least one near-dup edge):
-    # singleton docs — the overwhelming majority of a deduped corpus —
-    # keep cluster_id = doc_id and never enter the loop, so each round
-    # shuffles the (tiny) node set, not the corpus. Edges are symmetric,
-    # so `src` alone covers every node.
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    # Convergence via the label-sum invariant: min-propagation is monotone
-    # non-increasing per doc, so sum(cluster_id) unchanged <=> fixed point.
-    # The sum piggybacks on the checkpoint job as an observe() metric
-    # (r16) — ONE job per round instead of checkpoint + separate scalar
-    # collect, halving the per-round fixed job cost of the loop.
+
+def _propagate_min_labels(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
+    """Min-label propagation over SYMMETRIC ``(src, dst)`` edges ->
+    checkpointed ``(doc_id, cluster_id)``: each node labeled with the
+    smallest node id of its connected component.
+
+    Iterates ONLY over graph nodes (docs with at least one near-dup edge):
+    singleton docs — the overwhelming majority of a deduped corpus — keep
+    cluster_id = doc_id and never enter the loop, so each round shuffles
+    the (tiny) node set, not the corpus. Edges are symmetric, so ``src``
+    alone covers every node.
+
+    The seed is already one hop, min(self, neighbours), straight from the
+    edges. Each round then joins labels across edges and takes the min.
+    ``max_rounds`` bounds the number of label frames, seed included; a
+    cluster of diameter d needs d + 1 of them. Raises RuntimeError when
+    the label-sum is still changing at the last one.
+    """
     from pyspark.sql import Observation
 
-    prev_sum = None
-    converged = False
-    max_rounds = 20  # diameter bound; converges in 2-4 rounds here
-    for rnd in range(max_rounds):
+    # Convergence via the label-sum invariant: min-propagation is monotone
+    # non-increasing per doc, so sum(cluster_id) unchanged <=> fixed point.
+    # The sum piggybacks on each checkpoint job as an observe() metric —
+    # ONE job per label frame, no separate scalar collect.
+    def checkpoint(frame: DataFrame, rnd: int) -> tuple[DataFrame, object]:
+        obs = Observation(f"labelsum_{rnd}")
+        frame = frame.observe(obs, F.sum("cluster_id").alias("s")).localCheckpoint()
+        return frame, obs.get["s"]
+
+    labels, prev_sum = checkpoint(
+        edges.groupBy(F.col("src").alias("doc_id")).agg(
+            F.least(F.col("src"), F.min("dst")).alias("cluster_id")
+        ),
+        0,
+    )
+    for rnd in range(1, max_rounds):
         propagated = (
             edges.join(labels, edges.src == labels.doc_id)
             .select(F.col("dst").alias("doc_id"), "cluster_id")
         )
-        obs = Observation(f"labelsum_{rnd}")
-        labels = (
+        labels, cur_sum = checkpoint(
             labels.unionByName(propagated)
             .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
-            .observe(obs, F.sum("cluster_id").alias("s"))
-            .localCheckpoint()
+            .agg(F.min("cluster_id").alias("cluster_id")),
+            rnd,
         )
-        cur_sum = obs.get["s"]
         if cur_sum == prev_sum:
-            converged = True
-            break
+            return labels
         prev_sum = cur_sum
-    if not converged:
-        # A silent exit here would return WRONG cluster ids for any graph
-        # with diameter > max_rounds — fail loudly instead; callers retry
-        # with a higher bound (rounds scale with cluster diameter, which
-        # stays small for near-dup graphs even at 100 TB).
-        raise RuntimeError(
-            f"dedup_clusters: min-label propagation did not converge within "
-            f"{max_rounds} rounds (label-sum still changing); raise the round "
-            f"bound for this graph"
-        )
-    _LABEL_CACHE[key] = labels
-    return labels
+    # A silent exit here would return WRONG cluster ids for any graph
+    # with diameter > max_rounds — fail loudly instead; callers retry
+    # with a higher bound (rounds scale with cluster diameter, which
+    # stays small for near-dup graphs even at 100 TB).
+    raise RuntimeError(
+        f"dedup_clusters: min-label propagation did not converge within "
+        f"{max_rounds} rounds (label-sum still changing); raise the round "
+        f"bound for this graph"
+    )
 
 
 # --------------------------------------------------------------------------

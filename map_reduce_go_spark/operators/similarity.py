@@ -432,10 +432,14 @@ def ivf_train_centroids(emb: DataFrame) -> list[list[float]]:
     # therefore caps a cell at ~9.2e10 rows. The 100 TB design point is
     # ~6e9 rows/cell at K=16 (~15× margin); corpora beyond that must
     # widen the buffer (decimal(38,0)) or add cells.
-    def scaled(i: int) -> Column:
-        return (
-            F.col("embedding")[i].cast("decimal(18,8)") * 100000000
-        ).cast("long")
+    #
+    # Each sum is one SQL string, not a chain of ~7 Column calls: PySpark
+    # records a call site per Column call (Py4J round trips plus a stack
+    # walk), which made the 64 sums cost more driver time than the job.
+    def scaled_sum(i: int) -> Column:
+        return F.expr(
+            f"sum(CAST(CAST(embedding[{i}] AS DECIMAL(18,8)) * 100000000 AS BIGINT)) AS s{i}"
+        )
 
     means = (
         emb.select(
@@ -445,7 +449,7 @@ def ivf_train_centroids(emb: DataFrame) -> list[list[float]]:
         .groupBy("cell")
         .agg(
             cnt.alias("c"),
-            *[F.sum(scaled(i)).alias(f"s{i}") for i in range(_DIM)],
+            *[scaled_sum(i) for i in range(_DIM)],
         )
         .collect()
     )

@@ -370,3 +370,17 @@ def test_no_unbounded_global_window_in_any_query(spark, sf_dir):
                 offenders.append((name, chain))
                 break
     assert not offenders, f"unbounded global windows: {offenders}"
+
+
+def test_near_dup_edges_plan_builds_pairs_once(spark, sf_dir):
+    """Both edge directions come from one generator over the pairs, so the
+    LSH chain is planned once: no Union in the plan, and the rows are
+    still symmetric with no duplicate (src, dst)."""
+    from map_reduce_go_spark.operators.dedup import _near_dup_edges
+
+    edges = _near_dup_edges(spark, sf_dir)
+    assert "Union" not in _plan(edges)
+    rows = [(r["src"], r["dst"]) for r in edges.collect()]
+    assert rows, "fixture yields no near-dup edges; the symmetry check is vacuous"
+    assert len(rows) == len(set(rows)), "duplicate (src, dst) edges"
+    assert {(d, s) for s, d in rows} == set(rows), "edges are not symmetric"

@@ -243,3 +243,74 @@ def test_observation_metrics_ride_the_action(spark, sf_dir):
     assert got["n_rows"] == want["n"]
     assert (got["null_chars"] or 0) == (want["nn"] or 0)
     assert got["max_chars"] == want["mx"]
+
+
+def test_load_table_footer_schema_matches_inference(spark, sf_dir):
+    """load_table takes each table's schema from the Parquet footer; it must
+    be exactly the schema Spark's own inference job gives (types, names
+    and nullability), or the scan reads a different table. ``events``
+    still goes through inference and its timestamp shim."""
+    from map_reduce_go_spark.sources.readers import TABLES
+
+    for name in TABLES:
+        if name == "events":
+            continue
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        assert load_table(spark, sf_dir, name).schema == inferred, name
+
+
+def test_load_table_keeps_inference_where_the_footer_could_differ(spark, tmp_path):
+    """Unsigned integers (no PySpark mapping from Arrow) and a partitioned
+    directory (partition columns are not in any footer) still read with
+    Spark's inferred schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([1, 2], pa.uint32()), "r_name": ["a", "b"]}),
+        tmp_path / "region.parquet",
+    )
+    nation = spark.createDataFrame(
+        [(1, "x", 3)], "n_nationkey int, n_name string, n_regionkey int"
+    )
+    nation.write.partitionBy("n_regionkey").parquet(str(tmp_path / "nation.parquet"))
+    for name in ("region", "nation"):
+        inferred = spark.read.parquet(str(tmp_path / f"{name}.parquet")).schema
+        assert load_table(spark, str(tmp_path), name).schema == inferred, name
+
+
+def test_load_table_starts_no_spark_job(spark, sf_dir):
+    """The footer read replaces Spark's one-task schema-inference job."""
+    from map_reduce_go_spark.sources.readers import TABLES
+
+    sc = spark.sparkContext
+    group = "test_load_table_starts_no_spark_job"
+    sc.setJobGroup(group, "load_table job count")
+    try:
+        for name in TABLES:
+            if name != "events":
+                load_table(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_table_num_rows_sees_in_session_regeneration(tmp_path):
+    """The row-count memo is keyed by the table's mtime as well as its path,
+    so a table rewritten at the same path is counted again."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from map_reduce_go_spark.sources.readers import table_num_rows
+
+    path = tmp_path / "orders.parquet"
+    pq.write_table(pa.table({"o_orderkey": list(range(5))}), path)
+    assert table_num_rows(str(tmp_path), "orders") == 5
+    before = os.stat(path).st_mtime_ns
+    pq.write_table(pa.table({"o_orderkey": list(range(8))}), path)
+    # A coarse filesystem clock can give two quick writes the same mtime;
+    # set a later one explicitly, as a regeneration seconds later would.
+    os.utime(path, ns=(before + 10**9, before + 10**9))
+    assert table_num_rows(str(tmp_path), "orders") == 8
