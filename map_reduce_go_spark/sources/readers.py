@@ -79,10 +79,13 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
     job (~90 ms); the footer holds the same facts. Timestamps without a
     time zone map to TIMESTAMP_NTZ exactly when Spark's own inference
     would (``spark.sql.parquet.inferTimestampNTZ.enabled``). Directory
-    datasets (partition columns) and types outside
-    :func:`_maps_like_spark` return None.
+    datasets (partition columns), types outside :func:`_maps_like_spark`
+    and sessions with ``spark.sql.parquet.binaryAsString`` set (inference
+    then reads unannotated binary as string) return None.
     """
     if not os.path.isfile(path):
+        return None
+    if spark.conf.get("spark.sql.parquet.binaryAsString", "false") == "true":
         return None
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema

@@ -97,7 +97,6 @@ def main() -> int:
     ap.add_argument("--seeds", required=True, help="inclusive range, e.g. 7..16")
     ap.add_argument("--workdir", default=tempfile.gettempdir(),
                     help="where the parent is exported (default: the temp dir)")
-    ap.add_argument("--jsonl", help="also append each run's result to this file")
     args = ap.parse_args()
 
     sides = {"parent": export_parent(args.parent, Path(args.workdir)), "change": ROOT}
@@ -112,9 +111,6 @@ def main() -> int:
                     "failed": result["failed"],
                     **{k: round(v["value"], 4) for k, v in result["metrics"].items()}}
             print(json.dumps(line), flush=True)
-            if args.jsonl:
-                with open(args.jsonl, "a") as f:
-                    f.write(json.dumps(line) + "\n")
     report(runs, better)
     return 0
 

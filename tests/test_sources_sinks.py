@@ -279,6 +279,31 @@ def test_load_table_keeps_inference_where_the_footer_could_differ(spark, tmp_pat
         assert load_table(spark, str(tmp_path), name).schema == inferred, name
 
 
+def test_load_table_follows_binary_as_string(spark, tmp_path):
+    """With ``spark.sql.parquet.binaryAsString`` set, inference reads a
+    binary column without a string annotation as string; load_table must
+    give the same schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({"r_regionkey": [1, 2], "r_name": pa.array([b"a", b"b"], pa.binary())}),
+        tmp_path / "region.parquet",
+    )
+    key = "spark.sql.parquet.binaryAsString"
+    before = spark.conf.get(key, "false")
+    spark.conf.set(key, "true")
+    try:
+        inferred = spark.read.parquet(str(tmp_path / "region.parquet")).schema
+        assert dict((f.name, f.dataType.simpleString()) for f in inferred)["r_name"] == "string"
+        assert load_table(spark, str(tmp_path), "region").schema == inferred
+    finally:
+        spark.conf.set(key, before)
+    assert load_table(spark, str(tmp_path), "region").schema == (
+        spark.read.parquet(str(tmp_path / "region.parquet")).schema
+    )
+
+
 def test_load_table_starts_no_spark_job(spark, sf_dir):
     """The footer read replaces Spark's one-task schema-inference job."""
     from map_reduce_go_spark.sources.readers import TABLES
