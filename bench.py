@@ -1,306 +1,134 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...} — sized to fit the driver's 2000-char
-stdout tail. The full record (per-query spread, warm timings, error
-messages) is written to $SPARK_GRAFT_BENCH_OUT (default
-./BENCH_LOCAL.json, tracked) so cold medians stay auditable across
-rounds even when stdout is truncated.
+"queries": {name: sec}, "sf": ...} — sized to fit a 2000-char stdout
+tail. The full record is written to $SPARK_GRAFT_BENCH_OUT (default
+./BENCH_LOCAL.json, tracked): for each query, the median over its cold
+runs of every field :func:`run_query` records, the wall and task-CPU
+[min, max], one warm timing and any error.
 
-Execution is forced with a noop sink (full computation, nothing collected
-to the driver) — the honest measure of distributed work.
+Every query runs through :func:`run_query`, the one query runner that
+scripts/time_query.py, scripts/verify_driver.py and scripts/scale_probe.py
+also call. Execution is forced with a noop sink (full computation, nothing
+collected to the driver).
+
+Reading a change: job, stage and task counts repeat exactly across cold
+runs and shuffle bytes to within a few bytes. A change is real when
+counts, bytes or task CPU move beyond their recorded spread; a
+wall-clock total alone is not evidence.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import json
 import os
 import sys
 import time
+import uuid
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 from map_reduce_go_spark import get_spark  # noqa: E402
+from map_reduce_go_spark.functions.caching import clear_memos, release_caches  # noqa: E402
 from map_reduce_go_spark.registry import all_queries  # noqa: E402
+from perfbench.collect import StatusCollector  # noqa: E402
 
-# Round-over-round observations worth a durable record (the per-round
-# BENCH_r{N}.json files are driver-owned snapshots; this travels with
-# every tracked BENCH_LOCAL.json).
-NOTES = (
-    "r6 small-query cold drift (q3 1.09->1.49s, q1 1.19->1.58s at r6) "
-    "receded in r7 with NO plan change (q3 1.49->1.09s) - consistent "
-    "with harness/host-level variance (JIT/page-cache state at driver "
-    "run time), not a plan regression; canary: q3+q1+wordcount cold sum "
-    "~3.0s is the expected band, >4s suggests harness noise before "
-    "suspecting plans. Late r8: suite grew 50->53 headliners "
-    "(winnowing/SNM/FIFO, ~1s each cold); the same-run jump 52->64s is "
-    "~3s new queries + host variance on the heavy tail (ann_ivf_cosine "
-    "1.8->2.9s with no plan change - inside its recorded 3-run spread). "
-    "r8 close: suite is 54 headliners (auc_value_by_event_type joins as "
-    "the model-eval family's fact-scaling canary, ~1.4s cold); compare "
-    "suite seconds round-over-round per query, never by the total. "
-    "r9 (empty round, byte-identical code): the r8 watch item "
-    "equidepth_histogram_price_approx 0.94->1.34s REVERTED to 0.94s - "
-    "settled as host drift, not plan state; equidepth joins the canary "
-    "set (expected ~0.9-1.0s cold, distributed-rank window plan), so "
-    "future 1.3s-class readings are noise unless the plan test fails. "
-    "r10: suite is 56 headliners (+cdc_gear_chunk_stats ~0.7-0.9s, "
-    "+ann_ivf_persisted ~1.2s probe-only — its on-disk index survives "
-    "clear_memos BY DESIGN, so only a fixture regeneration re-pays the "
-    "build; spearman's cross-sum folded into the price rollup, "
-    "removing the fact-on-price shuffle join). "
-    "r10 close: 57 headliners (+classifier_calibration_bins ~0.55s "
-    "cold, the one-scan/two-exchange corpus pass); suite 61.5s cold "
-    "(the 80.1s mid-r10 reading had setsim_prefix_filter_join at 6.1s "
-    "vs 3.9s now on an identical plan — host variance on the heavy "
-    "tail, canary band unchanged); persisted-index builds now cluster "
-    "by the partition column before partitionBy (one file per "
-    "cell/bucket; the un-clustered 32x LSH build was 59.6s, clustered "
-    "3.9s — see SCALE.md). "
-    "r11: cdc_chunk_stats dropped from the headline set per VERDICT r10 "
-    "#5 (the md5 O(window)/byte form was the suite's #3 cost and its "
-    "per-position explode is a deliberate oracle-semantics constant, "
-    "not a plan to re-measure cold; it stays registered and "
-    "driver-green, and SCALE.md keeps both CDC forms' ratio rows); "
-    "multimodal_quarantine_audit joins (~0.6s cold at sf0.1: real "
-    "per-blob PNG encode+decode through mapInPandas — the "
-    "blobs-decoded-per-second canary) — suite is 57 headliners. "
-    "r11 close: two same-code readings 57.5s and 66.2s — the 8.7s gap "
-    "is spread +0.2-0.8s across ~20 UNRELATED queries (equidepth at its "
-    "documented 1.3s noise reading, canary band 2.44->2.85, all plan "
-    "tests green; the r11-touched ann/quarantine queries are not among "
-    "the top deltas) — host drift after hours of batteries, the r6/r9 "
-    "pattern again. Trust per-query medians across rounds, not totals. "
-    "r12: round-over-round comparison is now formalized on the per-query "
-    "COLD MEDIANS in this file's queries/spread fields (VERDICT r11 #8 — "
-    "the 57.5s-vs-66.2s same-code gap proved totals/singles unusable); "
-    "a >25% median delta with a disjoint [min,max] spread is real, "
-    "anything else is host noise. Plan-affecting r12 changes to watch: "
-    "ann_ranking_quality is NOT a headliner but its exact leg is now "
-    "hash-SAMPLED (2/5 queries — expect its ad-hoc timings to drop); "
-    "orders_rfm_segmentation/revenue_lorenz_gini/customer_spend_deciles "
-    "moved to the distributed rank (3 range shuffles + joins replace 3 "
-    "single-partition ntile windows in RFM — a small fixed cost at "
-    "sf0.1, the whole point at 100 TB); quarantine fixture gained the "
-    "BMP class (doc_id%6 — slightly more ok-rows decoded per pass). "
-    "classifier_train_scores (registered r12) is deliberately NOT a "
-    "headliner: it is a multi-action training loop (~7s at sf0.1, "
-    "dominated by fixed per-iteration job overhead); its scale story "
-    "lives in SCALE.md's clstrain probes, and timing it cold in the "
-    "suite would triple-pay the loop for no per-plan signal. "
-    "r13: the semdedup_prune r12 watch item (2.33->2.87 cold median, "
-    "+23%) is ADJUDICATED, verdict = cold-measurement variance of a "
-    "build-dominated leg, not a plan regression. Evidence: the plan is "
-    "git-verified unchanged since r10; within one r13 session a "
-    "median-of-5 read 2.859 (matching r12) and the round-close suite "
-    "run read 2.315 (matching r11) on IDENTICAL code — the same-code "
-    "swing spans the whole disputed range; and the cold cost "
-    "decomposes 53% memoized IVF build (two k-means training jobs; "
-    "warm median 1.34s) / 47% within-cell prune, so the variance "
-    "concentrates in fixed training-job JVM overhead the memo "
-    "amortizes in any real session. Expected band: cold 2.2-3.4s, "
-    "warm ~1.3s; plan-test failure, not a timing reading, is the "
-    "regression signal. Plan-affecting r13 "
-    "changes to watch: the quarantine fixture re-keys to doc_id%8 "
-    "with a real JPEG class 6 (pure-Python Huffman+IDCT decode per "
-    "blob — expect multimodal_quarantine_audit ~+0.2-0.4s cold for "
-    "the extra decode work) and a G.711 u-law WAV class 7 (table-"
-    "lookup decode, negligible cost), the foreign-magic class is GIF; "
-    "the distrank/prefix fan-out derives from shuffle.partitions (32 "
-    "here vs the old constant 8 — more, smaller range tasks; hash-"
-    "invariance is probe-asserted in SCALE.md's distrank table); "
-    "kv_apply_log (registered r13) is a two-shuffle key fold, ~1s "
-    "class, not a headliner. Late-r13 session (audio codecs + color "
-    "JPEG + mulaw_audio_energy_windows landed): suite reads 69.8s and "
-    "76.8s on back-to-back median-of-3 runs vs 57.7s at the earlier "
-    "r13 close — the elevation is UNIFORM across untouched plans "
-    "(median per-query ratio ~1.05-1.2; canary trio q1+q3+wordcount "
-    "3.7s vs the ~3.0s band; TPC-H joins and dedup legs up 1.4-1.7x "
-    "with zero code change; different queries lead each run), which "
-    "is the canary rule's host-noise signature, not a regression — "
-    "plan sweeps green on all 253 queries. The one TOUCHED headliner, "
-    "multimodal_quarantine_audit (%8 re-key + u-law class), reads "
-    "0.65-0.91s, DOWN vs its 0.91s prior median. "
-    "mulaw_audio_energy_windows (registered late r13) is a zero-"
-    "shuffle scan->mapInPandas leg, ~0.5s class, not a headliner. "
-    "Round-close reading (progressive-JPEG fixture live): 64.0s — "
-    "inside the day's 57.7-76.8s host-drift band; semdedup 2.32s "
-    "(band center); quarantine 64x probe unchanged at 3.8-3.9s with "
-    "1/16 of blobs decoding multi-scan SOF2. "
-    "r14 ADJUDICATION of the two r13 >25% median movers (VERDICT r13 "
-    "#2): fresh median-of-5 mid-r14 read ann_ivf_cosine cold 4.06 "
-    "[2.70-10.41] warm 1.24 [1.05-1.50], dedup_minhash_lsh cold 2.35 "
-    "[1.76-4.14] warm 1.75 [1.42-3.71] — NOT back in the r12 band, and "
-    "the named cause is host-level, not plan-level: (a) both plans are "
-    "git-verified byte-identical since r10 (similarity.py untouched "
-    "this round; dedup.py r14 changes are appended-only new functions); "
-    "(b) the SAME session's canary members each read 1.3-1.6x their "
-    "centers (q1 1.44-1.71 vs ~1.19-1.58, wordcount ~0.50 vs ~0.40) — "
-    "the uniform-elevation signature r13's round-close documented, now "
-    "after ~2h of 64x probe batteries; (c) both queries' same-session "
-    "MINIMA (2.70 / 1.76) land inside their r13 spreads, and a "
-    "same-code 4x intra-session swing (2.70->10.41) is not a plan "
-    "property; (d) the ann decomposition matches the semdedup_prune "
-    "r13 precedent — cold-warm ~2.8s is the memoized IVF build's two "
-    "k-means training jobs, i.e. fixed job overhead that moves with "
-    "host state, while the warm probe leg tracks the same host factor "
-    "as the canaries. CONFIRMED at r14 close: on a calm host (canary "
-    "trio 2.889, band center) the round-close suite read ann_ivf_cosine "
-    "2.285 [2.02-2.95] — byte-equal to r13's 2.286 median — and "
-    "dedup_minhash_lsh 1.641 [1.45-2.73], BELOW r13's 1.834; the "
-    "mid-round elevated medians were the post-probe host band, exactly "
-    "as adjudicated. Watch state: closed; a >25% WARM-median move on a "
-    "calm canary (trio < 3.0) is the signal that would reopen this as "
-    "a plan question. "
-    "r14: the canary trio (q1+q3+wordcount cold medians) and the "
-    "current host-drift band are now EMITTED as canary_seconds/"
-    "drift_band in every record (VERDICT r13 #7) so a noisy round is "
-    "adjudicable from the driver artifact alone. dedup_maximal_spans "
-    "joins the headline set (winnowing-candidate position join + "
-    "diagonal-island window — the span-extension family's scale "
-    "plan); shardctrler_apply_log (registered r14) is a bounded "
-    "control-plane fold + one distinct-over-orders agg, ~1s class, "
-    "not a headliner (the kv_apply_log precedent). "
-    "r15 ADJUDICATION of pagerank_nation_trade (VERDICT r14 watch item "
-    "1 / #2): the cause was PLAN-level and is fixed. Each power "
-    "iteration referenced pr TWICE (leaked + incoming), so the lazily "
-    "composed 3-iteration loop re-evaluated the chain ~2^iters times "
-    "with a broadcast exchange per reference — cost rode driver/JVM "
-    "state, which is why it did NOT return to band on a calm host. "
-    "Measured mid-r15 on a noisy host (canary trio 4.9-6.4, well above "
-    "band): median-of-5 BEFORE fix 7.53 [4.24, 16.95] — the wide "
-    "spread is the deep-plan signature; AFTER an eager 25-row "
-    "localCheckpoint per iteration, median-of-3 3.70 [3.67, 3.71] on "
-    "the SAME noisy host — tight spread, values bit-identical (mass "
-    "conservation + oracle re-verified). Expected calm-host band: "
-    "~2.5-3.5s cold. dedup_span_apply / dedup_span_attrition_by_source "
-    "(registered r15, the cut-application stage) are NOT headliners: "
-    "they recompute the full span pipeline plus a corpus tokenize-join "
-    "(~8-9s cold on the same noisy host), and dedup_maximal_spans "
-    "already canaries the family's scale-sensitive core; their scale "
-    "story inherits the match-join sizing below. shared_span_runs now "
-    "SIZES the match-join shuffle from measured candidate mass "
-    "(VERDICT r14 #4): two one-scalar pre-jobs that populate caches "
-    "the plan reuses, then both join sides repartition to "
-    "ceil(mass/2M) on the join keys — expect dedup_maximal_spans cold "
-    "+0.3-0.7s at sf0.1 for the pre-jobs, bought back many times over "
-    "at 64x (see SCALE.md's re-probe). "
-    "r15 close (calm host, light canary 2.93 = band center): suite "
-    "69.7s in-band; pagerank cold median 2.48 [2.39, 2.82] — BELOW "
-    "every prior round (r10-r12 band 2.97-3.56), watch item closed; "
-    "dedup_maximal_spans cold 6.0 [5.7, 7.2] vs 4.0 at r14 — the "
-    "measured 1x price of the match-join sizing is ~+2s (the two "
-    "pre-jobs serialize the fingerprint and position builds ahead of "
-    "the main job instead of overlapping them inside it), larger than "
-    "the +0.3-0.7 first estimated and accepted against the 64x win "
-    "(895.6 -> 676-680s); its warm ~= cold (5.69), so the cost is "
-    "structural, not memo-related — a >7s calm-cold median is the "
-    "re-look signal. Post-close the two pre-actions were overlapped "
-    "(concurrent jobs on independent cached frames): cost is now "
-    "max(fingerprint build, position build), median ~5.6-5.7 on a "
-    "mildly elevated host. First heavy-canary calm reading: 3.58 "
-    "(dedup_clusters warm is memo-trivial at ~0.15s), band recalibrated "
-    "to [1.8, 5.5] before BENCH_r15. "
-    "r16: the match-join sizing is two-tier (one-aggregate mass bound; "
-    "exact candidate count only when the bound exceeds the default "
-    "width's budget — VERDICT r15 #3), so at sf0.1 dedup_maximal_spans "
-    "takes the cheap path and its construction is ~2s cheaper than the "
-    "r15 plan in same-session A/B; the whole r16 session ran on an "
-    "elevated, DISK-CONTENDED host (light canaries 5.4-6.9, disk ~92% "
-    "util with queue ~42 during span match phases; four same-code 64x "
-    "runs spread 923-2006s while CPU controls stayed flat at 1.5s) — "
-    "see SCALE.md's r16 adjudication: the new sizing (700 parts) beat "
-    "the r15 width (560) 923.5 vs 1503.8 head-to-head. A calm window "
-    "finally opened at the session's end (light canary 3.131, band "
-    "center): dedup_maximal_spans calm cold median-of-5 = 6.30 "
-    "[5.10, 11.37] — BELOW the 7s re-look threshold (VERDICT r15 #2 "
-    "closed; the 11.4 tail run is the session's residual intermittent "
-    "disk). The same window minted SIX calm heavy-canary samples "
-    "(2.55-4.80); with the ledger's calm bench sample (2.864) and "
-    "r15's 3.58 that is eight calm samples, and the band is "
-    "recalibrated to [2.0, 5.3] per the ledger rule (see "
-    "HEAVY_CANARY_RATIO_BAND's derivation comment). Earlier "
-    "elevated-host spans 1x medians for contrast: 15.8 [11.8, 25.3] "
-    "at a 5.4 canary. "
-    "r17: pipeline_stage_attrition's r16 driver regression adjudicated "
-    "by interleaved A/B (aggregate form 1.90 vs join form 2.08 calm "
-    "medians) — aggregate form kept; the four untouched r16 "
-    "'regressions' (bigram/tfidf/mad/survival) all read back in-band "
-    "at the calm r17 baseline (76.27 total, canary 2.829). Optimized: "
-    "semdedup 3.14->2.09, ann_pq_adc 3.07->2.23, setsim 4.49->3.81 "
-    "calm-dev (2.88 in the first final-code bench), span candidate "
-    "stage A/B 5.08 vs 5.27. Final-code suite totals 73.1/83.5/88.4 "
-    "across three light-calm runs — the spread is roaming heavy-tail "
-    "host noise (untouched dedup_clusters cold 2.67->5.69 swings at "
-    "flat light canaries); both bands recalibrated from the ledger "
-    "(DRIFT_BAND [66, 93] at 58 headliners, heavy ratio [5.0, 11.0] "
-    "after the semdedup warm-leg rebase). 64x span probe on a CALM "
-    "disk at last: 224.8/296.1 s (24.6-27.7x) vs the 923-2006 s "
-    "contended r16 spread — see SCALE.md."
-)
+RUNS = 3  # cold runs per query; the bench reports their median
+WARM_MIN_S = 0.5  # a memo-free query's warm run equals its cold run
 
-# The adjudication bands the NOTES prose derives (kept as data so each
-# BENCH record carries them): canary trio cold-sum expected band and the
-# same-code suite-total swing observed across r13 sessions. Readings
-# outside CANARY_BAND suggest host noise before plan regressions; suite
-# totals anywhere inside DRIFT_BAND are not evidence of a change.
-CANARY = ("q1_pricing_summary", "q3_top_revenue_orders", "wordcount")
-CANARY_BAND = [2.4, 4.0]
-# DRIFT_BAND recalibrated r17 (VERDICT r16 #8): the [57.7, 76.8] band
-# predated the growth to 58 headliners and flagged every normal run
-# (r16 driver 81.3, r16 8c 78.6 — both calm). Derivation, same ledger
-# discipline as the heavy band: the six light-canary-calm suite totals
-# at n_headliners=58 recorded in BENCH_SAMPLES.jsonl — 81.322 (r16
-# code), 76.271 (r17 wave-1 code), then 85.025 / 73.075 / 88.395 /
-# 83.490 on the final r17 code (the spread is the host's roaming
-# heavy-tail noise: e.g. the UNTOUCHED dedup_clusters read 2.67 / 3.67
-# / 3.38 / 5.69 cold across those runs at flat light canaries). Floor =
-# best final-code calm total (73.1) − ~10%; ceiling = worst light-calm
-# sample (88.4) + ~5%. Totals inside [66, 93] are not evidence of a
-# change; outside, adjudicate with the canaries + per-query spreads.
-DRIFT_BAND = [66.0, 93.0]
+#: Record fields read from Spark's status store: counts and bytes, then
+#: seconds of executor task time.
+COUNTS = ("jobs", "build_jobs", "stages", "tasks")
+BYTES = ("shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes")
+TASK_TIMES = ("task_run_s", "task_cpu_s", "gc_s")
+FIELDS = ("seconds", "build_s", *COUNTS, *BYTES, *TASK_TIMES)
 
-# Heavy-tail canary (VERDICT r14 #3): the light trio senses scan-light
-# host noise only — BENCH_r14 read its canary IN-band (3.429) while the
-# suite total landed 42% above DRIFT_BAND because the noise concentrated
-# in fixture-rebuild/memory-pressure territory (dedup_clusters cold
-# spread [9.6, 17.2] in the same session whose WARM reading was a normal
-# 1.16 s). The second canary therefore measures exactly that seam: the
-# COLD/WARM ratio of the two build-dominated headliners. Calm-host
-# decomposition (documented r13/r14): dedup_clusters cold ~2.6-3.3 /
-# warm ~1.2; semdedup_prune cold ~2.2-3.4 / warm ~1.3 — summed ratio
-# ~1.8-2.8. Memory-pressure sessions read 4-7x while warm stays flat, so
-# a ratio above the band adjudicates "heavy-tail host noise" from the
-# artifact alone even when the light trio is calm.
-HEAVY_CANARY = ("dedup_clusters", "semdedup_prune")
-# Calibration history: r15's provisional [1.8, 5.5] rested on ONE calm
-# reading (3.58). r16 minted eight calm-certified samples (light canary
-# in CANARY_BAND at sample time): 2.55, 2.864, 3.58, 3.637, 4.157,
-# 4.169, 4.711, 4.80 — median ~3.9, full calm spread [2.55, 4.80]
-# (BENCH_SAMPLES.jsonl). The statistic is intrinsically wide per single
-# sample (each leg is one cold run), so the ceiling cannot drop below
-# ~5 without false alarms; band set to the observed calm spread plus
-# ~0.5 headroom each side. The r14 memory-pressure signature (~7) and
-# this session's contended-disk samples (5.7-10.7 at elevated light
-# canaries) both land ABOVE the ceiling, which is the rejection power
-# the instrument exists for.
-#
-# r17 REBASE — the statistic itself moved: semdedup_prune's within-cell
-# kernel cut its WARM leg 1.8 -> ~0.6 s (the memo-warm run now times one
-# applyInPandas pass instead of the old pair join), and dedup_clusters'
-# warm leg is memo-trivial (~0.15-0.2 s), so the calm denominator fell
-# from ~3.0 to ~0.9 s and every calm ratio rescaled ~2.3x. Ten fresh
-# non-elevated samples on the r17 code (BENCH_SAMPLES.jsonl: four bench
-# runs at light canary 2.8-3.1 + six dedicated calm_probe_r17 samples,
-# three of them with the trio BELOW the band floor, i.e. an idle host):
-# 5.698, 6.055, 6.341, 6.486, 6.63, 6.863, 6.939, 7.101, 7.445, 9.98 —
-# median ~6.75. Band = observed spread + ~0.7/1.0 headroom. The smaller
-# denominator makes the ratio MORE sensitive to cold-leg noise (by
-# design — that is the seam it watches); pressure signatures inflate the
-# cold legs 2-4x against a memo-bound warm floor and land well above 12.
-HEAVY_CANARY_RATIO_BAND = [5.0, 11.0]
+
+# One collector per session: it remembers the stages it has read.
+_collector = functools.lru_cache(maxsize=1)(StatusCollector)
+
+
+def run_query(spark, name, fn, sf_dir, *, cold, sink=None) -> dict:
+    """Run ``fn(spark, sf_dir)`` once and return its record.
+
+    ``cold`` clears the per-fixture memos first, so the run pays every
+    memoized build. The build runs under job group ``<tag>:build`` and
+    ``sink(df)`` under ``<tag>:action``; without a sink the action is a
+    noop write. ``seconds`` times build + action, ``build_s`` the build
+    alone, and ``result`` holds what the sink returned. An exception is
+    recorded under ``error``, never raised. Tracked caches are released
+    afterwards, then the :data:`COUNTS`, :data:`BYTES` and :data:`TASK_TIMES`
+    fields are read from Spark's status store, outside the timed window."""
+    if cold:
+        clear_memos()
+    sc = spark.sparkContext
+    collector = _collector(spark)
+    tag = f"{name}:{uuid.uuid4().hex[:12]}"
+    mark = collector.mark()
+    rec: dict = {"name": name, "cold": cold}
+    sc.setJobGroup(f"{tag}:build", name)
+    t0 = time.perf_counter()
+    try:
+        df = fn(spark, sf_dir)
+        rec["build_s"] = time.perf_counter() - t0
+        sc.setJobGroup(f"{tag}:action", name)
+        if sink is None:
+            df.write.format("noop").mode("overwrite").save()
+        else:
+            rec["result"] = sink(df)
+        rec["seconds"] = time.perf_counter() - t0
+    except Exception as exc:  # noqa: BLE001 — the harness survives any query
+        rec["error"] = f"{type(exc).__name__}: {exc}"[:500]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_caches()
+    groups = (f"{tag}:build", f"{tag}:action")
+    # Spark keeps spark.ui.retainedStages stages and drops skipped ones
+    # (which ran no tasks) first, so past that count a job can list a
+    # stage its store no longer holds. Mark those read, so the collector
+    # does not look them up.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = itertools.chain(*map(tracker.getJobIdsForGroup, groups))
+    listed = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    collector._seen_stages.update(s for s in listed if tracker.getStageInfo(s) is None)
+    m = collector.read(*groups, mark)
+    rec.update({k: int(m[f"spark.{k}"]) for k in (*COUNTS, *BYTES)})
+    rec.update({k: m[f"spark.{k}"] for k in TASK_TIMES})
+    return rec
+
+
+def cold_then_warm(spark, name, fn, sf_dir, runs=RUNS, warm_min_s=0.0):
+    """Up to ``runs`` cold runs of one query, stopping at the first error,
+    then one warm run (memos kept from the last cold run) when the cold
+    median is at least ``warm_min_s``. Returns (cold records, warm record
+    or None)."""
+    cold = []
+    for _ in range(runs):
+        cold.append(run_query(spark, name, fn, sf_dir, cold=True))
+        if "error" in cold[-1]:
+            break
+    ok = [r for r in cold if "error" not in r]
+    if not ok or summarize(ok)["seconds"] < warm_min_s:
+        return cold, None
+    return cold, run_query(spark, name, fn, sf_dir, cold=False)
+
+
+def summarize(records: list[dict]) -> dict:
+    """Median of every :data:`FIELDS` entry over ``records`` (the upper
+    one for an even count), plus the wall and task-CPU [min, max]."""
+    out = {}
+    for k in FIELDS:
+        values = sorted(r[k] for r in records)
+        out[k] = round(values[len(values) // 2], 3)
+        if k in ("seconds", "task_cpu_s"):
+            out[f"{k}_range"] = [round(values[0], 3), round(values[-1], 3)]
+    return out
+
 
 # Headline set: one per operator family, weighted toward scale-sensitive
 # plans (scan-heavy agg, fact⋈fact join, window, LSH dedup, knn, sessions).
@@ -325,145 +153,45 @@ HEADLINE = [
     "events_tumbling_window",
     "events_session_window",
     "window_running_customer_spend",
-    # Iterative path (connected components) and high-cardinality agg —
-    # regression visibility for the two remaining plan families.
-    "dedup_clusters",
-    "q18_large_volume_orders",
-    # Two-pass text stats (agg ⋈ agg + bounded window).
-    "tfidf_top_terms",
-    # Span-level cross-doc duplication (5-gram inverted-index join),
-    # SemDedup cell-pruning (IVF build + within-cell pair scoring), and
-    # vocabulary-weighted BPE pair stats (two-level agg).
-    "cross_doc_span_dupes",
-    "semdedup_prune",
-    "bpe_pair_counts",
-    # Ordered-stage funnel (chained user-keyed aggs) and corpus bigram LM
-    # (two-level n-gram model join) — the round-4 additions.
-    "funnel_view_click_purchase",
-    "bigram_lm_doc_score",
-    # Round-5 additions: deletion-neighborhood edit-distance join
-    # (FastSS variant blocking + levenshtein verify) and per-doc char
-    # entropy (char-explode + sorted fold) — the scale-sensitive new plans.
-    "editdist_deletion_join",
-    "char_entropy_quality",
-    # Late round-5 additions: PQ build + ADC lookup-table join,
-    # high-cardinality argmax compaction, the CMS sketch build, and the
-    # full-history SCD2 window chain — one per new family.
-    "ann_pq_adc_topk",
-    "upsert_latest_snapshot",
-    "cms_heavy_hitters",
-    "scd2_user_type_history",
-    # The composed end-to-end pipeline (5-stage lineage, cached key sets)
-    # and the certified-recall prefix-filter similarity join.
-    "pipeline_stage_attrition",
-    "setsim_prefix_filter_join",
-    # Round-6 additions: the corpus-shingle novelty join (shingle-sized
-    # shuffle + co-partitioned join-back) and the one-scan two-snapshot
-    # CDC diff — the two scale-sensitive new plans.
-    "shingle_novelty_per_doc",
-    "snapshot_diff_cdc",
-    # The 3-step iterative BPE train — the deepest single plan in the
-    # suite (3 chained vocabulary rewrites); regression canary for
-    # multi-stage plan compilation + execution.
-    "bpe_merge_steps",
-    # Late round-6 additions: sliding-distinct via contribute-then-count
-    # (bounded 7× rollup replication), sweep-line interval union (fact
-    # agg + calendar window), and hash-derived negative sampling (map-
-    # side generate + orderkey-co-keyed anti join) — one per new family.
-    "rolling_7d_distinct_users",
-    "interval_union_coverage_days",
-    "negative_sampling_per_order",
-    # Round-7 additions: the distributed-row_number equidepth histogram
-    # (two full-width shuffles replacing the single-partition ntile),
-    # BM25 corpus scoring (tokenize + two-level agg + top-k), and
-    # filtered IVF vector search (predicate fused into the cell-pruned
-    # candidate join) — the three scale-sensitive new plans.
-    "equidepth_histogram_price_approx",
-    "bm25_doc_ranking",
-    "ann_filtered_ivf",
-    # Round-8 additions: PageRank (fact->bounded-aggregate iteration),
-    # MAD outlier fences (three passes over the cached segment/price
-    # rollup), and the Kaplan-Meier curve (fact join -> day rollup ->
-    # bounded cumulative window) — the three scale-sensitive new plans.
-    "pagerank_nation_trade",
-    "mad_outliers_by_segment",
-    "survival_order_fulfillment",
-    # (cdc_chunk_stats — the md5 O(window)/byte CDC form — was the CDC
-    # headliner through r10 and the suite's #3 cost. r11 swaps the
-    # headline slot to its O(1)/byte production twin cdc_gear_chunk_stats
-    # below, per VERDICT r10 #5: the md5 form stays registered and
-    # driver-green as the oracle-semantics query, but its deliberate
-    # per-position explode is a constant the bench shouldn't re-measure
-    # cold every round. SCALE.md keeps both forms' 8×/64× ratios.)
-    # Union-window as-of against a versioned dim (two window passes on
-    # one user shuffle) — the temporal-join family's scale canary.
-    "purchase_scd2_state_lookup",
-    # Positional-explode + per-doc window-min + selected-only posting
-    # join — the fingerprint-selection family (token-linear by design).
-    "winnowing_fingerprints",
-    # Distributed global rank + rank-explode equi-join: candidate count
-    # n·(w-1) by construction — the sort-based blocking canary.
-    "dedup_sorted_neighborhood",
-    # Two per-key cumulative windows + consecutive-interval overlap
-    # join — the set-based FIFO / temporal-ledger canary.
-    "fifo_inventory_allocation",
-    # (feature_hashing_vectorize is the wordcount shape — already
-    # canaried; bootstrap_ci_avg_price's cold time is ~5 s of fixed
-    # 200-expression codegen compile, which would read as a data-scale
-    # signal here when it is a compile-once cost — probed in SCALE.md
-    # instead.)
-    # Model-eval family: the shared-rank AUC (fact rollup + distributed
-    # prefix + five one-vs-rest reductions) — the family's one
-    # fact-scaling plan (PSI/stump/CUSUM ride bounded rollups).
-    "auc_value_by_event_type",
-    # Round-10 additions: the gear-CDC path (byte-linear like
-    # cdc_chunk_stats but zero-explode Arrow shift-adds — the pair
-    # tracks the constant-factor win cold, ~4× at sf0.1), and the
-    # persisted-IVF probe (build amortized behind the on-disk marker;
-    # cold timing here measures BUILD+probe because clear_memos removes
-    # nothing on disk but the bench fixture dir is stable, so after the
-    # first round-trip the number is the pruned-probe cost — the
-    # persisted-index contract, noted in BENCH_LOCAL notes).
-    "cdc_gear_chunk_stats",
-    "ann_ivf_persisted",
-    # Classifier inference + calibration in one headliner: the full
-    # corpus pass (explode -> hash-weight codegen -> per-doc sum) plus
-    # the 8-bin reliability rollup. (quality_classifier_score is the
-    # same pass minus the tiny second agg — one headliner covers both.)
-    "classifier_calibration_bins",
-    # Round-11 addition: the quarantine decode — real per-blob PNG work
-    # (encode the planted fixture, decode-or-classify every blob) through
-    # Arrow-batched mapInPandas; the suite's blobs-decoded-per-second
-    # canary and its only deliberately-Python hot loop.
-    "multimodal_quarantine_audit",
-    # Round-14 addition: maximal-span exact-substring dedup — the
-    # winnowing-candidate position join plus the diagonal-island window
-    # (per-pair span extension). Match volume scales with candidate
-    # degree, so this is the span-extension family's cost canary.
-    "dedup_maximal_spans",
+    "dedup_clusters",  # iterative connected components
+    "q18_large_volume_orders",  # high-cardinality agg
+    "tfidf_top_terms",  # two-pass text stats
+    "cross_doc_span_dupes",  # span-level cross-doc duplication
+    "semdedup_prune",  # SemDedup cell pruning
+    "bpe_pair_counts",  # vocabulary-weighted BPE pair stats
+    "funnel_view_click_purchase",  # ordered-stage funnel
+    "bigram_lm_doc_score",  # corpus bigram LM
+    "editdist_deletion_join",  # deletion-neighborhood edit-distance join
+    "char_entropy_quality",  # per-doc char entropy
+    "ann_pq_adc_topk",  # PQ build + ADC lookup
+    "upsert_latest_snapshot",  # argmax compaction
+    "cms_heavy_hitters",  # count-min sketch
+    "scd2_user_type_history",  # SCD2 window chain
+    "pipeline_stage_attrition",  # composed end-to-end pipeline
+    "setsim_prefix_filter_join",  # prefix-filter similarity join
+    "shingle_novelty_per_doc",  # corpus-shingle novelty join
+    "snapshot_diff_cdc",  # two-snapshot CDC diff
+    "bpe_merge_steps",  # iterative BPE train
+    "rolling_7d_distinct_users",  # sliding distinct
+    "interval_union_coverage_days",  # sweep-line interval union
+    "negative_sampling_per_order",  # hash-derived negative sampling
+    "equidepth_histogram_price_approx",  # distributed row_number
+    "bm25_doc_ranking",  # BM25 scoring
+    "ann_filtered_ivf",  # filtered IVF search
+    "pagerank_nation_trade",  # PageRank iteration
+    "mad_outliers_by_segment",  # MAD outlier fences
+    "survival_order_fulfillment",  # Kaplan-Meier curve
+    "purchase_scd2_state_lookup",  # temporal as-of join
+    "winnowing_fingerprints",  # fingerprint selection
+    "dedup_sorted_neighborhood",  # sort-based blocking
+    "fifo_inventory_allocation",  # set-based FIFO ledger
+    "auc_value_by_event_type",  # model evaluation
+    "cdc_gear_chunk_stats",  # gear content-defined chunking
+    "ann_ivf_persisted",  # persisted IVF probe
+    "classifier_calibration_bins",  # classifier inference + calibration
+    "multimodal_quarantine_audit",  # per-blob PNG decode
+    "dedup_maximal_spans",  # maximal-span exact-substring dedup
 ]
-
-
-def _heavy_canary(results: dict, warm: dict) -> dict:
-    """The heavy-tail canary record: summed cold medians, summed warm
-    single-shots, and their ratio for HEAVY_CANARY, with the expected
-    calm-host ratio band. Incomplete members -> null fields + a false
-    complete flag (the ADVICE r14 rule: never default-sum to 0.0)."""
-    complete = all(q in results and q in warm for q in HEAVY_CANARY)
-    rec: dict = {
-        "members": list(HEAVY_CANARY),
-        "complete": complete,
-        "ratio_band": HEAVY_CANARY_RATIO_BAND,
-    }
-    if complete:
-        cold = sum(results[q] for q in HEAVY_CANARY)
-        w = sum(warm[q] for q in HEAVY_CANARY)
-        rec["cold_seconds"] = round(cold, 3)
-        rec["warm_seconds"] = round(w, 3)
-        rec["cold_warm_ratio"] = round(cold / w, 3) if w > 0 else None
-    else:
-        rec["cold_seconds"] = rec["warm_seconds"] = rec["cold_warm_ratio"] = None
-    return rec
 
 
 def main() -> None:
@@ -473,160 +201,58 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up: JVM/codegen/parquet-footer caches; not counted.
-    try:
-        specs["q1_pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception:  # noqa: BLE001 — warm-up failure is not a bench failure
-        pass
+    run_query(spark, "warmup", specs["q1_pricing_summary"].fn, sf_dir, cold=False)
 
-    # Per-query error isolation: one failing query must never zero the
-    # round's bench signal — its error is recorded and the rest still time.
-    # Each query runs N_RUNS times and reports the MEDIAN: single-shot
-    # timings produced phantom ±38% round-over-round swings at sub-second
-    # absolute deltas (VERDICT r4); the median with recorded min/max spread
-    # makes >25% deltas real. Between runs the harness releases tracked
-    # Spark caches AND clears the Python-side per-fixture memos (cluster
-    # labels, IVF centroids, PQ codebooks), so every timed run is COLD —
-    # without the memo clear, the r5 medians for the index family timed a
-    # dict lookup (dedup_clusters 0.158 s "median" vs 3.03 s cold; VERDICT
-    # r5 #1). After the cold runs, one extra run with the memos left warm
-    # records the steady-state timing a session that persists its indexes
-    # actually sees — cold and warm are separate JSON fields, never mixed.
-    from map_reduce_go_spark.functions.caching import clear_memos, release_caches
-
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+    # Per-query error isolation: one failing query is recorded and the
+    # rest still run. Cold and warm timings are separate fields.
     results: dict[str, float] = {}
     warm: dict[str, float] = {}
-    spread: dict[str, list[float]] = {}
+    records: dict[str, dict] = {}
     errors: dict[str, str] = {}
     for name in HEADLINE:
-        times: list[float] = []
-        for _ in range(n_runs):
-            clear_memos()
-            t0 = time.perf_counter()
-            try:
-                specs[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                times.append(time.perf_counter() - t0)
-            except Exception as exc:  # noqa: BLE001 — harness must survive any query
-                errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-                break
-            finally:
-                release_caches()
-        if times:
-            times.sort()
-            results[name] = round(times[len(times) // 2], 3)
-            spread[name] = [round(times[0], 3), round(times[-1], 3)]
-            # Warm pass: memos are populated by the last cold run above
-            # (NOT cleared here); tracked caches are still released so the
-            # delta isolates the memo, not pinned storage. Skipped for
-            # sub-half-second queries — a memo-free query's warm run
-            # equals its cold run, and pruning those keeps the suite's
-            # wall time from doubling for no information.
-            if results[name] < 0.5:
-                continue
-            t0 = time.perf_counter()
-            try:
-                specs[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                warm[name] = round(time.perf_counter() - t0, 3)
-            except Exception as exc:  # noqa: BLE001
-                errors[name] = f"warm: {type(exc).__name__}: {exc}"[:500]
-            finally:
-                release_caches()
+        cold, warm_rec = cold_then_warm(
+            spark, name, specs[name].fn, sf_dir, warm_min_s=WARM_MIN_S
+        )
+        errors.update((name, r["error"]) for r in cold if "error" in r)
+        ok = [r for r in cold if "error" not in r]
+        if ok:
+            records[name] = summarize(ok)
+            results[name] = records[name]["seconds"]
+        if warm_rec is not None:
+            if "error" in warm_rec:
+                errors[name] = f"warm: {warm_rec['error']}"
+            else:
+                warm[name] = round(warm_rec["seconds"], 3)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     full = {
         "metric": "headline_suite_seconds",
         "value": round(sum(results.values()), 3),
         "unit": "sec",
-        # COLD medians: tracked caches released and per-fixture memos
-        # cleared before every run, so `value`/`queries` are comparable to
-        # any cold single-shot (BENCH_r04) and across rounds.
         "queries": results,
-        "timing": "cold: median of runs_per_query memo-cleared runs; warm: one run with per-fixture memos retained (recorded only for queries with cold median >= 0.5s)",
-        # Steady-state single-shot with memos warm (persisted-index analog).
+        "timing": f"cold: median of runs_per_query memo-cleared runs; warm: one run with per-fixture memos retained (recorded only for queries with cold median >= {WARM_MIN_S}s)",
         "warm": warm,
-        # Per-query [min, max] over the n_runs timings behind each median.
-        "runs_per_query": n_runs,
-        "spread": spread,
+        "runs_per_query": RUNS,
+        # Per query: the median of each run_query field over its cold
+        # runs, with the wall and task-CPU [min, max].
+        "records": records,
         # value sums only COMPLETED queries — completed/attempted make a
         # partial run visible so an errored round can't read as a speedup.
         "completed": len(results),
         "attempted": len(HEADLINE),
-        # Provenance for adjudicating noisy rounds from this artifact
-        # alone (VERDICT r13 #7): the canary trio's cold-median sum with
-        # its expected band, and the same-code suite-total swing band.
-        # ADVICE r14: a canary member missing from a partial run emits
-        # canary_seconds=null (flagged by canary_complete) — summing
-        # with 0.0 defaults made a broken round read as a calm host.
-        "canary_seconds": (
-            round(sum(results[q] for q in CANARY), 3)
-            if all(q in results for q in CANARY)
-            else None
-        ),
-        "canary_complete": all(q in results for q in CANARY),
-        "canary_band": CANARY_BAND,
-        "drift_band": DRIFT_BAND,
-        # Heavy-tail canary (VERDICT r14 #3): cold/warm ratio of the two
-        # build-dominated headliners — senses the fixture-rebuild/
-        # memory-pressure noise the light trio never touches. null (with
-        # complete=false) when either member errored or lost its warm
-        # pass, never a silent 0.0.
-        "heavy_canary": _heavy_canary(results, warm),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # Round-over-round observations that have no other repo-owned
-        # home (PROGRESS.jsonl is driver-owned).
-        "notes": NOTES,
     }
     if errors:
         full["errors"] = errors
 
-    # The driver records only a 2000-char TAIL of stdout; the full record
-    # above overflows it at 42+ headliners (BENCH_r06 came back
-    # parsed:null — VERDICT r6 #1). So the full record goes to a TRACKED
-    # file (auditable round-over-round), and stdout carries exactly ONE
-    # JSON line — the contract fields (metric/value/unit/queries/sf) plus
-    # completed/attempted/worst — kept under the tail budget by dropping
-    # spread/warm/timing from stdout and, if headliner growth ever pushes
-    # the line past ~1900 chars, by coarsening per-query medians to 2dp
-    # (the suite total stays 3dp; full precision is always in the file).
+    # stdout carries exactly ONE JSON line (see encode_stdout_line); the
+    # full record goes to a tracked file, one line per query record so a
+    # diff shows which queries moved.
     out_path = os.environ.get("SPARK_GRAFT_BENCH_OUT", str(REPO / "BENCH_LOCAL.json"))
+    rows = ",\n".join(f"  {json.dumps(q)}: {json.dumps(r)}" for q, r in records.items())
     with open(out_path, "w") as f:
-        json.dump(full, f, indent=1)
-        f.write("\n")
-
-    # Canary sample ledger (VERDICT r15 #6): every bench run appends its
-    # light-canary sum and heavy-canary ratio here, tagged calm when the
-    # light canary sits inside CANARY_BAND. RECALIBRATION RULE: when the
-    # ledger holds >= 5 CALM samples, re-center HEAVY_CANARY_RATIO_BAND
-    # on their median with ~±50% headroom and record the derivation in
-    # NOTES; until then the provisional band stands. (The r16 session
-    # could not mint calm samples — 12 elevated-host ratio samples read
-    # 4.0-10.7 with light canaries 5.4-6.9, which is evidence FOR
-    # keeping the calm bar, not data to narrow the band with.)
-    hc = full["heavy_canary"]
-    cs = full["canary_seconds"]
-    if hc.get("cold_warm_ratio") is not None and cs is not None:
-        sample = {
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-            "sf": full["sf"],
-            "canary_seconds": cs,
-            "heavy_ratio": hc["cold_warm_ratio"],
-            "calm": CANARY_BAND[0] <= cs <= CANARY_BAND[1],
-            # r17: suite total + headliner count, so DRIFT_BAND can be
-            # recalibrated from calm ledger samples at the CURRENT suite
-            # size (the [57.7, 76.8] band predates the 58-headliner
-            # growth — VERDICT r16 #8).
-            "suite_seconds": full["value"],
-            "n_headliners": full["completed"],
-        }
-        with open(REPO / "BENCH_SAMPLES.jsonl", "a") as f:
-            f.write(json.dumps(sample) + "\n")
-
+        text = json.dumps({**full, "records": "RECORDS"}, indent=1)
+        f.write(text.replace('"RECORDS"', "{\n" + rows + "\n }") + "\n")
     print(encode_stdout_line(full, results, errors, os.path.basename(out_path)))
 
 
@@ -636,18 +262,13 @@ def encode_stdout_line(
     """The ONE stdout JSON line, guaranteed <= ``budget`` chars: full
     precision first, then 2dp coarsening, then worst-N shrink, then (the
     pathological floor) an empty query map — the line is always
-    parseable, never tail-truncated mid-JSON by the driver.
+    parseable, never tail-truncated mid-JSON.
 
-    r17 (VERDICT r16 #3): the driver keeps a 2000-char stdout TAIL and
-    this line is the last thing printed, so the real ceiling is
-    2000 − len(newline); budget=1980 with COMPACT separators fits all 58
-    headliner medians at 2dp (measured 1961 chars) — the worst-30
-    truncation that made PERF_r16 read three IMPROVEMENTS as
-    "dropped_from_bench" no longer engages at the current suite size.
-    If future headliner growth overflows even the compact line, the
-    worst-N fallback now emits queries_omitted = {count, max_sec}: every
-    omitted query completed and its median is <= max_sec, so a missing
-    name can never again be read as a drop or a regression."""
+    The line is the last thing printed and is read from a 2000-char
+    stdout tail, so the real ceiling is 2000 − len(newline). A worst-N
+    shrink emits queries_omitted = {count, max_sec}: every omitted query
+    completed and its median is <= max_sec, so a missing name never reads
+    as a drop or a regression."""
     worst = max(results.items(), key=lambda kv: kv[1]) if results else None
     line = {
         "metric": full["metric"],
@@ -657,17 +278,6 @@ def encode_stdout_line(
         "completed": full["completed"],
         "attempted": full["attempted"],
         "worst": list(worst) if worst else None,
-        # Noise-adjudication provenance (VERDICT r13 #7): judge a noisy
-        # round from this line alone — canary trio vs its band, suite
-        # total vs the same-code drift band.
-        "canary_seconds": full.get("canary_seconds"),
-        "canary_complete": full.get("canary_complete"),
-        "canary_band": full.get("canary_band", CANARY_BAND),
-        "drift_band": full.get("drift_band", DRIFT_BAND),
-        # Heavy-tail canary, compact: [cold/warm ratio, band] — the full
-        # decomposition lives in the tracked file.
-        "heavy_ratio": (full.get("heavy_canary") or {}).get("cold_warm_ratio"),
-        "heavy_ratio_band": HEAVY_CANARY_RATIO_BAND,
         "detail": detail,
         "sf": full["sf"],
     }

@@ -54,14 +54,18 @@ def main() -> int:
             file=sys.stderr,
         )
         return 2
+    selected = all_queries()
+    if only is not None:
+        unknown = sorted(only - set(selected))
+        if unknown:
+            print(f"unknown --only queries: {', '.join(unknown)}", file=sys.stderr)
+            return 2
+        selected = {n: s for n, s in selected.items() if n in only}
     key, base, flipped = MODES[mode]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     spark = get_spark(app_name=f"determinism-sweep-{mode}")
     spark.sparkContext.setLogLevel("ERROR")
     failures = []
-    selected = {
-        n: s for n, s in all_queries().items() if only is None or n in only
-    }
     for name, spec in sorted(selected.items()):
         t0 = time.time()
         try:

@@ -5,6 +5,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 echo "== pytest =="
 python -m pytest tests/ -q
+python -m pytest perfbench/tests -q
 echo "== oracle verify sf0.01 =="
 python scripts/verify_driver.py
 echo "== oracle verify sf0.1 =="

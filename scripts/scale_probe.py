@@ -478,22 +478,18 @@ def replicate(
 
 
 def time_queries(spark, sf_dir: str, queries=QUERIES) -> dict[str, float]:
-    from map_reduce_go_spark.functions.caching import clear_memos, release_caches
+    from bench import run_query
 
+    # Cold runs: the Kx fixture is always memo-cold (fresh path in the
+    # memo key), so a memo-warm base reading would inflate the ratio of
+    # memoized queries.
     out = {}
     specs = all_queries()
     for name in queries:
-        # Cold/cold discipline (VERDICT r15 #4): clear Python-side memos
-        # BEFORE timing, not just caches after — the Kx fixture is
-        # always memo-cold (fresh path in the memo key), so a memo-warm
-        # base reading inflates the ratio for memoized queries
-        # (dedup_clusters read 14.7x, ann_ivf_cosine 3.4x — instrument
-        # artifacts, not plan properties).
-        clear_memos()
-        t0 = time.perf_counter()
-        specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        out[name] = round(time.perf_counter() - t0, 2)
-        release_caches()
+        rec = run_query(spark, name, specs[name].fn, sf_dir, cold=True)
+        if "error" in rec:
+            raise RuntimeError(f"{name} at {sf_dir}: {rec['error']}")
+        out[name] = round(rec["seconds"], 2)
     return out
 
 
@@ -506,24 +502,23 @@ def distrank_parts_probe(spark, sf_dir: str) -> dict:
     fact, not a promise."""
     import hashlib
 
-    from map_reduce_go_spark.functions.caching import release_caches
+    from bench import run_query
     from map_reduce_go_spark.functions.distrank import RANK_PARTS_CONF
     from tests.oracle_compare import canonical_rows
 
-    fn = all_queries()["orders_rfm_segmentation"].fn
+    name = "orders_rfm_segmentation"
+    fn = all_queries()[name].fn
     out: dict = {}
     hashes = {}
     for parts in (8, 32):
         spark.conf.set(RANK_PARTS_CONF, str(parts))
-        try:
-            t0 = time.perf_counter()
-            pdf = fn(spark, sf_dir).toPandas()
-            out[f"rfm_parts{parts}_s"] = round(time.perf_counter() - t0, 2)
-        finally:
-            spark.conf.unset(RANK_PARTS_CONF)
-            release_caches()
+        rec = run_query(spark, name, fn, sf_dir, cold=False, sink=lambda d: d.toPandas())
+        spark.conf.unset(RANK_PARTS_CONF)
+        if "error" in rec:
+            raise RuntimeError(f"rfm at {parts} parts: {rec['error']}")
+        out[f"rfm_parts{parts}_s"] = round(rec["seconds"], 2)
         hashes[parts] = hashlib.md5(
-            repr(canonical_rows(pdf)).encode()
+            repr(canonical_rows(rec["result"])).encode()
         ).hexdigest()
     assert len(set(hashes.values())) == 1, f"fan-out changed results: {hashes}"
     out["hash_invariant"] = True
@@ -1011,62 +1006,35 @@ def main() -> None:
     }.get(family, (QUERIES, TABLES, None, None))
     if family == "suite":
         queries = suite_queries()
+    # Families that run their own probe at 1x and Kx instead of timing
+    # queries, each with the replication it is measured under. clstrain
+    # replicates with word_salt=False: replicas keep the 1x WORD MULTISET
+    # per doc (the scramble mode permutes word order but substitutes
+    # nothing), so the marker-token label survives — word_salt would
+    # suffix every word and relabel all replicas negative, measuring a
+    # destroyed-label artifact. Preserved multisets also make a sharp
+    # invariance check: the featurize (slot COUNTS) and the count-based
+    # label are order-blind, so per-class MEAN gradients see identical
+    # operands at any k and the per-iteration miss counts must be exactly
+    # k-fold base's. (An order-SENSITIVE feature — n-grams, shingles —
+    # would NOT inherit this invariance under scramble replication.)
+    probe, probe_replication = {
+        "clstrain": (cls_train_probe, {"tables": ("documents",), "word_salt": False}),
+        "kvstream": (
+            kv_stream_probe,
+            {"tables": KVSTREAM_TABLES, "extra_shifts": KVSTREAM_EXTRA_SHIFTS},
+        ),
+        "skewjoin": (skew_playbook_probe, {"tables": ("events",)}),
+    }.get(family, (None, {}))
     spark = get_spark(app_name="scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = tempfile.mkdtemp(prefix="sfbig_")
     try:
-        if family == "clstrain":
-            # word_salt=False replication: replicas keep the 1x WORD
-            # MULTISET per doc (the scramble mode permutes word order but
-            # substitutes nothing), so the marker-token label survives —
-            # word_salt would suffix every word and relabel all replicas
-            # negative, measuring a destroyed-label artifact. Preserved
-            # multisets also make a sharp invariance check: the featurize
-            # (slot COUNTS) and the count-based label are order-blind, so
-            # per-class MEAN gradients see identical operands at any k and
-            # the per-iteration miss counts must be exactly k-fold base's.
-            # (An order-SENSITIVE feature — n-grams, shingles — would NOT
-            # inherit this invariance under scramble replication.)
-            replicate(spark, k, out_dir, tables=("documents",), word_salt=False)
-            print(
-                json.dumps(
-                    {
-                        "k": k,
-                        "family": family,
-                        "base": cls_train_probe(spark, BASE),
-                        "big": cls_train_probe(spark, out_dir),
-                    }
-                )
-            )
-            return
-        if family == "kvstream":
-            replicate(
-                spark, k, out_dir,
-                tables=KVSTREAM_TABLES, extra_shifts=KVSTREAM_EXTRA_SHIFTS,
-            )
-            print(
-                json.dumps(
-                    {
-                        "k": k,
-                        "family": family,
-                        "base": kv_stream_probe(spark, BASE),
-                        "big": kv_stream_probe(spark, out_dir),
-                    }
-                )
-            )
-            return
-        if family == "skewjoin":
-            replicate(spark, k, out_dir, tables=("events",))
-            print(
-                json.dumps(
-                    {
-                        "k": k,
-                        "family": family,
-                        "base": skew_playbook_probe(spark, BASE),
-                        "big": skew_playbook_probe(spark, out_dir),
-                    }
-                )
-            )
+        if probe is not None:
+            replicate(spark, k, out_dir, **probe_replication)
+            base = probe(spark, BASE)
+            big = probe(spark, out_dir)
+            print(json.dumps({"k": k, "family": family, "base": base, "big": big}))
             return
         replicate(
             spark,

@@ -1,32 +1,33 @@
-"""Time registered queries cold (memo-cleared) with the bench's noop-sink
-methodology, without running the whole suite.
+"""Time registered queries cold (memo-cleared) with the bench's runner,
+without running the whole suite.
 
 Usage:
     python scripts/time_query.py [-n RUNS] <query> [<query> ...]
 
-Prints per-query cold median + spread (and one warm run) using exactly the
-bench.py discipline: clear_memos() before each cold run, release_caches()
-after every run, noop sink as the action. For quick A/B iteration during
-optimization rounds.
+Prints, per query, the cold median + spread and one warm run, then the
+median of the other record fields (build seconds, job/stage/task counts,
+task run and CPU time, shuffle and spill bytes, GC). Each run goes through
+``bench.run_query``, so the numbers are comparable with BENCH_LOCAL.json.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import FIELDS, RUNS, cold_then_warm, run_query, summarize  # noqa: E402
 from map_reduce_go_spark import get_spark  # noqa: E402
 from map_reduce_go_spark.registry import all_queries  # noqa: E402
 
 
 def main() -> None:
     args = sys.argv[1:]
-    n_runs = 3
+    n_runs = RUNS
     if args and args[0] == "-n":
         n_runs = int(args[1])
         args = args[2:]
@@ -34,53 +35,23 @@ def main() -> None:
     specs = all_queries()
     spark = get_spark(app_name="mrgs-time")
     spark.sparkContext.setLogLevel("ERROR")
-    from map_reduce_go_spark.functions.caching import clear_memos, release_caches
 
     # Warm-up (JVM/codegen/parquet footers) — same as bench.py.
-    try:
-        specs["q1_pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    except Exception:  # noqa: BLE001
-        pass
+    run_query(spark, "warmup", specs["q1_pricing_summary"].fn, sf_dir, cold=False)
 
     for name in args:
-        times: list[float] = []
-        for _ in range(n_runs):
-            clear_memos()
-            spark.sparkContext.setJobDescription(f"time_query cold: {name}")
-            t0 = time.perf_counter()
-            try:
-                specs[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                times.append(time.perf_counter() - t0)
-            except Exception as exc:  # noqa: BLE001
-                print(f"{name}: ERROR {type(exc).__name__}: {exc}")
-                break
-            finally:
-                release_caches()
-        if not times:
+        cold, warm = cold_then_warm(spark, name, specs[name].fn, sf_dir, n_runs)
+        ok = [r for r in cold if "error" not in r]
+        for r in (*cold, warm or {}):
+            if "error" in r:
+                print(f"{name}: {'' if r['cold'] else 'warm '}ERROR {r['error']}")
+        if not ok:
             continue
-        times.sort()
-        spark.sparkContext.setJobDescription(f"time_query warm: {name}")
-        t0 = time.perf_counter()
-        warm = None
-        try:
-            specs[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            warm = time.perf_counter() - t0
-        except Exception as exc:  # noqa: BLE001
-            print(f"{name}: warm ERROR {type(exc).__name__}: {exc}")
-        finally:
-            release_caches()
-        med = times[len(times) // 2]
-        print(
-            f"{name}: cold median {med:.3f}s [{times[0]:.3f}, {times[-1]:.3f}] "
-            f"(n={len(times)}) warm {warm:.3f}s" if warm is not None else
-            f"{name}: cold median {med:.3f}s [{times[0]:.3f}, {times[-1]:.3f}]"
-        )
+        s = summarize(ok)
+        line = f"{name}: cold median {s['seconds']:.3f}s {s['seconds_range']} (n={len(ok)})"
+        if warm is not None and "error" not in warm:
+            line += f" warm {warm['seconds']:.3f}s"
+        print(line, json.dumps({k: s[k] for k in FIELDS[1:]}))
 
 
 if __name__ == "__main__":
