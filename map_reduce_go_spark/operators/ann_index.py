@@ -36,7 +36,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from map_reduce_go_spark.functions.caching import tracked_cache
+from map_reduce_go_spark.functions.caching import fixture_stamp, tracked_cache
 from map_reduce_go_spark.operators.similarity import (
     N_QUERIES,
     NPROBE,
@@ -68,15 +68,7 @@ def _snapshot_id(sf_dir: str) -> str:
     directory instead of serving the previous corpus's cells (the
     on-disk analog of fixture_key's mtime component; at 100 TB this is
     the corpus snapshot/commit id the index is versioned by)."""
-    root = os.path.realpath(sf_dir)
-    p = os.path.join(root, "embeddings.parquet")
-    newest = 0
-    if os.path.isdir(p):
-        for dirpath, _dirs, files in os.walk(p):
-            for f in files:
-                newest = max(newest, os.stat(os.path.join(dirpath, f)).st_mtime_ns)
-    elif os.path.exists(p):
-        newest = os.stat(p).st_mtime_ns
+    root, newest = fixture_stamp(sf_dir, "embeddings")
     return hashlib.md5(f"{root}|{newest}".encode()).hexdigest()[:16]
 
 

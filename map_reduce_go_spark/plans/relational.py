@@ -2635,6 +2635,8 @@ def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         r["n_nationkey"] for r in nation.select("n_nationkey").collect()
     )
     n_nations = len(nodes)
+    if not n_nations:  # no nodes, no ranks (the oracle returns 0 rows)
+        return spark.createDataFrame([], schema="nation string, pagerank double")
     outdeg: dict[int, int] = {}
     for r in edges:
         outdeg[r["src"]] = outdeg.get(r["src"], 0) + r["w"]

@@ -1,4 +1,4 @@
-"""Dump .explain("formatted") for registered queries to files.
+"""Regenerate .explain("formatted") plans for registered queries, on demand.
 
 Usage:
     python scripts/explain_query.py <outdir> <query> [<query> ...]
@@ -6,8 +6,8 @@ Usage:
 Writes <outdir>/<query>.txt with the formatted physical plan built at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1). Plan construction only
 — no action is run (except any eager sizing pre-jobs a query's own
-construction performs). Used to commit plans/r16/<query>_before.txt /
-_after.txt evidence for the optimization rounds.
+construction performs). Plans are not committed: regenerate the ones a
+change touches, before and after it.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Generate QUERIES.md: one line per registered query (module, first
-docstring sentence, oracle presence) — the user-facing catalog of the
-engine's query surface. Regenerate after adding queries:
+docstring sentence) — the user-facing catalog of the engine's query
+surface. Regenerate after adding queries:
 
     python scripts/gen_query_index.py > QUERIES.md
 """
@@ -37,8 +37,7 @@ def main() -> None:
     for mod in sorted(by_module):
         print(f"\n## {mod}\n")
         for name, spec in sorted(by_module[mod]):
-            oracle = "oracle" if spec.oracle else "rows-only"
-            print(f"- **{name}** ({oracle}) — {first_sentence(spec.doc)}")
+            print(f"- **{name}** — {first_sentence(spec.doc)}")
 
 
 if __name__ == "__main__":

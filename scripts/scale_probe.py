@@ -526,12 +526,29 @@ def distrank_parts_probe(spark, sf_dir: str) -> dict:
     return out
 
 
+def _bucket_size_stats(rows, *keys: str) -> dict:
+    """Bucket size distribution of ``rows`` grouped by ``keys``: bucket
+    count, p50/p90/p99/max sizes, and the implied candidate mass
+    Σ s·(s−1)/2."""
+    sizes = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("s"))
+    row = sizes.agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.round(F.percentile("s", F.lit(0.5)), 2).alias("p50"),
+        F.round(F.percentile("s", F.lit(0.9)), 2).alias("p90"),
+        F.round(F.percentile("s", F.lit(0.99)), 2).alias("p99"),
+        F.max("s").alias("max"),
+        F.sum((F.col("s") * (F.col("s") - 1) / 2).cast("long")).alias(
+            "candidate_mass"
+        ),
+    ).collect()[0]
+    return row.asDict()
+
+
 def lsh_bucket_stats(spark, sf_dir: str) -> dict:
     """Band-bucket size distribution for the MinHash-LSH banding at this
-    scale: bucket count, p50/p90/p99/max sizes, and the implied candidate
-    mass Σ s·(s−1)/2 — the number the 'banding keeps the self-join
-    bucketed' claim rests on. Mirrors lsh_candidate_pairs' banding
-    exactly (same signatures, same band concatenation)."""
+    scale — the number the 'banding keeps the self-join bucketed' claim
+    rests on. Mirrors lsh_candidate_pairs' banding exactly (same
+    signatures, same band concatenation)."""
     from map_reduce_go_spark.operators.dedup import (
         N_BANDS,
         N_PERM,
@@ -557,26 +574,13 @@ def lsh_bucket_stats(spark, sf_dir: str) -> dict:
             )
         ).alias("band"),
     ).select("doc_id", "band.band_id", "band.bv")
-    sizes = bands.groupBy("band_id", "bv").agg(F.count(F.lit(1)).alias("s"))
-    row = sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.round(F.percentile("s", F.lit(0.5)), 2).alias("p50"),
-        F.round(F.percentile("s", F.lit(0.9)), 2).alias("p90"),
-        F.round(F.percentile("s", F.lit(0.99)), 2).alias("p99"),
-        F.max("s").alias("max"),
-        F.sum((F.col("s") * (F.col("s") - 1) / 2).cast("long")).alias(
-            "candidate_mass"
-        ),
-    ).collect()[0]
-    return row.asDict()
+    return _bucket_size_stats(bands, "band_id", "bv")
 
 
-def setsim_prefix_bucket_stats(spark, sf_dir: str) -> dict:
-    """Prefix-token bucket size distribution for the prefix-filter join
-    at this scale: how many docs carry each token in their L-token rarest
-    prefix, p50/p90/p99/max, and the implied candidate mass Σ s·(s−1)/2.
-    Mirrors setsim_over's prefix construction exactly (same shingles,
-    same (frequency, token) canonical order, same L)."""
+def _setsim_prefix(spark, sf_dir: str):
+    """(every (doc_id, token) shingle row, the rows in each doc's L-token
+    rarest prefix). Mirrors setsim_over's prefix construction exactly
+    (same shingles, same (frequency, token) canonical order, same L)."""
     from pyspark.sql import Window
 
     from map_reduce_go_spark.operators.dedup import SETSIM_T, _shingle_arrays
@@ -592,19 +596,15 @@ def setsim_prefix_bucket_stats(spark, sf_dir: str) -> dict:
     w_rn = Window.partitionBy("doc_id").orderBy("f", "token")
     ordered = toks.join(freq, "token").withColumn("rn", F.row_number().over(w_rn))
     prefix_len = F.col("n") - F.ceil(F.lit(SETSIM_T) * F.col("n")).cast("long") + 1
-    prefix = ordered.where(F.col("rn") <= prefix_len).select("doc_id", "token")
-    sizes = prefix.groupBy("token").agg(F.count(F.lit(1)).alias("s"))
-    row = sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.round(F.percentile("s", F.lit(0.5)), 2).alias("p50"),
-        F.round(F.percentile("s", F.lit(0.9)), 2).alias("p90"),
-        F.round(F.percentile("s", F.lit(0.99)), 2).alias("p99"),
-        F.max("s").alias("max"),
-        F.sum((F.col("s") * (F.col("s") - 1) / 2).cast("long")).alias(
-            "candidate_mass"
-        ),
-    ).collect()[0]
-    return row.asDict()
+    return toks, ordered.where(F.col("rn") <= prefix_len)
+
+
+def setsim_prefix_bucket_stats(spark, sf_dir: str) -> dict:
+    """Prefix-token bucket size distribution for the prefix-filter join
+    at this scale: how many docs carry each token in their rarest
+    prefix."""
+    _toks, prefix = _setsim_prefix(spark, sf_dir)
+    return _bucket_size_stats(prefix, "token")
 
 
 def filtered_ann_candidate_stats(spark, sf_dir: str) -> dict:
@@ -666,22 +666,7 @@ def hot_shingle_stats(spark, sf_dir: str) -> dict:
     filter: how many docs carry it, and how many PREFIX rows it occupies
     (the design invariant: 0 for any doc longer than the prefix bound —
     rare-token ordering exiles hot tokens from prefixes)."""
-    from pyspark.sql import Window
-
-    from map_reduce_go_spark.operators.dedup import SETSIM_T, _shingle_arrays
-
-    docs = load_table(spark, sf_dir, "documents")
-    sa = (
-        _shingle_arrays(docs)
-        .select("doc_id", F.col("shingles").alias("ts"), F.col("n"))
-        .where(F.col("n") > 0)
-    )
-    toks = sa.select("doc_id", "n", F.explode("ts").alias("token"))
-    freq = toks.groupBy("token").agg(F.count(F.lit(1)).alias("f"))
-    w_rn = Window.partitionBy("doc_id").orderBy("f", "token")
-    ordered = toks.join(freq, "token").withColumn("rn", F.row_number().over(w_rn))
-    prefix_len = F.col("n") - F.ceil(F.lit(SETSIM_T) * F.col("n")).cast("long") + 1
-    prefix = ordered.where(F.col("rn") <= prefix_len)
+    toks, prefix = _setsim_prefix(spark, sf_dir)
     row = prefix.agg(
         F.coalesce(
             F.sum(F.when(F.col("token") == HOT_SHINGLE, 1)), F.lit(0)

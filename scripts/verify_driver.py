@@ -6,8 +6,8 @@ order-insensitive canonical value compare), each run through
 
 Usage: python scripts/verify_driver.py [sf_dir] [--only=name1,name2,...]
 
-Exits 1 if any query fails (a query without an oracle fails), 2 if
-``--only`` names a query that is not registered.
+Exits 1 if any query fails, 2 if ``--only`` names a query that is not
+registered.
 """
 
 from __future__ import annotations
@@ -27,10 +27,8 @@ from map_reduce_go_spark import get_spark  # noqa: E402
 from tests.oracle_compare import canonical_rows  # noqa: E402
 
 
-def mismatches(con, sp, oracle: str | None) -> list[str]:
+def mismatches(con, sp, oracle: str) -> list[str]:
     """What differs between the Spark result ``sp`` and the oracle's."""
-    if oracle is None:
-        return ["NO ORACLE"]
     dk = con.sql(oracle).df()
     status = []
     if sorted(sp.columns) != sorted(dk.columns):
@@ -81,7 +79,7 @@ def main() -> int:
             continue
         sp = rec["result"]
         try:
-            status = mismatches(con, sp, oracles.get(name))
+            status = mismatches(con, sp, oracles[name])
         except Exception as e:  # noqa: BLE001
             status = [f"ORACLE {type(e).__name__}: {e}"]
         if status:

@@ -6,28 +6,8 @@ elimination)."""
 import pytest
 from pyspark.sql import functions as F
 
+from map_reduce_go_spark.functions.caching import clear_memos, release_caches
 from map_reduce_go_spark.registry import all_queries
-
-# Queries whose fn() executes driver-side work at build time (iterative
-# label propagation, IVF codebook training) — excluded from the
-# planning-only sweep to keep it fast; their plans are exercised by their
-# own tests.
-_EXEC_AT_BUILD = {
-    "dedup_clusters",
-    "ann_ivf_cosine",
-    "ann_ivf_recall_probe",  # trains the IVF codebook
-    "dedup_keep_best",  # runs dedup_clusters' propagation loop
-    "semdedup_prune",  # trains the IVF codebook
-    "near_dup_cluster_sizes",  # runs dedup_clusters' propagation loop
-    "cross_doc_span_dupes",  # materializes the hashed span set
-    "ann_pq_adc_topk",  # trains the PQ codebooks
-    "ann_ivf_pq_topk",  # trains both the IVF and PQ indexes
-    "ann_filtered_ivf",  # trains the IVF codebook
-    "equidepth_histogram_price_approx",  # collects the partition-offset metadata
-    "ann_ivf_persisted",  # builds/loads the on-disk IVF index
-    "ann_ivf_incremental_probe",  # builds/appends the on-disk incremental index
-    "ann_lsh_persisted",  # builds/loads the on-disk LSH index
-}
 
 
 def _plan(df) -> str:
@@ -59,17 +39,33 @@ def test_q1_partial_aggregation(spark, sf_dir):
     assert "partial_sum" in plan or "partial_count" in plan
 
 
-def test_no_cartesian_product_in_any_query(spark, sf_dir):
+@pytest.fixture(scope="module")
+def all_plans(spark, sf_dir, tmp_path_factory) -> dict[str, str]:
+    """Every registered query's executed-plan string, each built once from
+    cold memos. The on-disk ANN indexes build in a fresh directory, so a
+    persisted-index query plans its build, not a reuse."""
+    plans = {}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path_factory.mktemp("plan_sweep_index")))
+        for name, spec in sorted(all_queries().items()):
+            clear_memos()
+            try:
+                plans[name] = _plan(spec.fn(spark, sf_dir))
+            except Exception as e:
+                e.add_note(f"while building {name}")
+                raise
+            finally:
+                release_caches()
+        clear_memos()  # no memo outlives the sweep's index dir
+    return plans
+
+
+def test_no_cartesian_product_in_any_query(all_plans):
     """No registered query may plan a CartesianProduct: every non-equi
     pairing must ride a broadcast (BroadcastNestedLoopJoin over a bounded
     side), and every equi join must hash/sort-merge. A CartesianProduct
     at 100 TB is a job that never finishes."""
-    bad = []
-    for name, spec in sorted(all_queries().items()):
-        if name in _EXEC_AT_BUILD:
-            continue
-        if "CartesianProduct" in _plan(spec.fn(spark, sf_dir)):
-            bad.append(name)
+    bad = [name for name, plan in all_plans.items() if "CartesianProduct" in plan]
     assert not bad, f"cartesian products in: {bad}"
 
 
@@ -352,7 +348,7 @@ def _single_partition_consumers(plan: str) -> list[tuple[str, ...]]:
     return out
 
 
-def test_no_unbounded_global_window_in_any_query(spark, sf_dir):
+def test_no_unbounded_global_window_in_any_query(all_plans):
     """Registry-wide sweep: no query may plan a global Window/Sort over
     an ``Exchange SinglePartition`` unless it is in the bounded-input
     allowlist above. Final single-row aggregates (partial rows -> one
@@ -360,10 +356,9 @@ def test_no_unbounded_global_window_in_any_query(spark, sf_dir):
     metadata reduction. This turns the docstring discipline ("bounded
     domain documented at the call site") into CI."""
     offenders = []
-    for name, spec in sorted(all_queries().items()):
-        if name in _EXEC_AT_BUILD or name in _BOUNDED_GLOBAL_WINDOWS:
+    for name, plan in all_plans.items():
+        if name in _BOUNDED_GLOBAL_WINDOWS:
             continue
-        plan = _plan(spec.fn(spark, sf_dir))
         for chain in _single_partition_consumers(plan):
             # Exact names: SortAggregate is a reduction, not a funnel.
             if any(op in ("Sort", "Window", "WindowGroupLimit") for op in chain):

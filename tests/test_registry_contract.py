@@ -1,28 +1,70 @@
 """Registry/driver-contract invariants: cheap structural checks that
 protect the correctness gate itself — the window stays exactly the
-driver's check size, never-checked queries outrank stale greens, and
-every registration carries a full-strength oracle.
+driver's check size and follows the computed rule, never-checked queries
+outrank stale greens, and every registration carries a full-strength
+oracle.
 """
 
 from __future__ import annotations
 
-import json
-from pathlib import Path
+from map_reduce_go_spark import registry
+from map_reduce_go_spark.registry import _JUMP, WINDOW, all_queries, driver_rows, driver_window
 
-from map_reduce_go_spark.registry import _DRIVER_PRIORITY, all_queries
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+RED = {**GREEN, "hash_match": False}
 
-REPO = Path(__file__).resolve().parent.parent
+
+def _latest_rounds() -> dict[str, int]:
+    rows = driver_rows()
+    return {name: rnd for rnd in sorted(rows) for name in rows[rnd]}
 
 
 def test_window_is_exactly_driver_sized_and_resolvable():
     qs = all_queries()
-    assert len(_DRIVER_PRIORITY) == 50
-    assert len(set(_DRIVER_PRIORITY)) == 50  # no duplicate slots
-    missing = [n for n in _DRIVER_PRIORITY if n not in qs]
-    assert not missing, f"priority names not registered: {missing}"
+    window = list(qs)[:WINDOW]
     # The driver checks the FIRST 50 in iteration order — those must be
-    # precisely the priority list, in order.
-    assert list(qs)[:50] == list(_DRIVER_PRIORITY)
+    # precisely the computed window, in order.
+    assert window == driver_window(registry._REGISTRY, driver_rows(), _JUMP)
+    assert len(set(window)) == WINDOW == 50  # no duplicate slots
+    assert not set(_JUMP) - set(qs), "jump names not registered"
+    rows, latest = driver_rows(), _latest_rounds()
+    dead = sorted(n for n, rnd in _JUMP.items() if latest.get(n, 0) > rnd)
+    assert not dead, f"_JUMP entries with a newer driver row; remove them: {dead}"
+    # Outside the non-green and jump groups, the window takes the oldest
+    # latest rows: none is newer than any query left out of the window.
+    green = {
+        n for n, rnd in latest.items() if all(rows[rnd][n].get(k) == v for k, v in GREEN.items())
+    }
+    by_age = [n for n in window if n not in _JUMP and n in green]
+    left_out = [latest[n] for n in qs if n not in window and n in latest]
+    if by_age and left_out:
+        assert max(latest[n] for n in by_age) <= min(left_out)
+
+
+def test_window_leads_with_a_non_green_latest_row():
+    names = [f"q{i}" for i in range(60)]
+    rows = {
+        1: {n: GREEN for n in names},
+        2: {"q59": RED, "q58": {**GREEN, "err": "boom"}, "q0": GREEN},
+    }
+    window = driver_window(names, rows, {})
+    assert window[:2] == ["q58", "q59"]
+    assert "q0" not in window  # its latest row is the newest and green
+
+
+def test_jump_entry_is_dropped_once_a_newer_round_has_its_row():
+    names = [f"q{i}" for i in range(60)]
+    rows = {1: {n: GREEN for n in names[:30]}, 2: {n: GREEN for n in names[30:]}}
+    assert driver_window(names, rows, {"q59": 2})[0] == "q59"
+    rows[3] = {"q59": GREEN}
+    assert "q59" not in driver_window(names, rows, {"q59": 2})
+
+
+def test_window_ties_keep_registration_order():
+    names = [f"q{i}" for i in range(70)]
+    rows = {10: {n: GREEN for n in names[1::2]}, 9: {n: GREEN for n in names[::2]}}
+    window = driver_window(names, rows, {})
+    assert window == names[::2] + names[1::2][:15]
 
 
 def test_every_query_has_full_oracle():
@@ -36,13 +78,11 @@ def test_never_checked_queries_lead_the_window():
     """Every query with no driver CORRECTNESS row yet must sit inside the
     50-slot window — a never-checked query has strictly less evidence
     than any stale green."""
-    seen: set[str] = set()
-    for f in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        seen |= set(json.loads(f.read_text()).keys())
+    seen = set(_latest_rounds())
     if not seen:  # first round: nothing recorded yet
         return
-    new = set(all_queries()) - seen
-    out_of_window = sorted(new - set(_DRIVER_PRIORITY))
+    qs = all_queries()
+    out_of_window = sorted(set(qs) - seen - set(list(qs)[:WINDOW]))
     assert not out_of_window, (
         f"never-checked queries outside the driver window: {out_of_window}"
     )
