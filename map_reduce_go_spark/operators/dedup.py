@@ -178,6 +178,31 @@ def minhash_signatures(
     )
 
 
+def lsh_bands(
+    signatures: DataFrame, n_perm: int = N_PERM, n_bands: int = N_BANDS
+) -> DataFrame:
+    """(doc_id, band_id, bv) rows: band b's value is the concatenation of
+    signature rows b*r .. b*r+r-1, r = n_perm/n_bands. Docs sharing a
+    (band_id, bv) bucket are LSH candidates."""
+    r = n_perm // n_bands
+    return signatures.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band_id"),
+                        F.concat(
+                            *[F.col(f"sig{b * r + i}") for i in range(r)]
+                        ).alias("bv"),
+                    )
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("band"),
+    ).select("doc_id", "band.band_id", "band.bv")
+
+
 def lsh_candidate_pairs(
     docs: DataFrame,
     shingle_arrays: DataFrame | None = None,
@@ -200,23 +225,7 @@ def lsh_candidate_pairs(
         if signatures is not None
         else minhash_signatures(docs, shingle_arrays, n_perm=n_perm)
     )
-    r = n_perm // n_bands
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat(
-                            *[F.col(f"sig{b * r + i}") for i in range(r)]
-                        ).alias("bv"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.bv")
+    bands = lsh_bands(sig, n_perm, n_bands)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -1454,8 +1463,8 @@ def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Prefix-filtering set-similarity join (PPJoin-style). Word-SET Jaccard at
-# this threshold; prefix length L = n - ceil(T*n) + 1 under the global
-# (rarity, token) canonical order guarantees any pair with J >= T shares
+# this threshold; prefix length L = n - ceil(T*n) + 1 under any global
+# (rarity, tie-break) canonical order guarantees any pair with J >= T shares
 # at least one prefix token — certified recall with a candidate set built
 # from each document's RAREST tokens only.
 SETSIM_T = 0.5
@@ -1506,7 +1515,7 @@ def setsim_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-similarity join by PREFIX FILTERING (the PPJoin family): find
     all document pairs with word-set Jaccard >= {t}, generating
     candidates only from each document's L = n - ceil(T*n) + 1 RAREST
-    tokens under a global (frequency, token) canonical order. Any pair at
+    tokens under a global (frequency, xxhash64) canonical order. Any pair at
     or above the threshold must share a prefix token — certified 100%
     recall, like the deletion-neighborhood join and unlike LSH's
     probabilistic banding — yet the join touches none of the common
@@ -1525,32 +1534,15 @@ def setsim_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return setsim_over(load_table(spark, sf_dir, "documents"))
 
 
-def setsim_over(docs: DataFrame) -> DataFrame:
-    """The prefix-filter similarity join over any documents-shaped
-    DataFrame — split out so property tests can drive it with generated
-    corpora (hypothesis conformance vs a brute-force evaluator).
+def setsim_prefix(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The prefix-filter join's candidate stream over ``docs``:
 
-    r17 (guide §2.3 "shuffle keys and metadata instead of payloads"):
-    every stage past the shingle build runs on the 64-bit ``xxhash64``
-    of the shingle, never the ~25-byte string — the frequency aggregate,
-    the per-doc canonical-order window, the candidate self-join, and the
-    verification arrays all carry longs. Correctness:
-
-    - *Recall*: the prefix principle holds for ANY global total order on
-      tokens; (f, h) is one whenever h is injective on the vocabulary
-      (ties in f broken by distinct hashes). The length/positional
-      filters depend only on n/rn, which are unchanged.
-    - *Exactness*: |A ∩ B| computed on hashed arrays equals the true
-      intersection size iff h is injective on A ∪ B. Injectivity over
-      the whole vocabulary is CHECKED AT RUNTIME inside the plan: the
-      frequency aggregate (grouped by h) also records min/max token per
-      hash, and the emitted rows pass through an ``assert_true`` on the
-      corpus-wide collision count — a collision fails the query loudly
-      instead of silently perturbing a jaccard (expected never: ~3.7e-9
-      at a 260k-shingle vocabulary, ~5e-4 at 10^9; corpora beyond that
-      re-key to a wider hash). No extra pass: the guard count rides the
-      cached frequency frame the prefix join needs anyway.
-    """
+    - ``sa``: (doc_id, ts, tsh, n) per-doc distinct shingle arrays, the
+      strings and their xxhash64 longs, docs with n > 0 only;
+    - ``freq``: (h, f, t0, t1) document frequency per hash, with the
+      min/max token per hash for the injectivity guard;
+    - ``prefix``: (doc_id, h, n, rn) each doc's first
+      L = n - ceil(T*n) + 1 hashes under the global (f, h) order."""
     # One shingle build feeds BOTH sides: the deduped per-doc arrays (with
     # their sizes) are the verification operand directly — no collect_set
     # re-aggregation — and their explode is the prefix-candidate stream.
@@ -1581,13 +1573,6 @@ def setsim_over(docs: DataFrame) -> DataFrame:
             F.max("z.ts").alias("t1"),
         )
     )
-    collisions = freq.agg(
-        F.coalesce(
-            F.sum((F.col("t0") != F.col("t1")).cast("long")), F.lit(0)
-        ).alias("hash_collisions")
-    )
-    from pyspark.sql import Window
-
     w_rn = Window.partitionBy("doc_id").orderBy("f", "h")
     # No broadcast hint on the frequency table: it is VOCABULARY-sized
     # state (distinct shingles grow ~linearly with corpus tokens), so a
@@ -1602,6 +1587,41 @@ def setsim_over(docs: DataFrame) -> DataFrame:
     prefix_len = F.col("n") - F.ceil(F.lit(SETSIM_T) * F.col("n")).cast("long") + 1
     prefix = ordered.where(F.col("rn") <= prefix_len).select(
         "doc_id", "h", "n", "rn"
+    )
+    return sa, freq, prefix
+
+
+def setsim_over(docs: DataFrame) -> DataFrame:
+    """The prefix-filter similarity join over any documents-shaped
+    DataFrame — split out so property tests can drive it with generated
+    corpora (hypothesis conformance vs a brute-force evaluator).
+
+    r17 (guide §2.3 "shuffle keys and metadata instead of payloads"):
+    every stage past the shingle build runs on the 64-bit ``xxhash64``
+    of the shingle, never the ~25-byte string — the frequency aggregate,
+    the per-doc canonical-order window, the candidate self-join, and the
+    verification arrays all carry longs. Correctness:
+
+    - *Recall*: the prefix principle holds for ANY global total order on
+      tokens; (f, h) is one whenever h is injective on the vocabulary
+      (ties in f broken by distinct hashes). The length/positional
+      filters depend only on n/rn, which are unchanged.
+    - *Exactness*: |A ∩ B| computed on hashed arrays equals the true
+      intersection size iff h is injective on A ∪ B. Injectivity over
+      the whole vocabulary is CHECKED AT RUNTIME inside the plan: the
+      frequency aggregate (grouped by h) also records min/max token per
+      hash, and the emitted rows pass through an ``assert_true`` on the
+      corpus-wide collision count — a collision fails the query loudly
+      instead of silently perturbing a jaccard (expected never: ~3.7e-9
+      at a 260k-shingle vocabulary, ~5e-4 at 10^9; corpora beyond that
+      re-key to a wider hash). No extra pass: the guard count rides the
+      cached frequency frame the prefix join needs anyway.
+    """
+    sa, freq, prefix = setsim_prefix(docs)
+    collisions = freq.agg(
+        F.coalesce(
+            F.sum((F.col("t0") != F.col("t1")).cast("long")), F.lit(0)
+        ).alias("hash_collisions")
     )
     # PPJoin's two candidate filters (r16), both recall-certified:
     # - LENGTH: J(A,B) = nc/(na+nb-nc) <= min/max, so J >= T forces

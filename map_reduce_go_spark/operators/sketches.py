@@ -361,9 +361,10 @@ def bloom_join_prune_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_pass",
         "n_true_match",
         (F.col("n_pass") - F.col("n_true_match")).alias("n_false_pos"),
-        (
-            (F.lit(1000000) * (F.col("n_pass") - F.col("n_true_match")))
-            / (F.col("n_probed") - F.col("n_true_match"))
+        # NULL, as in the oracle, when there are no true negatives.
+        F.try_divide(
+            F.lit(1000000) * (F.col("n_pass") - F.col("n_true_match")),
+            F.col("n_probed") - F.col("n_true_match"),
         )
         .cast("long")
         .alias("fp_ppm"),
@@ -477,7 +478,8 @@ def kmv_distinct_merge_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_distinct",
         "kmv_estimate",
         F.expr(
-            "1000000 * abs(kmv_estimate - exact_distinct) div exact_distinct"
+            "1000000 * abs(kmv_estimate - exact_distinct)"
+            " div nullif(exact_distinct, 0)"
         ).alias("err_ppm"),
         "merged_estimate",
         F.when(F.col("merged_estimate") == F.col("kmv_estimate"), 1)

@@ -38,6 +38,8 @@ _JUMP: dict[str, int] = {
     ),
     # 0 rows on an empty nation table
     "pagerank_nation_trade": 17,
+    # NULL instead of DIVIDE_BY_ZERO on empty tables
+    **dict.fromkeys(["bloom_join_prune_probe", "kmv_distinct_merge_probe"], 17),
 }
 
 

@@ -1,21 +1,21 @@
 """Scale-up probe: replicate sf0.1 fixtures K× (keys shifted so
-cardinalities grow linearly) into /tmp, then time headline queries at 1×
-and K× to check the plans scale near-linearly — the local stand-in for
-"would this survive 100×".
+cardinalities grow linearly) into a temp dir, then time a family's
+queries at 1× and K× to check the plans scale near-linearly — the local
+stand-in for "would this survive 100×". A family's stat functions
+(bucket-size distributions, candidate mass, its own end-to-end probes)
+run at both scales too.
 
 Usage:
-    python scripts/scale_probe.py [K]              # default 8, mixed set
-    python scripts/scale_probe.py 64 --family=dedup
+    python scripts/scale_probe.py [K] [--family=NAME]   # default 8, mixed
 
---family=dedup replicates only documents+embeddings (fast fixture build),
-times the dedup/ANN scale path (exact digest dedup, banded MinHash-LSH,
-IVF search), and records the LSH band-bucket size distribution (p50/p90/
-p99/max + implied candidate-pair mass) at both scales — the empirical
-backing for SCALE.md's "banding bounds hot buckets; AQE splits the rest"
-claim. Deliberately excluded at K≥64: semdedup_prune (within-cell
-quadratic — its K_CELLS knob must grow with N, which is the documented
-design, not a surprise) and dedup_embedding_cosine (exact all-pairs is
-O(N²) by definition; the probe's LSH/IVF queries ARE its scale path).
+Families (``FAMILIES``; each entry's comment says why it replicates the
+way it does): mixed (default), dedup, round5, setsim, setsimskew,
+round6, round6b, round7, round7b, round8, round8b, round8c, mleval,
+round10, round10b, round11, distrank, round14, suite, clstrain,
+kvstream, skewjoin. An unknown name exits 2 before any Spark session.
+
+Prints one JSON line: ``base_s``/``big_s``/``ratio`` per query (families
+with queries) and ``<stat>_base``/``<stat>_big`` per stat.
 """
 
 from __future__ import annotations
@@ -26,6 +26,8 @@ import shutil
 import sys
 import tempfile
 import time
+from collections.abc import Callable, Mapping
+from dataclasses import dataclass, field
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -33,301 +35,60 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import HEADLINE, run_query  # noqa: E402
 from map_reduce_go_spark import get_spark  # noqa: E402
+from map_reduce_go_spark.functions.caching import release_caches  # noqa: E402
 from map_reduce_go_spark.registry import all_queries  # noqa: E402
 from map_reduce_go_spark.sources.readers import TABLES, load_table  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
-# Key columns shifted per replica so joins/groups grow linearly instead of
-# multiplying duplicate keys.
+# Key columns shifted per replica in every family, so joins/groups grow
+# linearly instead of multiplying duplicate keys. A replicated table is
+# one with shift columns; the rest (dims) are copied fixed, like real
+# scale-up.
 SHIFT_COLS = {
-    "orders": ["o_orderkey"],
-    "lineitem": ["l_orderkey"],
-    "events": ["event_id"],
-    "documents": ["doc_id"],
-    "embeddings": ["vec_id"],
+    "orders": ("o_orderkey",),
+    "lineitem": ("l_orderkey",),
+    "events": ("event_id",),
+    "documents": ("doc_id",),
+    "embeddings": ("vec_id",),
 }
-QUERIES = [
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "wordcount",
-    "dedup_minhash_lsh",
-    "funnel_view_click_purchase",
-    "bigram_lm_doc_score",
-]
-DEDUP_QUERIES = [
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "ann_ivf_cosine",
-]
-DEDUP_TABLES = ("documents", "embeddings")
-# Round-5 family: the new heavy plans — FastSS edit-distance join (fanout
-# join + banded verify), CMS build, and the two event-table maintenance
-# shapes. Customer names get a 4-hex replica salt (distinct suffixes keep
-# cross-replica name distances >= 2 almost surely, so true-pair density
-# stays ~linear — a bare numeric suffix would make every cross-replica
-# pair distance 1 and measure a fixture artifact, the replicate() lesson
-# again). user_id shifts too, so event keys grow linearly instead of
-# growing k-times-deeper per-user histories.
-R5_QUERIES = [
-    "editdist_deletion_join",
-    "cms_heavy_hitters",
-    "upsert_latest_snapshot",
-    "scd2_user_type_history",
-]
-R5_TABLES = ("customer", "documents", "events")
-R5_EXTRA_SHIFTS = {"customer": ["c_custkey"], "events": ["event_id", "user_id"]}
-# setsim family (VERDICT r5 #3): the prefix-filter similarity join, with
-# the prefix-token bucket distribution measured the way the LSH probe
-# measures band buckets — the empirical backing for "prefix buckets are
-# RARE-token buckets, small by construction".
-SETSIM_QUERIES = ["setsim_prefix_filter_join"]
-SETSIM_TABLES = ("documents",)
-# Round-6 family: the new heavy plans — iterative BPE (3 vocabulary
-# rewrites), the shingle-novelty join, within-order basket pairs, and
-# the backlog sweep-line. Documents use the vocabulary-growing word
-# salt (novelty and BPE are token-blocked operators — the setsim
-# lesson); orders/lineitem keys shift so baskets grow in COUNT, not in
-# per-order depth.
-R6_QUERIES = [
-    "bpe_merge_steps",
-    "shingle_novelty_per_doc",
-    "basket_part_pairs_topk",
-    "order_backlog_daily",
-]
-R6_TABLES = ("documents", "orders", "lineitem")
-# Late-round-6 family: the governance/temporal/embedding additions.
-# user_id and o_custkey shift so the probe grows the number of USERS
-# and CUSTOMERS linearly (rolling-distinct state, TWAP groups, island
-# counts), not per-key history depth — per-key depth at k× measures a
-# different (and unrealistic) workload. Embeddings grow in corpus rows
-# while both probe sides stay fixed at 20 queries, so the int8/negative
-# mining probes measure scan growth, the designed scale axis.
-R6B_QUERIES = [
-    "rolling_7d_distinct_users",
-    "time_weighted_avg_value_per_user",
-    "order_gap_islands",
-    "embedding_int8_quant_recall",
-    "hard_negative_mining",
-]
-R6B_TABLES = ("events", "orders", "embeddings")
-R6B_EXTRA_SHIFTS = {
-    "events": ["event_id", "user_id"],
-    "orders": ["o_orderkey", "o_custkey"],
-}
-# Round-7 family (VERDICT r7 #1): the four scale-sensitive r7 plans.
-# equidepth exercises the two full-width shuffles of the distributed
-# rank; bm25 the tokenize+agg (scramble replication: the query terms
-# stay corpus-hot, df and tf-row mass both grow k-fold — the realistic
-# model for lexical retrieval, unlike word_salt which would remove the
-# query terms from every replica); chunking the pure map-side explode;
-# filtered ANN the corpus-growing scan with a fixed 20-query probe side.
-R7_QUERIES = [
-    "equidepth_histogram_price_approx",
-    "bm25_doc_ranking",
-    "doc_chunking_fixed_tokens",
-    "ann_filtered_ivf",
-]
-R7_TABLES = ("orders", "documents", "embeddings")
-# Round-7b family: the user-behavior plans (+ the two r6 plans VERDICT
-# r7 #1 names as never-probed). FK-consistent replication (fk_bases):
-# o_custkey shifts by CUSTOMER's stride and l_orderkey by ORDERS',
-# so each replica's customer->orders->lineitem cascade stays intact —
-# gdpr_delete_impact measures real frontier growth, not orphan noise.
-R7B_QUERIES = [
-    "churn_weekly_rates",
-    "weekly_activity_bitmap",
-    "session_path_patterns",
-    "gdpr_delete_impact",
-]
-R7B_TABLES = ("events", "customer", "orders", "lineitem")
-R7B_EXTRA_SHIFTS = {
-    "events": ["event_id", "user_id"],
-    "customer": ["c_custkey"],
-    "orders": ["o_orderkey", "o_custkey"],
-}
-R7B_FK_BASES = {"o_custkey": "customer", "l_orderkey": "orders"}
-# Round-8 family: the new fact-heavy plans. Same FK-consistent model.
-# l_partkey deliberately does NOT shift: at real scale-up the part
-# catalog is fixed and per-part depth grows — the spectrum shifts right
-# by ~log2(k) buckets, which is the workload the skew audit exists for.
-R8_QUERIES = [
-    "pagerank_nation_trade",
-    "mad_outliers_by_segment",
-    "survival_order_fulfillment",
-    "partkey_skew_spectrum",
-]
-R8_TABLES = ("customer", "orders", "lineitem", "supplier", "nation")
-R8_EXTRA_SHIFTS = {
-    "customer": ["c_custkey"],
-    "orders": ["o_orderkey", "o_custkey"],
-}
-R8_FK_BASES = {"o_custkey": "customer", "l_orderkey": "orders"}
-# Round-8b family: the retrieval/chunking trio. Scramble replication
-# (BM25's query terms must stay corpus-hot, same argument as round7);
-# cdc is the suite's only byte-linear plan (per-byte boundary tests),
-# matryoshka is the knn shape (corpus grows, probe side fixed).
-R8B_QUERIES = [
-    "cdc_chunk_stats",
-    "rrf_fusion_topk",
-    "matryoshka_truncation_recall",
-]
-R8B_TABLES = ("documents", "embeddings")
-# round8c family (late r8): the five newest plans. Documents use the
-# word_salt growth model — SNM sort keys and winnowing fingerprints must
-# grow in DISTINCT content (identical replicas would pile exact
-# duplicates into every neighborhood/posting list and measure a fixture
-# artifact, not the plan). lineitem keeps l_partkey UNSHIFTED on purpose:
-# replication deepens each part's receipt/issue history k-fold, which is
-# exactly the FIFO overlap-join's scale axis (allocations must stay
-# linear in rows because cumulative intervals are consecutive);
-# l_orderkey moves with orders' stride so order-level joins stay
-# FK-consistent. Bootstrap's axis is row count alone (the resample state
-# is 64 agg columns regardless).
-R8C_QUERIES = [
-    "feature_hashing_vectorize",
-    "winnowing_fingerprints",
-    "dedup_sorted_neighborhood",
-    "fifo_inventory_allocation",
-    "bootstrap_ci_avg_price",
-]
-R8C_TABLES = ("documents", "orders", "lineitem")
-R8C_FK_BASES = {"l_orderkey": "orders"}
-# mleval family (late r8): the model-evaluation plans. Plain replication
-# is the right growth model for all four: the scale axis is FACT rows
-# feeding a bounded rollup — AUC's rank frame is the distinct-VALUE set
-# (constant under replication, as for a real score column with bounded
-# precision), PSI/stump ride the distinct-n_chars / bucket rollups, and
-# CUSUM rides the calendar-day rollup; Spearman's rank frames are the
-# distinct quantity/price-cent sets. Expected ratios well under k:
-# the k-fold cost is the scan + map-side combine, the shuffled state is
-# fixed-size (Spearman's price-rank join deepens per-value counts, not
-# the rank frame — the bounded-precision-score model).
-MLEVAL_QUERIES = [
-    "auc_value_by_event_type",
-    "psi_doclen_drift",
-    "decision_stump_doclen",
-    "cusum_daily_changepoint",
-    "spearman_quantity_price",
-]
-MLEVAL_TABLES = ("events", "documents", "lineitem")
-# Round-10 family: the gear-CDC path head-to-head with the md5 form
-# (same boundary-statistics contract; the probe records the
-# constant-factor win of table-lookup shift-adds over per-position md5
-# at identical corpus bytes), plus the persisted partition-pruned IVF
-# index (build+probe at 1×, marker-gated reuse means the k× number is a
-# fresh build over the k× corpus — the honest cost; per-query probes
-# against an existing index are the test suite's job). word_salt grows
-# distinct content so CDC boundary positions aren't k identical copies.
-R10_QUERIES = [
-    "cdc_gear_chunk_stats",
-    "cdc_chunk_stats",
-    "cdc_chunk_dedup",
-    "ann_ivf_persisted",
-]
-R10_TABLES = ("documents", "embeddings")
-# Round-10b family: the classifier pair (one corpus pass + bounded
-# rollup — should ride the scan near-flat), the ranking-quality probe
-# (two broadcast-probe searches over the k× corpus + metadata-sized
-# metric joins), and the persisted LSH index (fresh tmp fixture → the
-# k× number is a fresh bucket-partitioned BUILD plus the pruned probe,
-# same honesty rule as ann_ivf_persisted). word_salt grows distinct
-# vocabulary so the classifier's hash-slot distribution isn't k copies.
-# Round-11 family: the quarantine decode path — real per-blob PNG work in
-# mapInPandas (Python-side by necessity, Arrow-batched by design), where
-# the scale axis is blobs decoded per second. word_salt grows distinct
-# text so planted-PNG pixel payloads differ per replica.
-R11_QUERIES = [
-    "multimodal_quarantine_audit",
-]
-R11_TABLES = ("documents",)
-R10B_QUERIES = [
-    "quality_classifier_score",
-    "classifier_calibration_bins",
-    "ann_ranking_quality",
-    "ann_lsh_persisted",
-]
-R10B_TABLES = ("documents", "embeddings")
-# Round-13 family (VERDICT r12 #3): the distributed-rank adopters. The
-# scale axis is CUSTOMERS RANKED, so o_custkey shifts per replica (the
-# default shifts only o_orderkey, which would grow orders-per-customer
-# instead of the rank frame). The probe also sweeps the derived fan-out
-# knob (spark.graft.rank.parts) on the RFM plan at K× and asserts the
-# canonical result hash is INVARIANT while the timings move — the proof
-# the knob tunes throughput, never answers.
-DISTRANK_QUERIES = [
-    "orders_rfm_segmentation",
-    "revenue_lorenz_gini",
-    "customer_spend_deciles",
-]
-DISTRANK_TABLES = ("orders",)
-DISTRANK_EXTRA_SHIFTS = {"orders": ["o_custkey"]}
-# Round-14 family (VERDICT r13 #6): the KV capstone's STREAMING half.
-# The scale axis is KEY CARDINALITY in the state store, so the probe's
-# op-log keys by FULL o_custkey (the registered kv_apply_log's % 97
-# keyspace is deliberately bounded and would not grow under
-# replication), and o_custkey shifts per replica. The probe drains the
-# op-log through the stateful twin in 3 seq-ordered waves, asserts the
-# drained snapshots hash-equal the batch kv_fold of the same log
-# (snapshot == batch-fold, in-probe), and records the state store's own
-# numRowsTotal / memoryUsedBytes progress metrics at 1x and Kx.
-KVSTREAM_TABLES = ("orders",)
-KVSTREAM_EXTRA_SHIFTS = {"orders": ["o_custkey"]}
-# Round-14 query family: maximal-span dedup (the winnowing-candidate
-# position join + diagonal-island window — match volume is the scale
-# axis, bounded by candidate degree under the stop-filter) and the
-# shard-controller fold (bounded control-plane fold; its data side is
-# the orders key-space distinct, which grows with o_custkey shifts).
-R14_QUERIES = [
-    "dedup_maximal_spans",
-    "shardctrler_apply_log",
-]
-R14_TABLES = ("documents", "orders", "nation")  # nation copies fixed
-# (no shift entry): the shardctrler op-log is control-plane metadata
-# and must NOT grow with data — the scale axis for that query is the
-# orders key-space distinct.
-R14_EXTRA_SHIFTS = {"orders": ["o_custkey"]}
-
-# Whole-suite family (VERDICT r14 #6): ONE comparable suite-level curve —
-# every bench.py headliner against one 8x full-model fixture, converting
-# the per-family scale claims above into a single table (SCALE.md). The
-# model follows the repo's replication philosophy: facts + customer grow
-# (FK-consistent strides), the true dims (region/nation/supplier/part)
-# stay fixed like real scale-up, and documents grow vocabulary-fresh
-# (word_salt) so token-blocked plans measure corpus growth, not a
-# saturated-shingle fixture artifact. Exclusions are the two documented
-# by-definition-quadratic headliners — logged in the probe output, never
-# silent (the no-silent-caps rule).
+HOT_SHINGLE = "zzhot zzhot zzhot"
+# Headliners the suite family leaves out, with the reason.
 SUITE_EXCLUDE = {
-    "semdedup_prune": "within-cell quadratic by design; K_CELLS grows with N (see probe header)",
+    "semdedup_prune": "within-cell quadratic by design; K_CELLS grows with N",
     "dedup_embedding_cosine": "exact all-pairs O(N^2) by definition; LSH/IVF are its scale path",
 }
 
 
-def suite_queries() -> list[str]:
-    from bench import HEADLINE
+@dataclass(frozen=True)
+class Family:
+    """One probe family: what to replicate and how, what to time, and
+    which stats to read at both scales."""
 
-    return [q for q in HEADLINE if q not in SUITE_EXCLUDE]
+    queries: tuple[str, ...] = ()
+    tables: tuple[str, ...] = TABLES
+    # table -> key columns shifted per replica on top of SHIFT_COLS
+    shifts: Mapping[str, tuple[str, ...]] = field(default_factory=dict)
+    # column -> table whose row count sets that column's shift stride
+    fk_bases: Mapping[str, str] = field(default_factory=dict)
+    # documents: suffix every word with a replica tag (vocabulary grows)
+    # instead of scrambling word order (vocabulary stays the 1x one)
+    word_salt: bool = False
+    # documents: append an unsalted hot phrase to every 3rd doc
+    inject_hot: bool = False
+    # output key prefix -> fn(spark, sf_dir) -> dict
+    stats: Mapping[str, Callable[..., dict]] = field(default_factory=dict)
+
+    def shift_cols(self) -> dict[str, list[str]]:
+        """table -> every key column shifted per replica (sorted)."""
+        out = {t: sorted(c) for t, c in SHIFT_COLS.items()}
+        for t, cols in self.shifts.items():
+            out[t] = sorted(set(out.get(t, ())) | set(cols))
+        return out
 
 
-SUITE_EXTRA_SHIFTS = {
-    "customer": ["c_custkey"],
-    "orders": ["o_custkey"],
-    "events": ["user_id"],
-}
-SUITE_FK_BASES = {"o_custkey": "customer", "l_orderkey": "orders"}
-
-
-def replicate(
-    spark,
-    k: int,
-    out_dir: str,
-    tables=TABLES,
-    extra_shifts=None,
-    word_salt=False,
-    fk_bases=None,
-    inject_hot=False,
-) -> None:
+def replicate(spark, k: int, out_dir: str, fam: Family) -> None:
     """Build the k-times corpus in ONE pass per table: each row explodes
     into k replicas (a lateral sequence, map-side), keys shift by
     replica*10*n so join/group cardinalities grow linearly, and document
@@ -343,9 +104,7 @@ def replicate(
     fixture artifact, not the plan (observed: 1 GiB task allocations +
     spill-to-disk-full at 64x). Per-doc permutations keep cross-doc
     shingle overlap at natural levels; replica 0 keeps original text."""
-    shifts = dict(SHIFT_COLS)
-    for t2, cols in (extra_shifts or {}).items():
-        shifts[t2] = sorted(set(shifts.get(t2, [])) | set(cols))
+    shifts = fam.shift_cols()
     # fk_bases: column -> table whose row count sets that column's shift
     # stride. A foreign key must move with its REFERENCED table's stride
     # (e.g. o_custkey with customer's), or every replica's joins point
@@ -354,14 +113,14 @@ def replicate(
     base_counts: dict[str, int] = {}
 
     def stride(table: str, col: str, own_n: int) -> int:
-        bt = (fk_bases or {}).get(col)
+        bt = fam.fk_bases.get(col)
         if bt is None or bt == table:
             return 10 * own_n
         if bt not in base_counts:
             base_counts[bt] = load_table(spark, BASE, bt).count()
         return 10 * base_counts[bt]
 
-    for t in tables:
+    for t in fam.tables:
         df = load_table(spark, BASE, t)
         if t in shifts:
             n = df.count()
@@ -381,7 +140,7 @@ def replicate(
                         F.concat(F.col("c_name"), F.lit("~"), suffix)
                     ),
                 )
-            if t == "documents" and word_salt:
+            if t == "documents" and fam.word_salt:
                 # Vocabulary-growing replication: suffix every WORD with a
                 # replica tag, so replica corpora are disjoint in token
                 # space. This models real corpus growth for TOKEN-blocked
@@ -446,10 +205,10 @@ def replicate(
                     "text",
                     F.when(F.col("__rep") == 0, F.col("text")).otherwise(scrambled),
                 )
-            if t == "documents" and inject_hot:
-                # Skew stress (VERDICT r7 #8): append one UNSALTED hot
-                # phrase to every 3rd doc across ALL replicas — its
-                # interior shingle ("zzhot zzhot zzhot") becomes a
+            if t == "documents" and fam.inject_hot:
+                # Skew stress: append one UNSALTED hot phrase to every 3rd
+                # doc across ALL replicas — its interior shingle
+                # (HOT_SHINGLE) becomes a
                 # corpus-hot token carried by ~1/3 of the k-times corpus,
                 # the token-frequency skew that would detonate a naive
                 # token-blocked join. The prefix filter must keep it out
@@ -477,9 +236,7 @@ def replicate(
         big.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
 
 
-def time_queries(spark, sf_dir: str, queries=QUERIES) -> dict[str, float]:
-    from bench import run_query
-
+def time_queries(spark, sf_dir: str, queries) -> dict[str, float]:
     # Cold runs: the Kx fixture is always memo-cold (fresh path in the
     # memo key), so a memo-warm base reading would inflate the ratio of
     # memoized queries.
@@ -494,7 +251,7 @@ def time_queries(spark, sf_dir: str, queries=QUERIES) -> dict[str, float]:
 
 
 def distrank_parts_probe(spark, sf_dir: str) -> dict:
-    """VERDICT r12 #3 'the knob works' leg: run the RFM plan (three
+    """The 'knob works' leg: run the RFM plan (three
     distributed-rank legs over one cached rollup) under two fan-out
     settings of spark.graft.rank.parts. The timings may move (that is
     the knob's job); the canonical result hash MUST NOT — asserted here,
@@ -502,7 +259,6 @@ def distrank_parts_probe(spark, sf_dir: str) -> dict:
     fact, not a promise."""
     import hashlib
 
-    from bench import run_query
     from map_reduce_go_spark.functions.distrank import RANK_PARTS_CONF
     from tests.oracle_compare import canonical_rows
 
@@ -545,66 +301,23 @@ def _bucket_size_stats(rows, *keys: str) -> dict:
 
 
 def lsh_bucket_stats(spark, sf_dir: str) -> dict:
-    """Band-bucket size distribution for the MinHash-LSH banding at this
-    scale — the number the 'banding keeps the self-join bucketed' claim
-    rests on. Mirrors lsh_candidate_pairs' banding exactly (same
-    signatures, same band concatenation)."""
-    from map_reduce_go_spark.operators.dedup import (
-        N_BANDS,
-        N_PERM,
-        minhash_signatures,
-    )
+    """Band-bucket size distribution of the engine's MinHash-LSH banding
+    at this scale — the number the 'banding keeps the self-join
+    bucketed' claim rests on."""
+    from map_reduce_go_spark.operators.dedup import lsh_bands, minhash_signatures
 
     docs = load_table(spark, sf_dir, "documents")
-    sig = minhash_signatures(docs)
-    r = N_PERM // N_BANDS
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.concat(*[F.col(f"sig{b * r + i}") for i in range(r)]).alias(
-                            "bv"
-                        ),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.bv")
-    return _bucket_size_stats(bands, "band_id", "bv")
-
-
-def _setsim_prefix(spark, sf_dir: str):
-    """(every (doc_id, token) shingle row, the rows in each doc's L-token
-    rarest prefix). Mirrors setsim_over's prefix construction exactly
-    (same shingles, same (frequency, token) canonical order, same L)."""
-    from pyspark.sql import Window
-
-    from map_reduce_go_spark.operators.dedup import SETSIM_T, _shingle_arrays
-
-    docs = load_table(spark, sf_dir, "documents")
-    sa = (
-        _shingle_arrays(docs)
-        .select("doc_id", F.col("shingles").alias("ts"), F.col("n"))
-        .where(F.col("n") > 0)
-    )
-    toks = sa.select("doc_id", "n", F.explode("ts").alias("token"))
-    freq = toks.groupBy("token").agg(F.count(F.lit(1)).alias("f"))
-    w_rn = Window.partitionBy("doc_id").orderBy("f", "token")
-    ordered = toks.join(freq, "token").withColumn("rn", F.row_number().over(w_rn))
-    prefix_len = F.col("n") - F.ceil(F.lit(SETSIM_T) * F.col("n")).cast("long") + 1
-    return toks, ordered.where(F.col("rn") <= prefix_len)
+    return _bucket_size_stats(lsh_bands(minhash_signatures(docs)), "band_id", "bv")
 
 
 def setsim_prefix_bucket_stats(spark, sf_dir: str) -> dict:
-    """Prefix-token bucket size distribution for the prefix-filter join
-    at this scale: how many docs carry each token in their rarest
+    """Prefix-token bucket size distribution of the engine's prefix-filter
+    join at this scale: how many docs carry each token in their rarest
     prefix."""
-    _toks, prefix = _setsim_prefix(spark, sf_dir)
-    return _bucket_size_stats(prefix, "token")
+    from map_reduce_go_spark.operators.dedup import setsim_prefix
+
+    _sa, _freq, prefix = setsim_prefix(load_table(spark, sf_dir, "documents"))
+    return _bucket_size_stats(prefix, "h")
 
 
 def filtered_ann_candidate_stats(spark, sf_dir: str) -> dict:
@@ -615,7 +328,7 @@ def filtered_ann_candidate_stats(spark, sf_dir: str) -> dict:
     so candidate mass growing ~linearly with the corpus while staying
     ~1/K_CELLS of an unpruned scan is exactly the designed behavior —
     the selectivity evidence behind ann_filtered_ivf's scale grade.
-    Mirrors the operator's own cell assignment (shared memoized IVF
+    Uses the operator's own cell assignment (shared memoized IVF
     build)."""
     from map_reduce_go_spark.operators.similarity import (
         N_QUERIES,
@@ -658,26 +371,21 @@ def filtered_ann_candidate_stats(spark, sf_dir: str) -> dict:
     return d
 
 
-HOT_SHINGLE = "zzhot zzhot zzhot"
-
-
 def hot_shingle_stats(spark, sf_dir: str) -> dict:
-    """How the injected corpus-hot shingle behaves under the prefix
-    filter: how many docs carry it, and how many PREFIX rows it occupies
-    (the design invariant: 0 for any doc longer than the prefix bound —
-    rare-token ordering exiles hot tokens from prefixes)."""
-    toks, prefix = _setsim_prefix(spark, sf_dir)
-    row = prefix.agg(
-        F.coalesce(
-            F.sum(F.when(F.col("token") == HOT_SHINGLE, 1)), F.lit(0)
-        ).alias("hot_in_prefix")
-    ).collect()[0]
-    hot_docs = toks.where(F.col("token") == HOT_SHINGLE).count()
-    return {"hot_doc_count": hot_docs, "hot_in_prefix": int(row["hot_in_prefix"])}
+    """How the injected corpus-hot shingle behaves under the engine's
+    prefix filter: how many docs carry it, and how many PREFIX rows it
+    occupies (the design invariant: 0 for any doc longer than the prefix
+    bound — rare-token ordering exiles hot tokens from prefixes)."""
+    from map_reduce_go_spark.operators.dedup import setsim_prefix
+
+    sa, _freq, prefix = setsim_prefix(load_table(spark, sf_dir, "documents"))
+    hot = F.col("h") == F.xxhash64(F.lit(HOT_SHINGLE))
+    hot_docs = sa.select(F.explode("tsh").alias("h")).where(hot).count()
+    return {"hot_doc_count": hot_docs, "hot_in_prefix": prefix.where(hot).count()}
 
 
 def skew_playbook_probe(spark, sf_dir: str) -> dict:
-    """VERDICT r10 #8 — the skew playbook measured end to end over the
+    """The skew playbook measured end to end over the
     events fact with a planted single hot key (event_id % 10 < 3, i.e.
     30% of rows, remapped to join_key -1; the replicator's event_id shift
     is a multiple of 10, so the plant survives replication exactly):
@@ -693,8 +401,6 @@ def skew_playbook_probe(spark, sf_dir: str) -> dict:
     skew mitigation triggers on SHUFFLED BYTES, not row counts. Row
     counts asserted equal across arms — mitigation must never change
     answers."""
-    import time as _t
-
     from map_reduce_go_spark.functions.skew import (
         key_skew_signature,
         salted_join,
@@ -723,9 +429,9 @@ def skew_playbook_probe(spark, sf_dir: str) -> dict:
             )
         )
     )
-    t0 = _t.time()
+    t0 = time.time()
     sig = key_skew_signature(ev, "join_key").collect()[0]
-    t_audit = round(_t.time() - t0, 2)
+    t_audit = round(time.time() - t0, 2)
     decision = skew_decision(sig["n_rows"], sig["max_cnt"], sig["p99_cnt"], 32)
 
     def timed(mk):
@@ -734,9 +440,9 @@ def skew_playbook_probe(spark, sf_dir: str) -> dict:
             F.sum(F.length("payload")).alias("payload_bytes"),
             F.count(F.lit(1)).alias("n"),
         )
-        t = _t.time()
+        t = time.time()
         row = df.collect()[0]
-        return df, int(row["n"]), round(_t.time() - t, 2)
+        return df, int(row["n"]), round(time.time() - t, 2)
 
     from map_reduce_go_spark.functions.skew import skew_lab_confs
 
@@ -765,27 +471,23 @@ def skew_playbook_probe(spark, sf_dir: str) -> dict:
 def cls_train_probe(spark, sf_dir: str) -> dict:
     """Scale probe for the in-engine classifier training loop: full
     fixed-iteration training at this scale in BOTH materialization forms
-    (r12) — localCheckpoint (fixture/driver form) vs persist-once parquet
-    featurize (the 100 TB form, VERDICT r11 #3) — reporting both walls,
+    — localCheckpoint (fixture/driver form) vs persist-once parquet
+    featurize (the 100 TB form) — reporting both walls,
     the miss trajectory, and that the two trajectories are identical.
     The loop's scale axes: one corpus featurize (materialized once), per
     iteration one doc-keyed residual join + one slot-keyed agg to
     <=CLS_DIM rows."""
-    import shutil
-    import tempfile
-    import time as _t
-
     from map_reduce_go_spark.operators.pipeline import train_quality_classifier
 
     docs = load_table(spark, sf_dir, "documents")
-    t0 = _t.time()
+    t0 = time.time()
     w_mem, traj = train_quality_classifier(spark, docs)
-    mem_s = _t.time() - t0
+    mem_s = time.time() - t0
     fp = tempfile.mkdtemp(prefix="clstrain-feats-") + "/feats"
     try:
-        t0 = _t.time()
+        t0 = time.time()
         w_pq, traj_pq = train_quality_classifier(spark, docs, feats_path=fp)
-        pq_s = _t.time() - t0
+        pq_s = time.time() - t0
     finally:
         shutil.rmtree(os.path.dirname(fp), ignore_errors=True)
     return {
@@ -798,7 +500,7 @@ def cls_train_probe(spark, sf_dir: str) -> dict:
 
 
 def kv_stream_probe(spark, sf_dir: str) -> dict:
-    """The KV streaming state store vs key cardinality (VERDICT r13 #6):
+    """The KV streaming state store vs key cardinality:
     build a full-custkey-cardinality op-log from orders, batch-fold it
     (kv_fold), drain the SAME log through the stateful streaming twin in
     3 seq-ordered waves, and ASSERT the drained snapshots hash-equal the
@@ -962,98 +664,322 @@ def _n_probe_queries(spark, sf_dir: str) -> int:
     return emb.where(F.col("vec_id") < N_QUERIES).count()
 
 
-def main() -> None:
+
+
+_CUST_ORDERS = {"customer": ("c_custkey",), "orders": ("o_custkey",)}
+_FK_CASCADE = {"o_custkey": "customer", "l_orderkey": "orders"}
+
+FAMILIES: dict[str, Family] = {
+    "mixed": Family(
+        queries=(
+            "q1_pricing_summary",
+            "q3_top_revenue_orders",
+            "wordcount",
+            "dedup_minhash_lsh",
+            "funnel_view_click_purchase",
+            "bigram_lm_doc_score",
+        ),
+    ),
+    # The dedup/ANN scale path (exact digest dedup, banded MinHash-LSH, IVF
+    # search) with the LSH band-bucket size distribution (p50/p90/p99/max
+    # + implied candidate-pair mass) at both scales — the backing for
+    # "banding bounds hot buckets; AQE splits the rest". Left out:
+    # semdedup_prune (within-cell quadratic; its K_CELLS must grow with N)
+    # and dedup_embedding_cosine (exact all-pairs is O(N²) by definition).
+    "dedup": Family(
+        queries=("dedup_exact", "dedup_minhash_lsh", "ann_ivf_cosine"),
+        tables=("documents", "embeddings"),
+        stats={"lsh_buckets": lsh_bucket_stats},
+    ),
+    # FastSS edit-distance join, CMS build and two event-table maintenance
+    # shapes. Customer names get a 4-hex replica salt (distinct suffixes
+    # keep cross-replica name distances >= 2 almost surely, so true-pair
+    # density stays ~linear; a bare numeric suffix would make every
+    # cross-replica pair distance 1). user_id shifts too, so event keys
+    # grow linearly instead of k-times-deeper per-user histories.
+    "round5": Family(
+        queries=(
+            "editdist_deletion_join",
+            "cms_heavy_hitters",
+            "upsert_latest_snapshot",
+            "scd2_user_type_history",
+        ),
+        tables=("customer", "documents", "events"),
+        shifts={"customer": ("c_custkey",), "events": ("user_id",)},
+    ),
+    # The prefix-filter similarity join with its prefix-token bucket
+    # distribution — the backing for "prefix buckets are RARE-token
+    # buckets, small by construction". Vocabulary-growing word salt: the
+    # join is token-blocked.
+    "setsim": Family(
+        queries=("setsim_prefix_filter_join",),
+        tables=("documents",),
+        word_salt=True,
+        stats={"prefix_buckets": setsim_prefix_bucket_stats},
+    ),
+    # setsim under token-frequency skew: a hot shingle on every 3rd doc of
+    # every replica must stay out of every prefix bucket.
+    "setsimskew": Family(
+        queries=("setsim_prefix_filter_join",),
+        tables=("documents",),
+        word_salt=True,
+        inject_hot=True,
+        stats={
+            "prefix_buckets": setsim_prefix_bucket_stats,
+            "hot_shingle": hot_shingle_stats,
+        },
+    ),
+    # Iterative BPE, the shingle-novelty join, within-order basket pairs
+    # and the backlog sweep-line. Word salt: novelty and BPE are
+    # token-blocked; orders/lineitem keys shift so baskets grow in COUNT,
+    # not in per-order depth.
+    "round6": Family(
+        queries=(
+            "bpe_merge_steps",
+            "shingle_novelty_per_doc",
+            "basket_part_pairs_topk",
+            "order_backlog_daily",
+        ),
+        tables=("documents", "orders", "lineitem"),
+        word_salt=True,
+    ),
+    # Governance/temporal/embedding plans. user_id and o_custkey shift so
+    # the number of USERS and CUSTOMERS grows linearly (rolling-distinct
+    # state, TWAP groups, island counts), not per-key history depth.
+    # Embeddings grow in corpus rows while both probe sides stay fixed at
+    # 20 queries, so the int8/negative-mining probes measure scan growth.
+    "round6b": Family(
+        queries=(
+            "rolling_7d_distinct_users",
+            "time_weighted_avg_value_per_user",
+            "order_gap_islands",
+            "embedding_int8_quant_recall",
+            "hard_negative_mining",
+        ),
+        tables=("events", "orders", "embeddings"),
+        shifts={"events": ("user_id",), "orders": ("o_custkey",)},
+    ),
+    # equidepth exercises the two full-width shuffles of the distributed
+    # rank; bm25 the tokenize+agg (scramble replication: the query terms
+    # stay corpus-hot, df and tf-row mass both grow k-fold — word salt
+    # would remove the query terms from every replica); chunking the pure
+    # map-side explode; filtered ANN the corpus-growing scan with a fixed
+    # 20-query probe side, plus its candidate mass at both scales.
+    "round7": Family(
+        queries=(
+            "equidepth_histogram_price_approx",
+            "bm25_doc_ranking",
+            "doc_chunking_fixed_tokens",
+            "ann_filtered_ivf",
+        ),
+        tables=("orders", "documents", "embeddings"),
+        stats={"filtered_ann": filtered_ann_candidate_stats},
+    ),
+    # User-behavior plans. FK-consistent replication: o_custkey shifts by
+    # CUSTOMER's stride and l_orderkey by ORDERS', so each replica's
+    # customer->orders->lineitem cascade stays intact and
+    # gdpr_delete_impact measures real frontier growth, not orphan noise.
+    "round7b": Family(
+        queries=(
+            "churn_weekly_rates",
+            "weekly_activity_bitmap",
+            "session_path_patterns",
+            "gdpr_delete_impact",
+        ),
+        tables=("events", "customer", "orders", "lineitem"),
+        shifts={"events": ("user_id",), **_CUST_ORDERS},
+        fk_bases=_FK_CASCADE,
+    ),
+    # Fact-heavy plans, same FK-consistent model. l_partkey deliberately
+    # does NOT shift: at real scale-up the part catalog is fixed and
+    # per-part depth grows — the spectrum shifts right by ~log2(k)
+    # buckets, the workload the skew audit exists for.
+    "round8": Family(
+        queries=(
+            "pagerank_nation_trade",
+            "mad_outliers_by_segment",
+            "survival_order_fulfillment",
+            "partkey_skew_spectrum",
+        ),
+        tables=("customer", "orders", "lineitem", "supplier", "nation"),
+        shifts=_CUST_ORDERS,
+        fk_bases=_FK_CASCADE,
+    ),
+    # The retrieval/chunking trio. Scramble replication (BM25's query
+    # terms must stay corpus-hot, as in round7); cdc is the only
+    # byte-linear plan (per-byte boundary tests); matryoshka is the knn
+    # shape (corpus grows, probe side fixed).
+    "round8b": Family(
+        queries=("cdc_chunk_stats", "rrf_fusion_topk", "matryoshka_truncation_recall"),
+        tables=("documents", "embeddings"),
+    ),
+    # Word salt: SNM sort keys and winnowing fingerprints must grow in
+    # DISTINCT content (identical replicas would pile exact duplicates into
+    # every neighborhood/posting list). l_partkey stays UNSHIFTED:
+    # replication deepens each part's receipt/issue history k-fold, the
+    # FIFO overlap-join's scale axis; l_orderkey moves with orders' stride
+    # so order-level joins stay FK-consistent. Bootstrap's axis is row
+    # count alone (the resample state is 64 agg columns regardless).
+    "round8c": Family(
+        queries=(
+            "feature_hashing_vectorize",
+            "winnowing_fingerprints",
+            "dedup_sorted_neighborhood",
+            "fifo_inventory_allocation",
+            "bootstrap_ci_avg_price",
+        ),
+        tables=("documents", "orders", "lineitem"),
+        fk_bases={"l_orderkey": "orders"},
+        word_salt=True,
+    ),
+    # Model-evaluation plans. Plain replication: the scale axis is FACT
+    # rows feeding a bounded rollup — AUC's rank frame is the
+    # distinct-VALUE set (constant under replication, as for a real score
+    # column with bounded precision), PSI/stump ride the distinct-n_chars /
+    # bucket rollups, CUSUM the calendar-day rollup, Spearman's rank frames
+    # the distinct quantity/price-cent sets. Expected ratios well under k:
+    # the k-fold cost is the scan + map-side combine.
+    "mleval": Family(
+        queries=(
+            "auc_value_by_event_type",
+            "psi_doclen_drift",
+            "decision_stump_doclen",
+            "cusum_daily_changepoint",
+            "spearman_quantity_price",
+        ),
+        tables=("events", "documents", "lineitem"),
+    ),
+    # Gear-CDC head-to-head with the md5 form at identical corpus bytes,
+    # plus the persisted IVF index (marker-gated reuse means the k× number
+    # is a fresh build over the k× corpus). Word salt so CDC boundary
+    # positions aren't k identical copies.
+    "round10": Family(
+        queries=(
+            "cdc_gear_chunk_stats",
+            "cdc_chunk_stats",
+            "cdc_chunk_dedup",
+            "ann_ivf_persisted",
+        ),
+        tables=("documents", "embeddings"),
+        word_salt=True,
+    ),
+    # The classifier pair (one corpus pass + bounded rollup), the
+    # ranking-quality probe (two broadcast-probe searches over the k×
+    # corpus) and the persisted LSH index (the k× number is a fresh
+    # bucket-partitioned build plus the pruned probe). Word salt so the
+    # classifier's hash-slot distribution isn't k copies.
+    "round10b": Family(
+        queries=(
+            "quality_classifier_score",
+            "classifier_calibration_bins",
+            "ann_ranking_quality",
+            "ann_lsh_persisted",
+        ),
+        tables=("documents", "embeddings"),
+        word_salt=True,
+    ),
+    # The quarantine decode path: per-blob PNG work in mapInPandas, scale
+    # axis blobs decoded per second. Word salt so planted-PNG pixel
+    # payloads differ per replica.
+    "round11": Family(
+        queries=("multimodal_quarantine_audit",),
+        tables=("documents",),
+        word_salt=True,
+    ),
+    # The distributed-rank adopters: the scale axis is CUSTOMERS RANKED, so
+    # o_custkey shifts (the default shifts only o_orderkey, which would
+    # grow orders-per-customer instead of the rank frame). The parts-knob
+    # probe runs the RFM plan under two spark.graft.rank.parts fan-outs
+    # and asserts the result hash does not move.
+    "distrank": Family(
+        queries=(
+            "orders_rfm_segmentation",
+            "revenue_lorenz_gini",
+            "customer_spend_deciles",
+        ),
+        tables=("orders",),
+        shifts={"orders": ("o_custkey",)},
+        stats={"parts_knob": distrank_parts_probe},
+    ),
+    # Maximal-span dedup (match volume is the scale axis, bounded by
+    # candidate degree under the stop-filter) and the shard-controller
+    # fold, whose data side is the orders key-space distinct (grows with
+    # o_custkey). nation has no shift entry: the op-log is control-plane
+    # metadata and must NOT grow with data.
+    "round14": Family(
+        queries=("dedup_maximal_spans", "shardctrler_apply_log"),
+        tables=("documents", "orders", "nation"),
+        shifts={"orders": ("o_custkey",)},
+        word_salt=True,
+    ),
+    # One suite-level curve: every bench.py headliner against one
+    # full-model fixture. Facts + customer grow (FK-consistent strides),
+    # the true dims (region/nation/supplier/part) stay fixed, documents
+    # grow vocabulary-fresh so token-blocked plans measure corpus growth.
+    "suite": Family(
+        queries=tuple(q for q in HEADLINE if q not in SUITE_EXCLUDE),
+        shifts={"events": ("user_id",), **_CUST_ORDERS},
+        fk_bases=_FK_CASCADE,
+        word_salt=True,
+    ),
+    # The classifier training loop in both materialization forms. No word
+    # salt: replicas keep the 1x WORD MULTISET per doc (scramble permutes
+    # order, substitutes nothing), so the marker-token label survives —
+    # word salt would relabel every replica negative. Preserved multisets
+    # also make a sharp invariance check: the featurize (slot COUNTS) and
+    # the count-based label are order-blind, so per-iteration miss counts
+    # must be exactly k-fold base's.
+    "clstrain": Family(tables=("documents",), stats={"clstrain": cls_train_probe}),
+    # The KV streaming state store vs KEY CARDINALITY: the probe's op-log
+    # keys by full o_custkey, which shifts per replica.
+    "kvstream": Family(
+        tables=("orders",),
+        shifts={"orders": ("o_custkey",)},
+        stats={"kvstream": kv_stream_probe},
+    ),
+    # The skew playbook over events with a planted hot key (the event_id
+    # shift is a multiple of 10, so the plant survives replication).
+    "skewjoin": Family(tables=("events",), stats={"skewjoin": skew_playbook_probe}),
+}
+
+
+def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     family = "mixed"
     for a in sys.argv[1:]:
         if a.startswith("--family="):
             family = a.split("=", 1)[1]
+    if family not in FAMILIES:
+        print(
+            f"unknown --family={family}; valid: {', '.join(FAMILIES)}",
+            file=sys.stderr,
+        )
+        return 2
+    fam = FAMILIES[family]
     k = int(args[0]) if args else 8
-    queries, tables, extra, fk = {
-        "dedup": (DEDUP_QUERIES, DEDUP_TABLES, None, None),
-        "round5": (R5_QUERIES, R5_TABLES, R5_EXTRA_SHIFTS, None),
-        "setsim": (SETSIM_QUERIES, SETSIM_TABLES, None, None),
-        "round6": (R6_QUERIES, R6_TABLES, None, None),
-        "round6b": (R6B_QUERIES, R6B_TABLES, R6B_EXTRA_SHIFTS, None),
-        "round7": (R7_QUERIES, R7_TABLES, None, None),
-        "round7b": (R7B_QUERIES, R7B_TABLES, R7B_EXTRA_SHIFTS, R7B_FK_BASES),
-        "round8": (R8_QUERIES, R8_TABLES, R8_EXTRA_SHIFTS, R8_FK_BASES),
-        "setsimskew": (SETSIM_QUERIES, SETSIM_TABLES, None, None),
-        "round8b": (R8B_QUERIES, R8B_TABLES, None, None),
-        "round8c": (R8C_QUERIES, R8C_TABLES, None, R8C_FK_BASES),
-        "mleval": (MLEVAL_QUERIES, MLEVAL_TABLES, None, None),
-        "round10": (R10_QUERIES, R10_TABLES, None, None),
-        "round10b": (R10B_QUERIES, R10B_TABLES, None, None),
-        "round11": (R11_QUERIES, R11_TABLES, None, None),
-        "distrank": (DISTRANK_QUERIES, DISTRANK_TABLES, DISTRANK_EXTRA_SHIFTS, None),
-        "round14": (R14_QUERIES, R14_TABLES, R14_EXTRA_SHIFTS, None),
-        "suite": (None, TABLES, SUITE_EXTRA_SHIFTS, SUITE_FK_BASES),
-    }.get(family, (QUERIES, TABLES, None, None))
-    if family == "suite":
-        queries = suite_queries()
-    # Families that run their own probe at 1x and Kx instead of timing
-    # queries, each with the replication it is measured under. clstrain
-    # replicates with word_salt=False: replicas keep the 1x WORD MULTISET
-    # per doc (the scramble mode permutes word order but substitutes
-    # nothing), so the marker-token label survives — word_salt would
-    # suffix every word and relabel all replicas negative, measuring a
-    # destroyed-label artifact. Preserved multisets also make a sharp
-    # invariance check: the featurize (slot COUNTS) and the count-based
-    # label are order-blind, so per-class MEAN gradients see identical
-    # operands at any k and the per-iteration miss counts must be exactly
-    # k-fold base's. (An order-SENSITIVE feature — n-grams, shingles —
-    # would NOT inherit this invariance under scramble replication.)
-    probe, probe_replication = {
-        "clstrain": (cls_train_probe, {"tables": ("documents",), "word_salt": False}),
-        "kvstream": (
-            kv_stream_probe,
-            {"tables": KVSTREAM_TABLES, "extra_shifts": KVSTREAM_EXTRA_SHIFTS},
-        ),
-        "skewjoin": (skew_playbook_probe, {"tables": ("events",)}),
-    }.get(family, (None, {}))
     spark = get_spark(app_name="scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = tempfile.mkdtemp(prefix="sfbig_")
     try:
-        if probe is not None:
-            replicate(spark, k, out_dir, **probe_replication)
-            base = probe(spark, BASE)
-            big = probe(spark, out_dir)
-            print(json.dumps({"k": k, "family": family, "base": base, "big": big}))
-            return
-        replicate(
-            spark,
-            k,
-            out_dir,
-            tables=tables,
-            extra_shifts=extra,
-            word_salt=(family in ("setsim", "setsimskew", "round6", "round8c", "round10", "round10b", "round11", "round14", "suite")),
-            fk_bases=fk,
-            inject_hot=(family == "setsimskew"),
-        )
-        time_queries(spark, BASE, queries)  # warm-up: codegen/JIT/footer caches
-        base = time_queries(spark, BASE, queries)
-        big = time_queries(spark, out_dir, queries)
-        ratios = {q: round(big[q] / base[q], 2) for q in queries}
-        out = {"k": k, "family": family, "base_s": base, "big_s": big, "ratio": ratios}
-        if family == "dedup":
-            out["lsh_buckets_base"] = lsh_bucket_stats(spark, BASE)
-            out["lsh_buckets_big"] = lsh_bucket_stats(spark, out_dir)
-        if family == "setsim":
-            out["prefix_buckets_base"] = setsim_prefix_bucket_stats(spark, BASE)
-            out["prefix_buckets_big"] = setsim_prefix_bucket_stats(spark, out_dir)
-        if family == "round7":
-            out["filtered_ann_base"] = filtered_ann_candidate_stats(spark, BASE)
-            out["filtered_ann_big"] = filtered_ann_candidate_stats(spark, out_dir)
-        if family == "setsimskew":
-            out["prefix_buckets_big"] = setsim_prefix_bucket_stats(spark, out_dir)
-            out["hot_shingle_big"] = hot_shingle_stats(spark, out_dir)
-        if family == "distrank":
-            out["parts_knob_big"] = distrank_parts_probe(spark, out_dir)
+        replicate(spark, k, out_dir, fam)
+        out: dict = {"k": k, "family": family}
+        if fam.queries:
+            time_queries(spark, BASE, fam.queries)  # warm-up: codegen/JIT/footer caches
+            base = time_queries(spark, BASE, fam.queries)
+            big = time_queries(spark, out_dir, fam.queries)
+            ratios = {q: round(big[q] / base[q], 2) for q in fam.queries}
+            out.update(base_s=base, big_s=big, ratio=ratios)
+        for name, stat in fam.stats.items():
+            for scale, sf_dir in (("base", BASE), ("big", out_dir)):
+                try:
+                    out[f"{name}_{scale}"] = stat(spark, sf_dir)
+                finally:
+                    release_caches()
         print(json.dumps(out))
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -50,6 +50,27 @@ def compare(spark_df, duck_rel, name: str = "query") -> None:
         assert a == b, f"{name}: first differing row #{i}:\n  spark={a}\n  duck ={b}"
 
 
+def compare_on_empty_copies(spark, sf_dir: str, out_dir, name: str, tables) -> None:
+    """Write zero-row pyarrow copies of ``tables`` (schemas from
+    ``sf_dir``) under ``out_dir`` and compare query ``name`` with its
+    DuckDB oracle over them."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from map_reduce_go_spark.registry import all_queries
+
+    con = duckdb.connect()
+    for t in tables:
+        path = f"{out_dir}/{t}.parquet"
+        pq.write_table(pq.read_schema(f"{sf_dir}/{t}.parquet").empty_table(), path)
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    spec = all_queries()[name]
+    try:
+        compare(spec.fn(spark, str(out_dir)), con.sql(spec.oracle), name=name)
+    finally:
+        con.close()
+
+
 def sequential_map_reduce(docs, map_fn, reduce_fn) -> dict:
     """Run the two hooks in-process over ``[(filename, contents)]``: every
     key's values in emission order, one ``reduce_fn`` call per key."""

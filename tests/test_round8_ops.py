@@ -62,20 +62,10 @@ def test_pagerank_empty_tables_match_oracle(spark, sf_dir, tmp_path):
     """Zero-row copies of the five input tables: no nations means no
     ranks, so the query returns the oracle's 0 rows instead of dividing
     by the node count."""
-    import duckdb
-    import pyarrow.parquet as pq
-
-    from tests.oracle_compare import compare
+    from tests.oracle_compare import compare_on_empty_copies
 
     tables = ("lineitem", "orders", "customer", "supplier", "nation")
-    con = duckdb.connect()
-    for t in tables:
-        path = str(tmp_path / f"{t}.parquet")
-        pq.write_table(pq.read_schema(f"{sf_dir}/{t}.parquet").empty_table(), path)
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    spec = all_queries()["pagerank_nation_trade"]
-    compare(spec.fn(spark, str(tmp_path)), con.sql(spec.oracle), name=spec.name)
-    con.close()
+    compare_on_empty_copies(spark, sf_dir, tmp_path, "pagerank_nation_trade", tables)
 
 
 # ---------------------------------------------------------------- MAD

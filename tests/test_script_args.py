@@ -1,5 +1,5 @@
-"""Command-line checks of the oracle scripts that run before any Spark
-session starts."""
+"""Checks of the scripts that run before any Spark session starts: their
+command-line refusals and scale_probe's family table."""
 
 from __future__ import annotations
 
@@ -15,6 +15,7 @@ SCRIPTS = Path(__file__).resolve().parent.parent / "scripts"
 def _load(module: str):
     spec = importlib.util.spec_from_file_location(module, SCRIPTS / f"{module}.py")
     script = importlib.util.module_from_spec(spec)
+    sys.modules[module] = script  # dataclasses resolve their module by name
     spec.loader.exec_module(script)
     return script
 
@@ -33,3 +34,41 @@ def test_unknown_only_name_exits_2_before_spark(module, monkeypatch, capsys):
     )
     assert script.main() == 2
     assert "no_such_query" in capsys.readouterr().err
+
+
+def test_unknown_family_exits_2_before_spark(monkeypatch, capsys):
+    """A typo in --family must fail loudly, not time the mixed set under
+    the misspelled name."""
+    script = _load("scale_probe")
+    monkeypatch.setattr(script, "get_spark", _no_spark)
+    monkeypatch.setattr(sys, "argv", ["scale_probe.py", "2", "--family=sutie"])
+    assert script.main() == 2
+    err = capsys.readouterr().err
+    assert "sutie" in err and "suite" in err
+
+
+_PROBE = _load("scale_probe")
+
+
+@pytest.mark.parametrize("family", list(_PROBE.FAMILIES))
+def test_probe_family_resolves(family, sf_dir):
+    """Every name a family replicates or times exists: a renamed query or
+    column fails here, not minutes into a 64x run."""
+    import pyarrow.parquet as pq
+
+    from map_reduce_go_spark.registry import all_queries
+    from map_reduce_go_spark.sources.readers import TABLES
+
+    fam = _PROBE.FAMILIES[family]
+    assert fam.queries or fam.stats
+    assert set(fam.queries) <= set(all_queries())
+    assert set(fam.tables) <= set(TABLES)
+    assert set(fam.shifts) <= set(fam.tables)
+    shifts = {t: c for t, c in fam.shift_cols().items() if t in fam.tables}
+    for t, cols in shifts.items():
+        names = pq.read_schema(f"{sf_dir}/{t}.parquet").names
+        assert set(cols) <= set(names), (t, cols)
+    shifted = {c for cols in shifts.values() for c in cols}
+    for col, target in fam.fk_bases.items():
+        assert col in shifted, col
+        assert target in shifts, target
