@@ -1,101 +1,101 @@
-"""Distributed global row numbering — the shared idiom behind every
-"rank all N rows" need (Lorenz/Gini, RFM ntiles, equidepth, zipf) without
-an ``Exchange SinglePartition``.
+"""Distributed global ranks and prefix sums — the one idiom behind every
+"rank all N rows" need, without an ``Exchange SinglePartition``.
 
 A bare ``Window.orderBy(...)`` plans as a single-partition exchange: every
 row moves to ONE task, which is the last place a 100 TB plan is allowed to
-funnel an unbounded-cardinality frame. The distributed form is the
-repartitionByRange + per-partition offset composition already proven in
-``plans/mleval._prefix_over`` and the equidepth ``_approx`` twin:
+funnel an unbounded-cardinality frame. :func:`dist_prefix` is the
+distributed form:
 
-1. ``repartitionByRange(PARTS, *order)`` — range shuffle, PARTS-way
-   parallel, globally ordered ACROSS partitions;
-2. per-partition ``row_number`` over the same order — parallel;
-3. one ``groupBy(pid).count()`` collect — PARTS rows of metadata, never
-   data — turned into broadcast offsets;
-4. global row number = local row number + offset(pid).
+1. ``repartitionByRange(range_parts(spark), *order)`` — range shuffle,
+   globally ordered ACROSS partitions;
+2. one ``groupBy(pid)`` aggregate collect — one row of per-partition
+   totals per partition, metadata, never data — turned into broadcast
+   offsets;
+3. a running sum over a window partitioned by ``pid`` plus the offset of
+   the row's partition — parallel.
+
+A row number is the running count (:func:`dist_row_number`). The callers:
+the mleval prefix sums (``auc_value_by_event_type``,
+``decision_stump_doclen``, ``spearman_quantity_price``), the vocabulary
+rank of ``zipf_tail_slope``, the sort rank of
+``dedup_sorted_neighborhood``, and the row numbers behind
+``equidepth_histogram_price_approx``, Lorenz/Gini, RFM and the customer
+deciles (the last four tile them with :func:`ntile_from_rank`).
 
 The ordering key must be a TOTAL order (include a unique tiebreak column):
 ``repartitionByRange`` may split equal keys across adjacent partitions, so
 any tie that straddles a boundary would make local ranks non-deterministic.
 With a unique composite key the result is bit-identical to the
-single-partition ``row_number`` — same contract the oracles hash.
+single-partition window — same contract the oracles hash.
 """
 
 from __future__ import annotations
+
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from map_reduce_go_spark.functions.caching import tracked_cache
 
-#: Floor for the derived range-partition fan-out: enough to parallelize
-#: even when the session's shuffle-partition conf is tiny (local test
-#: sessions), small enough that the per-partition count collect stays
-#: metadata at any setting.
+#: Floor for the range-partition fan-out: enough to parallelize even when
+#: the session's shuffle-partition conf is tiny (local test sessions),
+#: small enough that the per-partition collect stays metadata.
 RANK_PARTS_MIN = 8
 
-#: Session conf overriding the derived fan-out explicitly
-#: (``spark.conf.set("spark.graft.rank.parts", "64")``). The global
-#: rank is HASH-INVARIANT in this knob (offsets are exact metadata at
-#: any fan-out — asserted per-probe in scripts/scale_probe.py's
-#: distrank family), so it tunes throughput only, never results.
-RANK_PARTS_CONF = "spark.graft.rank.parts"
+
+def range_parts(spark) -> int:
+    """The rank shuffle's fan-out: ``spark.sql.shuffle.partitions`` — the
+    conf that sizes every other shuffle in the job — floored at
+    RANK_PARTS_MIN. Results are identical at any fan-out (the offsets are
+    exact metadata)."""
+    return max(RANK_PARTS_MIN, int(spark.conf.get("spark.sql.shuffle.partitions", "8")))
 
 
-def range_parts(spark, parts: int | None = None) -> int:
-    """Derive the rank/prefix shuffle fan-out (VERDICT r12 #3 — a
-    constant 8 was the one remaining fixed degree-of-parallelism in a
-    100 TB-facing idiom). Precedence: explicit ``parts`` argument, then
-    the ``spark.graft.rank.parts`` session conf, then the session's
-    ``spark.sql.shuffle.partitions`` — the same knob that sizes every
-    other shuffle in the job, so on a real cluster (thousands of
-    shuffle partitions) the rank shuffle fans out with the rest of the
-    plan instead of funneling into 8 tasks. Floored at RANK_PARTS_MIN."""
-    if parts is not None:
-        return max(1, int(parts))
-    conf = spark.conf.get(RANK_PARTS_CONF, None)
-    if conf:
-        return max(1, int(conf))
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
-    return max(RANK_PARTS_MIN, shuffle)
+def dist_prefix(
+    df: DataFrame, order_by: list[Column], sums: Mapping[str, Column]
+) -> tuple[DataFrame, dict[str, int]]:
+    """(df + one inclusive running total per ``sums`` entry, the totals).
 
-
-def dist_row_number(
-    df: DataFrame,
-    order_by: list[Column],
-    out: str = "i",
-    parts: int | None = None,
-) -> tuple[DataFrame, int]:
-    """(df + global 1-based ``out`` row number, total row count).
-
-    ``order_by`` must totally order ``df`` (unique composite key — see
-    module docstring). The returned count is driver-side metadata (the
-    offset collect already paid for it), so callers needing ``n`` embed
-    it as a literal instead of planning a ``count() OVER ()`` — which
-    would itself be a single-partition window. ``parts`` tunes the
-    range-shuffle fan-out (default derived per :func:`range_parts`);
-    the result is bit-identical at any setting."""
+    Each output column ``name`` is ``sum(expr)`` over the rows up to and
+    including the current one in ``order_by`` order, as a long;
+    ``order_by`` must totally order ``df`` (see module docstring). The
+    totals are driver-side metadata (the offset collect already paid for
+    them), so a caller needing ``n`` embeds it as a literal instead of
+    planning a ``count() OVER ()`` — itself a single-partition window."""
     spark = df.sparkSession
     ranged = tracked_cache(
-        df.repartitionByRange(range_parts(spark, parts), *order_by).withColumn(
+        df.repartitionByRange(range_parts(spark), *order_by).withColumn(
             "pid", F.spark_partition_id()
         )
     )
-    per_pid = ranged.groupBy("pid").count().collect()
-    sizes = {r["pid"]: r["count"] for r in per_pid}
-    offsets, acc = [], 0
-    for pid in sorted(sizes):
-        offsets.append((pid, acc))
-        acc += sizes[pid]
-    off = spark.createDataFrame(offsets or [(0, 0)], "pid int, off long")
-    w = Window.partitionBy("pid").orderBy(*order_by)
-    ranked = (
-        ranged.join(F.broadcast(off), "pid")
-        .withColumn(out, (F.row_number().over(w) + F.col("off")).cast("long"))
-        .drop("pid", "off")
+    names = list(sums)
+    per_pid = ranged.groupBy("pid").agg(*[F.sum(c).alias(n) for n, c in sums.items()])
+    offsets, acc = [], [0] * len(names)
+    for r in sorted(per_pid.collect(), key=lambda r: r["pid"]):
+        offsets.append((r["pid"], *acc))
+        acc = [a + (r[n] or 0) for a, n in zip(acc, names)]
+    offs = [f"off{j}" for j in range(len(names))]
+    schema = ", ".join(["pid int", *(f"{o} long" for o in offs)])
+    off = spark.createDataFrame(offsets or [(0, *acc)], schema)
+    w = (
+        Window.partitionBy("pid")
+        .orderBy(*order_by)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return ranked, acc
+    out = ranged.join(F.broadcast(off), "pid")
+    for (n, c), o in zip(sums.items(), offs):
+        out = out.withColumn(n, (F.sum(c).over(w) + F.col(o)).cast("long"))
+    return out.drop("pid", *offs), dict(zip(names, acc))
+
+
+def dist_row_number(
+    df: DataFrame, order_by: list[Column], out: str = "i"
+) -> tuple[DataFrame, int]:
+    """(df + global 1-based ``out`` row number, total row count): the
+    running count of :func:`dist_prefix`."""
+    ranked, totals = dist_prefix(df, order_by, {out: F.lit(1)})
+    return ranked, totals[out]
 
 
 def ntile_from_rank(i: Column, n: int, k: int) -> Column:

@@ -955,7 +955,7 @@ def load_ivf_index_with_batches(
 )
 def ann_ivf_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental index maintenance end to end: the quantizer trains on
-    the BASE corpus only (vec_id % {INCR_MOD} != 0 — "yesterday's"
+    the BASE corpus only (vec_id % INCR_MOD != 0 — "yesterday's"
     snapshot), today's batch is appended by cell assignment against the
     frozen codebook (no retrain, no base rewrite), and the probe searches
     base + batch through the same partition-pruned path. The oracle

@@ -2118,8 +2118,6 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SNM_WINDOW = 5  # compare each record to the next SNM_WINDOW-1 in key order
 SNM_KEY_CHARS = 24  # blocking key: first chars of the normalized text
-# The distributed global rank's fan-out derives per session from
-# functions.distrank.range_parts (VERDICT r12 #3).
 _SNM_MIN_J_PPM = 250_000  # report pairs with token-set Jaccard >= 0.25
 
 
@@ -2174,10 +2172,9 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly n·(w-1), LINEAR in the corpus. Output: neighbor pairs with
     token-set Jaccard >= 0.25, with their rank distance.
 
-    Scale shape: the global sort rank uses the distributed-row_number
-    idiom (repartitionByRange on the key + per-partition row_number +
-    broadcast cumulative offsets — the equidepth/zipf plan; the only
-    collect is partition-count longs). The neighborhood join is an
+    Scale shape: the global sort rank is the distributed row number
+    (functions/distrank.py::dist_row_number; the only collect is one
+    long per range partition). The neighborhood join is an
     EQUI-join: each rank explodes to its w-1 probe ranks, so Spark
     shuffles on rn instead of falling into a non-equi nested-loop join.
     Token sets join back by doc_id — the rank shuffle moves (key,
@@ -2195,39 +2192,17 @@ def sorted_neighborhood_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame
     dedup_sorted_neighborhood for the plan-shape contract. Split out so
     tests can drive it over constructed corpora with known duplicates
     (the driver fixtures contain none)."""
-    from map_reduce_go_spark.functions.distrank import range_parts
+    from map_reduce_go_spark.functions.distrank import dist_row_number
 
     key = F.substring(
         F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]", ""),
         1,
         SNM_KEY_CHARS,
     )
-    ranged = (
-        docs.select("doc_id", key.alias("k"))
-        .repartitionByRange(
-            range_parts(docs.sparkSession), F.asc("k"), F.asc("doc_id")
-        )
-        .withColumn("pid", F.spark_partition_id())
-        .transform(tracked_cache)
-    )
-    sizes = {
-        r["pid"]: r["n"]
-        for r in ranged.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(sizes):
-        offsets.append((pid, acc))
-        acc += sizes[pid]
-    off = spark.createDataFrame(offsets or [(0, 0)], "pid int, offset long")
-    win = Window.partitionBy("pid").orderBy("k", "doc_id")
-    ranked = (
-        ranged.join(F.broadcast(off), "pid")
-        .select(
-            "doc_id", (F.row_number().over(win) + F.col("offset")).alias("rn")
-        )
-        .transform(tracked_cache)
+    ranked = tracked_cache(
+        dist_row_number(
+            docs.select("doc_id", key.alias("k")), [F.asc("k"), F.asc("doc_id")], out="rn"
+        )[0].select("doc_id", "rn")
     )
     probes = ranked.select(
         F.col("doc_id").alias("da"),

@@ -618,7 +618,7 @@ RESERVOIR_K = 25
     """,
 )
 def reservoir_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-size uniform sample per source (k={RESERVOIR_K}): the
+    """Fixed-size uniform sample per source (k=RESERVOIR_K): the
     distributed analog of reservoir sampling, expressed as keyed top-k by
     a hash-derived priority (Efraimidis–Spirakis A-Res with a
     DETERMINISTIC key: md5 of the doc id instead of rand()). Every row
@@ -1255,18 +1255,18 @@ CHUNK_STRIDE = 24
 def doc_chunking_fixed_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window document chunking — the context-window splitter a
     RAG indexer or a fixed-sequence-length training pipeline runs over
-    every document: chunks of {CHUNK_TOKENS} tokens starting every
-    {CHUNK_STRIDE} (i.e. {CHUNK_TOKENS - CHUNK_STRIDE}-token overlap),
+    every document: chunks of CHUNK_TOKENS tokens starting every
+    CHUNK_STRIDE (i.e. (CHUNK_TOKENS - CHUNK_STRIDE)-token overlap),
     the final chunk truncated at the document end. A start whose chunk
     would be wholly contained in the previous chunk (s > 0 and the
     previous chunk already reaches the document end, i.e.
-    s >= n - ({CHUNK_TOKENS} - {CHUNK_STRIDE})) is not emitted — a real
+    s >= n - (CHUNK_TOKENS - CHUNK_STRIDE)) is not emitted — a real
     RAG indexer never emits a fully redundant chunk. Emits per chunk its
     index, token count, and boundary tokens (the metadata a chunk store
     carries; the chunk text itself would be a slice() of the same array).
 
     Scale shape: pure map-side — tokenize once per doc, explode a
-    sequence of chunk starts (~n_tokens/{CHUNK_STRIDE} rows per doc,
+    sequence of chunk starts (~n_tokens/CHUNK_STRIDE rows per doc,
     linear in corpus size), no shuffle at all until a downstream
     aggregation. At 100 TB this runs as one codegen'd scan-project pass;
     the explode factor is bounded by document length over stride, so
@@ -1330,7 +1330,7 @@ MIXTURE_TAU = 0.3
 def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled language-mixture sampling weights (the mT5 /
     multilingual-pretraining recipe): raw per-language token mass p_i is
-    flattened to w_i ∝ p_i^τ (τ={MIXTURE_TAU}), boosting low-resource
+    flattened to w_i ∝ p_i^τ (τ=MIXTURE_TAU), boosting low-resource
     languages without letting any dominate. Emits each language's token
     count, natural share (exact integer ppm), and normalized temperature
     weight — the numbers a data-mixture config is built from.
@@ -1408,8 +1408,8 @@ CDC_DIVISOR = 64  # P(boundary) per position = 1/64 -> ~64-char chunks
 )
 def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunking (the FastCDC/rsync idea): chunk
-    boundaries where the hash of the trailing {CDC_WINDOW}-byte window
-    ≡ 0 mod {CDC_DIVISOR}, giving ~{CDC_DIVISOR}-char expected chunks
+    boundaries where the hash of the trailing CDC_WINDOW-byte window
+    ≡ 0 mod CDC_DIVISOR, giving ~CDC_DIVISOR-char expected chunks
     whose boundaries are CONTENT-anchored — insert one byte early in a
     document and every downstream chunk boundary still lands on the
     same content, so chunk-level dedup keeps matching (fixed-stride
@@ -1569,7 +1569,7 @@ def cdc_gear_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     `cdc_chunk_stats` (per-doc boundary/chunk counts, mean chunk size)
     but the boundary hash is the windowed gear — a 52-bit table lookup
     plus shift-adds per character instead of an md5 per position. The
-    hash is an exact integer function of the trailing {CDC_WINDOW}-char
+    hash is an exact integer function of the trailing CDC_WINDOW-char
     window, so the DuckDB oracle replays it position-by-position as a
     weighted sum while the Spark kernel computes it vectorized; both
     sides are all-integer and boundary-identical by construction.
@@ -1581,7 +1581,7 @@ def cdc_gear_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: zero explode, zero shuffle before the (already per-doc)
     kernel output — corpus bytes stream through Arrow once. The md5 form
-    scans ~n_chars x {CDC_WINDOW} hash evaluations; this path does
+    scans ~n_chars x CDC_WINDOW hash evaluations; this path does
     ~n_chars shift-adds (SCALE.md records the measured win)."""
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("n_chars") >= CDC_WINDOW
@@ -1728,7 +1728,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     storage/transfer-savings estimate starts from, robust to edits
     because the boundaries are content-anchored.
 
-    Scale shape: the chunk explode is corpus-bytes/{CDC_DIVISOR} rows of
+    Scale shape: the chunk explode is corpus-bytes/CDC_DIVISOR rows of
     (digest, chars, source); the frequency rollup and the join back are
     both keyed on the digest — co-partitioned, digest-only shuffles (the
     dedup_exact discipline: no text ever shuffles); the output is a

@@ -1989,8 +1989,8 @@ def _cosine_udf_dim(a: Column, b: Column, dim: int) -> Column:
     """,
 )
 def matryoshka_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-representation truncation audit: recall@{TOP_K} of
-    nearest-neighbor search using only the FIRST {MRL_DIM} of 64
+    """Matryoshka-representation truncation audit: recall@TOP_K of
+    nearest-neighbor search using only the FIRST MRL_DIM of 64
     embedding dimensions against the full-dimension ranking — the
     acceptance measurement for MRL-style dimension truncation (2× less
     vector memory and bandwidth if recall holds; the fixture's

@@ -1673,9 +1673,6 @@ def readability_flesch_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Head ranks excluded from the Zipf tail fit (the head deviates from the
 # power law by construction; the tail is the claim being measured).
 ZIPF_HEAD_RANKS = 10
-# The distributed vocabulary rank's fan-out derives per session from
-# functions.distrank.range_parts (VERDICT r12 #3: follows
-# spark.sql.shuffle.partitions / the spark.graft.rank.parts override).
 
 
 @register(
@@ -1722,9 +1719,8 @@ def zipf_tail_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-health gauge for the mixture planner.
 
     The corpus-sized work is one tokenize + one keyed count; ranking
-    runs over the VOCABULARY rollup with the DISTRIBUTED row_number
-    idiom (repartitionByRange + per-partition row_number + broadcast
-    cumulative offsets — the equidepth plan): web-scale vocabularies
+    runs over the VOCABULARY rollup with the distributed row number
+    (functions/distrank.py::dist_row_number): web-scale vocabularies
     are 10^8-10^9 tokens, too big for the single-partition window this
     used through round 7 (VERDICT r7 watch item). The collect is
     bounded by the partition count — metadata, never data. Both logs
@@ -1734,9 +1730,7 @@ def zipf_tail_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient, arranged all-positive so truncation == floor on both
     engines.
     """
-    from pyspark.sql import Window
-
-    from map_reduce_go_spark.functions.caching import tracked_cache
+    from map_reduce_go_spark.functions.distrank import dist_row_number
 
     docs = load_table(spark, sf_dir, "documents")
     freq = (
@@ -1745,30 +1739,8 @@ def zipf_tail_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("f"))
     )
-    from map_reduce_go_spark.functions.distrank import range_parts
-
-    ranged = (
-        freq.repartitionByRange(
-            range_parts(spark), F.desc("f"), F.asc("token")
-        )
-        .withColumn("pid", F.spark_partition_id())
-        .transform(tracked_cache)
-    )
-    sizes = {
-        r["pid"]: r["n"]
-        for r in ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(sizes):
-        offsets.append((pid, acc))
-        acc += sizes[pid]
-    off = spark.createDataFrame(offsets or [(0, 0)], "pid int, offset long")
-    w = Window.partitionBy("pid").orderBy(F.desc("f"), F.asc("token"))
-    pts = (
-        ranged.join(F.broadcast(off), "pid")
-        .select("f", (F.row_number().over(w) + F.col("offset")).alias("rnk"))
-        .where(F.col("rnk") > ZIPF_HEAD_RANKS)
-    ).select(
+    ranked, _n = dist_row_number(freq, [F.desc("f"), F.asc("token")], out="rnk")
+    pts = ranked.where(F.col("rnk") > ZIPF_HEAD_RANKS).select(
         (F.length(F.bin("rnk")) - 1).cast("long").alias("x"),
         (F.length(F.bin("f")) - 1).cast("long").alias("y"),
     )
@@ -1920,7 +1892,7 @@ def _bm25_term_sql(i: int) -> str:
 )
 def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 retrieval scoring of the whole corpus against a fixed query
-    ({BM25_TERMS}) — the lexical-search ranking a RAG pipeline runs before
+    (BM25_TERMS) — the lexical-search ranking a RAG pipeline runs before
     (or fused with) vector search. Okapi BM25 with k1/b defaults.
 
     Scale shape: ONE tokenize+explode pass feeds a per-doc conditional
@@ -2037,7 +2009,7 @@ def llr_keyness_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-comparison statistic quality teams use to spot what a source
     over-represents (spam phrases, boilerplate, domain drift). Keeps only
     OVER-represented terms (observed share > corpus share — an exact
-    integer cross-multiplication test) and emits the top {LLR_TOP_TERMS}
+    integer cross-multiplication test) and emits the top LLR_TOP_TERMS
     per source.
 
     Scale shape: the corpus is tokenized ONCE into (source, tok) counts
@@ -2134,7 +2106,7 @@ def min_count_vocab_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned vocabulary decision.
 
     Scale shape: one tokenize pass to vocabulary counts (map-side
-    combinable); the curve is an explode of {len(VOCAB_MIN_COUNTS)}
+    combinable); the curve is an explode of len(VOCAB_MIN_COUNTS)
     threshold literals over that VOCABULARY-sized rollup (bounded k×
     replication of the small frame, never of the corpus), then one more
     tiny agg. Coverage is integer-ppm (exact cross-engine). The corpus
@@ -2283,7 +2255,7 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the pipeline_stage_attrition discipline: compositions reuse the
     exact registered semantics, so this query sits under bm25's own
     oracle too). Scale shape: both legs end in bounded top-k lists
-    ({BM25_TOP_DOCS} rows), so fusion is a {2 * BM25_TOP_DOCS}-row outer
+    (BM25_TOP_DOCS rows), so fusion is a 2·BM25_TOP_DOCS-row outer
     join — free at any corpus size; the corpus-sized work is exactly the
     two rankers' (one shared tokenize in the oracle; two passes in the
     composed Spark plan, each the ranker's own audited plan).

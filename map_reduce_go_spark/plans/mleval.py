@@ -16,10 +16,10 @@ IDENTICAL in the Spark plan and the DuckDB oracle (shared f-string
 templates), so both engines evaluate the same IEEE expression tree.
 
 Scale notes (100 TB):
-- Global rank/prefix sums use the distributed-rank idiom proven by
-  equidepth_histogram_price_approx and zipf_tail_slope:
-  repartitionByRange → per-partition window → broadcast per-partition
-  offsets (collect is bounded by partition COUNT, never data size).
+- Global prefix sums (AUC, the stump search, Spearman) call
+  functions/distrank.py::dist_prefix: repartitionByRange → one
+  per-partition collect → broadcast offsets → pid-partitioned running
+  window (the collect is bounded by partition COUNT, never data size).
 - Grouped-value rollups are cached and reused across subtrees so the
   fact table is scanned once per query (scan-count audited).
 - The only unpartitioned windows run over the calendar-day rollup
@@ -33,55 +33,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from map_reduce_go_spark.functions.caching import tracked_cache
+from map_reduce_go_spark.functions.distrank import dist_prefix
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
-
-#: Range-partition fan-out for the distributed prefix-sum: derived per
-#: session from functions.distrank.range_parts (VERDICT r12 #3 — the
-#: old constant 8 capped the prefix shuffle's parallelism regardless of
-#: cluster size; now it follows spark.sql.shuffle.partitions or the
-#: spark.graft.rank.parts override, hash-invariantly).
 
 #: PSI reference cohort and Laplace smoothing: counts+1 over 10 deciles
 #: (denominator +10) so empty buckets contribute a finite, engine-exact
 #: term instead of ln(0).
 PSI_REF_SOURCE = "src0"
 PSI_BUCKETS = 10
-
-
-def _prefix_over(
-    df: DataFrame, order_col: str, measures: tuple[str, ...]
-) -> DataFrame:
-    """Distributed inclusive prefix sums of ``measures`` over the global
-    ``order_col`` ordering — repartitionByRange + per-partition window +
-    broadcast cumulative offsets (the equidepth/zipf idiom: the collect
-    is one row per PARTITION, never per data row). ``df`` must be one
-    row per distinct ``order_col`` value (a grouped rollup)."""
-    from map_reduce_go_spark.functions.distrank import range_parts
-
-    spark = df.sparkSession
-    ranged = tracked_cache(
-        df.repartitionByRange(
-            range_parts(spark), F.asc(order_col)
-        ).withColumn("pid", F.spark_partition_id())
-    )
-    per_pid = ranged.groupBy("pid").agg(
-        *[F.sum(m).alias(m) for m in measures]
-    ).collect()
-    sizes = {r["pid"]: tuple(r[m] or 0 for m in measures) for r in per_pid}
-    offsets, acc = [], tuple(0 for _ in measures)
-    for pid in sorted(sizes):
-        offsets.append((pid, *acc))
-        acc = tuple(a + s for a, s in zip(acc, sizes[pid]))
-    schema = "pid int, " + ", ".join(f"off_{m} long" for m in measures)
-    off = spark.createDataFrame(offsets or [(0,) + acc], schema)
-    w = Window.partitionBy("pid").orderBy(F.asc(order_col))
-    out = ranged.join(F.broadcast(off), "pid")
-    for m in measures:
-        out = out.withColumn(
-            f"cum_{m}", (F.sum(m).over(w) + F.col(f"off_{m}")).cast("long")
-        )
-    return out.drop("pid", *[f"off_{m}" for m in measures])
 
 
 # --------------------------------------------------------------------------
@@ -148,7 +108,7 @@ def auc_value_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.groupBy("value", "event_type").agg(F.count(F.lit(1)).alias("n_vt"))
     )
     vals = vt.groupBy("value").agg(F.sum("n_vt").alias("n"))
-    cum = _prefix_over(vals, "value", ("n",)).select(
+    cum = dist_prefix(vals, [F.asc("value")], {"cum_n": F.col("n")})[0].select(
         "value", "n", (F.col("cum_n") - F.col("n")).alias("cb")
     )
     tot = vals.agg(F.sum("n").cast("long").alias("n_all"))
@@ -259,7 +219,7 @@ def psi_bucket_assign(docs: DataFrame, edges: DataFrame) -> DataFrame:
 )
 def psi_doclen_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index of each source's document-length
-    distribution against the {PSI_REF_SOURCE} reference cohort — the
+    distribution against the PSI_REF_SOURCE reference cohort — the
     standard production data-drift monitor (PSI < 0.1 stable, > 0.25
     action). Buckets are the reference cohort's own deciles
     (percentile_disc — actual data values, so bucket edges compare
@@ -424,7 +384,9 @@ def decision_stump_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("npos"),
     )
-    cum = _prefix_over(grp, "thr", ("n", "npos"))
+    cum = dist_prefix(
+        grp, [F.asc("thr")], {"cum_n": F.col("n"), "cum_npos": F.col("npos")}
+    )[0]
     tot = grp.agg(
         F.sum("n").cast("long").alias("n_all"),
         F.sum("npos").cast("long").alias("p_all"),
@@ -545,9 +507,11 @@ def cusum_daily_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shared Spark/DuckDB final expression: Pearson over the CENTERED doubled
 # mid-ranks. All three sums are exact integers (decimal-38 / HUGEINT);
 # the one float appears here, in identical expression text both engines.
+# A constant column (sxx or syy = 0, e.g. one row) gives NULL, not a
+# DIVIDE_BY_ZERO.
 _SPEARMAN6 = (
     "round(CAST(sxy AS DOUBLE)"
-    " / (sqrt(CAST(sxx AS DOUBLE)) * sqrt(CAST(syy AS DOUBLE))), 6)"
+    " / nullif(sqrt(CAST(sxx AS DOUBLE)) * sqrt(CAST(syy AS DOUBLE)), 0), 6)"
 )
 
 
@@ -639,7 +603,7 @@ def spearman_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     gx = fact.groupBy("x").agg(F.count(F.lit(1)).alias("n"))
     rx = tracked_cache(
-        _prefix_over(gx, "x", ("n",))
+        dist_prefix(gx, [F.asc("x")], {"cum_n": F.col("n")})[0]
         .crossJoin(F.broadcast(tot))
         .select("x", "n", centered().alias("c"))
     )
@@ -660,7 +624,7 @@ def spearman_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ry = tracked_cache(
-        _prefix_over(gy, "y", ("n",))
+        dist_prefix(gy, [F.asc("y")], {"cum_n": F.col("n")})[0]
         .crossJoin(F.broadcast(tot))
         .select("y", "n", "sx", centered().alias("c"))
     )

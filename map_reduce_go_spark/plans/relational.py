@@ -2571,8 +2571,8 @@ PAGERANK_ITERS = 3
 )
 def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the nation-to-nation trade graph (supplier nation →
-    customer nation, edge weight = shipment count), {PAGERANK_ITERS}
-    power iterations with damping {PAGERANK_DAMP} — the
+    customer nation, edge weight = shipment count), PAGERANK_ITERS
+    power iterations with damping PAGERANK_DAMP — the
     iterate-on-the-aggregate pattern for graph centrality at warehouse
     scale: the 100 TB fact table is touched ONCE to build a
     bounded-cardinality edge aggregate (≤ |nations|² rows), and the

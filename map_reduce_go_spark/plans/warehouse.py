@@ -785,7 +785,7 @@ def ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Aggregate FIRST, smooth the rollup: the fact-sized work is one
     map-side-combinable groupBy(day); the EWMA then runs over the
     day-cardinality rollup (a few thousand rows at any corpus size), as
-    a bounded self-join on day distance < {_EWMA_DAYS}. At 100 TB the
+    a bounded self-join on day distance < _EWMA_DAYS. At 100 TB the
     smoothing cost is unchanged — it is a function of calendar length,
     not corpus size. Weights are integer powers of two (2^(9-d)), so
     every weighted term is exact decimal; the single float division
@@ -996,7 +996,6 @@ def interval_union_coverage_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _HIST_APPROX_BUCKETS = 16
-_HIST_APPROX_PARTS = 8
 
 
 @register(
@@ -1018,67 +1017,36 @@ _HIST_APPROX_PARTS = 8
 def equidepth_histogram_price_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth histogram WITHOUT the single-partition ntile window —
     the scale path the equidepth_histogram_price docstring names. Same
-    output (exact ntile semantics, {_HIST_APPROX_BUCKETS} buckets), but
-    the global rank is computed with the distributed row_number idiom:
+    output (exact ntile semantics, _HIST_APPROX_BUCKETS buckets), but
+    the global rank is the distributed row number
+    (functions/distrank.py::dist_row_number): a range shuffle on (price,
+    orderkey), one collect of per-partition counts (metadata — one long
+    per range partition, joined back as a broadcast offsets frame), and a
+    running count over a window partitioned by the partition id.
 
-      1. repartitionByRange on (price, orderkey) — rows land in
-         range-ordered partitions, each sorted independently;
-      2. per-partition row_number (window PARTITIONED by the physical
-         partition id — parallel, never a global sort);
-      3. global row_number = local row_number + the cumulative count of
-         all lower partitions. The per-partition counts are index
-         metadata — at most {_HIST_APPROX_PARTS} longs collected to the
-         driver and joined back as a broadcast literal frame (the IVF-
-         codebook discipline: metadata moves, the data plane never does).
-
-    The rank→bucket map replays ntile's exact fill rule (the first
-    n mod B buckets take one extra row) as integer arithmetic, so the
-    DuckDB ntile oracle matches bit-for-bit; o_orderkey tie-breaks make
-    membership deterministic. The executed plan contains NO Exchange
-    SinglePartition over fact-sized input (tests/test_plan_audit.py);
-    both shuffles (range + pid-hash) are full-width. At 100 TB this is
-    the plan you run when ANALYZE-grade exact bucket bounds are required;
-    when approximate bounds suffice, percentile_approx's mergeable GK
-    sketch does it in one pass with no second shuffle.
+    ``ntile_from_rank`` maps the rank to a bucket with ntile's exact fill
+    rule (the first n mod B buckets take one extra row) as integer
+    comparisons, so the DuckDB ntile oracle matches bit-for-bit;
+    o_orderkey tie-breaks make membership deterministic. The executed
+    plan contains NO Exchange SinglePartition over fact-sized input
+    (tests/test_plan_audit.py); both shuffles (range + pid-hash) are
+    full-width. At 100 TB this is the plan you run when ANALYZE-grade
+    exact bucket bounds are required; when approximate bounds suffice,
+    percentile_approx's mergeable GK sketch does it in one pass with no
+    second shuffle.
     """
-    from map_reduce_go_spark.functions.caching import tracked_cache
+    from map_reduce_go_spark.functions.distrank import (
+        dist_row_number,
+        ntile_from_rank,
+    )
 
     orders = load_table(spark, sf_dir, "orders")
-    ranged = (
-        orders.select("o_totalprice", "o_orderkey")
-        .repartitionByRange(_HIST_APPROX_PARTS, "o_totalprice", "o_orderkey")
-        .withColumn("pid", F.spark_partition_id())
-        .transform(tracked_cache)
+    ranked, n = dist_row_number(
+        orders.select("o_totalprice", "o_orderkey"),
+        [F.asc("o_totalprice"), F.asc("o_orderkey")],
+        out="rn",
     )
-    # Partition sizes -> cumulative offsets: bounded by the partition
-    # count (metadata), independent of row count.
-    sizes = {r["pid"]: r["n"] for r in ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()}
-    n = sum(sizes.values())
-    offsets, acc = [], 0
-    for pid in sorted(sizes):
-        offsets.append((pid, acc))
-        acc += sizes[pid]
-    off = spark.createDataFrame(offsets, "pid int, offset long")
-
-    w = Window.partitionBy("pid").orderBy("o_totalprice", "o_orderkey")
-    rn = (F.row_number().over(w) + F.col("offset")).alias("rn")
-    ranked = ranged.join(F.broadcast(off), "pid").select("o_totalprice", rn)
-
-    # ntile replay: with n rows and B buckets, the first r = n mod B
-    # buckets hold q+1 rows (q = n div B), the rest hold q.
-    b = _HIST_APPROX_BUCKETS
-    q, r = divmod(n, b)
-    if q == 0:  # degenerate corpus smaller than the bucket count
-        bucket = F.col("rn")
-    else:
-        big = r * (q + 1)  # rows living in the q+1-sized buckets
-        # ceil division via (x + d - 1) div d, all integer.
-        bucket = F.when(
-            F.col("rn") <= big,
-            F.expr(f"CAST((rn + {q + 1} - 1) div {q + 1} AS INT)"),
-        ).otherwise(
-            F.expr(f"CAST({r} + (rn - {big} + {q} - 1) div {q} AS INT)")
-        )
+    bucket = ntile_from_rank(F.col("rn"), n, _HIST_APPROX_BUCKETS)
     return (
         ranked.select("o_totalprice", bucket.alias("bucket"))
         .groupBy("bucket")

@@ -40,6 +40,14 @@ _JUMP: dict[str, int] = {
     "pagerank_nation_trade": 17,
     # NULL instead of DIVIDE_BY_ZERO on empty tables
     **dict.fromkeys(["bloom_join_prune_probe", "kmv_distinct_merge_probe"], 17),
+    # the rank family calls functions/distrank.py::dist_prefix; spearman's
+    # constant-column guard
+    **dict.fromkeys(
+        ["auc_value_by_event_type", "decision_stump_doclen", "spearman_quantity_price",
+         "equidepth_histogram_price_approx", "zipf_tail_slope", "dedup_sorted_neighborhood",
+         "orders_rfm_segmentation", "revenue_lorenz_gini", "customer_spend_deciles"],
+        17,
+    ),
 }
 
 
@@ -48,19 +56,18 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str  # ANSI SQL for DuckDB
-    doc: str = ""
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, *, oracle: str, doc: str = ""):
+def register(name: str, *, oracle: str):
     """Decorator: register ``fn(spark, sf_dir) -> DataFrame`` under ``name``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        _REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle)
         return fn
 
     return deco

@@ -37,7 +37,7 @@ def main() -> None:
     for mod in sorted(by_module):
         print(f"\n## {mod}\n")
         for name, spec in sorted(by_module[mod]):
-            print(f"- **{name}** — {first_sentence(spec.doc)}")
+            print(f"- **{name}** — {first_sentence(spec.fn.__doc__)}")
 
 
 if __name__ == "__main__":

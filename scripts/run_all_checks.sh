@@ -14,6 +14,8 @@ echo "== cluster launcher smoke (local[4]) =="
 scripts/submit_cluster.sh --sf-dir /root/testdata/sf0.001 --query wordcount 2>/dev/null | tail -1
 echo "== scale probe 2x dedup family =="
 python scripts/scale_probe.py 2 --family=dedup
+echo "== scale probe 2x distrank family =="
+python scripts/scale_probe.py 2 --family=distrank
 echo "== bench sf0.1 =="
 python bench.py
 # Optional (slow, ~8 min/mode): value-hash invariance across planner paths.

@@ -250,38 +250,6 @@ def time_queries(spark, sf_dir: str, queries) -> dict[str, float]:
     return out
 
 
-def distrank_parts_probe(spark, sf_dir: str) -> dict:
-    """The 'knob works' leg: run the RFM plan (three
-    distributed-rank legs over one cached rollup) under two fan-out
-    settings of spark.graft.rank.parts. The timings may move (that is
-    the knob's job); the canonical result hash MUST NOT — asserted here,
-    in the probe itself, so the SCALE.md table carries the invariance
-    fact, not a promise."""
-    import hashlib
-
-    from map_reduce_go_spark.functions.distrank import RANK_PARTS_CONF
-    from tests.oracle_compare import canonical_rows
-
-    name = "orders_rfm_segmentation"
-    fn = all_queries()[name].fn
-    out: dict = {}
-    hashes = {}
-    for parts in (8, 32):
-        spark.conf.set(RANK_PARTS_CONF, str(parts))
-        rec = run_query(spark, name, fn, sf_dir, cold=False, sink=lambda d: d.toPandas())
-        spark.conf.unset(RANK_PARTS_CONF)
-        if "error" in rec:
-            raise RuntimeError(f"rfm at {parts} parts: {rec['error']}")
-        out[f"rfm_parts{parts}_s"] = round(rec["seconds"], 2)
-        hashes[parts] = hashlib.md5(
-            repr(canonical_rows(rec["result"])).encode()
-        ).hexdigest()
-    assert len(set(hashes.values())) == 1, f"fan-out changed results: {hashes}"
-    out["hash_invariant"] = True
-    out["result_hash"] = hashes[8][:16]
-    return out
-
-
 def _bucket_size_stats(rows, *keys: str) -> dict:
     """Bucket size distribution of ``rows`` grouped by ``keys``: bucket
     count, p50/p90/p99/max sizes, and the implied candidate mass
@@ -888,9 +856,7 @@ FAMILIES: dict[str, Family] = {
     ),
     # The distributed-rank adopters: the scale axis is CUSTOMERS RANKED, so
     # o_custkey shifts (the default shifts only o_orderkey, which would
-    # grow orders-per-customer instead of the rank frame). The parts-knob
-    # probe runs the RFM plan under two spark.graft.rank.parts fan-outs
-    # and asserts the result hash does not move.
+    # grow orders-per-customer instead of the rank frame).
     "distrank": Family(
         queries=(
             "orders_rfm_segmentation",
@@ -899,7 +865,6 @@ FAMILIES: dict[str, Family] = {
         ),
         tables=("orders",),
         shifts={"orders": ("o_custkey",)},
-        stats={"parts_knob": distrank_parts_probe},
     ),
     # Maximal-span dedup (match volume is the scale axis, bounded by
     # candidate degree under the stop-filter) and the shard-controller

@@ -50,10 +50,11 @@ def compare(spark_df, duck_rel, name: str = "query") -> None:
         assert a == b, f"{name}: first differing row #{i}:\n  spark={a}\n  duck ={b}"
 
 
-def compare_on_empty_copies(spark, sf_dir: str, out_dir, name: str, tables) -> None:
-    """Write zero-row pyarrow copies of ``tables`` (schemas from
-    ``sf_dir``) under ``out_dir`` and compare query ``name`` with its
-    DuckDB oracle over them."""
+def compare_on_head_copies(spark, sf_dir: str, out_dir, name: str, tables, rows: int) -> None:
+    """Write pyarrow copies of the first ``rows`` rows of ``tables``
+    (0: empty tables, 1: single rows; schemas from ``sf_dir``) under
+    ``out_dir`` and compare query ``name`` with its DuckDB oracle over
+    them."""
     import duckdb
     import pyarrow.parquet as pq
 
@@ -62,7 +63,7 @@ def compare_on_empty_copies(spark, sf_dir: str, out_dir, name: str, tables) -> N
     con = duckdb.connect()
     for t in tables:
         path = f"{out_dir}/{t}.parquet"
-        pq.write_table(pq.read_schema(f"{sf_dir}/{t}.parquet").empty_table(), path)
+        pq.write_table(pq.read_table(f"{sf_dir}/{t}.parquet").slice(0, rows), path)
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     spec = all_queries()[name]
     try:

@@ -10,12 +10,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from map_reduce_go_spark.functions.distrank import (
-    RANK_PARTS_CONF,
     RANK_PARTS_MIN,
     dist_row_number,
     ntile_from_rank,
     range_parts,
 )
+from tests.oracle_compare import compare_on_head_copies
 
 
 def _frame(spark, n: int):
@@ -89,32 +89,56 @@ def test_dist_row_number_parallelism_is_real(spark):
 
 
 def test_range_parts_derivation_precedence(spark):
-    """VERDICT r12 #3: the fan-out is derived, not a constant. Explicit
-    argument wins, then the spark.graft.rank.parts conf, then the
-    session's shuffle-partition conf (floored at RANK_PARTS_MIN) — so a
+    """VERDICT r12 #3: the fan-out is derived, not a constant: the
+    session's shuffle-partition conf, floored at RANK_PARTS_MIN — so a
     1000-executor session with shuffle.partitions=2000 fans the rank
     shuffle to 2000 without touching any code."""
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert range_parts(spark) == max(RANK_PARTS_MIN, shuffle)
-    assert range_parts(spark, parts=3) == 3
-    spark.conf.set(RANK_PARTS_CONF, "17")
-    try:
-        assert range_parts(spark) == 17
-        assert range_parts(spark, parts=5) == 5  # explicit still wins
-    finally:
-        spark.conf.unset(RANK_PARTS_CONF)
-    assert range_parts(spark) == max(RANK_PARTS_MIN, shuffle)
 
 
-@pytest.mark.parametrize("parts", [1, 2, 19, 64])
-def test_dist_row_number_hash_invariant_in_parts(spark, parts):
-    """The knob tunes throughput only: global ranks are bit-identical at
-    ANY fan-out (offsets are exact metadata), including parts=1 (the
-    degenerate single-range case) and parts >> rows (empty partitions)."""
+@pytest.mark.parametrize("shuffle", [8, 19, 64, 256])
+def test_dist_row_number_hash_invariant_in_parts(spark, shuffle):
+    """The fan-out tunes throughput only: global ranks are bit-identical
+    at ANY shuffle-partition setting (offsets are exact metadata),
+    including more range partitions than rows (empty partitions)."""
     df = _frame(spark, 200)
     order = [F.asc("k"), F.desc("uid")]
-    base, n0 = dist_row_number(df, order, out="i", parts=8)
-    want = {r["uid"]: r["i"] for r in base.collect()}
-    got_df, n = dist_row_number(df, order, out="i", parts=parts)
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "8")
+        base, n0 = dist_row_number(df, order, out="i")
+        want = {r["uid"]: r["i"] for r in base.collect()}
+        spark.conf.set(conf, str(shuffle))
+        got_df, n = dist_row_number(df, order, out="i")
+        got = {r["uid"]: r["i"] for r in got_df.collect()}
+    finally:
+        spark.conf.set(conf, before)
     assert n == n0
-    assert {r["uid"]: r["i"] for r in got_df.collect()} == want
+    assert got == want
+
+
+#: The nine queries whose global rank or prefix sum is dist_prefix,
+#: with the tables their oracles read.
+RANK_FAMILY = {
+    "auc_value_by_event_type": ("events",),
+    "decision_stump_doclen": ("documents",),
+    "spearman_quantity_price": ("lineitem",),
+    "equidepth_histogram_price_approx": ("orders",),
+    "zipf_tail_slope": ("documents",),
+    "dedup_sorted_neighborhood": ("documents",),
+    "orders_rfm_segmentation": ("orders",),
+    "revenue_lorenz_gini": ("orders",),
+    "customer_spend_deciles": ("orders",),
+}
+
+
+@pytest.mark.parametrize("rows", [0, 1])
+@pytest.mark.parametrize("name", list(RANK_FAMILY))
+def test_rank_family_matches_oracle_on_empty_and_single_row_tables(
+    spark, sf_dir, tmp_path, name, rows
+):
+    """Degenerate inputs: with no rows there are no range partitions to
+    offset, and with one row every rank column is constant."""
+    compare_on_head_copies(spark, sf_dir, tmp_path, name, RANK_FAMILY[name], rows)

@@ -225,7 +225,7 @@ def test_spearman_centered_ranks_sum_to_zero(spark, sf_dir):
         assert spec.startswith("pid#"), spec
 
 
-# ------------------------------------------------------- _prefix_over
+# -------------------------------------------------------- dist_prefix
 
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402
@@ -262,13 +262,15 @@ def test_prefix_over_equals_sequential_cumsum(spark, rows):
     broadcast-offset seam) because the derived fan-out (range_parts:
     at least 8, usually shuffle.partitions) exceeds the drawn row
     count, leaving some range partitions empty."""
-    from map_reduce_go_spark.plans.mleval import _prefix_over
+    from pyspark.sql import functions as F
+
+    from map_reduce_go_spark.functions.distrank import dist_prefix
 
     df = spark.createDataFrame(rows, schema="k long, a long, b long")
-    got = {
-        r["k"]: (r["cum_a"], r["cum_b"])
-        for r in _prefix_over(df, "k", ("a", "b")).collect()
-    }
+    cum, _totals = dist_prefix(
+        df, [F.asc("k")], {"cum_a": F.col("a"), "cum_b": F.col("b")}
+    )
+    got = {r["k"]: (r["cum_a"], r["cum_b"]) for r in cum.collect()}
     ca = cb = 0
     want = {}
     for k, a, b in sorted(rows):

@@ -113,10 +113,10 @@ def test_kmv_merge_identity_and_error_bound(spark, sf_dir):
 def test_kmv_empty_lineitem_matches_oracle(spark, sf_dir, tmp_path):
     """Zero-row lineitem: no distinct keys, so err_ppm is NULL as in the
     oracle instead of a division by zero."""
-    from tests.oracle_compare import compare_on_empty_copies
+    from tests.oracle_compare import compare_on_head_copies
 
-    compare_on_empty_copies(
-        spark, sf_dir, tmp_path, "kmv_distinct_merge_probe", ("lineitem",)
+    compare_on_head_copies(
+        spark, sf_dir, tmp_path, "kmv_distinct_merge_probe", ("lineitem",), rows=0
     )
 
 

@@ -72,3 +72,22 @@ def test_probe_family_resolves(family, sf_dir):
     for col, target in fam.fk_bases.items():
         assert col in shifted, col
         assert target in shifts, target
+
+
+def test_query_index_is_current_and_has_no_placeholders(capsys):
+    """QUERIES.md is the generator's output, and no registered query's
+    docstring carries an unformatted ``{NAME}`` placeholder (a docstring
+    is read after its module finishes importing, so a ``.format`` line
+    after registration still counts)."""
+    import re
+
+    from map_reduce_go_spark.registry import all_queries
+
+    placeholder = re.compile(r"\{[\w.()\[\] *+/-]*[A-Za-z_][\w.()\[\] *+/-]*\}")
+    found = {
+        name: placeholder.findall(spec.fn.__doc__ or "")
+        for name, spec in all_queries().items()
+    }
+    assert not {n: p for n, p in found.items() if p}
+    _load("gen_query_index").main()
+    assert capsys.readouterr().out == (SCRIPTS.parent / "QUERIES.md").read_text()

@@ -138,10 +138,10 @@ def test_bloom_has_no_false_negatives_and_sane_fp(spark, sf_dir):
 def test_bloom_empty_tables_match_oracle(spark, sf_dir, tmp_path):
     """Zero-row customer and orders: no true negatives, so fp_ppm is
     NULL as in the oracle instead of a division by zero."""
-    from tests.oracle_compare import compare_on_empty_copies
+    from tests.oracle_compare import compare_on_head_copies
 
-    compare_on_empty_copies(
-        spark, sf_dir, tmp_path, "bloom_join_prune_probe", ("customer", "orders")
+    compare_on_head_copies(
+        spark, sf_dir, tmp_path, "bloom_join_prune_probe", ("customer", "orders"), rows=0
     )
 
 
