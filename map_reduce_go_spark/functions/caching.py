@@ -19,7 +19,11 @@ hygiene upgrade, not a correctness requirement.
 
 from __future__ import annotations
 
+from typing import Callable, TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 _TRACKED: list[DataFrame] = []
 
@@ -81,6 +85,18 @@ def fixture_key(spark: SparkSession, sf_dir: str, *tables: str) -> tuple:
     stale-codebook bug). The 100 TB analog is versioning a persisted
     index by corpus snapshot id."""
     return (spark.sparkContext.applicationId, *fixture_stamp(sf_dir, *tables))
+
+
+def fixture_memo(memo: dict[tuple, T], spark: SparkSession, sf_dir: str, table: str,
+                 build: Callable[[], T]) -> T:
+    """``memo``'s entry for the current snapshot of ``table`` under
+    ``sf_dir`` (:func:`fixture_key`), calling ``build()`` on a miss. The
+    one memo step of every per-fixture index build (IVF centroids, PQ
+    codebooks, the int8 scale, converged cluster labels)."""
+    key = fixture_key(spark, sf_dir, table)
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 def tracked_cache(df: DataFrame) -> DataFrame:

@@ -48,6 +48,7 @@ from map_reduce_go_spark.operators.similarity import (
     ivf_centroids_for,
     ivf_train_centroids,
     lsh_bucket,
+    top_k,
 )
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
@@ -70,6 +71,16 @@ def _snapshot_id(sf_dir: str) -> str:
     the corpus snapshot/commit id the index is versioned by)."""
     root, newest = fixture_stamp(sf_dir, "embeddings")
     return hashlib.md5(f"{root}|{newest}".encode()).hexdigest()[:16]
+
+
+def _read_corpus(spark: SparkSession, path: str, part: str = "cell") -> DataFrame:
+    """A persisted corpus (or batch) read with its known schema — the
+    embeddings table's columns plus the int partition column — not by
+    inference, so the index of an empty corpus (no data files) reads
+    back as 0 rows."""
+    return spark.read.schema(
+        f"vec_id bigint, embedding array<float>, {part} int"
+    ).parquet(path)
 
 
 def ivf_index_path(sf_dir: str) -> str:
@@ -121,7 +132,7 @@ def load_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[li
     path = build_ivf_index(spark, sf_dir)
     with open(os.path.join(path, "centroids.json")) as f:
         centroids = json.load(f)
-    return spark.read.parquet(os.path.join(path, "corpus")), centroids
+    return _read_corpus(spark, os.path.join(path, "corpus")), centroids
 
 
 def _probe_index(
@@ -150,14 +161,7 @@ def _probe_index(
         "neighbor_id",
         cosine_udf(F.col("q_emb"), F.col("v_emb")).alias("raw_sim"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("raw_sim", 6).alias("sim"), "rank")
-    )
+    return top_k(scored, TOP_K)
 
 
 @register("ann_ivf_persisted", oracle=_ivf_oracle_sql())
@@ -214,11 +218,11 @@ def ann_lsh_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from reading ONLY the queries' bucket partitions — with sign-pattern
     buckets a query probes exactly ONE bucket, so the scan prunes to
     ≤ N_QUERIES partitions out of 2^N_HYPERPLANES (= 256 at this repo's
-    8 hyperplanes; see operators/similarity.py:200). The sharpest
+    8 hyperplanes; see operators/similarity.py::N_HYPERPLANES). The sharpest
     partition-pruning ratio in the repo: at 100 TB with 16 planes a
     probe reads ~2^-16 of the corpus bytes per bucket."""
     path = build_lsh_index(spark, sf_dir)
-    corpus = spark.read.parquet(os.path.join(path, "corpus"))
+    corpus = _read_corpus(spark, os.path.join(path, "corpus"), "bucket")
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -241,14 +245,7 @@ def ann_lsh_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         cosine_udf(F.col("q_emb"), F.col("v_emb")).alias("raw_sim"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("raw_sim", 6).alias("sim"), "rank")
-    )
+    return top_k(scored, TOP_K)
 
 
 def append_to_lsh_index(
@@ -293,9 +290,9 @@ def load_lsh_index_with_batches(spark: SparkSession, path: str) -> DataFrame:
     every crash state, while a compaction running in another process is
     never disturbed. Destructive recovery belongs to writer entry points."""
     corpus_dir = _resolve_corpus(path)
-    corpus = spark.read.parquet(corpus_dir)
+    corpus = _read_corpus(spark, corpus_dir, "bucket")
     for b in _committed_batches(path, corpus_dir):
-        corpus = corpus.unionByName(spark.read.parquet(b))
+        corpus = corpus.unionByName(_read_corpus(spark, b, "bucket"))
     return corpus
 
 
@@ -708,9 +705,9 @@ def compact_index(spark: SparkSession, path: str, part_col: str) -> int:
     batches = _committed_batches(path)
     if not batches:
         return 0
-    merged = spark.read.parquet(os.path.join(path, "corpus"))
+    merged = _read_corpus(spark, os.path.join(path, "corpus"), part_col)
     for b in batches:
-        merged = merged.unionByName(spark.read.parquet(b))
+        merged = merged.unionByName(_read_corpus(spark, b, part_col))
     tmp = os.path.join(path, "corpus.compact.tmp")
     (
         merged.repartition(part_col)  # one file per partition value
@@ -764,9 +761,14 @@ def refresh_ivf_index(spark: SparkSession, index_dir: str, emb: DataFrame) -> st
     is ever rewritten in place, and a crashed refresh leaves a garbage
     ``v-*`` directory but never a broken live index. This is the
     lifecycle step compaction cannot do: compaction preserves the
-    codebook, refresh replaces it."""
+    codebook, refresh replaces it. An empty ``emb`` trains an empty
+    codebook, and promoting it would empty the live index, so it raises
+    ValueError before touching the index."""
     import shutil
 
+    centroids = ivf_train_centroids(emb)
+    if not centroids:
+        raise ValueError("refresh_ivf_index: empty embeddings corpus")
     live_n = (
         _live_version_number(index_dir) if os.path.isdir(index_dir) else None
     ) or 0
@@ -780,7 +782,6 @@ def refresh_ivf_index(spark: SparkSession, index_dir: str, emb: DataFrame) -> st
             if n > live_n:
                 shutil.rmtree(os.path.join(index_dir, f"v-{n}"))
     nxt = os.path.join(index_dir, f"v-{live_n + 1}")
-    centroids = ivf_train_centroids(emb)
     (
         emb.select(
             "vec_id",
@@ -876,7 +877,7 @@ def live_ivf_version(spark: SparkSession, index_dir: str) -> tuple[DataFrame, li
     base = os.path.join(index_dir, f"v-{live_n}")
     with open(os.path.join(base, "centroids.json")) as f:
         centroids = json.load(f)
-    return spark.read.parquet(os.path.join(base, "corpus")), centroids
+    return _read_corpus(spark, os.path.join(base, "corpus")), centroids
 
 
 # --------------------------------------------------------------------------
@@ -914,6 +915,8 @@ def append_to_ivf_index(
         return
     with open(os.path.join(path, "centroids.json")) as f:
         centroids = json.load(f)
+    if not centroids:  # an empty codebook has no cell to assign into
+        new_vectors = new_vectors.limit(0)
     (
         new_vectors.select(
             "vec_id",
@@ -941,9 +944,9 @@ def load_ivf_index_with_batches(
     corpus_dir = _resolve_corpus(path)
     with open(os.path.join(path, "centroids.json")) as f:
         centroids = json.load(f)
-    corpus = spark.read.parquet(corpus_dir)
+    corpus = _read_corpus(spark, corpus_dir)
     for b in _committed_batches(path, corpus_dir):
-        corpus = corpus.unionByName(spark.read.parquet(b))
+        corpus = corpus.unionByName(_read_corpus(spark, b))
     return corpus, centroids
 
 

@@ -36,7 +36,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from map_reduce_go_spark.functions.text import WORD_BOUNDARY
-from map_reduce_go_spark.functions.caching import register_memo, tracked_cache
+from map_reduce_go_spark.functions.caching import fixture_memo, register_memo, tracked_cache
+from map_reduce_go_spark.functions.vectors import cos_sql, seq_dot, seq_outer
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import fan_out, load_table, table_num_rows
 
@@ -442,14 +443,7 @@ _EMB_MIN_BLOCKS = 8  # floor so tests exercise the multi-block path
 # at any corpus size because B grows with N instead of block size.
 _EMB_BLOCK_ROWS = 100_000
 
-_EMB_COS = (
-    "list_sum(list_transform(generate_series(1, 64), "
-    "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) / "
-    "(sqrt(list_sum(list_transform(generate_series(1, 64), "
-    "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)))) * "
-    "sqrt(list_sum(list_transform(generate_series(1, 64), "
-    "i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))))"
-)
+_EMB_COS = cos_sql("a.embedding", "b.embedding")
 
 
 @register(
@@ -525,8 +519,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from map_reduce_go_spark.operators.similarity import _seq_dot
-
         empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cos_sim": []})
         diag = pdf["pair_ba"].iloc[0] == pdf["pair_bb"].iloc[0]
         a_rows = pdf[pdf["side"] == "a"]
@@ -537,14 +529,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         ib = b_rows["vec_id"].to_numpy(dtype=np.int64)
         ma = np.vstack(a_rows["embedding"].to_numpy()).astype(np.float64)
         mb = np.vstack(b_rows["embedding"].to_numpy()).astype(np.float64)
-        # Dimension-sequential accumulation (see similarity._seq_dot):
-        # bit-identical to the oracle's list_sum fold, unlike BLAS
-        # matmul's pairwise summation.
-        dots = np.multiply.outer(ma[:, 0], mb[:, 0])
-        for i in range(1, ma.shape[1]):
-            dots = dots + np.multiply.outer(ma[:, i], mb[:, i])
-        s = dots / np.multiply.outer(
-            np.sqrt(_seq_dot(ma, ma)), np.sqrt(_seq_dot(mb, mb))
+        # Dimension-order folds (functions/vectors.py): bit-identical to
+        # the oracle's list_sum, unlike BLAS matmul's pairwise summation.
+        s = seq_outer(ma, mb) / np.multiply.outer(
+            np.sqrt(seq_dot(ma, ma)), np.sqrt(seq_dot(mb, mb))
         )
         ii, jj = np.nonzero(s >= thr)
         if diag:
@@ -680,16 +668,12 @@ def _converged_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     round. Clusters of diameter at most d take at most d rounds after the
     seed: d - 1 to reach the fixed point and one to see the label-sum stop
     moving (clusters that are all pairs: one round, 6 propagation jobs)."""
-    from map_reduce_go_spark.functions.caching import fixture_key
-
-    # (appId, path, documents mtime): appId scopes the checkpointed
-    # frame to its session; the mtime makes an in-session fixture
-    # regeneration rebuild (same policy as the IVF/PQ codebook memos).
-    key = fixture_key(spark, sf_dir, "documents")
-    if key not in _LABEL_CACHE:
-        edges = _near_dup_edges(spark, sf_dir).localCheckpoint()
-        _LABEL_CACHE[key] = _propagate_min_labels(edges)
-    return _LABEL_CACHE[key]
+    # The key's appId scopes the checkpointed frame to its session; its
+    # mtime makes an in-session fixture regeneration rebuild.
+    return fixture_memo(
+        _LABEL_CACHE, spark, sf_dir, "documents",
+        lambda: _propagate_min_labels(_near_dup_edges(spark, sf_dir).localCheckpoint()),
+    )
 
 
 def _propagate_min_labels(edges: DataFrame, max_rounds: int = 20) -> DataFrame:

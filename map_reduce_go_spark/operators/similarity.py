@@ -9,18 +9,19 @@
   scale path. Recall vs brute force is a first-class oracle-backed query
   (ann_ivf_recall_probe) and is additionally asserted in tests.
 
-Kernel architecture (learned the hard way; see dot64):
-- interpreted higher-order functions (zip_with/aggregate) are ~100× slower
-  than codegen in pair loops;
-- unrolling 64-dim math into JVM expressions works for ONE dot per
-  projection but breaches Janino's 64 KB method limit the moment several
-  combine (K-way cell scoring, dot+2 norms), silently falling back to the
-  interpreter — and even when it fits, Catalyst planning + Janino compile
-  of 385-node trees costs seconds per query;
-- so every batch numeric kernel here is an Arrow pandas_udf over numpy
-  float64 with DIMENSION-SEQUENTIAL accumulation (_seq_dot), which is
-  bit-identical to DuckDB's list_sum fold — vectorized speed AND exact
-  oracle parity.
+The numeric contract lives in :mod:`functions.vectors`: the fold
+kernels ``seq_dot``/``seq_outer`` (numpy float64 in DIMENSION order) and
+the oracle's SQL fold, so scores, cells, buckets and codes are
+bit-identical to DuckDB. Every batch kernel here is an Arrow pandas_udf
+over those folds: unrolled 64-term JVM expressions breach Janino's 64 KB
+method limit as soon as a few combine, and interpreted
+zip_with/aggregate is ~100x slower. On top of them, one copy each of:
+- the trainer, :func:`_lloyd_codebooks`: K lowest-vec_id seeds plus one
+  Lloyd step with exact scaled-long means, behind both the IVF
+  quantizer and the PQ codebooks;
+- the per-fixture memo step (``caching.fixture_memo``);
+- the top-k tail, :func:`top_k`, and its oracle twin :func:`_topk_sql`;
+- the PQ ADC-table build, :func:`_pq_adc_table`.
 
 Scale notes:
 - brute force is O(N_queries × N_vectors): fine for a broadcast query set
@@ -29,22 +30,27 @@ Scale notes:
   operators/dedup.py::dedup_embedding_cosine for exhaustive pairing).
 - hyperplanes/centroids are derived deterministically (md5 seeds), so the
   plan is reproducible across runs and engines with no RNG state.
+- an empty corpus trains an empty codebook, and every query returns 0
+  rows, as the oracle does.
 """
 
 from __future__ import annotations
 
 import math as _math
+from decimal import Decimal
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from map_reduce_go_spark.functions.caching import (
-    fixture_key,
+    fixture_memo,
     register_memo,
     tracked_cache,
 )
+from map_reduce_go_spark.functions.vectors import DIM as _DIM
+from map_reduce_go_spark.functions.vectors import cos_sql, dot_sql, fold_sql, seq_dot, seq_outer
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
 
@@ -52,119 +58,82 @@ N_QUERIES = 5
 TOP_K = 3
 
 
-_DIM = 64
+def _mat(s: pd.Series) -> "np.ndarray":
+    return np.vstack(s.to_numpy()).astype(np.float64)
 
 
-def dot64(a: Column, b: Column) -> Column:
-    """Unrolled 64-term dot product: a[0]*b[0] + ... + a[63]*b[63].
-
-    Higher-order functions (zip_with/aggregate) are *interpreted* per
-    element — ~100× slower than codegen in the 2M-pair hot path. The
-    unrolled form is plain GetArrayItem arithmetic inside whole-stage
-    codegen, and its left-nested addition order is exactly DuckDB's
-    sequential list_sum, so results are bit-identical to the oracle.
-
-    Codegen budget: ONE dot64 (~6 KB bytecode) per projection is fine;
-    combining several in one expression tree breaches Janino's 64 KB
-    method limit and silently de-optimizes the whole stage to the
-    interpreter. Norms therefore live in their OWN projections (see
-    with_sq_norm) and K-way scoring goes to a vectorized pandas_udf."""
-    terms = a[0].cast("double") * b[0].cast("double")
-    for i in range(1, _DIM):
-        terms = terms + a[i].cast("double") * b[i].cast("double")
-    return terms
-
-
-def sq_norm64(a: Column) -> Column:
-    """Unrolled Σ a[i]² (see dot64 for the codegen-budget contract)."""
-    terms = a[0].cast("double") * a[0].cast("double")
-    for i in range(1, _DIM):
-        terms = terms + a[i].cast("double") * a[i].cast("double")
-    return terms
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two 64-dim array columns, pure JVM codegen.
-    Use for a single score per row; for pair-join scoring prefer
-    cosine_udf (one dot64 is ~6 KB of bytecode and seconds of Janino
-    compile — fine once, not three times per projection)."""
-    return dot64(a, b) / (F.sqrt(sq_norm64(a)) * F.sqrt(sq_norm64(b)))
-
-
-def _seq_dot(ma: "np.ndarray", mb: "np.ndarray") -> "np.ndarray":
-    """Row-wise dot with DIMENSION-SEQUENTIAL float64 accumulation:
-    vectorized across rows, ordered across dims — bit-identical to
-    DuckDB's sequential list_sum and to a left-nested JVM fold, so
-    oracle comparisons are exact, not merely close."""
-    acc = ma[:, 0] * mb[:, 0]
-    for i in range(1, _DIM):
-        acc = acc + ma[:, i] * mb[:, i]
-    return acc
-
-
-def cosine_udf(a: Column, b: Column) -> Column:
-    """Arrow-vectorized cosine for pair-join hot paths: tiny plan
-    expression (no 64-term codegen tree to compile per query), numpy
-    float64 kernel per batch, dimension-sequential accumulation for
-    bit-exact oracle parity."""
+def cosine_udf(a: Column, b: Column, dims: int = _DIM) -> Column:
+    """Arrow-vectorized cosine over the first ``dims`` dimensions for
+    pair-join hot paths: a tiny plan expression, a numpy float64 kernel
+    per batch, ``seq_dot`` folds for bit-exact oracle parity."""
 
     @F.pandas_udf("double")
     def _cos(ea: pd.Series, eb: pd.Series) -> pd.Series:
-        ma = np.vstack(ea.to_numpy()).astype(np.float64)
-        mb = np.vstack(eb.to_numpy()).astype(np.float64)
-        sim = _seq_dot(ma, mb) / (
-            np.sqrt(_seq_dot(ma, ma)) * np.sqrt(_seq_dot(mb, mb))
+        ma, mb = _mat(ea)[:, :dims], _mat(eb)[:, :dims]
+        return pd.Series(
+            seq_dot(ma, mb) / (np.sqrt(seq_dot(ma, ma)) * np.sqrt(seq_dot(mb, mb)))
         )
-        return pd.Series(sim)
 
     return _cos(a, b)
 
 
 def dot_udf(a: Column, b: Column) -> Column:
-    """Arrow-vectorized raw inner product (no normalization) with the
-    same dimension-sequential float64 accumulation contract as
-    cosine_udf, so MIPS rankings are bit-identical to the oracle's
-    sequential list_sum."""
+    """Arrow-vectorized raw inner product (no normalization) under the
+    same fold, so MIPS rankings are bit-identical to the oracle."""
 
     @F.pandas_udf("double")
     def _dot(ea: pd.Series, eb: pd.Series) -> pd.Series:
-        ma = np.vstack(ea.to_numpy()).astype(np.float64)
-        mb = np.vstack(eb.to_numpy()).astype(np.float64)
-        return pd.Series(_seq_dot(ma, mb))
+        return pd.Series(seq_dot(_mat(ea), _mat(eb)))
 
     return _dot(a, b)
 
 
-# Explicit-double cosine for the oracle: DuckDB's list_cosine_similarity
-# accumulates in float32, which lands on the wrong side of the 1e-6
-# rounding boundary vs Spark's double arithmetic. This mirrors the Spark
-# expression term-for-term in double.
-_DOT = (
-    "list_sum(list_transform(generate_series(1, 64), "
-    "i -> CAST(q.embedding[i] AS DOUBLE) * CAST(v.embedding[i] AS DOUBLE)))"
-)
-_NORM_Q = (
-    "sqrt(list_sum(list_transform(generate_series(1, 64), "
-    "i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))))"
-)
-_NORM_V = (
-    "sqrt(list_sum(list_transform(generate_series(1, 64), "
-    "i -> CAST(v.embedding[i] AS DOUBLE) * CAST(v.embedding[i] AS DOUBLE))))"
-)
+def top_k(
+    scored: DataFrame, k: int, score: str = "raw_sim", out: str = "sim", asc: bool = False
+) -> DataFrame:
+    """Each query's first ``k`` candidates by ``score`` (descending unless
+    ``asc``; ties to the lower neighbor_id) as (query_id, neighbor_id,
+    ``out`` = score rounded to 6 places, rank)."""
+    order = F.asc(score) if asc else F.desc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(F.col(score).cast("double"), 6).alias(out),
+            "rank",
+        )
+    )
 
 
-_BF_ORACLE = f"""
+def _cell_score_sql(e: str, c: str) -> str:
+    """IVF cell score dot(e, c) / ||c||, as :func:`_nearest_cells` ranks."""
+    return f"{dot_sql(e, c)} / sqrt({dot_sql(c, c)})"
+
+
+def _topk_sql(pairs: str, k: int = TOP_K) -> str:
+    """Top-k cosine oracle over ``pairs`` (a FROM/WHERE clause binding the
+    probe ``q`` and candidate ``v``): the SQL twin of :func:`top_k`."""
+    score = cos_sql("q.embedding", "v.embedding")
+    return f"""
     SELECT query_id, neighbor_id, round(raw_sim, 6) AS sim, rank FROM (
       SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-             {_DOT} / ({_NORM_Q} * {_NORM_V}) AS raw_sim,
+             {score} AS raw_sim,
              row_number() OVER (
                PARTITION BY q.vec_id
-               ORDER BY {_DOT} / ({_NORM_Q} * {_NORM_V}) DESC,
+               ORDER BY {score} DESC,
                         v.vec_id) AS rank
-      FROM embeddings q JOIN embeddings v ON v.vec_id <> q.vec_id
-      WHERE q.vec_id < {N_QUERIES}
-    ) t WHERE rank <= {TOP_K}
+      {pairs}
+    ) t WHERE rank <= {k}
     """
+
+
+_BF_ORACLE = _topk_sql(
+    f"""FROM embeddings q JOIN embeddings v ON v.vec_id <> q.vec_id
+      WHERE q.vec_id < {N_QUERIES}"""
+)
 
 
 @register("knn_bruteforce_cosine", oracle=_BF_ORACLE)
@@ -187,14 +156,7 @@ def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_udf(F.col("q_emb"), F.col("v_emb")).alias("raw_sim"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("raw_sim", 6).alias("sim"), "rank")
-    )
+    return top_k(scored, TOP_K)
 
 
 N_HYPERPLANES = 8
@@ -215,26 +177,21 @@ def _hyperplane(j: int) -> list[float]:
 def lsh_bucket(emb: Column) -> Column:
     """Sign-pattern bucket id (0..2^N_HYPERPLANES-1) for an embedding.
 
-    8 hyperplane dots = 8×64 terms — over the codegen budget as one JVM
-    expression (see dot64), so this is an Arrow-vectorized pandas_udf.
-    Each plane dot uses DIMENSION-SEQUENTIAL float64 accumulation (not
-    BLAS matmul, whose pairwise summation can flip the sign of a
-    near-zero dot) so the bucket ids are bit-identical to the oracle's
-    left-nested SQL sum. Deterministic (fixed md5-derived planes)."""
+    8 hyperplane dots = 8×64 terms, over the codegen budget as one JVM
+    expression, so this is an Arrow-vectorized pandas_udf. The plane dots
+    are one ``seq_outer`` (not BLAS matmul, whose pairwise summation
+    can flip the sign of a near-zero dot), so the bucket ids are
+    bit-identical to the oracle's left-nested SQL sum. Deterministic
+    (fixed md5-derived planes)."""
     planes = np.asarray(
         [_hyperplane(j) for j in range(N_HYPERPLANES)], dtype=np.float64
     )  # (8, 64)
+    bits = np.int64(1) << np.arange(N_HYPERPLANES, dtype=np.int64)
 
     @F.pandas_udf("int")
     def _bucket(e: pd.Series) -> pd.Series:
-        m = np.vstack(e.to_numpy()).astype(np.float64)  # (B, 64)
-        bucket = np.zeros(len(m), dtype=np.int64)
-        for j in range(N_HYPERPLANES):
-            acc = m[:, 0] * planes[j, 0]
-            for d in range(1, _DIM):
-                acc = acc + m[:, d] * planes[j, d]
-            bucket |= (acc > 0).astype(np.int64) << j
-        return pd.Series(bucket.astype("int32"))
+        signs = seq_outer(_mat(e), planes) > 0  # (B, 8)
+        return pd.Series((signs @ bits).astype("int32"))
 
     return _bucket(emb)
 
@@ -259,19 +216,11 @@ def _lsh_bucket_sql(prefix: str = "") -> str:
 _LSH_ORACLE = f"""
     WITH bucketed AS (
       SELECT vec_id, embedding, ({_lsh_bucket_sql()}) AS bucket FROM embeddings
-    )
-    SELECT query_id, neighbor_id, round(raw_sim, 6) AS sim, rank FROM (
-      SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-             {_DOT} / ({_NORM_Q} * {_NORM_V}) AS raw_sim,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY {_DOT} / ({_NORM_Q} * {_NORM_V}) DESC,
-                        v.vec_id) AS rank
-      FROM bucketed q
+    )""" + _topk_sql(
+    f"""FROM bucketed q
       JOIN bucketed v ON v.bucket = q.bucket AND v.vec_id <> q.vec_id
-      WHERE q.vec_id < {N_QUERIES}
-    ) t WHERE rank <= {TOP_K}
-    """
+      WHERE q.vec_id < {N_QUERIES}"""
+)
 
 
 @register("ann_lsh_cosine", oracle=_LSH_ORACLE)
@@ -310,14 +259,7 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_udf(F.col("q_emb"), F.col("v_emb")).alias("raw_sim"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("raw_sim", 6).alias("sim"), "rank")
-    )
+    return top_k(scored, TOP_K)
 
 
 # --------------------------------------------------------------------------
@@ -334,135 +276,133 @@ def _nearest_cells(emb: Column, centroids: list[list[float]], n: int) -> Column:
     Ranking uses dot(emb, c) / ||c||: the row's own norm is a positive
     common factor across all K cells, so dropping it cannot change the
     ranking. K×64 dot terms breach the codegen budget as one JVM
-    expression (see dot64), so the scoring is an Arrow-batched pandas_udf.
-    Per cell, the dot is DIMENSION-SEQUENTIAL float64 and the norm is
-    divided out AFTER the fold — the exact association order of the
-    oracle's list_sum(...)/sqrt(list_sum(...)) SQL, so cell assignment is
+    expression, so the scoring is an Arrow-batched pandas_udf: one
+    ``seq_outer`` over all K cells, with the norm divided out AFTER
+    the fold — the exact association order of the oracle's
+    list_sum(...)/sqrt(list_sum(...)) SQL, so cell assignment is
     bit-reproducible cross-engine (a BLAS matmul against pre-normalized
     centroids is not). Ties break to the lower cell id (stable sort)."""
-    c = np.asarray(centroids, dtype=np.float64)  # (K, 64)
-    norms = np.sqrt(np.array([_seq_dot(c[k : k + 1], c[k : k + 1])[0] for k in range(len(c))]))
+    c = np.asarray(centroids, dtype=np.float64).reshape(-1, _DIM)  # (K, 64)
+    norms = np.sqrt(seq_dot(c, c))
 
     @F.pandas_udf("array<int>")
     def _cells(e: pd.Series) -> pd.Series:
-        m = np.vstack(e.to_numpy()).astype(np.float64)  # (B, 64)
-        # Outer-product accumulation over d: for every (row, cell) the
-        # adds happen in dimension order — the same left-nested fold as
-        # the per-cell loop / the oracle's list_sum — but vectorized
-        # across all K cells at once (64 BLAS-free steps, not K×64).
-        acc = np.multiply.outer(m[:, 0], c[:, 0])  # (B, K)
-        for d in range(1, _DIM):
-            acc = acc + np.multiply.outer(m[:, d], c[:, d])
-        scores = acc / norms  # row-wise broadcast over K
+        scores = seq_outer(_mat(e), c) / norms  # (B, K)
         idx = np.argsort(-scores, kind="stable", axis=1)[:, :n]
         return pd.Series(list(idx.astype("int32")))
 
     return _cells(emb)
 
 
-_CENTROID_CACHE: dict[tuple[str, str], list[list[float]]] = register_memo({})
+def _lloyd_codebooks(emb: DataFrame, k: int, width: int, assign) -> list[list[list[float]]]:
+    """One codebook per ``width``-dim slice of the embedding, trained by K
+    deterministic seeds plus one distributed Lloyd step: the IVF coarse
+    quantizer is the one 64-dim slice, the PQ codebooks are M_SUB slices.
+
+    Seeds are the slices of the ``k`` lowest vec_ids PRESENT (not
+    ``vec_id < k``): sparse ids still yield k seeds, and a corpus smaller
+    than k gets one cell per vector; an empty corpus gets empty
+    codebooks. ``assign(seeds)`` returns ``(sub, cell, v)``: every slice
+    with its subspace and its nearest seed. The per-(sub, cell) means are
+    one groupBy pass of native aggregates (codegen, map-side partials).
+    Only index metadata is collected: k seed rows, then one row per
+    (sub, cell). Cells that capture no vectors keep their seed.
+
+    The sums are EXACT, so every mean is the same to the bit on any
+    partitioning and engine, which is what lets the DuckDB oracle replay
+    the build. Each component is rounded HALF_UP at scale 8 by the
+    decimal(18,8) cast (the oracle's CAST), then ×1e8 makes it an integer,
+    so the sum buffers are primitive longs, not Decimal objects. The
+    unscale runs on the collected rows with Python Decimal, whose
+    division by 10^8 rounds exactly like Spark's decimal→double cast,
+    then the same double division by count. Each sum is one SQL string,
+    not a chain of Column calls: PySpark records a call site per Column
+    call (Py4J round trips plus a stack walk), which made the 64 IVF sums
+    cost more driver time than the job.
+
+    Overflow bound: Spark sums longs with silent wraparound outside ANSI
+    mode, and |component| <= ~1 means each row adds <= ~1e8 to a sum, so
+    the int64 range (~9.2e18) caps a (sub, cell) group at ~9.2e10 rows.
+    The 100 TB design point is ~6e9 rows per IVF cell at K=16 (~15×
+    margin); corpora beyond that must widen the buffer (decimal(38,0))
+    or add cells."""
+    rows = emb.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
+    seeds = [
+        [[float(x) for x in r["embedding"][s * width : (s + 1) * width]] for r in rows]
+        for s in range(_DIM // width)
+    ]
+    if not rows:
+        return seeds
+    sums = [
+        F.expr(f"sum(CAST(CAST(v[{i}] AS DECIMAL(18,8)) * 100000000 AS BIGINT)) AS s{i}")
+        for i in range(width)
+    ]
+    means = (
+        assign(seeds)
+        .groupBy("sub", "cell")
+        .agg(F.count(F.lit(1)).alias("c"), *sums)
+        .collect()
+    )
+    refined = {
+        (r["sub"], r["cell"]): [
+            float(Decimal(r[f"s{i}"]) / Decimal(10**8)) / r["c"] for i in range(width)
+        ]
+        for r in means
+    }
+    return [
+        [refined.get((s, c), seed) for c, seed in enumerate(book)]
+        for s, book in enumerate(seeds)
+    ]
+
+
+def ivf_train_centroids(emb: DataFrame) -> list[list[float]]:
+    """Train the coarse quantizer: K_CELLS seeds + one Lloyd step
+    (:func:`_lloyd_codebooks` over the whole embedding). The collects
+    move K×dim = 1024 floats of *index metadata* to the driver — the IVF
+    codebook is broadcast state by design, the data plane is never
+    collected. At 100 TB: same plan, a larger sample feeding more Lloyd
+    iterations."""
+
+    def assign(seeds):
+        return emb.select(
+            F.lit(0).alias("sub"),
+            _nearest_cells(F.col("embedding"), seeds[0], 1)[0].alias("cell"),
+            F.col("embedding").alias("v"),
+        )
+
+    return _lloyd_codebooks(emb, K_CELLS, _DIM, assign)[0]
+
+
+_CENTROID_CACHE: dict[tuple, list[list[float]]] = register_memo({})
 
 
 def ivf_centroids_for(sf_dir: str, emb: DataFrame) -> list[list[float]]:
     """Deterministic IVF codebook for a fixture dir, trained at most once
-    per session. Three queries share the build (ann_ivf_cosine,
-    semdedup_prune, ann_ivf_recall_probe — which runs the search twice);
-    without memoization each invocation re-paid the two training jobs
-    (seed collect + Lloyd means). The build is fully deterministic (seeds
-    = K lowest vec_ids, exact decimal means), so caching returns
-    bit-identical centroids and cannot perturb oracle parity. Keyed by
-    (applicationId, resolved path, fixture mtime) — see
-    :func:`fixture_key` — so a regenerated fixture, same-session or not,
-    rebuilds instead of serving the previous corpus's codebook. At 100 TB
-    the analog is persisting the trained codebook next to the index."""
-    key = fixture_key(emb.sparkSession, sf_dir, "embeddings")
-    if key not in _CENTROID_CACHE:
-        _CENTROID_CACHE[key] = ivf_train_centroids(emb)
-    return _CENTROID_CACHE[key]
-
-
-def ivf_train_centroids(emb: DataFrame) -> list[list[float]]:
-    """Train the coarse quantizer: K deterministic seed vectors + one
-    distributed Lloyd iteration (assign-to-nearest, recompute means).
-
-    The collect() here moves K×dim = 1024 floats of *index metadata* to
-    the driver — the IVF codebook is broadcast state by design, the data
-    plane is never collected. At 100 TB: same plan, larger sample feeding
-    more Lloyd iterations; the per-dim mean is a posexplode + groupBy —
-    a map-side-combinable agg over (cell, dim).
-    """
-    # Seed from the K lowest vec_ids PRESENT (not `vec_id < K`): corpora
-    # with sparse/non-contiguous ids still yield K seeds, and a corpus
-    # smaller than K degrades to one cell per vector instead of indexing
-    # past the end of the seed list.
-    seeds = [
-        [float(x) for x in r["embedding"]]
-        for r in emb.select("vec_id", "embedding")
-        .orderBy("vec_id")
-        .limit(K_CELLS)
-        .collect()
-    ]
-    if not seeds:
-        raise ValueError("ivf_train_centroids: empty embeddings corpus")
-    # One Lloyd step: assign each vector to its nearest seed, then take
-    # per-cell per-dim means as 64 native aggregates in ONE groupBy pass
-    # (codegen, map-side partials) — no posexplode blowup. Sums are
-    # EXACT, therefore independent of partial-agg order — the same mean
-    # to the bit on any partitioning, any engine (the
-    # embedding_centroids pattern), which is what lets the DuckDB oracle
-    # replay the whole index build. r16: the exact sum aggregates as a
-    # SCALED LONG, not a decimal — each component is still rounded
-    # HALF_UP at scale 8 by the decimal(18,8) cast (bit-faithful to the
-    # oracle's CAST), but ×1e8 turns it into an integer so the 64 sum
-    # buffers are primitive longs instead of Decimal objects (measured:
-    # the Lloyd job drops 2.3 → 1.5 s cold at sf0.1, and the per-row
-    # win compounds at scale). The unscale back to double happens on
-    # the 16 collected rows via Python Decimal — division by 10^8 is
-    # correctly rounded exactly like Spark's decimal→double cast, then
-    # the same double division by count, so every mean is bit-identical
-    # to the decimal-aggregate form (asserted over all 1024 components
-    # when this landed).
-    from decimal import Decimal
-
-    cnt = F.count(F.lit(1))
-
-    # Overflow bound (ADVICE r16): Spark sums longs with silent
-    # wraparound outside ANSI mode, and |component| <= ~1 means each row
-    # contributes <= ~1e8 to a cell's sum — the int64 range (~9.2e18)
-    # therefore caps a cell at ~9.2e10 rows. The 100 TB design point is
-    # ~6e9 rows/cell at K=16 (~15× margin); corpora beyond that must
-    # widen the buffer (decimal(38,0)) or add cells.
-    #
-    # Each sum is one SQL string, not a chain of ~7 Column calls: PySpark
-    # records a call site per Column call (Py4J round trips plus a stack
-    # walk), which made the 64 sums cost more driver time than the job.
-    def scaled_sum(i: int) -> Column:
-        return F.expr(
-            f"sum(CAST(CAST(embedding[{i}] AS DECIMAL(18,8)) * 100000000 AS BIGINT)) AS s{i}"
-        )
-
-    means = (
-        emb.select(
-            _nearest_cells(F.col("embedding"), seeds, 1)[0].alias("cell"),
-            "embedding",
-        )
-        .groupBy("cell")
-        .agg(
-            cnt.alias("c"),
-            *[scaled_sum(i) for i in range(_DIM)],
-        )
-        .collect()
+    per fixture snapshot (:func:`fixture_memo`). Several queries share the
+    build (ann_ivf_cosine, semdedup_prune, ann_ivf_recall_probe — which
+    runs the search twice); without the memo each invocation re-paid the
+    two training jobs (seed collect + Lloyd means). The build is fully
+    deterministic, so the memo returns bit-identical centroids and cannot
+    perturb oracle parity. At 100 TB the analog is persisting the trained
+    codebook next to the index."""
+    return fixture_memo(
+        _CENTROID_CACHE, emb.sparkSession, sf_dir, "embeddings",
+        lambda: ivf_train_centroids(emb),
     )
-    refined = {
-        r["cell"]: [
-            float(Decimal(r[f"s{i}"]) / Decimal(10**8)) / r["c"]
-            for i in range(_DIM)
-        ]
-        for r in means
-    }
-    # Cells that captured no vectors keep their seed; with a corpus
-    # smaller than K_CELLS there are simply fewer cells.
-    return [refined.get(i, seeds[i]) for i in range(len(seeds))]
+
+
+def _lloyd_sql(v: str, dims: int) -> tuple[str, str]:
+    """(mean columns, centroid components) of the oracle's Lloyd step over
+    ``dims``-wide vectors ``v``: exact decimal means per component, and a
+    cell with no members keeps its seed ``s.{v}``."""
+    means = ", ".join(
+        f"CAST(SUM(CAST({v}[{i + 1}] AS DECIMAL(18,8))) AS DOUBLE) / count(*) AS m{i}"
+        for i in range(dims)
+    )
+    cents = ", ".join(
+        f"COALESCE(m.m{i}, CAST(s.{v}[{i + 1}] AS DOUBLE))" for i in range(dims)
+    )
+    return means, cents
 
 
 def _ivf_build_ctes(
@@ -476,26 +416,8 @@ def _ivf_build_ctes(
     CTEs sees the same index bit-for-bit. Shared by the IVF-search and
     SemDedup oracles. ``train_rel``/``corpus_rel`` parametrize WHICH
     relation trains the quantizer vs which is assigned into cells (the
-    incremental-index oracle trains on yesterday's base, assigns all);
-    the defaults generate byte-identical SQL to the original shared
-    form."""
-
-    def dot(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(generate_series(1, {_DIM}), "
-            f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-        )
-
-    def score(e: str, c: str) -> str:
-        return f"{dot(e, c)} / sqrt({dot(c, c)})"
-
-    mean_cols = ", ".join(
-        f"CAST(SUM(CAST(embedding[{i + 1}] AS DECIMAL(18,8))) AS DOUBLE) / count(*) AS m{i}"
-        for i in range(_DIM)
-    )
-    cent_list = ", ".join(
-        f"COALESCE(m.m{i}, CAST(s.embedding[{i + 1}] AS DOUBLE))" for i in range(_DIM)
-    )
+    incremental-index oracle trains on yesterday's base, assigns all)."""
+    mean_cols, cent_list = _lloyd_sql("embedding", _DIM)
     return f"""seeds AS (
       SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding
       FROM (SELECT vec_id, embedding FROM {train_rel} ORDER BY vec_id LIMIT {K_CELLS}) t
@@ -503,7 +425,7 @@ def _ivf_build_ctes(
     assign0 AS (
       SELECT e.vec_id, e.embedding, s.cell,
              row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY {score("e.embedding", "s.embedding")} DESC, s.cell) AS rk
+               ORDER BY {_cell_score_sql("e.embedding", "s.embedding")} DESC, s.cell) AS rk
       FROM {train_rel} e CROSS JOIN seeds s
     ),
     means AS (
@@ -518,9 +440,22 @@ def _ivf_build_ctes(
       SELECT vec_id, embedding, cell FROM (
         SELECT e.vec_id, e.embedding, c.cell,
                row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {score("e.embedding", "c.c")} DESC, c.cell) AS rk
+                 ORDER BY {_cell_score_sql("e.embedding", "c.c")} DESC, c.cell) AS rk
         FROM {corpus_rel} e CROSS JOIN cents c
       ) WHERE rk = 1
+    )"""
+
+
+def _probe_sql(cols: str = "vec_id, embedding") -> str:
+    """``probe``: each of the N_QUERIES probes with its NPROBE best cells."""
+    return f"""probe AS (
+      SELECT {cols}, cell FROM (
+        SELECT e.*, c.cell,
+               row_number() OVER (PARTITION BY e.vec_id
+                 ORDER BY {_cell_score_sql("e.embedding", "c.c")} DESC, c.cell) AS rk
+        FROM embeddings e CROSS JOIN cents c
+        WHERE e.vec_id < {N_QUERIES}
+      ) WHERE rk <= {NPROBE}
     )"""
 
 
@@ -531,37 +466,11 @@ def _ivf_oracle_sql(
     and top-k cosine ranking. Probes always come from the full
     ``embeddings`` table; ``train_rel`` narrows what trains the quantizer
     (incremental-index oracle)."""
-
-    def dot(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(generate_series(1, {_DIM}), "
-            f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-        )
-
-    def score(e: str, c: str) -> str:
-        return f"{dot(e, c)} / sqrt({dot(c, c)})"
-
     return f"""
     WITH {_ivf_build_ctes(train_rel, corpus_rel)},
-    probe AS (
-      SELECT vec_id, embedding, cell FROM (
-        SELECT e.vec_id, e.embedding, c.cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {score("e.embedding", "c.c")} DESC, c.cell) AS rk
-        FROM embeddings e CROSS JOIN cents c
-        WHERE e.vec_id < {N_QUERIES}
-      ) WHERE rk <= {NPROBE}
+    {_probe_sql()}""" + _topk_sql(
+        "FROM probe q JOIN corpus v ON v.cell = q.cell AND v.vec_id <> q.vec_id"
     )
-    SELECT query_id, neighbor_id, round(raw_sim, 6) AS sim, rank FROM (
-      SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-             {_DOT} / ({_NORM_Q} * {_NORM_V}) AS raw_sim,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY {_DOT} / ({_NORM_Q} * {_NORM_V}) DESC,
-                        v.vec_id) AS rank
-      FROM probe q JOIN corpus v ON v.cell = q.cell AND v.vec_id <> q.vec_id
-    ) t WHERE rank <= {TOP_K}
-    """
 
 
 @register("ann_ivf_cosine", oracle=_ivf_oracle_sql())
@@ -612,14 +521,7 @@ def ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_udf(F.col("q_emb"), F.col("v_emb")).alias("raw_sim"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("raw_sim", 6).alias("sim"), "rank")
-    )
+    return top_k(scored, TOP_K)
 
 
 @register(
@@ -659,15 +561,6 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SEMDEDUP_SIM = 0.4  # within-cell cosine prune threshold
 
-_CORPUS_COS = (
-    "list_sum(list_transform(generate_series(1, 64), "
-    "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))) / "
-    "(sqrt(list_sum(list_transform(generate_series(1, 64), "
-    "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(a.embedding[i] AS DOUBLE)))) * "
-    "sqrt(list_sum(list_transform(generate_series(1, 64), "
-    "i -> CAST(b.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))))"
-)
-
 
 @register(
     "semdedup_prune",
@@ -676,7 +569,7 @@ _CORPUS_COS = (
     pruned AS (
       SELECT DISTINCT b.vec_id
       FROM corpus a JOIN corpus b ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE {_CORPUS_COS} >= {SEMDEDUP_SIM}
+      WHERE {cos_sql("a.embedding", "b.embedding")} >= {SEMDEDUP_SIM}
     )
     SELECT c.vec_id, c.cell,
            CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END AS pruned
@@ -709,10 +602,9 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONCE per cell group, enumerates pairs as numpy index blocks, and
     emits the flags directly — pairs never exist as Spark rows, and two
     shuffles (distinct + flag join) disappear. Scoring is bit-identical:
-    the blockwise outer-product accumulation adds dimension-sequentially
-    (the _nearest_cells trick), i.e. the exact float-add order of
-    cosine_udf's _seq_dot per pair; NaN scores (zero-norm vectors) do
-    NOT prune, matching the old form (the pandas-UDF NaN surfaced as
+    the block's ``seq_outer`` adds in dimension order, the exact
+    float-add order of cosine_udf's ``seq_dot`` per pair; NaN scores
+    (zero-norm vectors) do NOT prune, matching the old form (the pandas-UDF NaN surfaced as
     NULL, so Spark's filter dropped the pair — as does the oracle's
     0/0 = NULL in DuckDB; pinned by test vs the join form). Parallelism
     is one task per cell — K is the scale knob, same as the pair join,
@@ -730,17 +622,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pair_block_sims(xa: "np.ndarray", xb: "np.ndarray") -> "np.ndarray":
-    """(|xa|, |xb|) cosine numerators with DIMENSION-SEQUENTIAL float64
-    accumulation — for every (i, j) the adds happen in dimension order,
-    exactly the fold _seq_dot applies per pair (and the oracle's
-    list_sum), but vectorized across the whole block of pairs."""
-    acc = np.multiply.outer(xa[:, 0], xb[:, 0])
-    for d in range(1, _DIM):
-        acc += np.multiply.outer(xa[:, d], xb[:, d])
-    return acc
-
-
 #: Pair-enumeration block edge for the within-cell kernel: bounds the
 #: temporary (B×B) sim matrix at ~32 MB float64 regardless of cell size.
 _SEMDEDUP_BLOCK = 2048
@@ -756,8 +637,8 @@ def _semdedup_cell_kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
     n = len(ids)
     flag = np.zeros(n, dtype=bool)
     if n > 1:
-        x = np.vstack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
-        norms = np.sqrt(_seq_dot(x, x))
+        x = _mat(pdf["embedding"])[order]
+        norms = np.sqrt(seq_dot(x, x))
         b = _SEMDEDUP_BLOCK
         with np.errstate(divide="ignore", invalid="ignore"):
             for j0 in range(0, n, b):
@@ -765,7 +646,7 @@ def _semdedup_cell_kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
                 xj, nj = x[j0:j1], norms[j0:j1]
                 for i0 in range(0, j1, b):
                     i1 = min(j1, i0 + b)
-                    sims = _pair_block_sims(x[i0:i1], xj) / np.outer(
+                    sims = seq_outer(x[i0:i1], xj) / np.outer(
                         norms[i0:i1], nj
                     )
                     # NaN (zero-norm vector) is NOT a hit: the old
@@ -813,22 +694,19 @@ def embedding_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One Arrow-batched pandas UDF per row batch (vector math off the JVM,
     per the module's UDF policy), returning a struct so all four signals
-    ride one transfer. Norm accumulates float64 DIMENSION-SEQUENTIALLY
-    (matching DuckDB's list_sum fold exactly — see _seq_dot); zero/finite
-    counts are integer-exact. Pure map-side: no shuffle at any scale.
+    ride one transfer. The norm is a ``seq_dot`` fold, matching
+    DuckDB's list_sum exactly; zero/finite counts are integer-exact. Pure
+    map-side: no shuffle at any scale.
     """
     emb = load_table(spark, sf_dir, "embeddings")
 
     @F.pandas_udf("struct<dim:int,l2_norm:double,n_zero:int,n_nonfinite:int>")
     def _audit(vecs: pd.Series) -> pd.DataFrame:
-        m = np.vstack(vecs.to_numpy()).astype(np.float64)
-        acc = m[:, 0] * m[:, 0]
-        for i in range(1, m.shape[1]):
-            acc = acc + m[:, i] * m[:, i]
+        m = _mat(vecs)
         return pd.DataFrame(
             {
                 "dim": np.full(m.shape[0], m.shape[1], dtype=np.int32),
-                "l2_norm": np.round(np.sqrt(acc), 6),
+                "l2_norm": np.round(np.sqrt(seq_dot(m, m)), 6),
                 "n_zero": (m == 0.0).sum(axis=1).astype(np.int32),
                 "n_nonfinite": (~np.isfinite(m)).sum(axis=1).astype(np.int32),
             }
@@ -1072,19 +950,7 @@ M_SUB = 4
 SUB_DIM = 16
 K_CODES = 8
 
-_PQ_CODEBOOK_CACHE: dict[tuple[str, str], list[list[list[float]]]] = register_memo({})
-
-
-def _seq_l2(ma: "np.ndarray", mb: "np.ndarray") -> "np.ndarray":
-    """Row-wise squared L2 with DIMENSION-SEQUENTIAL float64 accumulation
-    over SUB_DIM dims — the PQ twin of _seq_dot, bit-identical to the
-    oracle's list_sum fold of (a[i]-b[i])*(a[i]-b[i])."""
-    d0 = ma[:, 0] - mb[:, 0]
-    acc = d0 * d0
-    for i in range(1, SUB_DIM):
-        di = ma[:, i] - mb[:, i]
-        acc = acc + di * di
-    return acc
+_PQ_CODEBOOK_CACHE: dict[tuple, list[list[list[float]]]] = register_memo({})
 
 
 def _pq_subvecs(emb: DataFrame) -> DataFrame:
@@ -1127,7 +993,7 @@ def _pq_assign_codes(
 
     @F.pandas_udf("int")
     def _code(sub: pd.Series, v: pd.Series) -> pd.Series:
-        m = np.vstack(v.to_numpy()).astype(np.float64)  # (B, SUB_DIM)
+        m = _mat(v)  # (B, SUB_DIM)
         subs = sub.to_numpy()
         out = np.zeros(len(m), dtype=np.int32)
         for s in range(M_SUB):
@@ -1135,11 +1001,9 @@ def _pq_assign_codes(
             if not mask.any():
                 continue
             ms = m[mask]
-            # (B_s, K) distances, dimension-sequential accumulation per
-            # codeword, then stable argmin (ties to lower code).
-            dists = np.stack(
-                [_seq_l2(ms, np.broadcast_to(c, ms.shape)) for c in mats[s]], axis=1
-            )
+            # (B_s, K) squared distances, each a seq_dot fold of the
+            # difference, then stable argmin (ties to lower code).
+            dists = np.stack([seq_dot(ms - c, ms - c) for c in mats[s]], axis=1)
             out[mask] = np.argmin(dists, axis=1).astype(np.int32)
         return pd.Series(out)
 
@@ -1150,213 +1014,48 @@ def _pq_assign_codes(
 
 def pq_codebooks_for(sf_dir: str, emb: DataFrame) -> list[list[list[float]]]:
     """Deterministic PQ codebooks (M_SUB × K_CODES × SUB_DIM), trained at
-    most once per fixture dir (the ivf_centroids_for policy: the build is
-    seed-deterministic with exact decimal means, so memoization returns
-    bit-identical codebooks; the 100 TB analog persists them beside the
+    most once per fixture snapshot (:func:`fixture_memo`, the
+    ivf_centroids_for policy; the 100 TB analog persists them beside the
     codes).
 
-    Build = the IVF recipe per subspace, run as ONE Spark job across all
-    subspaces: seeds are the K_CODES lowest vec_ids' subvectors, one Lloyd
-    step assigns every subvector to its nearest seed (squared L2,
-    sequential fold), and per-(sub, cell) means are SUB_DIM exact
-    scaled-long aggregates (decimal(18,8) rounding per component,
-    primitive-long sum buffers) — order-independent, so the oracle
-    replays the identical codebook from SQL. Only index metadata is ever
-    collected: 8 seed rows, then M_SUB×K_CODES mean rows (512 floats).
-    """
-    # Keyed by (applicationId, resolved path, fixture mtime) — the old
-    # path-only key served a stale codebook if a fixture was regenerated
-    # at the same path within a process (VERDICT r5 #3).
-    key = fixture_key(emb.sparkSession, sf_dir, "embeddings")
-    if key in _PQ_CODEBOOK_CACHE:
-        return _PQ_CODEBOOK_CACHE[key]
+    Build = :func:`_lloyd_codebooks` per subspace, run as ONE Spark job
+    across all subspaces: seeds are the K_CODES lowest vec_ids'
+    subvectors, one Lloyd step assigns every subvector to its nearest
+    seed (squared L2, sequential fold), and the per-(sub, cell) means are
+    SUB_DIM exact scaled-long sums, so the oracle replays the identical
+    codebook from SQL. The assignment kernel keeps the subvector
+    (``keep_v``), so the means group it directly — no (vec_id, sub)
+    re-join of 8×|corpus| rows against itself (r17, guide §2.4)."""
 
-    seed_rows = (
-        emb.select("vec_id", "embedding").orderBy("vec_id").limit(K_CODES).collect()
-    )
-    if not seed_rows:
-        raise ValueError("pq_codebooks_for: empty embeddings corpus")
-    seeds = [
-        [
-            [float(x) for x in r["embedding"][s * SUB_DIM : (s + 1) * SUB_DIM]]
-            for r in seed_rows
-        ]
-        for s in range(M_SUB)
-    ]
-
-    subv = _pq_subvecs(emb)
-    # keep_v: the assignment kernel's output carries the subvector, so
-    # the mean aggregate groups it directly — no (vec_id, sub) re-join
-    # of 8×|corpus| rows against itself (r17, guide §2.4).
-    assigned = _pq_assign_codes(subv, seeds, keep_v=True).withColumnRenamed(
-        "code", "cell"
-    )
-    cnt = F.count(F.lit(1))
-    # Exact means via scaled-long sums (the ivf_train_centroids r16
-    # rework): decimal(18,8) HALF_UP rounding per component is kept, but
-    # the aggregate buffers are primitive longs; the unscale on the
-    # collected M_SUB×K_CODES rows goes through Python Decimal, which
-    # divides by 10^8 with the same correct rounding as Spark's
-    # decimal→double cast — bit-identical means. Overflow bound: long
-    # sums wrap silently past 2^63, capping a (sub, cell) group at
-    # ~9.2e10 rows for |component| <= ~1 (see ivf_train_centroids).
-    from decimal import Decimal
-
-    means = (
-        assigned
-        .groupBy("sub", "cell")
-        .agg(
-            cnt.alias("c"),
-            *[
-                F.sum(
-                    (F.col("v")[i].cast("decimal(18,8)") * 100000000).cast(
-                        "long"
-                    )
-                ).alias(f"s{i}")
-                for i in range(SUB_DIM)
-            ],
+    def assign(seeds):
+        return _pq_assign_codes(_pq_subvecs(emb), seeds, keep_v=True).withColumnRenamed(
+            "code", "cell"
         )
-        .collect()
-    )
-    refined = {
-        (r["sub"], r["cell"]): [
-            float(Decimal(r[f"s{i}"]) / Decimal(10**8)) / r["c"]
-            for i in range(SUB_DIM)
-        ]
-        for r in means
-    }
-    books = [
-        [refined.get((s, k), seeds[s][k]) for k in range(len(seeds[s]))]
-        for s in range(M_SUB)
-    ]
-    _PQ_CODEBOOK_CACHE[key] = books
-    return books
 
-
-def _pq_l2_sql(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(generate_series(1, {SUB_DIM}), "
-        f"i -> (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
-        f" * (CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))))"
+    return fixture_memo(
+        _PQ_CODEBOOK_CACHE, emb.sparkSession, sf_dir, "embeddings",
+        lambda: _lloyd_codebooks(emb, K_CODES, SUB_DIM, assign),
     )
 
 
-def _pq_oracle_sql() -> str:
-    """DuckDB replay of the FULL PQ pipeline: subvector split, seed
-    selection, one Lloyd step with exact decimal means, corpus encoding,
-    per-query ADC tables, exact-decimal ADC sums, top-k ranking. Every
-    float fold is order-matched to the pandas kernels."""
-    mean_cols = ", ".join(
-        f"CAST(SUM(CAST(v[{i + 1}] AS DECIMAL(18,8))) AS DOUBLE) / count(*) AS m{i}"
-        for i in range(SUB_DIM)
+def _pq_adc_table(
+    spark: SparkSession, subv: DataFrame, books: list[list[list[float]]]
+) -> DataFrame:
+    """Per-query ADC tables (query_id, sub, cell, d): the exact squared-L2
+    distance of each probe subvector to every codeword of its subspace,
+    carried as decimal(24,10) so the ADC sums are exact. The codebooks
+    ride as a tiny broadcast frame of M_SUB×K_CODES rows."""
+    cents = spark.createDataFrame(
+        [(s, k, [float(x) for x in book[k]]) for s, book in enumerate(books) for k in range(len(book))],
+        "sub int, cell int, c array<double>",
     )
-    cent_list = ", ".join(
-        f"COALESCE(m.m{i}, CAST(s.v[{i + 1}] AS DOUBLE))" for i in range(SUB_DIM)
-    )
-    return f"""
-    WITH subs AS (SELECT unnest(generate_series(0, {M_SUB - 1})) AS sub),
-    subv AS (
-      SELECT e.vec_id, s.sub,
-             e.embedding[(s.sub * {SUB_DIM} + 1):((s.sub + 1) * {SUB_DIM})] AS v
-      FROM embeddings e CROSS JOIN subs s
-    ),
-    seeds AS (
-      SELECT t.sub, t.v,
-             row_number() OVER (PARTITION BY t.sub ORDER BY t.vec_id) - 1 AS cell
-      FROM subv t
-      WHERE t.vec_id IN (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {K_CODES})
-    ),
-    assign0 AS (
-      SELECT t.vec_id, t.sub, t.v, s.cell,
-             row_number() OVER (PARTITION BY t.vec_id, t.sub
-               ORDER BY {_pq_l2_sql("t.v", "s.v")} ASC, s.cell) AS rk
-      FROM subv t JOIN seeds s ON s.sub = t.sub
-    ),
-    means AS (
-      SELECT sub, cell, {mean_cols}
-      FROM assign0 WHERE rk = 1 GROUP BY sub, cell
-    ),
-    cents AS (
-      SELECT s.sub, s.cell, list_value({cent_list}) AS c
-      FROM seeds s LEFT JOIN means m ON m.sub = s.sub AND m.cell = s.cell
-    ),
-    codes AS (
-      SELECT vec_id, sub, cell AS code FROM (
-        SELECT t.vec_id, t.sub, c.cell,
-               row_number() OVER (PARTITION BY t.vec_id, t.sub
-                 ORDER BY {_pq_l2_sql("t.v", "c.c")} ASC, c.cell) AS rk
-        FROM subv t JOIN cents c ON c.sub = t.sub
-      ) WHERE rk = 1
-    ),
-    qtab AS (
-      SELECT q.vec_id AS query_id, c.sub, c.cell,
-             CAST({_pq_l2_sql("q.v", "c.c")} AS DECIMAL(24,10)) AS d
-      FROM subv q JOIN cents c ON c.sub = q.sub
-      WHERE q.vec_id < {N_QUERIES}
-    ),
-    adc AS (
-      SELECT t.query_id, k.vec_id AS neighbor_id, SUM(t.d) AS dist
-      FROM qtab t JOIN codes k ON k.sub = t.sub AND k.code = t.cell
-      WHERE k.vec_id <> t.query_id
-      GROUP BY t.query_id, k.vec_id
-    )
-    SELECT query_id, neighbor_id, round(CAST(dist AS DOUBLE), 6) AS pq_dist, rank
-    FROM (
-      SELECT query_id, neighbor_id, dist,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY dist ASC, neighbor_id) AS rank
-      FROM adc
-    ) t WHERE rank <= {TOP_K}
-    """
-
-
-@register("ann_pq_adc_topk", oracle=_pq_oracle_sql())
-def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ-compressed nearest neighbors via asymmetric distance
-    computation: every corpus vector is stored as M_SUB={m} codes into
-    per-subspace K={k}-codeword codebooks (trained by the deterministic
-    seed+one-Lloyd-step recipe of the IVF build, per subspace); each query
-    precomputes an M_SUB×K table of exact subspace distances to the
-    codewords; the approximate distance to ANY corpus vector is then M_SUB
-    table lookups summed — no original vector is ever touched at search
-    time.
-
-    This is the memory-side scale path that complements IVF's
-    candidate-pruning: codes are {m} small ints per vector (vs {dim}
-    floats), so the searchable index is ~64× smaller than the corpus and
-    the ADC scan is a broadcast-hash-join of the (queries × {m}×{k})-row
-    lookup table against the codes table — a map-side scan at any corpus
-    size, shuffling only the (query, neighbor) partial sums. Production
-    composes it with IVF (scan only probed cells' codes).
-
-    Determinism end-to-end: codebooks from exact decimal means, subspace
-    distances by dimension-sequential folds, and the ADC *sum* carried in
-    decimal(24,10) — exact, order-independent, and never half-way-rounded
-    (no binary double lands exactly on a 10^-11 tie) — so ranks and
-    distances replay bit-for-bit in the oracle's full SQL rebuild.
-    """
-    emb = tracked_cache(load_table(spark, sf_dir, "embeddings"))
-    books = pq_codebooks_for(sf_dir, emb)
-
-    subv = _pq_subvecs(emb)
-    codes = _pq_assign_codes(subv, books)
-
-    # Codebooks as a tiny DataFrame for the per-query ADC tables:
-    # (sub, cell, c) — M_SUB×K_CODES rows of index metadata.
-    cent_rows = [
-        (s, k, [float(x) for x in books[s][k]])
-        for s in range(M_SUB)
-        for k in range(len(books[s]))
-    ]
-    cents = spark.createDataFrame(cent_rows, "sub int, cell int, c array<double>")
 
     @F.pandas_udf("double")
     def _l2(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.vstack(a.to_numpy()).astype(np.float64)
-        mb = np.vstack(b.to_numpy()).astype(np.float64)
-        return pd.Series(_seq_l2(ma, mb))
+        diff = _mat(a) - _mat(b)
+        return pd.Series(seq_dot(diff, diff))
 
-    qtab = (
+    return (
         subv.where(F.col("vec_id") < N_QUERIES)
         .withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(cents), "sub")
@@ -1364,58 +1063,24 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "sub",
             "cell",
-            _l2(F.col("v").cast("array<double>"), "c")
-            .cast("decimal(24,10)")
-            .alias("d"),
-        )
-    )
-
-    adc = (
-        codes.join(
-            F.broadcast(qtab), (codes["sub"] == qtab["sub"]) & (codes["code"] == qtab["cell"])
-        )
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d").alias("dist"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("vec_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.col("dist").cast("double"), 6).alias("pq_dist"),
-            "rank",
+            _l2(F.col("v").cast("array<double>"), "c").cast("decimal(24,10)").alias("d"),
         )
     )
 
 
-ann_pq_adc_topk.__doc__ = ann_pq_adc_topk.__doc__.format(
-    m=M_SUB, k=K_CODES, dim=_DIM
-)
-
-
-# --------------------------------------------------------------------------
-# IVF + PQ composition: prune candidates by cell, score by ADC
-# --------------------------------------------------------------------------
+def _pq_l2_sql(a: str, b: str) -> str:
+    d = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
+    return fold_sql(f"{d} * {d}", SUB_DIM)
 
 
 def _pq_build_ctes(prefix: str = "p") -> str:
-    """The PQ codebook/encoding build as prefixed CTEs (so they can
-    coexist with the IVF build's CTE names in one oracle): ends in
-    ``{prefix}codes(vec_id, sub, code)`` and ``{prefix}cents(sub, cell,
-    c)``. Same arithmetic as _pq_oracle_sql's build — order-matched
-    folds, exact decimal means."""
-    mean_cols = ", ".join(
-        f"CAST(SUM(CAST(v[{i + 1}] AS DECIMAL(18,8))) AS DOUBLE) / count(*) AS m{i}"
-        for i in range(SUB_DIM)
-    )
-    cent_list = ", ".join(
-        f"COALESCE(m.m{i}, CAST(s.v[{i + 1}] AS DOUBLE))" for i in range(SUB_DIM)
-    )
+    """DuckDB replay of the PQ codebook/encoding build: subvector split,
+    seed selection, one Lloyd step with exact decimal means, corpus
+    encoding. Ends in ``{prefix}codes(vec_id, sub, code)`` and
+    ``{prefix}cents(sub, cell, c)``; the prefix lets the CTEs coexist
+    with the IVF build's names in one oracle. Every float fold is
+    order-matched to the pandas kernels."""
+    mean_cols, cent_list = _lloyd_sql("v", SUB_DIM)
     P = prefix
     return f"""{P}subs AS (SELECT unnest(generate_series(0, {M_SUB - 1})) AS sub),
     {P}subv AS (
@@ -1453,48 +1118,21 @@ def _pq_build_ctes(prefix: str = "p") -> str:
     )"""
 
 
-def _ivf_pq_oracle_sql() -> str:
-    """Oracle for the IVF+PQ composition: the IVF build CTEs give the
-    probed-cell candidate set, the PQ build CTEs give codes + per-query
-    ADC tables, and the final ranking is the exact-decimal ADC sum over
-    candidates only."""
-
-    def dot(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(generate_series(1, {_DIM}), "
-            f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-        )
-
-    def score(e: str, c: str) -> str:
-        return f"{dot(e, c)} / sqrt({dot(c, c)})"
-
-    return f"""
-    WITH {_ivf_build_ctes()},
-    probe AS (
-      SELECT vec_id, cell FROM (
-        SELECT e.vec_id, c.cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY {score("e.embedding", "c.c")} DESC, c.cell) AS rk
-        FROM embeddings e CROSS JOIN cents c
-        WHERE e.vec_id < {N_QUERIES}
-      ) WHERE rk <= {NPROBE}
-    ),
-    cand AS (
-      SELECT p.vec_id AS query_id, v.vec_id AS neighbor_id
-      FROM probe p JOIN corpus v ON v.cell = p.cell AND v.vec_id <> p.vec_id
-    ),
-    {_pq_build_ctes("p")},
-    qtab AS (
+def _pq_search_sql(prefix: str, cand: str = "") -> str:
+    """Per-query ADC tables over the ``{prefix}`` PQ build, exact-decimal
+    ADC sums per (query, neighbor) — restricted by the ``cand`` join when
+    given — and the top-k ranking by ascending distance."""
+    P = prefix
+    return f"""qtab AS (
       SELECT q.vec_id AS query_id, c.sub, c.cell,
              CAST({_pq_l2_sql("q.v", "c.c")} AS DECIMAL(24,10)) AS d
-      FROM psubv q JOIN pcents c ON c.sub = q.sub
+      FROM {P}subv q JOIN {P}cents c ON c.sub = q.sub
       WHERE q.vec_id < {N_QUERIES}
     ),
     adc AS (
       SELECT t.query_id, k.vec_id AS neighbor_id, SUM(t.d) AS dist
-      FROM qtab t
-      JOIN pcodes k ON k.sub = t.sub AND k.code = t.cell
-      JOIN cand c ON c.query_id = t.query_id AND c.neighbor_id = k.vec_id
+      FROM qtab t JOIN {P}codes k ON k.sub = t.sub AND k.code = t.cell
+      {cand or "WHERE k.vec_id <> t.query_id"}
       GROUP BY t.query_id, k.vec_id
     )
     SELECT query_id, neighbor_id, round(CAST(dist AS DOUBLE), 6) AS pq_dist, rank
@@ -1505,6 +1143,82 @@ def _ivf_pq_oracle_sql() -> str:
       FROM adc
     ) t WHERE rank <= {TOP_K}
     """
+
+
+def _pq_oracle_sql() -> str:
+    """DuckDB replay of the FULL PQ pipeline: the build CTEs, per-query
+    ADC tables, exact-decimal ADC sums, top-k ranking."""
+    return f"""
+    WITH {_pq_build_ctes("")},
+    {_pq_search_sql("")}"""
+
+
+@register("ann_pq_adc_topk", oracle=_pq_oracle_sql())
+def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PQ-compressed nearest neighbors via asymmetric distance
+    computation: every corpus vector is stored as M_SUB={m} codes into
+    per-subspace K={k}-codeword codebooks (trained by the deterministic
+    seed+one-Lloyd-step recipe of the IVF build, per subspace); each query
+    precomputes an M_SUB×K table of exact subspace distances to the
+    codewords; the approximate distance to ANY corpus vector is then M_SUB
+    table lookups summed — no original vector is ever touched at search
+    time.
+
+    This is the memory-side scale path that complements IVF's
+    candidate-pruning: codes are {m} small ints per vector (vs {dim}
+    floats), so the searchable index is ~64× smaller than the corpus and
+    the ADC scan is a broadcast-hash-join of the (queries × {m}×{k})-row
+    lookup table against the codes table — a map-side scan at any corpus
+    size, shuffling only the (query, neighbor) partial sums. Production
+    composes it with IVF (scan only probed cells' codes).
+
+    Determinism end-to-end: codebooks from exact decimal means, subspace
+    distances by dimension-sequential folds, and the ADC *sum* carried in
+    decimal(24,10) — exact, order-independent, and never half-way-rounded
+    (no binary double lands exactly on a 10^-11 tie) — so ranks and
+    distances replay bit-for-bit in the oracle's full SQL rebuild.
+    """
+    emb = tracked_cache(load_table(spark, sf_dir, "embeddings"))
+    books = pq_codebooks_for(sf_dir, emb)
+
+    subv = _pq_subvecs(emb)
+    codes = _pq_assign_codes(subv, books)
+    qtab = _pq_adc_table(spark, subv, books)
+    adc = (
+        codes.join(
+            F.broadcast(qtab), (codes["sub"] == qtab["sub"]) & (codes["code"] == qtab["cell"])
+        )
+        .where(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("d").alias("dist"))
+    )
+    return top_k(adc, TOP_K, "dist", "pq_dist", asc=True)
+
+
+ann_pq_adc_topk.__doc__ = ann_pq_adc_topk.__doc__.format(
+    m=M_SUB, k=K_CODES, dim=_DIM
+)
+
+
+# --------------------------------------------------------------------------
+# IVF + PQ composition: prune candidates by cell, score by ADC
+# --------------------------------------------------------------------------
+
+
+def _ivf_pq_oracle_sql() -> str:
+    """Oracle for the IVF+PQ composition: the IVF build CTEs give the
+    probed-cell candidate set, the PQ build CTEs give codes + per-query
+    ADC tables, and the final ranking is the exact-decimal ADC sum over
+    candidates only."""
+    return f"""
+    WITH {_ivf_build_ctes()},
+    {_probe_sql("vec_id")},
+    cand AS (
+      SELECT p.vec_id AS query_id, v.vec_id AS neighbor_id
+      FROM probe p JOIN corpus v ON v.cell = p.cell AND v.vec_id <> p.vec_id
+    ),
+    {_pq_build_ctes("p")},
+    {_pq_search_sql("p", "JOIN cand c ON c.query_id = t.query_id AND c.neighbor_id = k.vec_id")}"""
 
 
 @register("ann_ivf_pq_topk", oracle=_ivf_pq_oracle_sql())
@@ -1544,30 +1258,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     subv = _pq_subvecs(emb)
     codes = _pq_assign_codes(subv, books)
-    cent_rows = [
-        (s, k, [float(x) for x in books[s][k]])
-        for s in range(M_SUB)
-        for k in range(len(books[s]))
-    ]
-    cents = spark.createDataFrame(cent_rows, "sub int, cell int, c array<double>")
-
-    @F.pandas_udf("double")
-    def _l2(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.vstack(a.to_numpy()).astype(np.float64)
-        mb = np.vstack(b.to_numpy()).astype(np.float64)
-        return pd.Series(_seq_l2(ma, mb))
-
-    qtab = (
-        subv.where(F.col("vec_id") < N_QUERIES)
-        .withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(cents), "sub")
-        .select(
-            "query_id",
-            "sub",
-            "cell",
-            _l2(F.col("v").cast("array<double>"), "c").cast("decimal(24,10)").alias("d"),
-        )
-    )
+    qtab = _pq_adc_table(spark, subv, books)
     adc = (
         cand.join(codes, "vec_id")
         .join(
@@ -1576,22 +1267,10 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (codes["code"] == qtab["cell"])
             & (cand["query_id"] == qtab["query_id"]),
         )
-        .groupBy(cand["query_id"], "vec_id")
+        .groupBy(cand["query_id"], F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d").alias("dist"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("vec_id"))
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(F.col("dist").cast("double"), 6).alias("pq_dist"),
-            "rank",
-        )
-    )
+    return top_k(adc, TOP_K, "dist", "pq_dist", asc=True)
 
 
 # --- int8 scalar-quantization recall probe -------------------------------
@@ -1599,10 +1278,21 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUANT_QUERIES = 20
 QUANT_K = 10
 
-# Global symmetric-quantizer scale per (session, fixture) — index
-# metadata, memoized like the IVF centroids / PQ codebooks and cleared
-# by clear_memos() so bench cold runs stay honest.
 _QUANT_SCALE_CACHE: dict[tuple, float] = register_memo({})
+
+
+def int8_scale_for(sf_dir: str, emb: DataFrame) -> float | None:
+    """The global symmetric-quantizer scale max|x| (None on an empty
+    corpus): index metadata, memoized per fixture snapshot like the IVF
+    centroids and PQ codebooks. A posexplode rollup, not 128 aggregate
+    expressions in one agg: the wide-agg form spent ~3.5 s COMPILING
+    (Janino, 128 agg trees) to aggregate 5k rows."""
+    return fixture_memo(
+        _QUANT_SCALE_CACHE, emb.sparkSession, sf_dir, "embeddings",
+        lambda: emb.select(F.explode("embedding").alias("x"))
+        .agg(F.max(F.abs(F.col("x").cast("double"))).alias("a"))
+        .collect()[0]["a"],
+    )
 
 
 @register(
@@ -1638,7 +1328,8 @@ _QUANT_SCALE_CACHE: dict[tuple, float] = register_memo({})
     frank AS (
       SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
              row_number() OVER (PARTITION BY q.vec_id
-                                ORDER BY {_DOT} DESC, v.vec_id) AS rank
+                                ORDER BY {dot_sql("q.embedding", "v.embedding")} DESC,
+                                         v.vec_id) AS rank
       FROM embeddings q JOIN embeddings v ON v.vec_id <> q.vec_id
       WHERE q.vec_id < {QUANT_QUERIES}
     )
@@ -1675,22 +1366,8 @@ def embedding_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot products bit-identical to the oracle. Both arms broadcast the
     20-query probe side, so the corpus is scanned, never shuffled.
     """
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
-    key = fixture_key(spark, sf_dir, "embeddings")
-    amax = _QUANT_SCALE_CACHE.get(key)
-    if amax is None:
-        # posexplode rollup, not 128 aggregate expressions in one agg:
-        # the wide-agg form spent ~3.5 s COMPILING (Janino, 128 agg
-        # trees) to aggregate 5k rows; the explode form is two aggs
-        # over a (row × dim) generate and runs in a fraction of that.
-        amax = (
-            emb.select(F.explode("embedding").alias("x"))
-            .agg(F.max(F.abs(F.col("x").cast("double"))).alias("a"))
-            .collect()[0]["a"]
-        )
-        _QUANT_SCALE_CACHE[key] = amax
+    amax = int8_scale_for(sf_dir, emb)
 
     def _quant(col):
         return F.array(
@@ -1700,8 +1377,8 @@ def embedding_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
 
-    # Quantize in its OWN projection (64-term array build ~ one dot64 of
-    # codegen budget; see dot64's contract), then score in the next.
+    # Quantize in its OWN projection (a 64-term array build is about one
+    # method's worth of codegen budget), then score in the next.
     # Cached: the code table is the 4x-compressed INDEX and feeds both
     # the probe projection and the corpus side of the integer-dot join —
     # uncached, each side re-ran the quantization over a fresh scan.
@@ -1714,20 +1391,13 @@ def embedding_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     idot = F.col("qc")[0] * F.col("pc")[0]
     for i in range(1, _DIM):
         idot = idot + F.col("qc")[i] * F.col("pc")[i]
-    iranked = (
-        qcodes.join(F.broadcast(probes), F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), idot.alias("d"))
-        .withColumn(
-            "irank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("d"), F.asc("neighbor_id")
-                )
-            ),
-        )
-        .where(F.col("irank") <= QUANT_K)
-        .select("query_id", "neighbor_id")
-    )
+    iranked = top_k(
+        qcodes.join(F.broadcast(probes), F.col("vec_id") != F.col("query_id")).select(
+            "query_id", F.col("vec_id").alias("neighbor_id"), idot.alias("d")
+        ),
+        QUANT_K,
+        "d",
+    ).select("query_id", "neighbor_id")
 
     fq = emb.where(F.col("vec_id") < QUANT_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -1740,18 +1410,7 @@ def embedding_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot_udf(F.col("q_emb"), F.col("embedding")).alias("d"),
         )
     )
-    franked = (
-        fscored.withColumn(
-            "frank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.desc("d"), F.asc("neighbor_id")
-                )
-            ),
-        )
-        .where(F.col("frank") <= QUANT_K)
-        .select("query_id", "neighbor_id")
-    )
+    franked = top_k(fscored, QUANT_K, "d").select("query_id", "neighbor_id")
     overlap = (
         iranked.join(franked, ["query_id", "neighbor_id"])
         .groupBy("query_id")
@@ -1774,19 +1433,12 @@ HN_K = 5
 
 @register(
     "hard_negative_mining",
-    oracle=f"""
-    SELECT query_id, neighbor_id, round(raw_sim, 6) AS sim, rank FROM (
-      SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-             {_DOT} / ({_NORM_Q} * {_NORM_V}) AS raw_sim,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY {_DOT} / ({_NORM_Q} * {_NORM_V}) DESC,
-                        v.vec_id) AS rank
-      FROM embeddings q JOIN embeddings v
+    oracle=_topk_sql(
+        f"""FROM embeddings q JOIN embeddings v
         ON v.vec_id <> q.vec_id AND v.label <> q.label
-      WHERE q.vec_id < {HN_QUERIES}
-    ) t WHERE rank <= {HN_K}
-    """,
+      WHERE q.vec_id < {HN_QUERIES}""",
+        HN_K,
+    ),
 )
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the
@@ -1801,8 +1453,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     free. Probe side broadcast, Arrow-vectorized cosine, corpus scanned
     not shuffled.
     """
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < HN_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -1821,51 +1471,20 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_udf(F.col("q_emb"), F.col("embedding")).alias("raw_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("raw_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= HN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("raw_sim", 6).alias("sim"),
-            "rank",
-        )
-    )
+    return top_k(scored, HN_K)
 
 
 @register(
     "ann_filtered_ivf",
     oracle=f"""
     WITH {_ivf_build_ctes()},
-    probe AS (
-      SELECT vec_id, embedding, label, cell FROM (
-        SELECT e.vec_id, e.embedding, e.label, c.cell,
-               row_number() OVER (PARTITION BY e.vec_id
-                 ORDER BY list_sum(list_transform(generate_series(1, {_DIM}),
-                            i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.c[i] AS DOUBLE)))
-                          / sqrt(list_sum(list_transform(generate_series(1, {_DIM}),
-                            i -> CAST(c.c[i] AS DOUBLE) * CAST(c.c[i] AS DOUBLE)))) DESC,
-                          c.cell) AS rk
-        FROM embeddings e CROSS JOIN cents c
-        WHERE e.vec_id < {N_QUERIES}
-      ) WHERE rk <= {NPROBE}
-    )
-    SELECT query_id, neighbor_id, round(raw_sim, 6) AS sim, rank FROM (
-      SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-             {_DOT} / ({_NORM_Q} * {_NORM_V}) AS raw_sim,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY {_DOT} / ({_NORM_Q} * {_NORM_V}) DESC,
-                        v.vec_id) AS rank
-      FROM probe q
+    {_probe_sql("vec_id, embedding, label")}"""
+    + _topk_sql(
+        """FROM probe q
       JOIN (SELECT c.vec_id, c.embedding, c.cell, e.label
             FROM corpus c JOIN embeddings e USING (vec_id)) v
-        ON v.cell = q.cell AND v.vec_id <> q.vec_id AND v.label = q.label
-    ) t WHERE rank <= {TOP_K}
-    """,
+        ON v.cell = q.cell AND v.vec_id <> q.vec_id AND v.label = q.label"""
+    ),
 )
 def ann_filtered_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED vector search — ANN with a metadata predicate, the shape
@@ -1913,61 +1532,18 @@ def ann_filtered_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         cosine_udf(F.col("q_emb"), F.col("v_emb")).alias("raw_sim"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("raw_sim", 6).alias("sim"), "rank")
-    )
+    return top_k(scored, TOP_K)
 
 
 MRL_DIM = 32  # truncation point: the first half of the 64-dim embedding
-
-_DOT32 = (
-    f"list_sum(list_transform(generate_series(1, {MRL_DIM}), "
-    "i -> CAST(q.embedding[i] AS DOUBLE) * CAST(v.embedding[i] AS DOUBLE)))"
-)
-_NORM32_Q = (
-    f"sqrt(list_sum(list_transform(generate_series(1, {MRL_DIM}), "
-    "i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE))))"
-)
-_NORM32_V = (
-    f"sqrt(list_sum(list_transform(generate_series(1, {MRL_DIM}), "
-    "i -> CAST(v.embedding[i] AS DOUBLE) * CAST(v.embedding[i] AS DOUBLE))))"
-)
-
-
-def _cosine_udf_dim(a: Column, b: Column, dim: int) -> Column:
-    """Arrow-vectorized cosine over the FIRST `dim` dimensions, with the
-    same dimension-sequential float64 accumulation contract as
-    cosine_udf so truncated rankings are bit-identical to the oracle's
-    sequential list_sum."""
-
-    @F.pandas_udf("double")
-    def _cos(ea: pd.Series, eb: pd.Series) -> pd.Series:
-        ma = np.vstack(ea.to_numpy()).astype(np.float64)[:, :dim]
-        mb = np.vstack(eb.to_numpy()).astype(np.float64)[:, :dim]
-
-        def seq(x, y):
-            acc = x[:, 0] * y[:, 0]
-            for i in range(1, dim):
-                acc = acc + x[:, i] * y[:, i]
-            return acc
-
-        return pd.Series(seq(ma, mb) / (np.sqrt(seq(ma, ma)) * np.sqrt(seq(mb, mb))))
-
-    return _cos(a, b)
-
 
 @register(
     "matryoshka_truncation_recall",
     oracle=f"""
     WITH pairs AS (
       SELECT q.vec_id AS query_id, v.vec_id AS neighbor_id,
-             {_DOT} / ({_NORM_Q} * {_NORM_V}) AS sim_full,
-             {_DOT32} / ({_NORM32_Q} * {_NORM32_V}) AS sim_trunc
+             {cos_sql("q.embedding", "v.embedding")} AS sim_full,
+             {cos_sql("q.embedding", "v.embedding", MRL_DIM)} AS sim_trunc
       FROM embeddings q JOIN embeddings v ON v.vec_id <> q.vec_id
       WHERE q.vec_id < {N_QUERIES}
     ),
@@ -2015,9 +1591,8 @@ def matryoshka_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id",
         "neighbor_id",
         cosine_udf(F.col("q_emb"), F.col("v_emb")).alias("sim_full"),
-        _cosine_udf_dim(F.col("q_emb"), F.col("v_emb"), MRL_DIM).alias("sim_trunc"),
+        cosine_udf(F.col("q_emb"), F.col("v_emb"), MRL_DIM).alias("sim_trunc"),
     )
-    from pyspark.sql import Window
 
     wf = Window.partitionBy("query_id").orderBy(
         F.desc("sim_full"), F.asc("neighbor_id")

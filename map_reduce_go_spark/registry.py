@@ -36,6 +36,14 @@ _JUMP: dict[str, int] = {
          "ann_filtered_ivf", "ann_ivf_pq_topk", "ann_ivf_persisted", "ann_ivf_incremental_probe"],
         17,
     ),
+    # the shared vector layer (seq_dot/seq_outer folds, top_k, the oracle
+    # fold builder); the IVF queries above reach it too
+    **dict.fromkeys(
+        ["knn_bruteforce_cosine", "ann_lsh_cosine", "embedding_quality_audit",
+         "ann_pq_adc_topk", "embedding_int8_quant_recall", "hard_negative_mining",
+         "matryoshka_truncation_recall", "ann_lsh_persisted", "dedup_embedding_cosine"],
+        17,
+    ),
     # 0 rows on an empty nation table
     "pagerank_nation_trade": 17,
     # NULL instead of DIVIDE_BY_ZERO on empty tables

@@ -11,6 +11,10 @@ Modes (--mode=...):
 - aqe: adaptive execution on vs off — runtime re-planning (coalescing,
   skew splits, join-strategy switches) must be value-invisible.
 
+Each side is one cold ``bench.run_query``: the per-fixture memos are
+cleared first, so the flipped side rebuilds every memoized index (IVF
+centroids, PQ codebooks, cluster labels) under its own config.
+
 Usage: python scripts/determinism_sweep.py [sf_dir]
            [--mode=partitions|broadcast|aqe] [--only=name1,name2,...]
 """
@@ -24,8 +28,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from bench import run_query  # noqa: E402
 from map_reduce_go_spark import get_spark  # noqa: E402
-from map_reduce_go_spark.functions.caching import release_caches  # noqa: E402
 from map_reduce_go_spark.registry import all_queries  # noqa: E402
 from tests.oracle_compare import canonical_rows  # noqa: E402
 
@@ -68,20 +72,19 @@ def main() -> int:
     failures = []
     for name, spec in sorted(selected.items()):
         t0 = time.time()
-        try:
-            spark.conf.set(key, base)
-            a = canonical_rows(spec.fn(spark, sf_dir).toPandas())
-            release_caches()
-            spark.conf.set(key, flipped)
-            b = canonical_rows(spec.fn(spark, sf_dir).toPandas())
-            release_caches()
-            ok = a == b
-        except Exception as e:  # noqa: BLE001
-            failures.append((name, f"ERROR {e}"))
-            print(f"  {name}: ERROR {str(e)[:120]}")
+        recs = []
+        for value in (base, flipped):
+            spark.conf.set(key, value)
+            recs.append(
+                run_query(spark, name, spec.fn, sf_dir, cold=True, sink=lambda d: d.toPandas())
+            )
+        spark.conf.set(key, base)
+        err = next((r["error"] for r in recs if "error" in r), None)
+        if err is not None:
+            failures.append((name, f"ERROR {err}"))
+            print(f"  {name}: ERROR {err[:120]}")
             continue
-        finally:
-            spark.conf.set(key, base)
+        ok = canonical_rows(recs[0]["result"]) == canonical_rows(recs[1]["result"])
         if not ok:
             failures.append((name, "NONDETERMINISTIC"))
         print(f"  {name}: {'stable' if ok else 'NONDETERMINISTIC'} {time.time()-t0:.1f}s")

@@ -388,6 +388,11 @@ def test_blue_green_refresh_promotes_atomically(spark, sf_dir, index_env, tmp_pa
     assert spark.read.parquet(os.path.join(v1, "corpus")).count() == n1
     with open(os.path.join(idx, "LIVE")) as f:
         assert f.read().strip() == "v-2"
+    # An empty corpus trains an empty codebook; promoting it would empty
+    # the live index, so the refresh refuses before writing anything.
+    with pytest.raises(ValueError, match="empty embeddings corpus"):
+        refresh_ivf_index(spark, idx, emb.limit(0))
+    assert sorted(os.listdir(idx)) == ["LIVE", "v-1", "v-2"]
 
 
 def test_probe_results_identical_before_and_after_compaction(spark, sf_dir, index_env):
@@ -1023,3 +1028,24 @@ def test_ledger_many_adhoc_ids_compact_to_one_manifest(index_env):
     with open(os.path.join(ldir, "absorbed-adhoc")) as f:
         assert f.read().split() == sorted(wave1 | wave2)
     shutil.rmtree(path)
+
+
+def _embeddings_queries() -> list[str]:
+    from map_reduce_go_spark.registry import all_queries
+
+    return sorted(n for n, s in all_queries().items() if "embeddings" in s.oracle)
+
+
+@pytest.mark.parametrize("rows", [0, 1])
+@pytest.mark.parametrize("name", _embeddings_queries())
+def test_embeddings_queries_match_oracle_on_empty_and_single_row_corpus(
+    spark, sf_dir, tmp_path, index_env, name, rows
+):
+    """Degenerate corpora: no rows train empty codebooks (and persist an
+    index with no data files), one row trains one cell and has no
+    neighbour. Either way every query returns what DuckDB returns."""
+    from tests.oracle_compare import compare_on_head_copies
+
+    data = tmp_path / "sf"
+    data.mkdir()
+    compare_on_head_copies(spark, sf_dir, data, name, ("embeddings",), rows)

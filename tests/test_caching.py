@@ -58,6 +58,7 @@ def test_memoized_codebooks_rebuild_after_fixture_regeneration(spark, tmp_path):
     serve stale state across an IN-SESSION regeneration of the fixture at
     the same path — fixture_key's mtime component is what rotates them."""
     from map_reduce_go_spark.operators.similarity import (
+        int8_scale_for,
         ivf_centroids_for,
         pq_codebooks_for,
     )
@@ -67,6 +68,7 @@ def test_memoized_codebooks_rebuild_after_fixture_regeneration(spark, tmp_path):
     _write_embeddings(spark, sf_dir, scale=0.001)
     books_a = pq_codebooks_for(sf_dir, load_table(spark, sf_dir, "embeddings"))
     cents_a = ivf_centroids_for(sf_dir, load_table(spark, sf_dir, "embeddings"))
+    amax_a = int8_scale_for(sf_dir, load_table(spark, sf_dir, "embeddings"))
 
     # Same fixture, second call: memo hit, bit-identical result.
     assert pq_codebooks_for(sf_dir, load_table(spark, sf_dir, "embeddings")) == books_a
@@ -76,6 +78,8 @@ def test_memoized_codebooks_rebuild_after_fixture_regeneration(spark, tmp_path):
     cents_b = ivf_centroids_for(sf_dir, load_table(spark, sf_dir, "embeddings"))
     assert books_b != books_a, "stale PQ codebook served across regeneration"
     assert cents_b != cents_a, "stale IVF centroids served across regeneration"
+    amax_b = int8_scale_for(sf_dir, load_table(spark, sf_dir, "embeddings"))
+    assert amax_b != amax_a, "stale int8 scale served across regeneration"
 
 
 def test_clear_memos_empties_every_registered_memo(spark, tmp_path):
