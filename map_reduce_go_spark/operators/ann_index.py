@@ -97,9 +97,17 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
         _heal_index(path)  # finish any crashed compaction swap first
         return path
     emb = load_table(spark, sf_dir, "embeddings").transform(tracked_cache)
-    centroids = ivf_centroids_for(sf_dir, emb)
+    _write_index(emb, ivf_centroids_for(sf_dir, emb), path)
+    with open(os.path.join(path, _MARKER), "w") as f:
+        f.write(_snapshot_id(sf_dir))
+    return path
+
+
+def _write_cells(vectors: DataFrame, centroids: list[list[float]], out: str) -> None:
+    """Assign each (vec_id, embedding) its nearest cell and write them
+    ``partitionBy("cell")`` to ``out``, replacing what is there."""
     (
-        emb.select(
+        vectors.select(
             "vec_id",
             "embedding",
             _nearest_cells(F.col("embedding"), centroids, 1)[0].alias("cell"),
@@ -112,18 +120,20 @@ def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
         .repartition("cell")
         .write.partitionBy("cell")
         .mode("overwrite")
-        .parquet(os.path.join(path, "corpus"))
+        .parquet(out)
     )
-    # Codebook + marker: tmp+rename so a crashed build never half-commits
-    # (the kv_text sink's atomic-commit idiom; reference test-mr.sh's
-    # crash tolerance is the same contract).
+
+
+def _write_index(vectors: DataFrame, centroids: list[list[float]], path: str) -> None:
+    """An index directory: the cell-assigned corpus under ``corpus/``,
+    then the codebook committed by tmp+rename so a crashed build never
+    half-commits (the kv_text sink's atomic-commit idiom; reference
+    test-mr.sh's crash tolerance is the same contract)."""
+    _write_cells(vectors, centroids, os.path.join(path, "corpus"))
     tmp = os.path.join(path, "centroids.json.tmp")
     with open(tmp, "w") as f:
         json.dump(centroids, f)
     os.replace(tmp, os.path.join(path, "centroids.json"))
-    with open(os.path.join(path, _MARKER), "w") as f:
-        f.write(_snapshot_id(sf_dir))
-    return path
 
 
 def load_ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[list[float]]]:
@@ -782,21 +792,7 @@ def refresh_ivf_index(spark: SparkSession, index_dir: str, emb: DataFrame) -> st
             if n > live_n:
                 shutil.rmtree(os.path.join(index_dir, f"v-{n}"))
     nxt = os.path.join(index_dir, f"v-{live_n + 1}")
-    (
-        emb.select(
-            "vec_id",
-            "embedding",
-            _nearest_cells(F.col("embedding"), centroids, 1)[0].alias("cell"),
-        )
-        .repartition("cell")  # one file per cell (see build_ivf_index)
-        .write.partitionBy("cell")
-        .mode("overwrite")
-        .parquet(os.path.join(nxt, "corpus"))
-    )
-    tmp = os.path.join(nxt, "centroids.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(centroids, f)
-    os.replace(tmp, os.path.join(nxt, "centroids.json"))
+    _write_index(emb, centroids, nxt)
     # Atomic promote: the pointer flip IS the deployment.
     ptr_tmp = os.path.join(index_dir, _LIVE_POINTER + ".tmp")
     with open(ptr_tmp, "w") as f:
@@ -917,17 +913,7 @@ def append_to_ivf_index(
         centroids = json.load(f)
     if not centroids:  # an empty codebook has no cell to assign into
         new_vectors = new_vectors.limit(0)
-    (
-        new_vectors.select(
-            "vec_id",
-            "embedding",
-            _nearest_cells(F.col("embedding"), centroids, 1)[0].alias("cell"),
-        )
-        .repartition("cell")  # one file per cell per batch (see build_ivf_index)
-        .write.partitionBy("cell")
-        .mode("overwrite")
-        .parquet(batch_dir)
-    )
+    _write_cells(new_vectors, centroids, batch_dir)
     _ledger_add(path, {f"batch-{batch_id}"})
 
 
@@ -973,22 +959,7 @@ def ann_ivf_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(_index_root(), _snapshot_id(sf_dir) + "-incr")
     if not os.path.exists(os.path.join(path, _MARKER)):
         base = emb.where(F.col("vec_id") % INCR_MOD != 0).transform(tracked_cache)
-        centroids = ivf_train_centroids(base)
-        (
-            base.select(
-                "vec_id",
-                "embedding",
-                _nearest_cells(F.col("embedding"), centroids, 1)[0].alias("cell"),
-            )
-            .repartition("cell")  # one file per cell (see build_ivf_index)
-            .write.partitionBy("cell")
-            .mode("overwrite")
-            .parquet(os.path.join(path, "corpus"))
-        )
-        tmp = os.path.join(path, "centroids.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(centroids, f)
-        os.replace(tmp, os.path.join(path, "centroids.json"))
+        _write_index(base, ivf_train_centroids(base), path)
         with open(os.path.join(path, _MARKER), "w") as f:
             f.write(_snapshot_id(sf_dir))
     append_to_ivf_index(

@@ -35,7 +35,14 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from map_reduce_go_spark.functions.text import WORD_BOUNDARY
+from map_reduce_go_spark.functions.text import (
+    WORDS_CTE,
+    WORDS_SQL,
+    kgram_sql,
+    shingle_ctes,
+    tokenize,
+    word_kgrams,
+)
 from map_reduce_go_spark.functions.caching import fixture_memo, register_memo, tracked_cache
 from map_reduce_go_spark.functions.vectors import cos_sql, seq_dot, seq_outer
 from map_reduce_go_spark.registry import register
@@ -46,57 +53,19 @@ N_BANDS = 4  # bands of r = N_PERM / N_BANDS rows
 
 # Shared SQL fragments for the oracle (DuckDB) side ------------------------
 
-_ORACLE_SHINGLES = r"""
-  w AS (
-    SELECT doc_id,
-           list_filter(string_split_regex(text, '[^\p{L}]+'), x -> len(x) > 0) AS ws
-    FROM documents
-  ),
-  sh AS (
-    SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-    FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-  )
-"""
-
-
 SHINGLE_K = 3  # word k-gram width (registered queries + oracle use 3)
+
+_ORACLE_SHINGLES = shingle_ctes(SHINGLE_K)
 
 
 def _shingle_arrays(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     """doc_id -> deduped word-k-gram shingle array (+ its size).
 
-    Entirely map-side: tokenize, build k-grams, array_distinct — no
-    shuffle. The k-gram is built as ``array_join(slice(ws, i, k))`` inside
-    the transform lambda — ONE array access per shingle. The tempting
-    per-index form (``concat_ws(' ', ws[i], ws[i+1], …)``) is ~45× slower
-    measured at sf0.1: higher-order-function lambdas evaluate interpreted,
-    and after CollapseProject inlines ``ws``, every ``ws[i+j]`` access
-    re-evaluates the filter(split(text)) token-array tree — k regex splits
-    of the full document per shingle.
-
-    The ``monotonically_increasing_id() >= 0`` conjunct (always true) is a
-    deliberate optimizer barrier: nondeterminism makes CollapseProject
-    keep the token array materialized in its own projection (instead of
-    inlining it into the interpreted lambda, one re-split per shingle) and
-    makes PushDownPredicate keep the explode-inferred filter
-    (``size(shingles) > 0``) ABOVE this projection — without it the filter
-    is pushed into the scan with the whole tokenize+k-gram tree
-    substituted in twice, tripling the build. Net effect measured at
-    sf0.1: one build per row instead of ~3 re-splits per shingle; the
-    whole-span-pipeline noop write drops 7s -> 0.6s.
-    """
-    ws = F.filter(F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0)
-    base = fan_out(docs).select("doc_id", ws.alias("ws"))
-    arr = F.col("ws")
-    kgrams = F.when(
-        (F.size(arr) >= k) & (F.monotonically_increasing_id() >= 0),
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - k + 1),
-            lambda i: F.array_join(F.slice(arr, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    Entirely map-side: tokenize, build k-grams (``word_kgrams``, with its
+    optimizer barrier), array_distinct — no shuffle."""
+    base = fan_out(docs).select("doc_id", tokenize("text").alias("ws"))
     return base.select(
-        "doc_id", F.array_distinct(kgrams).alias("shingles")
+        "doc_id", F.array_distinct(word_kgrams(F.col("ws"), k)).alias("shingles")
     ).withColumn("n", F.size("shingles"))
 
 
@@ -363,8 +332,7 @@ _ORACLE_SIMHASH = " + ".join(
     oracle=f"""
     WITH words AS (
       SELECT DISTINCT doc_id,
-             unnest(list_filter(string_split_regex(text, '[^\\p{{L}}]+'),
-                                x -> len(x) > 0)) AS word
+             unnest({WORDS_SQL}) AS word
       FROM documents
     )
     SELECT doc_id, CAST({_ORACLE_SIMHASH} AS BIGINT) AS simhash
@@ -380,11 +348,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split("text", WORD_BOUNDARY), lambda x: F.length(x) > 0)
-            )
-        ).alias("word"),
+        F.explode(F.array_distinct(tokenize("text"))).alias("word"),
     ).select("doc_id", F.md5("word").alias("wh"))
     return words.groupBy("doc_id").agg(_simhash_expr().alias("simhash"))
 
@@ -853,18 +817,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SPAN_K = 5  # word n-gram width for span-level duplication
 
-_ORACLE_SPANS = r"""
-  w AS (
-    SELECT doc_id,
-           list_filter(string_split_regex(text, '[^\p{L}]+'), x -> len(x) > 0) AS ws
-    FROM documents
-  ),
-  sp AS (
-    SELECT DISTINCT doc_id,
-           ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3] || ' ' || ws[i+4] AS s
-    FROM w, unnest(generate_series(1, len(ws) - 4)) AS t(i)
-  )
-"""
+_ORACLE_SPANS = shingle_ctes(SPAN_K, "sp")
 
 
 @register(
@@ -1918,36 +1871,20 @@ WINNOW_STOP_DF = 64  # fingerprints in more docs than this are boilerplate
 _WINNOW_MIN_SHARED = 2  # report pairs sharing at least this many prints
 
 
-def winnowing_fingerprint_sets(docs: DataFrame) -> DataFrame:
-    """(doc_id, fp) distinct winnowing-selected fingerprints for any
-    (doc_id, text) frame — the selection core of winnowing_fingerprints
-    (see its docstring for the algorithm and scale contract). Split out
-    so tests can drive the coverage theorem over constructed documents
-    with known shared runs."""
-    ws = F.filter(
-        F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0
+def _kgram_frame(docs: DataFrame) -> DataFrame:
+    """(doc_id, pos0, s): every word-SHINGLE_K-gram of each document at
+    its 0-based position, built map-side by ``word_kgrams``."""
+    base = fan_out(docs).select("doc_id", tokenize("text").alias("ws"))
+    return base.select(
+        "doc_id", F.posexplode(word_kgrams(F.col("ws"), SHINGLE_K)).alias("pos0", "s")
     )
-    base = fan_out(docs).select("doc_id", ws.alias("ws"))
-    arr = F.col("ws")
-    k = SHINGLE_K
-    kgrams = F.when(
-        (F.size(arr) >= k) & (F.monotonically_increasing_id() >= 0),
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - k + 1),
-            lambda i: F.array_join(F.slice(arr, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    pos_kg = base.select(
-        "doc_id", F.posexplode(kgrams).alias("pos0", "s")
-    )
-    comb = pos_kg.select(
-        "doc_id",
-        (F.col("pos0") + 1).alias("pos"),
-        F.expr(
-            f"CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)"
-            f" * {_WINNOW_POS_BASE} + (pos0 + 1)"
-        ).alias("c"),
-    )
+
+
+def _winnow_select(comb: DataFrame) -> DataFrame:
+    """(doc_id, pos, c) packed (hash, pos) keys -> (doc_id, fp), one row
+    per full window of WINNOW_W consecutive positions: the window's
+    minimal key, unpacked to its hash (duplicates kept; each caller
+    dedups in its own measured way)."""
     win = (
         Window.partitionBy("doc_id")
         .orderBy("pos")
@@ -1958,6 +1895,26 @@ def winnowing_fingerprint_sets(docs: DataFrame) -> DataFrame:
         F.min("c").over(win).alias("fp_comb"),
         F.count(F.lit(1)).over(win).alias("cnt"),
     ).where(F.col("cnt") == WINNOW_W)
+    return sel.select(
+        "doc_id",
+        F.expr(f"fp_comb div {_WINNOW_POS_BASE}").alias("fp"),
+    )
+
+
+def winnowing_fingerprint_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, fp) distinct winnowing-selected fingerprints for any
+    (doc_id, text) frame — the selection core of winnowing_fingerprints
+    (see its docstring for the algorithm and scale contract). Split out
+    so tests can drive the coverage theorem over constructed documents
+    with known shared runs."""
+    comb = _kgram_frame(docs).select(
+        "doc_id",
+        (F.col("pos0") + 1).alias("pos"),
+        F.expr(
+            f"CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)"
+            f" * {_WINNOW_POS_BASE} + (pos0 + 1)"
+        ).alias("c"),
+    )
     # Plain (doc_id, fp)-keyed distinct: the map-side partial dedup
     # collapses the per-window duplicate selections (a shared run of L
     # tokens selects the same (doc, fp) up to ~L times) BEFORE the
@@ -1966,34 +1923,20 @@ def winnowing_fingerprint_sets(docs: DataFrame) -> DataFrame:
     # with no pre-cache window to amortize the fp exchange, shipping the
     # un-deduped selections clustered by hot fingerprints read 6.1 s vs
     # ~2.4 s on the same host (standalone winnowing query, r17 A/B).
-    return sel.select(
-        "doc_id",
-        F.expr(f"fp_comb div {_WINNOW_POS_BASE}").alias("fp"),
-    ).distinct()
+    return _winnow_select(comb).distinct()
 
 
-# The oracle's k-gram expression is GENERATED from SHINGLE_K so the two
-# sides can never silently desynchronize if the constant changes
-# (ADVICE r9: it was previously hardcoded to the 3-gram form).
-_WINNOW_KGRAM_SQL = " || ' ' || ".join(
-    "ws[i]" if j == 0 else f"ws[i+{j}]" for j in range(SHINGLE_K)
-)
-
-
-@register(
-    "winnowing_fingerprints",
-    oracle=f"""
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\\p{{L}}]+'),
-                         x -> len(x) > 0) AS ws
-      FROM documents
-    ),
+# The oracle's winnowing twins: `w`/`pos_kg` every word-SHINGLE_K-gram
+# at its 1-based position (the twin of _kgram_frame), and
+# `comb`/`sel`/`fps` the distinct window-minimum selection (the twin of
+# winnowing_fingerprint_sets). The span family's `ph` sits between them.
+_WINNOW_KGRAM_CTES = f"""{WORDS_CTE},
     pos_kg AS (
       SELECT doc_id, i AS pos,
-             {_WINNOW_KGRAM_SQL} AS s
+             {kgram_sql(SHINGLE_K)} AS s
       FROM w, unnest(generate_series(1, len(ws) - {SHINGLE_K - 1})) AS t(i)
-    ),
+    )"""
+_WINNOW_SELECT_CTES = f"""
     comb AS (
       SELECT doc_id, pos,
              CAST('0x' || substring(md5(s), 1, 8) AS BIGINT)
@@ -2013,7 +1956,13 @@ _WINNOW_KGRAM_SQL = " || ' ' || ".join(
     fps AS (
       SELECT DISTINCT doc_id, fp_comb // {_WINNOW_POS_BASE} AS fp
       FROM sel WHERE cnt = {WINNOW_W}
-    ),
+    )"""
+
+
+@register(
+    "winnowing_fingerprints",
+    oracle=f"""
+    WITH {_WINNOW_KGRAM_CTES},{_WINNOW_SELECT_CTES},
     freq AS (SELECT fp, count(*) AS n_docs FROM fps GROUP BY fp),
     sizes AS (SELECT doc_id, count(*) AS n FROM fps GROUP BY doc_id),
     common AS (
@@ -2051,7 +2000,7 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing makes the whole selection a single BIGINT window min that
     compares identically in DuckDB.
 
-    Scale shape: the k-gram build is map-side (the _shingle_arrays
+    Scale shape: the k-gram build is map-side (the word_kgrams
     barrier pattern, positions kept); selection is a per-doc window
     (partitioned on doc_id — never global); the pair join is an
     inverted index on SELECTED fingerprints only (~2/(w+1) of the
@@ -2125,9 +2074,7 @@ _SNM_MIN_J_PPM = 250_000  # report pairs with token-set Jaccard >= 0.25
     ),
     w AS (
       SELECT doc_id,
-             list_distinct(list_filter(
-               string_split_regex(text, '[^\\p{{L}}]+'),
-               x -> len(x) > 0)) AS ws
+             list_distinct({WORDS_SQL}) AS ws
       FROM documents
     ),
     sim AS (
@@ -2199,12 +2146,7 @@ def sorted_neighborhood_pairs(spark: SparkSession, docs: DataFrame) -> DataFrame
     )
     wsets = docs.select(
         "doc_id",
-        F.array_distinct(
-            F.filter(
-                F.split(F.col("text"), WORD_BOUNDARY),
-                lambda x: F.length(x) > 0,
-            )
-        ).alias("ws"),
+        F.array_distinct(tokenize("text")).alias("ws"),
     )
     wa, wb = wsets.alias("wa"), wsets.alias("wb")
     sim = (
@@ -2252,25 +2194,8 @@ def _kgram_positions(docs: DataFrame) -> DataFrame:
     bit-for-bit (the winnowing hash discipline, wider: 32 bits suffice
     for selection sampling, but span EXTENSION chains adjacent matches,
     so the match hash gets 60 bits to push chance collisions past any
-    realistic corpus). Build is entirely map-side — same optimizer
-    barrier as _shingle_arrays (see its docstring) so the token array
-    materializes once per row."""
-    ws = F.filter(
-        F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0
-    )
-    base = fan_out(docs).select("doc_id", ws.alias("ws"))
-    arr = F.col("ws")
-    k = SHINGLE_K
-    kgrams = F.when(
-        (F.size(arr) >= k) & (F.monotonically_increasing_id() >= 0),
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - k + 1),
-            lambda i: F.array_join(F.slice(arr, i, k), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return base.select(
-        "doc_id", F.posexplode(kgrams).alias("pos0", "s")
-    ).select(
+    realistic corpus). Build is entirely map-side (``_kgram_frame``)."""
+    return _kgram_frame(docs).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),
         F.expr(
@@ -2338,16 +2263,6 @@ def _fingerprints_from_positions(pos: DataFrame) -> DataFrame:
             + F.col("pos")
         ).alias("c"),
     )
-    win = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(-(WINNOW_W - 1), 0)
-    )
-    sel = comb.select(
-        "doc_id",
-        F.min("c").over(win).alias("fp_comb"),
-        F.count(F.lit(1)).over(win).alias("cnt"),
-    ).where(F.col("cnt") == WINNOW_W)
     # The per-doc dedup runs on an fp-clustered exchange (r17):
     # HashPartitioning(fp) satisfies the dropDuplicates clustering on
     # (doc_id, fp) — same fp ⇒ same partition ⇒ same (doc_id, fp) pair
@@ -2361,14 +2276,7 @@ def _fingerprints_from_positions(pos: DataFrame) -> DataFrame:
     # map-side partial dedup the old (doc_id, fp) exchange performed
     # only removed the ≤ WINNOW_W duplicate selections per (doc, fp), a
     # bounded constant, not a scale factor.
-    return (
-        sel.select(
-            "doc_id",
-            F.expr(f"fp_comb div {_WINNOW_POS_BASE}").alias("fp"),
-        )
-        .repartition("fp")
-        .dropDuplicates()
-    )
+    return _winnow_select(comb).repartition("fp").dropDuplicates()
 
 
 def shared_span_runs(docs: DataFrame) -> DataFrame:
@@ -2626,44 +2534,13 @@ def maximal_shared_spans(docs: DataFrame) -> DataFrame:
 #: Shared oracle CTE chain ending at `runs` (one row per maximal
 #: diagonal run) — used by BOTH span registrations so the two oracles
 #: can never desynchronize on fingerprint selection or span arithmetic.
-_MAXSPAN_RUNS_CTES = f"""
-    w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\\p{{L}}]+'),
-                         x -> len(x) > 0) AS ws
-      FROM documents
-    ),
-    pos_kg AS (
-      SELECT doc_id, i AS pos,
-             {_WINNOW_KGRAM_SQL} AS s
-      FROM w, unnest(generate_series(1, len(ws) - {SHINGLE_K - 1})) AS t(i)
-    ),
+_MAXSPAN_RUNS_CTES = f"""{_WINNOW_KGRAM_CTES},
     ph AS (
       SELECT doc_id, pos,
              CAST('0x' || substring(md5(s), 1, {_MAXSPAN_HASH_HEX})
                   AS BIGINT) AS h
       FROM pos_kg
-    ),
-    comb AS (
-      SELECT doc_id, pos,
-             CAST('0x' || substring(md5(s), 1, 8) AS BIGINT)
-               * {_WINNOW_POS_BASE} + pos AS c
-      FROM pos_kg
-    ),
-    sel AS (
-      SELECT doc_id,
-             min(c) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN {WINNOW_W - 1} PRECEDING
-                          AND CURRENT ROW) AS fp_comb,
-             count(*) OVER (PARTITION BY doc_id ORDER BY pos
-                            ROWS BETWEEN {WINNOW_W - 1} PRECEDING
-                            AND CURRENT ROW) AS cnt
-      FROM comb
-    ),
-    fps AS (
-      SELECT DISTINCT doc_id, fp_comb // {_WINNOW_POS_BASE} AS fp
-      FROM sel WHERE cnt = {WINNOW_W}
-    ),
+    ),{_WINNOW_SELECT_CTES},
     freq AS (SELECT fp, count(*) AS n_docs FROM fps GROUP BY fp),
     cand AS (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2857,9 +2734,7 @@ def exact_substring_apply(docs: DataFrame) -> DataFrame:
             F.collect_list(F.struct("cut_start", "cut_end"))
         ).alias("cut_ranges")
     )
-    ws = F.filter(
-        F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0
-    )
+    ws = tokenize("text")
     toks = fan_out(docs).select("doc_id", ws.alias("ws"))
     joined = toks.join(ranges, "doc_id", "left")
     kept = F.when(F.col("cut_ranges").isNull(), F.col("ws")).otherwise(
@@ -2997,8 +2872,7 @@ _FUNNEL_ORACLE_SQL = f"""
     tot AS (
       SELECT source,
              COUNT(*) AS docs_total,
-             SUM(len(list_filter(string_split_regex(text, '[^\\p{{L}}]+'),
-                                 x -> len(x) > 0))) AS tokens_total
+             SUM(len({WORDS_SQL})) AS tokens_total
       FROM documents GROUP BY source
     ),
     sv AS (
@@ -3068,11 +2942,7 @@ def dedup_pipeline_exact_then_span(spark: SparkSession, sf_dir: str) -> DataFram
         .transform(tracked_cache)
     )
     applied = exact_substring_apply(survivors.select("doc_id", "text"))
-    ws_n = F.size(
-        F.filter(
-            F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0
-        )
-    )
+    ws_n = F.size(tokenize("text"))
     tot = docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("docs_total"),
         F.sum(ws_n).cast("long").alias("tokens_total"),

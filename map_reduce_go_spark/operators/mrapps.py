@@ -22,14 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from map_reduce_go_spark.functions.text import WORD_BOUNDARY, exploded_words
+from map_reduce_go_spark.functions.text import SPLIT_WORDS_SQL, exploded_words, tokenize
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import corpus_from_documents
 
-# DuckDB-side equivalent of functions.text.tokenize — same regex.
-_ORACLE_WORDS = rf"""
+# DuckDB-side word split; each caller drops the empty tokens.
+_ORACLE_WORDS = f"""
   SELECT doc_id, source AS filename,
-         unnest(string_split_regex(text, '[^\p{{L}}]+')) AS word
+         unnest({SPLIT_WORDS_SQL}) AS word
   FROM documents
 """
 
@@ -81,8 +81,6 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference, so it sorts explicitly — we mirror that with sort_array).
     """
     corpus = corpus_from_documents(spark, sf_dir)
-    from map_reduce_go_spark.functions.text import tokenize
-
     # Per-document dedup BEFORE the explode — the reference's map-side
     # word set (src/mrapps/indexer.go:21-25) — so the distinct shuffle
     # sees one row per (doc, word), not one per occurrence. The distinct()

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from map_reduce_go_spark.functions.caching import tracked_cache
+from map_reduce_go_spark.functions.text import WORDS_SQL, shingle_ctes, tokenize
+from map_reduce_go_spark.operators.dedup import SHINGLE_K, _shingles
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
 
@@ -316,15 +318,7 @@ N_EVAL_DOCS = 5  # fixture stand-in for the benchmark/eval set
 @register(
     "decontaminate_against_eval",
     oracle=f"""
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\\p{{L}}]+'), x -> len(x) > 0) AS ws
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-      FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-    ),
+    WITH {shingle_ctes(SHINGLE_K)},
     eval_sh AS (SELECT DISTINCT s FROM sh WHERE doc_id < {N_EVAL_DOCS})
     SELECT d.doc_id,
            CAST(coalesce(o.n_overlap, 0) AS BIGINT) AS n_overlap,
@@ -346,8 +340,6 @@ def decontaminate_against_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join against the training shingle stream; at 100 TB this is
     a map-side semi-join (the canonical n-gram decontamination pass, run
     with 13-grams in production)."""
-    from map_reduce_go_spark.operators.dedup import _shingles
-
     docs = load_table(spark, sf_dir, "documents")
     sh = _shingles(docs)
     eval_sh = sh.where(F.col("doc_id") < N_EVAL_DOCS).select("s").distinct()
@@ -492,15 +484,7 @@ def token_mixture_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "eval_contamination_report",
     oracle=f"""
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\\p{{L}}]+'), x -> len(x) > 0) AS ws
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-      FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-    ),
+    WITH {shingle_ctes(SHINGLE_K)},
     hits AS (
       SELECT e.doc_id,
              count(DISTINCT t.doc_id) AS n_train_docs,
@@ -530,8 +514,6 @@ def eval_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; the exact count-distincts aggregate over the (small) hit
     set only. All-integer output.
     """
-    from map_reduce_go_spark.operators.dedup import _shingles
-
     docs = load_table(spark, sf_dir, "documents")
     sh = _shingles(docs)
     ev = sh.where(F.col("doc_id") < N_EVAL_DOCS).select(
@@ -764,7 +746,8 @@ def zscore_doclen_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "source",
             "n_chars",
-            F.round((F.col("n_chars") - F.col("mean")) / F.col("std"), 4).alias(
+            # std = 0 (a one-document source) gives NULL, as DuckDB.
+            F.round(F.try_divide(F.col("n_chars") - F.col("mean"), F.col("std")), 4).alias(
                 "len_zscore"
             ),
         )
@@ -786,15 +769,7 @@ def zscore_doclen_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN (SELECT md5(text) AS h, min(doc_id) AS keep FROM q GROUP BY md5(text)) m
         ON md5(q.text) = m.h AND q.doc_id = m.keep
     ),
-    w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\\p{{L}}]+'), x -> len(x) > 0) AS ws
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-      FROM w, unnest(generate_series(1, len(ws) - 2)) AS t(i)
-    ),
+    {shingle_ctes(SHINGLE_K)},
     ev AS (SELECT DISTINCT s FROM sh WHERE doc_id < {N_EVAL_DOCS}),
     cont AS (
       SELECT sh.doc_id FROM sh JOIN ev ON ev.s = sh.s
@@ -836,8 +811,6 @@ def pipeline_stage_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys-only (doc_id) after its decision — text never rides a shuffle
     past the stage that needed it.
     """
-    from map_reduce_go_spark.operators.dedup import _shingles
-
     docs = load_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0))
     digits = F.length(F.regexp_replace(F.col("text"), "[^0-9]", ""))
@@ -1236,8 +1209,7 @@ CHUNK_STRIDE = 24
     oracle=rf"""
     WITH ws AS (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{{L}}]+'),
-                         x -> len(x) > 0) AS toks
+             {WORDS_SQL} AS toks
       FROM documents
     )
     SELECT doc_id,
@@ -1275,9 +1247,7 @@ def doc_chunking_fixed_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     ws = docs.select(
         "doc_id",
-        F.filter(
-            F.split(F.col("text"), r"[^\p{L}]+"), lambda x: F.length(x) > 0
-        ).alias("toks"),
+        tokenize("text").alias("toks"),
     ).where(F.size("toks") > 0)
     chunks = ws.select(
         "doc_id",
@@ -1310,8 +1280,7 @@ MIXTURE_TAU = 0.3
     oracle=rf"""
     WITH per_lang AS (
       SELECT lang,
-             CAST(sum(len(list_filter(string_split_regex(text, '[^\p{{L}}]+'),
-                                      x -> len(x) > 0))) AS BIGINT) AS n_tokens
+             CAST(sum(len({WORDS_SQL})) AS BIGINT) AS n_tokens
       FROM documents GROUP BY lang
     ),
     tot AS (
@@ -1351,12 +1320,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_lang = tracked_cache(
         docs.select(
             "lang",
-            F.size(
-                F.filter(
-                    F.split(F.col("text"), r"[^\p{L}]+"),
-                    lambda x: F.length(x) > 0,
-                )
-            ).alias("toks"),
+            F.size(tokenize("text")).alias("toks"),
         )
         .groupBy("lang")
         .agg(F.sum("toks").cast("long").alias("n_tokens"))
@@ -2239,6 +2203,10 @@ def _train_loop(spark, feats, weights, trajectory, iters, live_frames):
             ).alias("miss"),
         ).collect()[0]
         if n_pos is None:
+            if stats["n_docs"] == 0:
+                # No documents: nothing to learn; the zero weights score
+                # an empty corpus (0 rows, as DuckDB).
+                return weights, trajectory
             n_pos = int(stats["n_pos"])
             n_neg = int(stats["n_docs"]) - n_pos
             if n_pos == 0 or n_neg == 0:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from map_reduce_go_spark.functions.text import SPLIT_WORDS_SQL, tokenize
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
 
@@ -85,8 +86,8 @@ def cms_cells_over(words: DataFrame) -> DataFrame:
     )
 
 
-_CMS_WORDS = r"""
-  SELECT unnest(string_split_regex(text, '[^\p{L}]+')) AS word
+_CMS_WORDS = f"""
+  SELECT unnest({SPLIT_WORDS_SQL}) AS word
   FROM documents
 """
 
@@ -148,8 +149,6 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     All cell indices come from the md5 hash idiom, so the oracle rebuilds
     the identical sketch in SQL — estimates match bit-for-bit.
     """
-    from map_reduce_go_spark.functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(tokenize("text")).alias("word"))
@@ -230,8 +229,6 @@ def cms_sketch_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch's entire scale story. The oracle replays each cell from the
     same md5 hash idiom in SQL.
     """
-    from map_reduce_go_spark.functions.text import tokenize
-
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(F.explode(tokenize("text")).alias("word")).where(
         F.col("word") != ""

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from map_reduce_go_spark.functions.text import WORD_BOUNDARY
+from map_reduce_go_spark.functions.text import WORDS_SQL, kgram_sql, tokenize, word_kgrams
 from map_reduce_go_spark.functions.caching import tracked_cache
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import fan_out, load_table
@@ -23,10 +23,6 @@ LANG_PROFILES = {
     "de": ("der", "die", "und", "das", "ist", "nicht", "ein"),
     "fr": ("le", "la", "les", "et", "des", "est", "une"),
 }
-
-def _tokens() -> Column:
-    return F.filter(F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0)
-
 
 def _adjacent_pairs(toks: Column, combine, empty_type: str) -> Column:
     """Adjacent-token pairs via zip_with over two slices of the token
@@ -44,33 +40,32 @@ def _adjacent_pairs(toks: Column, combine, empty_type: str) -> Column:
 
 
 def _hits(langwords: tuple[str, ...]) -> Column:
-    return F.size(F.filter(_tokens(), lambda t: t.isin(*langwords)))
+    return F.size(F.filter(tokenize("text"), lambda t: t.isin(*langwords)))
 
 
 def _hits_sql(langwords: tuple[str, ...]) -> str:
     lst = ", ".join(f"'{w}'" for w in langwords)
     return (
-        r"len(list_filter(list_filter(string_split_regex(text, '[^\p{L}]+'),"
-        f" x -> len(x) > 0), t -> list_contains([{lst}], t)))"
+        f"len(list_filter({WORDS_SQL}, t -> list_contains([{lst}], t)))"
     )
 
 
 @register(
     "text_quality_stats",
-    oracle=r"""
+    oracle=rf"""
     WITH t AS (
       SELECT doc_id, text,
-             list_filter(string_split_regex(text, '[^\p{L}]+'), x -> len(x) > 0) AS ws
+             {WORDS_SQL} AS ws
       FROM documents
     )
     SELECT doc_id,
            length(text) AS n_chars,
            len(ws) AS n_tokens,
-           round(CAST(length(regexp_replace(text, '[^\p{L}]', '', 'g')) AS DOUBLE)
+           round(CAST(length(regexp_replace(text, '[^\p{{L}}]', '', 'g')) AS DOUBLE)
                  / greatest(len(ws), 1), 6) AS avg_token_len,
            round(CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE)
                  / greatest(length(text), 1), 6) AS digit_ratio,
-           round(CAST(length(regexp_replace(text, '[\p{L}0-9\s]', '', 'g')) AS DOUBLE)
+           round(CAST(length(regexp_replace(text, '[\p{{L}}0-9\s]', '', 'g')) AS DOUBLE)
                  / greatest(length(text), 1), 6) AS punct_ratio,
            round(CAST(len(list_filter(ws, t -> list_contains(['the','a','of','and','to','in','is'], t))) AS DOUBLE)
                  / greatest(len(ws), 1), 6) AS stopword_ratio
@@ -82,7 +77,7 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     length, digit/punctuation character ratios, stopword ratio. The
     standard pre-training quality-filter feature set."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(_tokens())
+    n_tokens = F.size(tokenize("text"))
     letters = F.length(F.regexp_replace(F.col("text"), r"[^\p{L}]", ""))
     digits = F.length(F.regexp_replace(F.col("text"), r"[^0-9]", ""))
     punct = F.length(F.regexp_replace(F.col("text"), r"[\p{L}0-9\s]", ""))
@@ -207,12 +202,11 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_positions",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id, CAST(i - 1 AS INTEGER) AS pos, ws[i] AS tok
     FROM (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '[^\p{L}]+'),
-                         x -> len(x) > 0) AS ws
+             {WORDS_SQL} AS ws
       FROM documents) d,
       unnest(generate_series(1, least(len(ws), 50))) AS t(i)
     """,
@@ -223,7 +217,7 @@ def token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     token streams. Generator runs map-side; the 50-token cap bounds
     output per doc (prompt-prefix analyses)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0)
+    toks = tokenize("text")
     return (
         docs.select("doc_id", F.posexplode(F.slice(toks, 1, 50)).alias("pos", "tok"))
     )
@@ -231,14 +225,13 @@ def token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "top_bigrams",
-    oracle=r"""
+    oracle=rf"""
     SELECT bigram, count(*) AS cnt FROM (
       SELECT unnest(list_transform(
                generate_series(1, len(ws) - 1),
-               i -> ws[i] || ' ' || ws[i + 1])) AS bigram
+               i -> {kgram_sql(2)})) AS bigram
       FROM (
-        SELECT list_filter(string_split_regex(text, '[^\p{L}]+'),
-                           x -> len(x) > 0) AS ws
+        SELECT {WORDS_SQL} AS ws
         FROM documents) d
     ) t
     GROUP BY bigram
@@ -258,7 +251,7 @@ def top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     diverge cross-engine."""
     docs = load_table(spark, sf_dir, "documents")
     bigrams = _adjacent_pairs(
-        _tokens(), lambda a, b: F.concat_ws(" ", a, b), "array<string>"
+        tokenize("text"), lambda a, b: F.concat_ws(" ", a, b), "array<string>"
     )
     return (
         docs.select(F.explode(bigrams).alias("bigram"))
@@ -277,8 +270,7 @@ TFIDF_TOP_K = 3
     oracle=rf"""
     WITH words AS (
       SELECT doc_id,
-             unnest(list_filter(string_split_regex(text, '[^\p{{L}}]+'),
-                                x -> len(x) > 0)) AS word
+             unnest({WORDS_SQL}) AS word
       FROM documents
     ),
     tf AS (SELECT doc_id, word, count(*) AS tf FROM words GROUP BY doc_id, word),
@@ -308,9 +300,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0)
-        ).alias("word"),
+        F.explode(tokenize("text")).alias("word"),
     )
     # tf is cached and df derives FROM it (tf rows are unique per
     # (doc, word), so counting them per word IS the document frequency):
@@ -345,7 +335,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_repetition_stats",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id, n_words, total_trigrams, distinct_trigrams,
            CASE WHEN total_trigrams > 0
                 THEN round(1 - CAST(distinct_trigrams AS DOUBLE)
@@ -357,11 +347,10 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
              greatest(len(ws) - 2, 0) AS total_trigrams,
              len(list_distinct(list_transform(
                generate_series(1, len(ws) - 2),
-               i -> ws[i] || ' ' || ws[i + 1] || ' ' || ws[i + 2]))) AS distinct_trigrams
+               i -> {kgram_sql(3)}))) AS distinct_trigrams
       FROM (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '[^\p{L}]+'),
-                           x -> len(x) > 0) AS ws
+               {WORDS_SQL} AS ws
         FROM documents) d
     ) t
     """,
@@ -376,26 +365,16 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_distinct) — zero shuffle, so the plan is a pure scan projection
     at any corpus size."""
     docs = load_table(spark, sf_dir, "documents")
-    ws = F.filter(F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0)
     # fan_out parallelizes the interpreted trigram build beyond the scan's
-    # split count; slice+array_join and the always-true nondeterministic
-    # conjunct are the same optimizer barriers as dedup._shingle_arrays
-    # (keep the token array materialized; keep inferred filters above the
-    # build).
-    base = fan_out(docs).select("doc_id", ws.alias("ws"))
+    # split count; the token array is its own projection, as word_kgrams
+    # asks.
+    base = fan_out(docs).select("doc_id", tokenize("text").alias("ws"))
     n = F.size("ws")
-    tris = F.when(
-        (n >= 3) & (F.monotonically_increasing_id() >= 0),
-        F.transform(
-            F.sequence(F.lit(1), n - 2),
-            lambda i: F.array_join(F.slice("ws", i, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     stats = base.select(
         "doc_id",
         n.alias("n_words"),
         F.greatest(n - 2, F.lit(0)).alias("total_trigrams"),
-        F.size(F.array_distinct(tris)).alias("distinct_trigrams"),
+        F.size(F.array_distinct(word_kgrams(F.col("ws"), 3))).alias("distinct_trigrams"),
     )
     ratio = F.when(
         F.col("total_trigrams") > 0,
@@ -411,10 +390,9 @@ BPE_TOP_PAIRS = 30
 
 @register(
     "bpe_pair_counts",
-    oracle=r"""
+    oracle=rf"""
     WITH words AS (
-      SELECT unnest(list_filter(string_split_regex(text, '[^\p{L}]+'),
-                                x -> len(x) > 0)) AS word
+      SELECT unnest({WORDS_SQL}) AS word
       FROM documents
     ),
     wc AS (SELECT word, count(*) AS c FROM words GROUP BY word),
@@ -445,9 +423,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
-        F.explode(
-            F.filter(F.split("text", WORD_BOUNDARY), lambda x: F.length(x) > 0)
-        ).alias("word")
+        F.explode(tokenize("text")).alias("word")
     )
     wc = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
     n = F.length("word")
@@ -476,10 +452,9 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 HEAD_TOP_N = 50
 
-_TOKS_ALL_SQL = r"""
+_TOKS_ALL_SQL = rf"""
   toks AS (
-    SELECT doc_id, unnest(list_filter(string_split_regex(text, '[^\p{L}]+'),
-                                      x -> len(x) > 0)) AS tok
+    SELECT doc_id, unnest({WORDS_SQL}) AS tok
     FROM documents
   )
 """
@@ -515,7 +490,7 @@ def corpus_head_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok) is integer+string deterministic, so rank and cum_share are
     engine-exact."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(_tokens()).alias("tok"))
+    toks = docs.select(F.explode(tokenize("text")).alias("tok"))
     cnt = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = cnt.agg(F.sum("cnt").alias("total"))
     top = cnt.orderBy(F.desc("cnt"), F.asc("tok")).limit(HEAD_TOP_N)
@@ -575,7 +550,7 @@ def token_commonness_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     join side. All-integer until the final rounded ratio, so cross-engine
     exact."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(_tokens()).alias("tok"))
+    toks = docs.select("doc_id", F.explode(tokenize("text")).alias("tok"))
     cnt = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     per_doc = (
         toks.join(cnt, "tok")
@@ -603,13 +578,12 @@ def token_commonness_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bigram_lm_doc_score",
-    oracle=r"""
+    oracle=rf"""
     WITH bg AS (
-      SELECT doc_id, ws[i] AS w1, ws[i] || ' ' || ws[i+1] AS bigram
+      SELECT doc_id, ws[i] AS w1, {kgram_sql(2)} AS bigram
       FROM (
         SELECT doc_id,
-               list_filter(string_split_regex(text, '[^\p{L}]+'),
-                           x -> len(x) > 0) AS ws
+               {WORDS_SQL} AS ws
         FROM documents) d,
         unnest(generate_series(1, len(ws) - 1)) AS t(i)
     ),
@@ -644,7 +618,7 @@ def bigram_lm_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     pairs = _adjacent_pairs(
-        _tokens(),
+        tokenize("text"),
         lambda a, b: F.struct(a.alias("w1"), F.concat_ws(" ", a, b).alias("bigram")),
         "array<struct<w1:string,bigram:string>>",
     )
@@ -677,8 +651,7 @@ PMI_MIN_COUNT = 5
     WITH bg AS (
       SELECT ws[i] AS w1, ws[i+1] AS w2
       FROM (
-        SELECT list_filter(string_split_regex(text, '[^\p{{L}}]+'),
-                           x -> len(x) > 0) AS ws
+        SELECT {WORDS_SQL} AS ws
         FROM documents) d,
         unnest(generate_series(1, len(ws) - 1)) AS t(i)
     ),
@@ -714,7 +687,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     pairs = _adjacent_pairs(
-        _tokens(),
+        tokenize("text"),
         lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
         "array<struct<w1:string,w2:string>>",
     )
@@ -746,12 +719,11 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "vocab_overlap_between_sources",
-    oracle=r"""
+    oracle=rf"""
     WITH vocab AS (
       SELECT DISTINCT source, w.word
       FROM documents,
-           unnest(list_filter(string_split_regex(text, '[^\p{L}]+'),
-                              x -> len(x) > 0)) AS w(word)
+           unnest({WORDS_SQL}) AS w(word)
     ),
     sizes AS (SELECT source, count(*) AS vocab_size FROM vocab GROUP BY source),
     common AS (
@@ -783,11 +755,7 @@ def vocab_overlap_between_sources(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = load_table(spark, sf_dir, "documents")
     vocab = docs.select(
         "source",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0)
-            )
-        ).alias("word"),
+        F.explode(F.array_distinct(tokenize("text"))).alias("word"),
     ).distinct()
     sizes = vocab.groupBy("source").agg(F.count(F.lit(1)).alias("vocab_size"))
     a = vocab.select(F.col("source").alias("source_a"), "word")
@@ -959,7 +927,7 @@ def _top_bigram_edges(docs: DataFrame) -> DataFrame:
     identical graph; the corpus-sized work is one wordcount-shaped
     bigram aggregation."""
     bigrams = _adjacent_pairs(
-        _tokens(), lambda a, b: F.struct(a.alias("src"), b.alias("dst")),
+        tokenize("text"), lambda a, b: F.struct(a.alias("src"), b.alias("dst")),
         "array<struct<src:string,dst:string>>",
     )
     return (
@@ -975,8 +943,7 @@ def _top_bigram_edges(docs: DataFrame) -> DataFrame:
 # The oracle-side rendering of the same graph (DuckDB CTE chain).
 _WORD_EDGES_SQL = rf"""
     toks AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '[^\p{{L}}]+'),
-                                 x -> len(x) > 0) AS ws
+      SELECT doc_id, {WORDS_SQL} AS ws
       FROM documents
     ),
     bigram_cnt AS (
@@ -995,8 +962,7 @@ _WORD_EDGES_SQL = rf"""
     "word_graph_reachability",
     oracle=rf"""
     WITH RECURSIVE toks AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '[^\p{{L}}]+'),
-                                 x -> len(x) > 0) AS ws
+      SELECT doc_id, {WORDS_SQL} AS ws
       FROM documents
     ),
     bigrams AS (
@@ -1045,7 +1011,7 @@ def word_graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     edges = _top_bigram_edges(docs)
     seed = (
-        docs.select(F.explode(_tokens()).alias("tok"))
+        docs.select(F.explode(tokenize("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc("tok"))
@@ -1339,13 +1305,14 @@ def ols_tokens_vs_chars_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     sxx, syy, sxy = F.col("sxx"), F.col("syy"), F.col("sxy")
     cov_n = n * sxy - sx * sy  # n²·cov, exact integer
     var_n = (n * sxx - sx * sx).cast("double")  # n²·var(x), exact until cast
-    slope = cov_n / var_n
+    # A constant x (one document, say) has var_n = 0: NULL fit, as DuckDB.
+    slope = F.try_divide(cov_n, var_n)
     return sums.select(
         "source",
         n.alias("n_docs"),
         F.round(slope, 6).alias("slope"),
         F.round((sy - slope * sx) / n.cast("double"), 6).alias("intercept"),
-        F.round((cov_n * cov_n) / (var_n * (n * syy - sy * sy)), 6).alias("r2"),
+        F.round(F.try_divide(cov_n * cov_n, var_n * (n * syy - sy * sy)), 6).alias("r2"),
     )
 
 
@@ -1477,10 +1444,9 @@ def _bpe_pairs_sql(src: str) -> str:
 
 def _bpe_oracle() -> str:
     parts = [
-        r"""
+        rf"""
     WITH words AS (
-      SELECT unnest(list_filter(string_split_regex(text, '[^\p{L}]+'),
-                                x -> len(x) > 0)) AS word
+      SELECT unnest({WORDS_SQL}) AS word
       FROM documents
     ),
     wc AS (SELECT word, count(*) AS c FROM words GROUP BY word),
@@ -1529,9 +1495,7 @@ def bpe_merge_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
-        F.explode(
-            F.filter(F.split("text", WORD_BOUNDARY), lambda x: F.length(x) > 0)
-        ).alias("word")
+        F.explode(tokenize("text")).alias("word")
     )
     wc = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
     vocab = wc.select(
@@ -1592,11 +1556,10 @@ bpe_merge_steps.__doc__ = bpe_merge_steps.__doc__.format(n=BPE_MERGE_STEPS)
 
 @register(
     "readability_flesch_by_source",
-    oracle="""
+    oracle=f"""
     WITH per_doc AS (
       SELECT source,
-             CAST(len(list_filter(string_split_regex(text, '[^\\p{L}]+'),
-                                  t -> len(t) > 0)) AS BIGINT) AS w,
+             CAST(len({WORDS_SQL}) AS BIGINT) AS w,
              CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS BIGINT) AS s,
              CAST(len(regexp_extract_all(lower(text), '[aeiou]+')) AS BIGINT) AS y
       FROM documents
@@ -1635,7 +1598,7 @@ def readability_flesch_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "source",
-        F.size(_tokens()).cast("long").alias("w"),
+        F.size(tokenize("text")).cast("long").alias("w"),
         F.greatest(
             F.lit(1),
             F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[.!?]+"), 0)),
@@ -1681,8 +1644,7 @@ ZIPF_HEAD_RANKS = 10
     WITH freq AS (
       SELECT t AS token, count(*) AS f
       FROM (
-        SELECT unnest(list_filter(string_split_regex(text, '[^\\p{{L}}]+'),
-                                  x -> len(x) > 0)) AS t
+        SELECT unnest({WORDS_SQL}) AS t
         FROM documents
       ) GROUP BY t
     ),
@@ -1735,7 +1697,7 @@ def zipf_tail_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     freq = (
         fan_out(docs)
-        .select(F.explode(_tokens()).alias("token"))
+        .select(F.explode(tokenize("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("f"))
     )
@@ -1771,10 +1733,9 @@ def zipf_tail_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "word_graph_degree_distribution",
-    oracle=r"""
+    oracle=rf"""
     WITH toks AS (
-      SELECT list_filter(string_split_regex(text, '[^\p{L}]+'),
-                         x -> len(x) > 0) AS ws
+      SELECT {WORDS_SQL} AS ws
       FROM documents
     ),
     edges AS (
@@ -1812,7 +1773,7 @@ def word_graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     is needed where the quadratic walks required one.
     """
     docs = load_table(spark, sf_dir, "documents")
-    ws = _tokens()
+    ws = tokenize("text")
     bigrams = F.when(
         (F.size(ws) >= 2) & (F.monotonically_increasing_id() >= 0),
         F.transform(
@@ -1915,9 +1876,7 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0)
-        ).alias("tok"),
+        F.explode(tokenize("text")).alias("tok"),
     )
     perdoc = words.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("dl"),
@@ -2023,11 +1982,7 @@ def llr_keyness_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = (
         docs.select(
             "source",
-            F.explode(
-                F.filter(
-                    F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0
-                )
-            ).alias("tok"),
+            F.explode(tokenize("text")).alias("tok"),
         )
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("n_in_source"))
@@ -2115,11 +2070,7 @@ def min_count_vocab_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     cnt = (
         docs.select(
-            F.explode(
-                F.filter(
-                    F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0
-                )
-            ).alias("tok")
+            F.explode(tokenize("text")).alias("tok")
         )
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2267,9 +2218,7 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     perdoc = (
         docs.select(
             "doc_id",
-            F.filter(
-                F.split(F.col("text"), WORD_BOUNDARY), lambda x: F.length(x) > 0
-            ).alias("toks"),
+            tokenize("text").alias("toks"),
         )
         .where(F.size("toks") > 0)
         .select(

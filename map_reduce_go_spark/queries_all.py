@@ -8,9 +8,9 @@ import map_reduce_go_spark.operators.mrapps  # noqa: F401
 import map_reduce_go_spark.operators.multimodal  # noqa: F401
 import map_reduce_go_spark.operators.similarity  # noqa: F401
 import map_reduce_go_spark.operators.textstats  # noqa: F401
+import map_reduce_go_spark.plans.relational  # noqa: F401
 import map_reduce_go_spark.plans.events  # noqa: F401
 import map_reduce_go_spark.plans.funnel  # noqa: F401
-import map_reduce_go_spark.plans.relational  # noqa: F401
 import map_reduce_go_spark.plans.temporal  # noqa: F401
 import map_reduce_go_spark.plans.tpch_partsupp  # noqa: F401
 import map_reduce_go_spark.plans.tpch_shapes  # noqa: F401

@@ -56,6 +56,12 @@ _JUMP: dict[str, int] = {
          "orders_rfm_segmentation", "revenue_lorenz_gini", "customer_spend_deciles"],
         17,
     ),
+    # NULL instead of DIVIDE_BY_ZERO on a one-document source; 0 rows
+    # from the classifier on an empty corpus
+    **dict.fromkeys(
+        ["zscore_doclen_by_source", "ols_tokens_vs_chars_by_source", "classifier_train_scores"],
+        17,
+    ),
 }
 
 

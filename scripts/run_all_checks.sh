@@ -23,6 +23,15 @@ semdedup_prune,embedding_quality_audit,ann_ivf_recall_probe,ann_ranking_quality,
 ann_pq_adc_topk,ann_ivf_pq_topk,embedding_int8_quant_recall,hard_negative_mining,\
 ann_filtered_ivf,matryoshka_truncation_recall,ann_ivf_persisted,ann_lsh_persisted,\
 ann_ivf_incremental_probe,dedup_embedding_cosine
+echo "== determinism sweep, 32 vs 7 partitions, word k-gram family =="
+python scripts/determinism_sweep.py --mode=partitions --only=\
+cross_doc_span_dupes,decontaminate_against_eval,dedup_clusters,dedup_incremental_batch,\
+dedup_keep_best,dedup_maximal_spans,dedup_minhash_containment,dedup_minhash_lsh,\
+dedup_minhash_lsh_stopfiltered,dedup_ngram_jaccard,dedup_pipeline_exact_then_lsh,\
+dedup_pipeline_exact_then_span,dedup_span_apply,dedup_span_attrition_by_source,\
+dedup_span_cuts,doc_repetition_stats,eval_contamination_report,lsh_band_tuning_report,\
+lsh_recall_probe,mixture_budget_correction,near_dup_cluster_sizes,pipeline_stage_attrition,\
+setsim_prefix_filter_join,shingle_novelty_per_doc,winnowing_fingerprints
 echo "== bench sf0.1 =="
 python bench.py
 # Optional (slow, ~8 min/mode): value-hash invariance across planner paths.

@@ -445,14 +445,15 @@ def test_adjacent_pairs_survive_short_docs(spark):
     otherwise."""
     from pyspark.sql import functions as F
 
-    from map_reduce_go_spark.operators.textstats import _adjacent_pairs, _tokens
+    from map_reduce_go_spark.functions.text import tokenize
+    from map_reduce_go_spark.operators.textstats import _adjacent_pairs
 
     df = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "12345 !!!"), (3, ""), (4, "solo")],
         ["doc_id", "text"],
     )
     pairs = _adjacent_pairs(
-        _tokens(), lambda a, b: F.concat_ws(" ", a, b), "array<string>"
+        tokenize("text"), lambda a, b: F.concat_ws(" ", a, b), "array<string>"
     )
     out = df.select("doc_id", F.explode_outer(pairs).alias("bigram")).collect()
     got = {(r["doc_id"], r["bigram"]) for r in out}

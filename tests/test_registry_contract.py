@@ -99,3 +99,33 @@ def test_bench_headliners_are_registered():
     missing = [n for n in bench.HEADLINE if n not in qs]
     assert not missing, f"bench headliners not registered: {missing}"
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)  # no duplicates
+
+
+def test_modules_register_contiguously_in_queries_all_import_order():
+    """Registration order sets the driver window's tie order. In a fresh
+    interpreter, each module's queries register as one contiguous run,
+    and the runs follow ``queries_all.py``'s import lines: an import side
+    effect (one query module importing another) that reorders
+    ``_REGISTRY`` fails here."""
+    import json
+    import re
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import map_reduce_go_spark.queries_all as qa
+
+    probe = (
+        "import json; import map_reduce_go_spark.queries_all;"
+        " from map_reduce_go_spark.registry import _REGISTRY;"
+        " print(json.dumps([s.fn.__module__ for s in _REGISTRY.values()]))"
+    )
+    repo = Path(qa.__file__).resolve().parent.parent
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=repo, capture_output=True, text=True, check=True
+    ).stdout
+    mods = json.loads(out.splitlines()[-1])
+    runs = [m for i, m in enumerate(mods) if i == 0 or mods[i - 1] != m]
+    assert len(runs) == len(set(runs)), f"a module registers in several runs: {runs}"
+    imports = re.findall(r"^import (\S+)", Path(qa.__file__).read_text(), re.M)
+    assert runs == [m for m in imports if m in runs]
