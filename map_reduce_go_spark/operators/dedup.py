@@ -44,6 +44,7 @@ from map_reduce_go_spark.functions.text import (
     word_kgrams,
 )
 from map_reduce_go_spark.functions.caching import fixture_memo, register_memo, tracked_cache
+from map_reduce_go_spark.functions.hashing import md5_int_expr, md5_int_sql
 from map_reduce_go_spark.functions.vectors import cos_sql, seq_dot, seq_outer
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import fan_out, load_table, table_num_rows
@@ -1910,10 +1911,7 @@ def winnowing_fingerprint_sets(docs: DataFrame) -> DataFrame:
     comb = _kgram_frame(docs).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),
-        F.expr(
-            f"CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)"
-            f" * {_WINNOW_POS_BASE} + (pos0 + 1)"
-        ).alias("c"),
+        F.expr(f"{md5_int_expr('s')} * {_WINNOW_POS_BASE} + (pos0 + 1)").alias("c"),
     )
     # Plain (doc_id, fp)-keyed distinct: the map-side partial dedup
     # collapses the per-window duplicate selections (a shared run of L
@@ -1939,7 +1937,7 @@ _WINNOW_KGRAM_CTES = f"""{WORDS_CTE},
 _WINNOW_SELECT_CTES = f"""
     comb AS (
       SELECT doc_id, pos,
-             CAST('0x' || substring(md5(s), 1, 8) AS BIGINT)
+             {md5_int_sql("s")}
                * {_WINNOW_POS_BASE} + pos AS c
       FROM pos_kg
     ),
@@ -2198,10 +2196,7 @@ def _kgram_positions(docs: DataFrame) -> DataFrame:
     return _kgram_frame(docs).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),
-        F.expr(
-            f"CAST(conv(substring(md5(s), 1, {_MAXSPAN_HASH_HEX}), 16, 10)"
-            " AS BIGINT)"
-        ).alias("h"),
+        F.expr(md5_int_expr("s", _MAXSPAN_HASH_HEX)).alias("h"),
     )
 
 
@@ -2248,7 +2243,7 @@ def _fingerprints_from_positions(pos: DataFrame) -> DataFrame:
     ``_kgram_positions`` frame instead of re-tokenizing the corpus: the
     winnowing selection hash (first 8 md5 hex chars) is the top 32 bits
     of the 60-bit match hash (first 15 hex chars), so
-    ``fp = h div 2^28`` reproduces ``conv(substring(md5(s),1,8),16,10)``
+    ``fp = h div 2^28`` reproduces ``md5_int_expr("s")``
     bit-for-bit and the (hash, pos) packed key is then identical to the
     one winnowing_fingerprint_sets builds. Used by shared_span_runs so
     the span family tokenizes + hashes the corpus ONCE (guide: one scan,
@@ -2537,8 +2532,7 @@ def maximal_shared_spans(docs: DataFrame) -> DataFrame:
 _MAXSPAN_RUNS_CTES = f"""{_WINNOW_KGRAM_CTES},
     ph AS (
       SELECT doc_id, pos,
-             CAST('0x' || substring(md5(s), 1, {_MAXSPAN_HASH_HEX})
-                  AS BIGINT) AS h
+             {md5_int_sql("s", _MAXSPAN_HASH_HEX)} AS h
       FROM pos_kg
     ),{_WINNOW_SELECT_CTES},
     freq AS (SELECT fp, count(*) AS n_docs FROM fps GROUP BY fp),

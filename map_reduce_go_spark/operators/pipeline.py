@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from map_reduce_go_spark.functions.caching import tracked_cache
+from map_reduce_go_spark.functions.hashing import md5_int, md5_int_expr, md5_int_py, md5_int_sql
 from map_reduce_go_spark.functions.text import WORDS_SQL, shingle_ctes, tokenize
 from map_reduce_go_spark.operators.dedup import SHINGLE_K, _shingles
 from map_reduce_go_spark.registry import register
@@ -98,24 +99,33 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-N_SHARDS = 16
+#: The oracle's (doc_id, sk, shard) over ``documents``: sk is the doc's
+#: md5, and its shard the first hex digit of it as an integer, 0..15.
+_SHARD_SQL = f"""
+      SELECT doc_id,
+             md5(CAST(doc_id AS VARCHAR)) AS sk,
+             CAST({md5_int_sql("CAST(doc_id AS VARCHAR)", 1)} AS INTEGER) AS shard
+      FROM documents
+"""
+
+
+def _shards(docs: DataFrame) -> DataFrame:
+    """(doc_id, sk, shard) — the engine twin of ``_SHARD_SQL``."""
+    doc_key = F.col("doc_id").cast("string")
+    return docs.select(
+        "doc_id",
+        F.md5(doc_key).alias("sk"),
+        md5_int(doc_key, 1).cast("int").alias("shard"),
+    )
 
 
 @register(
     "shuffle_shards",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, shard,
            CAST(row_number() OVER (PARTITION BY shard ORDER BY sk, doc_id)
                 AS BIGINT) AS pos_in_shard
-    FROM (
-      SELECT doc_id,
-             md5(CAST(doc_id AS VARCHAR)) AS sk,
-             CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-                       BETWEEN '0' AND '9'
-                  THEN CAST(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS INTEGER)
-                  ELSE ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 87
-             END AS shard
-      FROM documents)
+    FROM ({_SHARD_SQL})
     """,
 )
 def shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -126,15 +136,9 @@ def shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorts independently and in parallel, and a training reader streams
     shards round-robin for the same statistical shuffle."""
     docs = load_table(spark, sf_dir, "documents")
-    sk = F.md5(F.col("doc_id").cast("string"))
-    first = F.substring(sk, 1, 1)
-    shard = (
-        F.when(first.between("0", "9"), first.cast("int"))
-        .otherwise(F.ascii(first) - 87)
-    )
     w = Window.partitionBy("shard").orderBy("sk", "doc_id")
     return (
-        docs.select("doc_id", sk.alias("sk"), shard.alias("shard"))
+        _shards(docs)
         .withColumn("pos_in_shard", F.row_number().over(w).cast("long"))
         .select("doc_id", "shard", "pos_in_shard")
     )
@@ -194,32 +198,12 @@ SAMPLE_SEED = 42
 _SAMPLE_MOD = 1_000_000  # hash-bucket resolution: fractions exact to 1e-6
 
 
-def _sample_hash_col() -> Column:
-    """Deterministic per-row Bernoulli draw in [0, _SAMPLE_MOD): the first
-    8 hex digits of md5("lang|doc_id|seed") mod the resolution. Content-
-    keyed hashing (not engine RNG) is the production form of corpus
-    sampling: re-runs, retries, and different engines all keep the exact
-    same rows, which makes the sample reproducible AND oracle-checkable."""
-    h = F.md5(
-        F.concat_ws(
-            "|", F.col("lang"), F.col("doc_id").cast("string"), F.lit(str(SAMPLE_SEED))
-        )
-    )
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % _SAMPLE_MOD
-
-
-def _sample_hash_sql() -> str:
-    return (
-        "CAST('0x' || substring(md5(lang || '|' || CAST(doc_id AS VARCHAR) || "
-        f"'|{SAMPLE_SEED}'), 1, 8) AS BIGINT) % {_SAMPLE_MOD}"
-    )
-
-
 @register(
     "stratified_sample_by_lang",
     oracle=f"""
     SELECT doc_id, lang FROM documents
-    WHERE {_sample_hash_sql()} < CASE lang
+    WHERE {md5_int_sql(f"lang || '|' || CAST(doc_id AS VARCHAR) || '|{SAMPLE_SEED}'")}
+          % {_SAMPLE_MOD} < CASE lang
         {" ".join(f"WHEN '{lang}' THEN {int(frac * _SAMPLE_MOD)}" for lang, frac in SAMPLE_FRACTIONS.items())}
         ELSE 0 END
     """,
@@ -240,7 +224,12 @@ def stratified_sample_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold = F.when(
             F.col("lang") == lang, int(frac * _SAMPLE_MOD)
         ).otherwise(threshold)
-    return docs.where(_sample_hash_col() < threshold).select("doc_id", "lang")
+    draw = md5_int(
+        F.concat_ws(
+            "|", F.col("lang"), F.col("doc_id").cast("string"), F.lit(str(SAMPLE_SEED))
+        )
+    ) % _SAMPLE_MOD
+    return docs.where(draw < threshold).select("doc_id", "lang")
 
 
 # Source mixture: per-source repetition factors (epoch weighting). Integer
@@ -357,16 +346,6 @@ def decontaminate_against_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SHARD_SQL = """
-      SELECT CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-                       BETWEEN '0' AND '9'
-                  THEN CAST(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS INTEGER)
-                  ELSE ascii(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 87
-             END AS shard
-      FROM documents
-"""
-
-
 @register(
     "shard_balance_audit",
     oracle=f"""
@@ -391,13 +370,8 @@ def shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     One groupBy on the shard id (16 groups, map-side partials) plus a
     broadcast of the 1-row totals — cost is the scan, nothing else."""
     docs = load_table(spark, sf_dir, "documents")
-    first_hex = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-    shard = (
-        F.when(first_hex.between("0", "9"), first_hex.cast("int"))
-        .otherwise(F.ascii(first_hex) - 87)
-    )
     agg = (
-        docs.select(shard.alias("shard"))
+        _shards(docs)
         .groupBy("shard")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -556,8 +530,8 @@ _W_SCALE = _SAMPLE_MOD // (2 * _W_CAP)  # cap × scale = 0.5 × _SAMPLE_MOD
     SELECT doc_id, n_chars,
            CAST(least(n_chars, {_W_CAP}) * {_W_SCALE} AS BIGINT) AS keep_threshold
     FROM documents
-    WHERE CAST('0x' || substring(md5('len|' || CAST(doc_id AS VARCHAR) || '|{SAMPLE_SEED}'), 1, 8)
-               AS BIGINT) % {_SAMPLE_MOD}
+    WHERE {md5_int_sql(f"'len|' || CAST(doc_id AS VARCHAR) || '|{SAMPLE_SEED}'")}
+               % {_SAMPLE_MOD}
           < least(n_chars, {_W_CAP}) * {_W_SCALE}
     """,
 )
@@ -574,10 +548,9 @@ def length_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Map-side filter fused into the scan; no shuffle at any scale."""
     docs = load_table(spark, sf_dir, "documents")
-    h = F.md5(
+    draw = md5_int(
         F.concat_ws("|", F.lit("len"), F.col("doc_id").cast("string"), F.lit(str(SAMPLE_SEED)))
-    )
-    draw = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % _SAMPLE_MOD
+    ) % _SAMPLE_MOD
     threshold = F.least(F.col("n_chars"), F.lit(_W_CAP)) * _W_SCALE
     return docs.where(draw < threshold).select(
         "doc_id", "n_chars", threshold.cast("long").alias("keep_threshold")
@@ -1025,13 +998,12 @@ NEG_K = 3  # negatives kept per order
     WITH mx AS (SELECT max(p_partkey) AS m FROM part),
     sampled AS (
       SELECT o_orderkey FROM orders
-      WHERE CAST('0x' || substring(md5('neg|' || CAST(o_orderkey AS VARCHAR)
-                 || '|{NEG_SEED}'), 1, 8) AS BIGINT) % {NEG_ORDER_MOD} = 0
+      WHERE {md5_int_sql(f"'neg|' || CAST(o_orderkey AS VARCHAR) || '|{NEG_SEED}'")}
+            % {NEG_ORDER_MOD} = 0
     ),
     cand AS (
       SELECT s.o_orderkey, g.i,
-             1 + CAST('0x' || substring(md5('negc|' || CAST(s.o_orderkey AS VARCHAR)
-                   || '|' || CAST(g.i AS VARCHAR)), 1, 8) AS BIGINT)
+             1 + {md5_int_sql("'negc|' || CAST(s.o_orderkey AS VARCHAR) || '|' || CAST(g.i AS VARCHAR)")}
                  % (SELECT m FROM mx) AS cand_pk
       FROM sampled s, generate_series(1, {NEG_CANDIDATES}) AS g(i)
     ),
@@ -1074,19 +1046,11 @@ def negative_sampling_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     mx = part.agg(F.max("p_partkey").alias("m"))
     keep = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit("neg"), F.col("o_orderkey").cast("string"), F.lit(str(NEG_SEED))
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_int(
+            F.concat_ws(
+                "|", F.lit("neg"), F.col("o_orderkey").cast("string"), F.lit(str(NEG_SEED))
+            )
+        )
         % NEG_ORDER_MOD
         == 0
     )
@@ -1103,22 +1067,14 @@ def negative_sampling_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             "i",
             (
                 1
-                + F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                F.lit("negc"),
-                                F.col("o_orderkey").cast("string"),
-                                F.col("i").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
+                + md5_int(
+                    F.concat_ws(
+                        "|",
+                        F.lit("negc"),
+                        F.col("o_orderkey").cast("string"),
+                        F.col("i").cast("string"),
+                    )
+                )
                 % F.col("m")
             ).alias("cand_pk"),
         )
@@ -1355,7 +1311,7 @@ CDC_DIVISOR = 64  # P(boundary) per position = 1/64 -> ~64-char chunks
     WITH bounds AS (
       SELECT doc_id, n_chars,
              CAST(coalesce(sum(CASE WHEN
-               CAST('0x' || substring(md5(substring(text, i - {CDC_WINDOW - 1}, {CDC_WINDOW})), 1, 8) AS BIGINT)
+               {md5_int_sql(f"substring(text, i - {CDC_WINDOW - 1}, {CDC_WINDOW})")}
                % {CDC_DIVISOR} = 0 AND i < n_chars THEN 1 END), 0) AS BIGINT)
                AS n_boundaries
       FROM documents, LATERAL unnest(generate_series({CDC_WINDOW},
@@ -1406,8 +1362,7 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
     )
     window_hash = F.expr(
-        f"CAST(conv(substring(md5(substring(text, i - {CDC_WINDOW - 1},"
-        f" {CDC_WINDOW})), 1, 8), 16, 10) AS BIGINT)"
+        md5_int_expr(f"substring(text, i - {CDC_WINDOW - 1}, {CDC_WINDOW})")
     )
     is_boundary = (window_hash % CDC_DIVISOR == 0) & (
         F.col("i") < F.col("n_chars")
@@ -1441,56 +1396,64 @@ GEAR_BITS_HEX = 13  # 52-bit gear table entries
 
 
 def _gear_val(ch: str) -> int:
-    import hashlib as _hl
+    return md5_int_py(ch, GEAR_BITS_HEX)
 
-    return int(_hl.md5(ch.encode("utf-8")).hexdigest()[:GEAR_BITS_HEX], 16)
+
+def _gear_cutter(w: int, divisor: int):
+    """-> ``cuts(text)``: the 1-indexed positions i < len(text) where the
+    windowed gear hash of the trailing ``w`` characters is ≡ 0 mod
+    ``divisor``, ascending. A boundary at the final position is dropped
+    (it would split off an empty chunk). Amortized O(1) work per
+    character: ``w`` vectorized shifted adds across the whole document,
+    the SIMD form of the rolling recurrence (`tests/test_round10_ops.py`
+    pins recurrence ≡ windowed sum). The gear table is memoized per
+    code point for the cutter's lifetime (one Arrow task)."""
+    import numpy as np
+
+    gear: dict[int, int] = {}
+
+    def gvals(uniq: "np.ndarray") -> "np.ndarray":
+        out = np.empty(len(uniq), dtype=np.int64)
+        for k, cp in enumerate(uniq):
+            cp = int(cp)
+            if cp not in gear:
+                gear[cp] = _gear_val(chr(cp))
+            out[k] = gear[cp]
+        return out
+
+    def cuts(text: str) -> list[int]:
+        n = len(text)
+        cp = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
+        uniq, inv = np.unique(cp, return_inverse=True)
+        g = gvals(uniq)[inv]
+        # acc[k] is h at 1-indexed position i = k + w.
+        acc = np.zeros(n - w + 1, dtype=np.int64)
+        for j in range(w):
+            acc += g[w - 1 - j : n - j] << j
+        return [k + w for k in np.nonzero(acc % divisor == 0)[0].tolist() if k + w < n]
+
+    return cuts
 
 
 def gear_boundary_counts(docs: DataFrame, w: int = CDC_WINDOW, divisor: int = CDC_DIVISOR) -> DataFrame:
-    """Per-doc content-defined boundary counts via the windowed gear hash,
-    Arrow-batched: amortized O(1) work per character (w vectorized adds
-    across the whole document — the SIMD form of the rolling recurrence;
-    `tests/test_llm_ops.py` pins recurrence ≡ windowed-sum). No per-byte
-    md5, no position explode: the corpus stays one row per document into
-    the kernel and one row per document out — at 100 TB this is a pure
-    scan-bound map with zero shuffle."""
+    """Per-doc content-defined boundary counts via the windowed gear hash
+    (:func:`_gear_cutter`), Arrow-batched. No per-byte md5, no position
+    explode: the corpus stays one row per document into the kernel and
+    one row per document out — at 100 TB this is a pure scan-bound map
+    with zero shuffle."""
 
     def batches(it):
-        import numpy as np
         import pandas as pd
 
-        gear: dict[int, int] = {}
-
-        def gvals(uniq: "np.ndarray") -> "np.ndarray":
-            out = np.empty(len(uniq), dtype=np.int64)
-            for k, cp in enumerate(uniq):
-                cp = int(cp)
-                if cp not in gear:
-                    gear[cp] = _gear_val(chr(cp))
-                out[k] = gear[cp]
-            return out
-
+        cuts = _gear_cutter(w, divisor)
         for pdf in it:
             rows = {"doc_id": [], "n_chars": [], "n_boundaries": []}
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                n = len(text)
-                if n < w:
+                if len(text) < w:
                     continue
-                cp = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
-                uniq, inv = np.unique(cp, return_inverse=True)
-                g = gvals(uniq)[inv]
-                # h over every trailing window: w shifted vectorized adds.
-                acc = np.zeros(n - w + 1, dtype=np.int64)
-                for j in range(w):
-                    acc += g[w - 1 - j : n - j] << j
-                # acc[k] is h at 1-indexed position i = k + w; a boundary
-                # at the final position is not counted (empty chunk).
-                hits = (acc % divisor) == 0
-                if len(hits):
-                    hits[-1] = False
                 rows["doc_id"].append(int(doc_id))
-                rows["n_chars"].append(n)
-                rows["n_boundaries"].append(int(hits.sum()))
+                rows["n_chars"].append(len(text))
+                rows["n_boundaries"].append(len(cuts(text)))
             yield pd.DataFrame(rows)
 
     return docs.mapInPandas(
@@ -1498,13 +1461,12 @@ def gear_boundary_counts(docs: DataFrame, w: int = CDC_WINDOW, divisor: int = CD
     )
 
 
-@register(
-    "cdc_gear_chunk_stats",
-    oracle=f"""
-    WITH terms AS (
+#: The oracle's windowed gear: ``h(doc_id, n_chars, i, h)`` at every
+#: 1-indexed position i >= CDC_WINDOW, replayed as the weighted sum
+#: of the trailing window's gear values.
+_GEAR_H_CTES = f"""terms AS (
       SELECT doc_id, n_chars, i,
-             CAST('0x' || substring(md5(substring(text, CAST(i - j AS BIGINT), 1)),
-                                    1, {GEAR_BITS_HEX}) AS BIGINT) << j AS term
+             {md5_int_sql("substring(text, CAST(i - j AS BIGINT), 1)", GEAR_BITS_HEX)} << j AS term
       FROM documents,
            LATERAL unnest(generate_series({CDC_WINDOW}, CAST(n_chars AS BIGINT))) t(i),
            LATERAL unnest(generate_series(0, {CDC_WINDOW - 1})) u(j)
@@ -1513,7 +1475,13 @@ def gear_boundary_counts(docs: DataFrame, w: int = CDC_WINDOW, divisor: int = CD
     h AS (
       SELECT doc_id, n_chars, i, sum(term) AS h
       FROM terms GROUP BY doc_id, n_chars, i
-    ),
+    )"""
+
+
+@register(
+    "cdc_gear_chunk_stats",
+    oracle=f"""
+    WITH {_GEAR_H_CTES},
     bounds AS (
       SELECT doc_id, n_chars,
              CAST(coalesce(sum(CASE WHEN h % {CDC_DIVISOR} = 0
@@ -1572,21 +1540,9 @@ def gear_chunks(docs: DataFrame, w: int = CDC_WINDOW, divisor: int = CDC_DIVISOR
     carries."""
 
     def batches(it):
-        import hashlib
-        import numpy as np
         import pandas as pd
 
-        gear: dict[int, int] = {}
-
-        def gvals(uniq: "np.ndarray") -> "np.ndarray":
-            out = np.empty(len(uniq), dtype=np.int64)
-            for k, cp in enumerate(uniq):
-                cp = int(cp)
-                if cp not in gear:
-                    gear[cp] = _gear_val(chr(cp))
-                out[k] = gear[cp]
-            return out
-
+        cuts = _gear_cutter(w, divisor)
         for pdf in it:
             rows = {
                 "doc_id": [],
@@ -1598,33 +1554,15 @@ def gear_chunks(docs: DataFrame, w: int = CDC_WINDOW, divisor: int = CDC_DIVISOR
             for doc_id, source, text in zip(
                 pdf["doc_id"], pdf["source"], pdf["text"]
             ):
-                n = len(text)
-                if n < w:
+                if len(text) < w:
                     continue
-                cp = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
-                uniq, inv = np.unique(cp, return_inverse=True)
-                g = gvals(uniq)[inv]
-                acc = np.zeros(n - w + 1, dtype=np.int64)
-                for j in range(w):
-                    acc += g[w - 1 - j : n - j] << j
-                cuts = [
-                    k + w
-                    for k in np.nonzero(acc % divisor == 0)[0].tolist()
-                    if k + w < n
-                ] + [n]
                 s = 0
-                for ci, e in enumerate(cuts):
-                    chunk = text[s:e]
+                for ci, e in enumerate(cuts(text) + [len(text)]):
                     rows["doc_id"].append(int(doc_id))
                     rows["source"].append(source)
                     rows["chunk_idx"].append(ci)
                     rows["chunk_chars"].append(e - s)
-                    rows["dig"].append(
-                        int(
-                            hashlib.md5(chunk.encode("utf-8")).hexdigest()[:8],
-                            16,
-                        )
-                    )
+                    rows["dig"].append(md5_int_py(text[s:e]))
                     s = e
             yield pd.DataFrame(rows)
 
@@ -1637,19 +1575,7 @@ def gear_chunks(docs: DataFrame, w: int = CDC_WINDOW, divisor: int = CDC_DIVISOR
 @register(
     "cdc_chunk_dedup",
     oracle=f"""
-    WITH terms AS (
-      SELECT doc_id, n_chars, i,
-             CAST('0x' || substring(md5(substring(text, CAST(i - j AS BIGINT), 1)),
-                                    1, {GEAR_BITS_HEX}) AS BIGINT) << j AS term
-      FROM documents,
-           LATERAL unnest(generate_series({CDC_WINDOW}, CAST(n_chars AS BIGINT))) t(i),
-           LATERAL unnest(generate_series(0, {CDC_WINDOW - 1})) u(j)
-      WHERE n_chars >= {CDC_WINDOW}
-    ),
-    h AS (
-      SELECT doc_id, n_chars, i, sum(term) AS h
-      FROM terms GROUP BY doc_id, n_chars, i
-    ),
+    WITH {_GEAR_H_CTES},
     bounds AS (
       SELECT doc_id, i FROM h WHERE h % {CDC_DIVISOR} = 0 AND i < n_chars
       UNION ALL
@@ -1663,9 +1589,8 @@ def gear_chunks(docs: DataFrame, w: int = CDC_WINDOW, divisor: int = CDC_DIVISOR
     ),
     chunks AS (
       SELECT d.doc_id, d.source, m.e - m.s AS clen,
-             CAST('0x' || substring(
-               md5(substring(d.text, CAST(m.s + 1 AS BIGINT),
-                             CAST(m.e - m.s AS BIGINT))), 1, 8) AS BIGINT) AS dig
+             {md5_int_sql("substring(d.text, CAST(m.s + 1 AS BIGINT), CAST(m.e - m.s AS BIGINT))")}
+               AS dig
       FROM marks m JOIN documents d USING (doc_id)
     ),
     freq AS (SELECT dig, count(*) AS cnt FROM chunks GROUP BY dig)
@@ -1751,7 +1676,7 @@ FEATURE_HASH_DIM = 64
     ),
     h AS (
       SELECT doc_id,
-             CAST('0x' || substring(md5(tok), 1, 8) AS BIGINT)
+             {md5_int_sql("tok")}
                % {FEATURE_HASH_DIM} AS bucket,
              CASE WHEN substring(md5(tok), 9, 1) < '8'
                   THEN 1 ELSE -1 END AS sgn
@@ -1798,10 +1723,7 @@ def feature_hashing_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)
         ).alias("tok"),
     )
-    bucket = F.expr(
-        f"CAST(conv(substring(md5(tok), 1, 8), 16, 10) AS BIGINT)"
-        f" % {FEATURE_HASH_DIM}"
-    ).alias("bucket")
+    bucket = F.expr(f"{md5_int_expr('tok')} % {FEATURE_HASH_DIM}").alias("bucket")
     sgn = F.when(F.substring(F.md5("tok"), 9, 1) < "8", 1).otherwise(-1)
     vec = toks.groupBy("doc_id", bucket).agg(
         F.sum(sgn).cast("long").alias("v"),
@@ -1832,12 +1754,24 @@ CLS_DIM = 1024
 _CLS_MULT = 2654435761  # Knuth 2^32 / phi
 
 
+def _cls_slot_expr(tok: str) -> str:
+    """A token's weight slot, 0..CLS_DIM-1 (Spark SQL form)."""
+    return f"{md5_int_expr(tok)} % {CLS_DIM}"
+
+
+def _cls_slot_sql(tok: str) -> str:
+    """A token's weight slot, 0..CLS_DIM-1 (DuckDB form)."""
+    return f"{md5_int_sql(tok)} % {CLS_DIM}"
+
+
+def _cls_weight_expr(tok: str) -> str:
+    """Integer milli-weight of a token's slot (Spark SQL form)."""
+    return f"({_cls_slot_expr(tok)}) * {_CLS_MULT} % 2001 - 1000"
+
+
 def _cls_weight_sql(tok: str) -> str:
-    """Integer milli-weight of a token's hash slot (DuckDB form)."""
-    return (
-        f"(CAST('0x' || substring(md5({tok}), 1, 8) AS BIGINT) % {CLS_DIM})"
-        f" * {_CLS_MULT} % 2001 - 1000"
-    )
+    """Integer milli-weight of a token's slot (DuckDB form)."""
+    return f"({_cls_slot_sql(tok)}) * {_CLS_MULT} % 2001 - 1000"
 
 
 _CLS_SCORES_CTE = f"""
@@ -1872,10 +1806,7 @@ def cls_row_scores(docs: DataFrame) -> DataFrame:
     throughput for statelessness — same function, two physical shapes.
     """
     toks = r"regexp_extract_all(text, '\\S+', 0)"
-    w = (
-        f"(CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT) % {CLS_DIM})"
-        f" * {_CLS_MULT} % 2001 - 1000"
-    )
+    w = _cls_weight_expr("t")
     return docs.select(
         "doc_id",
         "lang",
@@ -1896,10 +1827,7 @@ def _cls_doc_scores(docs: DataFrame) -> DataFrame:
         "lang",
         F.explode(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)).alias("tok"),
     )
-    w = F.expr(
-        f"(CAST(conv(substring(md5(tok), 1, 8), 16, 10) AS BIGINT) % {CLS_DIM})"
-        f" * {_CLS_MULT} % 2001 - 1000"
-    )
+    w = F.expr(_cls_weight_expr("tok"))
     return (
         toks.groupBy("doc_id", "lang")
         .agg(
@@ -2087,7 +2015,7 @@ def cls_slot_counts(docs: DataFrame) -> DataFrame:
         "doc_id",
         F.explode(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0)).alias("tok"),
     )
-    slot = F.expr(f"CAST(conv(substring(md5(tok), 1, 8), 16, 10) AS BIGINT) % {CLS_DIM}")
+    slot = F.expr(_cls_slot_expr("tok"))
     per = toks.groupBy("doc_id", slot.alias("slot")).agg(
         F.count(F.lit(1)).cast("long").alias("cnt")
     )
@@ -2304,7 +2232,7 @@ def _cls_train_oracle_sql(iters: int = CLS_ITERS) -> str:
     per-class slot gradients, clamped weight update — every division the
     truncating ``//``, every sum cast to BIGINT before dividing (DuckDB
     sums to HUGEINT)."""
-    slot = f"CAST('0x' || substring(md5(tok), 1, 8) AS BIGINT) % {CLS_DIM}"
+    slot = _cls_slot_sql("tok")
     pos = ", ".join(f"'{t}'" for t in CLS_POS_MARKERS)
     neg = ", ".join(f"'{t}'" for t in CLS_NEG_MARKERS)
     ctes = [

@@ -49,6 +49,7 @@ from map_reduce_go_spark.functions.caching import (
     register_memo,
     tracked_cache,
 )
+from map_reduce_go_spark.functions.hashing import md5_int, md5_int_py, md5_int_sql
 from map_reduce_go_spark.functions.vectors import DIM as _DIM
 from map_reduce_go_spark.functions.vectors import cos_sql, dot_sql, fold_sql, seq_dot, seq_outer
 from map_reduce_go_spark.registry import register
@@ -165,13 +166,7 @@ N_HYPERPLANES = 8
 def _hyperplane(j: int) -> list[float]:
     """Deterministic pseudo-random hyperplane j: component d derived from
     md5(f"h{j}|{d}") mapped to [-1, 1]. Same values every run, everywhere."""
-    import hashlib
-
-    out = []
-    for d in range(_DIM):
-        h = int(hashlib.md5(f"h{j}|{d}".encode()).hexdigest()[:8], 16)
-        out.append(h / float(0xFFFFFFFF) * 2.0 - 1.0)
-    return out
+    return [md5_int_py(f"h{j}|{d}") / float(0xFFFFFFFF) * 2.0 - 1.0 for d in range(_DIM)]
 
 
 def lsh_bucket(emb: Column) -> Column:
@@ -809,15 +804,11 @@ _RQ_SAMPLE_KEEP = 500
 
 
 def _rq_sample_col(col: Column) -> Column:
-    h = F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
-    return (h % _RQ_SAMPLE_MOD) < _RQ_SAMPLE_KEEP
+    return (md5_int(col.cast("string")) % _RQ_SAMPLE_MOD) < _RQ_SAMPLE_KEEP
 
 
 def _rq_sample_sql(expr: str) -> str:
-    return (
-        f"CAST('0x' || substring(md5(CAST({expr} AS VARCHAR)), 1, 8) AS BIGINT) "
-        f"% {_RQ_SAMPLE_MOD} < {_RQ_SAMPLE_KEEP}"
-    )
+    return f"{md5_int_sql(f'CAST({expr} AS VARCHAR)')} % {_RQ_SAMPLE_MOD} < {_RQ_SAMPLE_KEEP}"
 
 
 @register(

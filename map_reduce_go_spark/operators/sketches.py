@@ -10,17 +10,17 @@ accuracy-contract framing as `approx_distinct_probe` and
 `quantile_sketch_probe`: the interesting output is not just the estimate
 but the measured error the sketch's parameters promise.
 
-Determinism: every hash is the repo-standard md5 idiom
-(``conv(substring(md5(salt || key), 1, 8), 16, 10) % M`` — identical
-bit-for-bit in Spark and DuckDB), so cell indices, bit positions, and
-therefore every reported count replay exactly in the oracle. The
-reference's engine has no sketch surface at all — these extend its
-wordcount dataflow (reference src/mrapps/wc.go:19-40: tokenize → count
-per key) the way its users would first ask for ("top words without
-keeping every word"); the CMS build is literally that wordcount with the
-key space folded to d×w hash cells, and the same ihash(key)%n partition
-trick the reference shuffles by (src/mr/worker.go:24-28) becomes the
-cell index.
+Determinism: every hash is the repo's portable hash
+(``functions/hashing.py``: the first 8 md5 hex digits of ``salt|key`` as
+an integer, mod M — identical bit-for-bit in Spark and DuckDB), so cell
+indices, bit positions, and therefore every reported count replay
+exactly in the oracle. The reference's engine has no sketch surface at
+all — these extend its wordcount dataflow (reference src/mrapps/wc.go:19-40:
+tokenize → count per key) the way its users would first ask for ("top
+words without keeping every word"); the CMS build is literally that
+wordcount with the key space folded to d×w hash cells, and the same
+ihash(key)%n partition trick the reference shuffles by
+(src/mr/worker.go:24-28) becomes the cell index.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from map_reduce_go_spark.functions.hashing import md5_int, md5_int_sql
 from map_reduce_go_spark.functions.text import SPLIT_WORDS_SQL, tokenize
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
@@ -47,19 +48,12 @@ _TOPK = 20
 
 
 def _h(salt: str, key: Column, mod: int) -> Column:
-    """The repo-standard cross-engine hash: first 8 md5 hex digits as an
-    integer, reduced mod ``mod``. Same bits in Spark and DuckDB."""
-    return (
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt + "|"), key)), 1, 8), 16, 10)
-        .cast("long")
-        % mod
-    )
+    """The salted portable hash of ``key``, reduced mod ``mod``."""
+    return md5_int(F.concat(F.lit(salt + "|"), key)) % mod
 
 
 def _h_sql(salt: str, key_expr: str, mod: int) -> str:
-    return (
-        f"CAST('0x' || substring(md5('{salt}|' || {key_expr}), 1, 8) AS BIGINT) % {mod}"
-    )
+    return md5_int_sql(f"'{salt}|' || {key_expr}") + f" % {mod}"
 
 
 def cms_cells_over(words: DataFrame) -> DataFrame:

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from map_reduce_go_spark.functions.hashing import md5_int, md5_int_sql
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
 
@@ -197,6 +198,11 @@ def sample_allocation_largest_remainder(
 
 # Reconciliation knobs, shared with the oracle.
 CHECKSUM_BUCKETS = 64
+# An order row's business columns, canonicalized: key|status|cents|ISO date.
+_ROW_KEY_SQL = """CAST(o_orderkey AS VARCHAR) || '|'
+                   || o_orderstatus || '|'
+                   || CAST(CAST(floor(o_totalprice * 100) AS BIGINT) AS VARCHAR)
+                   || '|' || CAST(CAST(o_orderdate AS DATE) AS VARCHAR)"""
 
 
 @register(
@@ -204,11 +210,7 @@ CHECKSUM_BUCKETS = 64
     oracle=f"""
     WITH hashed AS (
       SELECT o_orderkey % {CHECKSUM_BUCKETS} AS bucket,
-             CAST('0x' || substring(md5(CAST(o_orderkey AS VARCHAR) || '|'
-                   || o_orderstatus || '|'
-                   || CAST(CAST(floor(o_totalprice * 100) AS BIGINT) AS VARCHAR)
-                   || '|' || CAST(CAST(o_orderdate AS DATE) AS VARCHAR)), 1, 8)
-               AS BIGINT) AS row_hash
+             {md5_int_sql(_ROW_KEY_SQL)} AS row_hash
       FROM orders
     )
     SELECT bucket, count(*) AS n_rows,
@@ -235,23 +237,15 @@ def table_checksum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, so the fingerprint is partitioning-proof.
     """
     o = load_table(spark, sf_dir, "orders")
-    row_hash = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("o_orderkey").cast("string"),
-                    F.col("o_orderstatus"),
-                    F.floor(F.col("o_totalprice") * 100).cast("long").cast("string"),
-                    F.col("o_orderdate").cast("date").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    row_hash = md5_int(
+        F.concat_ws(
+            "|",
+            F.col("o_orderkey").cast("string"),
+            F.col("o_orderstatus"),
+            F.floor(F.col("o_totalprice") * 100).cast("long").cast("string"),
+            F.col("o_orderdate").cast("date").cast("string"),
+        )
+    )
     return (
         o.select(
             (F.col("o_orderkey") % CHECKSUM_BUCKETS).alias("bucket"),
@@ -276,8 +270,8 @@ GDPR_SAMPLE_MOD = 20  # simulate erasure for ~5% of customers
     oracle=f"""
     WITH erased AS (
       SELECT c_custkey FROM customer
-      WHERE CAST('0x' || substring(md5('gdpr|' || CAST(c_custkey AS VARCHAR)), 1, 8)
-            AS BIGINT) % {GDPR_SAMPLE_MOD} = 0
+      WHERE {md5_int_sql("'gdpr|' || CAST(c_custkey AS VARCHAR)")}
+            % {GDPR_SAMPLE_MOD} = 0
     ),
     ord AS (
       SELECT o.o_orderkey FROM orders o JOIN erased e ON e.c_custkey = o.o_custkey
@@ -314,15 +308,7 @@ def gdpr_delete_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     erased = c.where(
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("|", F.lit("gdpr"), F.col("c_custkey").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        md5_int(F.concat_ws("|", F.lit("gdpr"), F.col("c_custkey").cast("string")))
         % GDPR_SAMPLE_MOD
         == 0
     ).select("c_custkey")

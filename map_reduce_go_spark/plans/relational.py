@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from map_reduce_go_spark.functions.hashing import md5_int_expr, md5_int_sql
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
 
@@ -1029,8 +1030,9 @@ def corr_quantity_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     sxy = dsum(F.col("l_quantity") * F.col("l_extendedprice"))
     sxx = dsum(F.col("l_quantity") * F.col("l_quantity"))
     syy = dsum(F.col("l_extendedprice") * F.col("l_extendedprice"))
-    corr = (sxy - sx * sy / n) / (
-        F.sqrt(sxx - sx * sx / n) * F.sqrt(syy - sy * sy / n)
+    # try_divide: NULL, as in DuckDB, when a group has no spread (one row).
+    corr = F.try_divide(
+        sxy - sx * sy / n, F.sqrt(sxx - sx * sx / n) * F.sqrt(syy - sy * sy / n)
     )
     return li.groupBy("l_returnflag").agg(
         n.alias("n"), F.round(corr, 6).alias("corr_qty_price")
@@ -1959,14 +1961,20 @@ def moment_stats_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.round(mean, 6).alias("mean_qty"),
         F.round(m2, 6).alias("var_pop"),
+        # try_divide: NULL, as in DuckDB, when m2 = 0 (e.g. one row).
         F.round(
-            (r3 - F.lit(3) * mean * r2 + F.lit(2) * mean * mean * mean)
-            / (F.sqrt(m2) * m2),
+            F.try_divide(
+                r3 - F.lit(3) * mean * r2 + F.lit(2) * mean * mean * mean,
+                F.sqrt(m2) * m2,
+            ),
             6,
         ).alias("skewness_pop"),
         F.round(
-            (r4 - F.lit(4) * mean * r3 + F.lit(6) * mean * mean * r2
-             - F.lit(3) * mean * mean * mean * mean) / (m2 * m2) - F.lit(3),
+            F.try_divide(
+                r4 - F.lit(4) * mean * r3 + F.lit(6) * mean * mean * r2
+                - F.lit(3) * mean * mean * mean * mean,
+                m2 * m2,
+            ) - F.lit(3),
             6,
         ).alias("kurtosis_pop"),
     )
@@ -2701,9 +2709,8 @@ def _poisson_weight_case(u_expr: str) -> str:
 def _bootstrap_oracle() -> str:
     """DuckDB oracle for bootstrap_ci_avg_price, generated the same way
     the Spark side generates its columns so the two stay in lockstep."""
-    u = lambda b: (  # noqa: E731 — local SQL-fragment builder
-        f"CAST('0x' || substring(md5(CAST(o_orderkey AS VARCHAR) || '|"
-        f"{b // 4}'), {1 + 8 * (b % 4)}, 8) AS BIGINT)"
+    u = lambda b: md5_int_sql(  # noqa: E731 — local SQL-fragment builder
+        f"CAST(o_orderkey AS VARCHAR) || '|{b // 4}'", 8, 1 + 8 * (b % 4)
     )
     w_cols = ",\n             ".join(
         f"{_poisson_weight_case(u(b))} AS w{b}" for b in range(BOOTSTRAP_B)
@@ -2780,9 +2787,8 @@ def bootstrap_ci_avg_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
     )
     # 8 md5 digests -> 32 sliced u32 uniforms -> Poisson(1) weights.
-    u = lambda b: (  # noqa: E731 — mirrors the oracle builder
-        f"CAST(conv(substring(md5(concat(CAST(o_orderkey AS STRING), '|"
-        f"{b // 4}')), {1 + 8 * (b % 4)}, 8), 16, 10) AS BIGINT)"
+    u = lambda b: md5_int_expr(  # noqa: E731 — mirrors the oracle builder
+        f"concat(CAST(o_orderkey AS STRING), '|{b // 4}')", 8, 1 + 8 * (b % 4)
     )
     weighted = base.select(
         "priority",

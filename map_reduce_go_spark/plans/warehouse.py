@@ -231,22 +231,16 @@ def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # child key matches nothing in either formulation).
         pk = parent.select(pkey).distinct()
         joined = child.join(pk, on=child[ckey] == pk[pkey], how="left_outer")
-        # coalesce: SUM over zero rows is NULL — an empty child table must
-        # report 0 violations (the anti-join count formulation this fused
-        # form replaced returned 0 there, and the contract is 0-on-empty).
-        return joined.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.coalesce(
-                F.sum(F.when(pk[pkey].isNull(), 1).otherwise(0)), F.lit(0)
-            )
-            .cast("long")
-            .alias("n_violations"),
-        ).select(F.lit(name).alias("check_name"), "n_rows", "n_violations")
+        return predicate(name, joined, pk[pkey].isNull())
 
     def predicate(name: str, table: DataFrame, bad) -> DataFrame:
+        # coalesce: SUM over zero rows is NULL — an empty table must
+        # report 0 violations, as the oracle's count(*) does.
         return table.agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.when(bad, 1).otherwise(0)).alias("n_violations"),
+            F.coalesce(F.sum(F.when(bad, 1).otherwise(0)), F.lit(0))
+            .cast("long")
+            .alias("n_violations"),
         ).select(F.lit(name).alias("check_name"), "n_rows", "n_violations")
 
     checks = [

@@ -32,6 +32,16 @@ dedup_pipeline_exact_then_span,dedup_span_apply,dedup_span_attrition_by_source,\
 dedup_span_cuts,doc_repetition_stats,eval_contamination_report,lsh_band_tuning_report,\
 lsh_recall_probe,mixture_budget_correction,near_dup_cluster_sizes,pipeline_stage_attrition,\
 setsim_prefix_filter_join,shingle_novelty_per_doc,winnowing_fingerprints
+echo "== determinism sweep, 32 vs 7 partitions, portable-hash family =="
+python scripts/determinism_sweep.py --mode=partitions --only=\
+ann_lsh_cosine,ann_lsh_persisted,ann_ranking_quality,bloom_join_prune_probe,\
+bootstrap_ci_avg_price,cdc_chunk_dedup,cdc_chunk_stats,cdc_gear_chunk_stats,\
+classifier_calibration_bins,classifier_train_scores,cms_heavy_hitters,\
+cms_self_join_size_probe,cms_sketch_cells,dedup_maximal_spans,dedup_pipeline_exact_then_span,\
+dedup_span_apply,dedup_span_attrition_by_source,dedup_span_cuts,feature_hashing_vectorize,\
+gdpr_delete_impact,kmv_distinct_merge_probe,length_weighted_sample,mixture_budget_correction,\
+negative_sampling_per_order,quality_classifier_score,shard_balance_audit,shuffle_shards,\
+stratified_sample_by_lang,table_checksum_buckets,winnowing_fingerprints
 echo "== bench sf0.1 =="
 python bench.py
 # Optional (slow, ~8 min/mode): value-hash invariance across planner paths.

@@ -19,12 +19,10 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-import duckdb  # noqa: E402
-
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import run_query  # noqa: E402
 from map_reduce_go_spark import get_spark  # noqa: E402
-from tests.oracle_compare import canonical_rows  # noqa: E402
+from tests.oracle_compare import canonical_rows, duck_views  # noqa: E402
 
 
 def mismatches(con, sp, oracle: str) -> list[str]:
@@ -62,11 +60,7 @@ def main() -> int:
     rows = df.count()
     print(f"entry(): {rows} rows, schema={df.columns}, {time.time() - t0:.1f}s")
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_views(sf_dir)
 
     failures = []
     for name in sorted(qs):

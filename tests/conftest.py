@@ -1,4 +1,3 @@
-import os
 import sys
 from pathlib import Path
 
@@ -8,12 +7,9 @@ REPO = Path(__file__).resolve().parent.parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-# Default test scale: sf0.001 for speed; set SPARK_GRAFT_TEST_SF=sf0.01 to
-# run the same scale the driver's correctness gate uses.
-TEST_SF_DIR = os.environ.get(
-    "SPARK_GRAFT_TEST_SF_DIR",
-    f"/root/testdata/{os.environ.get('SPARK_GRAFT_TEST_SF', 'sf0.001')}",
-)
+# Test scale: sf0.001 for speed; scripts/verify_driver.py runs every query
+# at the sf0.01 scale of the driver's correctness gate.
+TEST_SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
@@ -45,12 +41,8 @@ def _release_tracked_caches():
 
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    import duckdb
+    from tests.oracle_compare import duck_views
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_views(sf_dir)
     yield con
     con.close()

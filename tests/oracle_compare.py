@@ -10,6 +10,8 @@ from __future__ import annotations
 import math
 from datetime import date, datetime
 
+from map_reduce_go_spark.sources.readers import TABLES
+
 
 def _canon_cell(v):
     if v is None:
@@ -50,21 +52,29 @@ def compare(spark_df, duck_rel, name: str = "query") -> None:
         assert a == b, f"{name}: first differing row #{i}:\n  spark={a}\n  duck ={b}"
 
 
+def duck_views(sf_dir: str, tables=TABLES):
+    """A DuckDB connection with one view per fixture table of ``sf_dir``,
+    named as the oracles read them."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in tables:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
 def compare_on_head_copies(spark, sf_dir: str, out_dir, name: str, tables, rows: int) -> None:
     """Write pyarrow copies of the first ``rows`` rows of ``tables``
     (0: empty tables, 1: single rows; schemas from ``sf_dir``) under
     ``out_dir`` and compare query ``name`` with its DuckDB oracle over
     them."""
-    import duckdb
     import pyarrow.parquet as pq
 
     from map_reduce_go_spark.registry import all_queries
 
-    con = duckdb.connect()
     for t in tables:
-        path = f"{out_dir}/{t}.parquet"
-        pq.write_table(pq.read_table(f"{sf_dir}/{t}.parquet").slice(0, rows), path)
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+        pq.write_table(pq.read_table(f"{sf_dir}/{t}.parquet").slice(0, rows), f"{out_dir}/{t}.parquet")
+    con = duck_views(str(out_dir), tables)
     spec = all_queries()[name]
     try:
         compare(spec.fn(spark, str(out_dir)), con.sql(spec.oracle), name=name)

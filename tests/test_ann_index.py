@@ -1028,24 +1028,3 @@ def test_ledger_many_adhoc_ids_compact_to_one_manifest(index_env):
     with open(os.path.join(ldir, "absorbed-adhoc")) as f:
         assert f.read().split() == sorted(wave1 | wave2)
     shutil.rmtree(path)
-
-
-def _embeddings_queries() -> list[str]:
-    from map_reduce_go_spark.registry import all_queries
-
-    return sorted(n for n, s in all_queries().items() if "embeddings" in s.oracle)
-
-
-@pytest.mark.parametrize("rows", [0, 1])
-@pytest.mark.parametrize("name", _embeddings_queries())
-def test_embeddings_queries_match_oracle_on_empty_and_single_row_corpus(
-    spark, sf_dir, tmp_path, index_env, name, rows
-):
-    """Degenerate corpora: no rows train empty codebooks (and persist an
-    index with no data files), one row trains one cell and has no
-    neighbour. Either way every query returns what DuckDB returns."""
-    from tests.oracle_compare import compare_on_head_copies
-
-    data = tmp_path / "sf"
-    data.mkdir()
-    compare_on_head_copies(spark, sf_dir, data, name, ("embeddings",), rows)

@@ -15,7 +15,6 @@ from map_reduce_go_spark.functions.distrank import (
     ntile_from_rank,
     range_parts,
 )
-from tests.oracle_compare import compare_on_head_copies
 
 
 def _frame(spark, n: int):
@@ -117,28 +116,3 @@ def test_dist_row_number_hash_invariant_in_parts(spark, shuffle):
         spark.conf.set(conf, before)
     assert n == n0
     assert got == want
-
-
-#: The nine queries whose global rank or prefix sum is dist_prefix,
-#: with the tables their oracles read.
-RANK_FAMILY = {
-    "auc_value_by_event_type": ("events",),
-    "decision_stump_doclen": ("documents",),
-    "spearman_quantity_price": ("lineitem",),
-    "equidepth_histogram_price_approx": ("orders",),
-    "zipf_tail_slope": ("documents",),
-    "dedup_sorted_neighborhood": ("documents",),
-    "orders_rfm_segmentation": ("orders",),
-    "revenue_lorenz_gini": ("orders",),
-    "customer_spend_deciles": ("orders",),
-}
-
-
-@pytest.mark.parametrize("rows", [0, 1])
-@pytest.mark.parametrize("name", list(RANK_FAMILY))
-def test_rank_family_matches_oracle_on_empty_and_single_row_tables(
-    spark, sf_dir, tmp_path, name, rows
-):
-    """Degenerate inputs: with no rows there are no range partitions to
-    offset, and with one row every rank column is constant."""
-    compare_on_head_copies(spark, sf_dir, tmp_path, name, RANK_FAMILY[name], rows)

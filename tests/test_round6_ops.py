@@ -110,16 +110,6 @@ def test_kmv_merge_identity_and_error_bound(spark, sf_dir):
     assert rel < 5.0 / np.sqrt(64 - 2), (row.kmv_estimate, row.exact_distinct)
 
 
-def test_kmv_empty_lineitem_matches_oracle(spark, sf_dir, tmp_path):
-    """Zero-row lineitem: no distinct keys, so err_ppm is NULL as in the
-    oracle instead of a division by zero."""
-    from tests.oracle_compare import compare_on_head_copies
-
-    compare_on_head_copies(
-        spark, sf_dir, tmp_path, "kmv_distinct_merge_probe", ("lineitem",), rows=0
-    )
-
-
 def test_gini_matches_numpy(spark, duck, sf_dir):
     """Gini and top-decile share recomputed directly with numpy from the
     per-customer cent totals must match the distributed rank-formula

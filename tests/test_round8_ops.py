@@ -58,16 +58,6 @@ def test_pagerank_iterates_on_cached_aggregate(spark, sf_dir):
         caching.release_caches()
 
 
-def test_pagerank_empty_tables_match_oracle(spark, sf_dir, tmp_path):
-    """Zero-row copies of the five input tables: no nations means no
-    ranks, so the query returns the oracle's 0 rows instead of dividing
-    by the node count."""
-    from tests.oracle_compare import compare_on_head_copies
-
-    tables = ("lineitem", "orders", "customer", "supplier", "nation")
-    compare_on_head_copies(spark, sf_dir, tmp_path, "pagerank_nation_trade", tables, rows=0)
-
-
 # ---------------------------------------------------------------- MAD
 
 

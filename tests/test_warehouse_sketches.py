@@ -135,16 +135,6 @@ def test_bloom_has_no_false_negatives_and_sane_fp(spark, sf_dir):
     assert measured <= 10 * predicted + 1e-3
 
 
-def test_bloom_empty_tables_match_oracle(spark, sf_dir, tmp_path):
-    """Zero-row customer and orders: no true negatives, so fp_ppm is
-    NULL as in the oracle instead of a division by zero."""
-    from tests.oracle_compare import compare_on_head_copies
-
-    compare_on_head_copies(
-        spark, sf_dir, tmp_path, "bloom_join_prune_probe", ("customer", "orders"), rows=0
-    )
-
-
 def test_incremental_merge_equals_full_recompute(spark, duck, sf_dir):
     """The merge of state+delta partials must equal the single-pass
     aggregate — checked against an independent DuckDB recompute (the same
