@@ -5,9 +5,10 @@ A word is a maximal run of letters (reference src/mrapps/wc.go:21-24);
 a word k-gram is k consecutive words joined by single spaces. Engine
 side, ``tokenize`` and ``word_kgrams`` are JVM built-ins (no Python
 UDFs), so they stay inside whole-stage codegen. Oracle side,
-``WORDS_SQL``, ``kgram_sql`` and ``shingle_ctes`` are the DuckDB SQL
-strings that read the same. The two sides share only ``WORD_BOUNDARY``:
-no SQL string is built from a Column and no Column from SQL.
+``WORDS_SQL``, ``words_cte``, ``kgram_sql`` and ``shingle_ctes`` are the
+DuckDB SQL strings that read the same. The two sides share only
+``WORD_BOUNDARY``: no SQL string is built from a Column and no Column
+from SQL.
 """
 
 from __future__ import annotations
@@ -27,12 +28,14 @@ SPLIT_WORDS_SQL = f"string_split_regex(text, '{WORD_BOUNDARY}')"
 #: The oracle's ``tokenize("text")``: the words of ``text``, in order.
 WORDS_SQL = f"list_filter({SPLIT_WORDS_SQL}, x -> len(x) > 0)"
 
-#: The oracle's word-array CTE ``w(doc_id, ws)`` over ``documents``.
-WORDS_CTE = f"""
+def words_cte(source: str = "documents") -> str:
+    """The oracle's word-array CTE ``w(doc_id, ws)`` over the ``source``
+    relation (any ``documents``-shaped table or CTE)."""
+    return f"""
   w AS (
     SELECT doc_id,
            {WORDS_SQL} AS ws
-    FROM documents
+    FROM {source}
   )"""
 
 
@@ -91,11 +94,11 @@ def kgram_sql(k: int) -> str:
     return " || ' ' || ".join("ws[i]" if j == 0 else f"ws[i+{j}]" for j in range(k))
 
 
-def shingle_ctes(k: int, name: str = "sh") -> str:
-    """The oracle's ``WORDS_CTE`` plus ``name(doc_id, s)``: each document's
-    distinct word k-grams (the twin of a per-document ``array_distinct``
-    of ``word_kgrams``)."""
-    return f"""{WORDS_CTE},
+def shingle_ctes(k: int, name: str = "sh", source: str = "documents") -> str:
+    """The oracle's ``words_cte(source)`` plus ``name(doc_id, s)``: each
+    document's distinct word k-grams (the twin of a per-document
+    ``array_distinct`` of ``word_kgrams``)."""
+    return f"""{words_cte(source)},
   {name} AS (
     SELECT DISTINCT doc_id, {kgram_sql(k)} AS s
     FROM w, unnest(generate_series(1, len(ws) - {k - 1})) AS t(i)

@@ -1,14 +1,24 @@
 """Deduplication operators for training-data pipelines.
 
-Four families over the ``documents`` table, all pure DataFrame plans:
+Families over the ``documents`` table, all pure DataFrame plans:
 
 - exact: hash-groupBy on content digest — one shuffle on the digest.
-- MinHash + LSH: shingle -> minhash signature -> band -> bucket self-join.
-  The 100 TB workhorse: candidate generation touches only docs sharing a
-  band bucket, never all pairs.
+- shingle pairs: near-duplicate document pairs over word-3-gram shingle
+  sets, in two steps that each exist once per side.
+  - Candidates: ``lsh_candidate_pairs`` (shingle -> minhash signature
+    -> band -> bucket self-join; the 100 TB workhorse, touching only docs
+    that share a band bucket) or setsim's prefix-filter join. The oracle
+    twin is ``_lsh_ctes``.
+  - Verify: ``pair_overlap`` joins each candidate pair with both docs'
+    shingle arrays and counts the overlap; ``exact_pair_counts`` counts
+    it for every pair sharing a shingle (the inverted-index baseline that
+    LSH recall is measured against); ``jaccard`` is the ratio. The oracle
+    twins are ``_overlap_ctes`` and ``_JACC_SQL``.
 - SimHash: 16-bit locality-sensitive bit signature per doc.
-- n-gram Jaccard: exact pairwise similarity via inverted-index pair
-  generation — the correctness baseline LSH recall is measured against.
+- pairings with counting rules of their own: embedding cosine (blocked
+  GEMM), edit distance (deletion neighborhoods), sorted neighborhood,
+  and the span family (winnowing fingerprints and the maximal shared
+  token runs they seed).
 
 Portability contract with the DuckDB oracle: every hash is md5 (identical
 hex output in both engines), minhash takes the lexicographic min of hex
@@ -36,12 +46,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from map_reduce_go_spark.functions.text import (
-    WORDS_CTE,
     WORDS_SQL,
     kgram_sql,
     shingle_ctes,
     tokenize,
     word_kgrams,
+    words_cte,
 )
 from map_reduce_go_spark.functions.caching import fixture_memo, register_memo, tracked_cache
 from map_reduce_go_spark.functions.hashing import md5_int_expr, md5_int_sql
@@ -104,12 +114,15 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    shingle_arrays: DataFrame | None = None,
-    n_perm: int = N_PERM,
-) -> DataFrame:
-    """doc_id + n_perm minhash columns.
+def _digest_prefix(d: int) -> str:
+    """Salt of minhash digest ``d``, prepended to the shingle before md5:
+    none for digest 0, ``x|`` for digest 1, ``<d>|`` after that."""
+    return "" if d == 0 else "x|" if d == 1 else f"{d}|"
+
+
+def minhash_signatures(shingle_arrays: DataFrame, n_perm: int = N_PERM) -> DataFrame:
+    """doc_id + n_perm minhash columns ``sig0 .. sig{n_perm-1}`` over
+    (doc_id, shingles) per-doc distinct shingle arrays.
 
     Shape: explode the (already per-doc-distinct) shingle arrays — no
     pre-shuffle — compute the permutation hashes as CODEGEN column
@@ -124,19 +137,16 @@ def minhash_signatures(
     Docs with no shingles (< 3 words) produce no rows, matching the
     grouped formulation.
     """
-    sa = shingle_arrays if shingle_arrays is not None else _shingle_arrays(docs)
-    exploded = sa.select("doc_id", F.explode("shingles").alias("s"))
+    exploded = shingle_arrays.select("doc_id", F.explode("shingles").alias("s"))
     # ceil(n_perm/4) md5 evaluations cover n_perm permutations: each 32-hex
     # digest yields four independent 32-bit (8-hex) hash slices — 4× less
     # hashing per shingle than one md5 per permutation (the dominant
     # minhash CPU at scale), and lexicographic min over lowercase hex is
-    # identical in both engines. Digest 1 keeps the "x|" prefix the oracle
-    # SQL uses; further digests (n_perm > 8) are prefixed "<d>|".
+    # identical in both engines. Permutation p reads digest p // 4, salted
+    # by _digest_prefix, as the oracle's _oracle_sigs does.
     def digest(d: int):
-        if d == 0:
-            return F.md5(F.col("s"))
-        prefix = "x|" if d == 1 else f"{d}|"
-        return F.md5(F.concat(F.lit(prefix), F.col("s")))
+        prefix = _digest_prefix(d)
+        return F.md5(F.concat(F.lit(prefix), F.col("s")) if prefix else F.col("s"))
 
     digests = [digest(d) for d in range((n_perm + 3) // 4)]
     return exploded.groupBy("doc_id").agg(
@@ -149,12 +159,14 @@ def minhash_signatures(
     )
 
 
-def lsh_bands(
-    signatures: DataFrame, n_perm: int = N_PERM, n_bands: int = N_BANDS
-) -> DataFrame:
+def lsh_bands(signatures: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     """(doc_id, band_id, bv) rows: band b's value is the concatenation of
-    signature rows b*r .. b*r+r-1, r = n_perm/n_bands. Docs sharing a
+    signature rows b*r .. b*r+r-1, r = n_perm/n_bands, where n_perm is
+    the number of ``sig<p>`` columns of ``signatures``. Docs sharing a
     (band_id, bv) bucket are LSH candidates."""
+    n_perm = sum(c.startswith("sig") for c in signatures.columns)
+    if n_perm % n_bands:
+        raise ValueError(f"n_bands={n_bands} must divide n_perm={n_perm}")
     r = n_perm // n_bands
     return signatures.select(
         "doc_id",
@@ -174,29 +186,16 @@ def lsh_bands(
     ).select("doc_id", "band.band_id", "band.bv")
 
 
-def lsh_candidate_pairs(
-    docs: DataFrame,
-    shingle_arrays: DataFrame | None = None,
-    n_perm: int = N_PERM,
-    n_bands: int = N_BANDS,
-    signatures: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_a, doc_b) candidate pairs: equal minhash band in >=1 of
-    n_bands bands of r = n_perm/n_bands rows. The (n_perm, n_bands) pair
-    is the recall/precision knob: candidate threshold ≈
-    (1/n_bands)^(1/r). Pass ``signatures`` (a cached minhash_signatures
-    result) when sweeping several bandings over ONE signature build —
-    the signature aggregate is the only shuffle in the build, so sharing
-    it prices a banding sweep at bandings × self-join, not bandings ×
-    (sig shuffle + self-join)."""
-    if n_perm % n_bands:
-        raise ValueError(f"n_bands={n_bands} must divide n_perm={n_perm}")
-    sig = (
-        signatures
-        if signatures is not None
-        else minhash_signatures(docs, shingle_arrays, n_perm=n_perm)
-    )
-    bands = lsh_bands(sig, n_perm, n_bands)
+def lsh_candidate_pairs(signatures: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
+    """The candidate step: (doc_a, doc_b) pairs with an equal minhash band
+    in >=1 of n_bands bands of r = n_perm/n_bands rows. The (n_perm,
+    n_bands) pair is the recall/precision knob: candidate threshold ≈
+    (1/n_bands)^(1/r). A banding sweep passes one cached
+    ``minhash_signatures`` result to every banding — the signature
+    aggregate is the only shuffle before the self-join, so sharing it
+    prices the sweep at bandings × self-join, not bandings × (sig
+    shuffle + self-join)."""
+    bands = lsh_bands(signatures, n_bands)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -211,70 +210,160 @@ def lsh_candidate_pairs(
     )
 
 
+def _pair_side(arrays: DataFrame, side: str, col: str | None = None) -> DataFrame:
+    """``arrays`` keyed as one side of a pair: doc_id -> doc_<side>, the
+    ``col`` array (when given) -> sh_<side>, n -> n_<side>."""
+    arr = [F.col(col).alias(f"sh_{side}")] if col else []
+    return arrays.select(
+        F.col("doc_id").alias(f"doc_{side}"), *arr, F.col("n").alias(f"n_{side}")
+    )
+
+
+def pair_overlap(
+    cand: DataFrame, arrays: DataFrame, col: str = "shingles"
+) -> tuple[DataFrame, Column]:
+    """The verify step: (doc_a, doc_b) candidates joined with both sides'
+    per-doc distinct ``col`` arrays and their sizes ``n`` from
+    ``arrays`` — a frame with columns doc_a, doc_b, sh_a, sh_b, n_a and
+    n_b — plus the pair's overlap ``nc = size(array_intersect(sh_a,
+    sh_b))`` as a Column over that frame. nc stays an expression rather than a column, so a
+    caller's filter and ratios evaluate it in the one projection above
+    the joins (a column of its own would add a projection under them)."""
+    joined = cand.join(_pair_side(arrays, "a", col), "doc_a").join(
+        _pair_side(arrays, "b", col), "doc_b"
+    )
+    return joined, F.size(F.array_intersect("sh_a", "sh_b"))
+
+
+def exact_pair_counts(arrays: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, nc, n_a, n_b) for every doc_a < doc_b pair sharing
+    at least one shingle: the inverted-index self-join on the exploded
+    shingle, counted per pair, then both sides' sizes. Exact, and
+    quadratic in the docs per shared shingle — the baseline that LSH
+    candidates are measured against."""
+    sh = arrays.select("doc_id", F.explode("shingles").alias("s"))
+    x, y = sh.alias("x"), sh.alias("y")
+    return (
+        x.join(y, (F.col("x.s") == F.col("y.s")) & (F.col("x.doc_id") < F.col("y.doc_id")))
+        .groupBy(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("nc"))
+        .join(_pair_side(arrays, "a"), "doc_a")
+        .join(_pair_side(arrays, "b"), "doc_b")
+    )
+
+
+def jaccard(nc: Column, n_a: Column, n_b: Column) -> Column:
+    """|A ∩ B| / |A ∪ B| as a double, from the overlap and both sizes."""
+    return nc.cast("double") / (n_a + n_b - nc)
+
+
 def _jaccard_over_candidates(
     cand: DataFrame, arrays: DataFrame, min_sim: float | None = None
 ) -> DataFrame:
-    """Score (doc_a, doc_b) candidate pairs with exact shingle Jaccard:
-    both sides' (already per-doc-distinct) shingle arrays join in, the
-    intersection size is codegen'd array_intersect, and the optional
-    ``min_sim`` filter applies to the RAW similarity (the rounded value is
-    only for emission). One definition for every LSH pipeline variant so
-    the formula and its 6-dp oracle-parity rounding can never drift
-    between them."""
-    a = arrays.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("n").alias("n_a"),
-    )
-    b = arrays.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("n").alias("n_b"),
-    )
-    nc = F.size(F.array_intersect("sh_a", "sh_b"))
-    jacc = nc.cast("double") / (F.col("n_a") + F.col("n_b") - nc)
-    scored = cand.join(a, "doc_a").join(b, "doc_b")
+    """Score (doc_a, doc_b) candidate pairs with exact shingle Jaccard;
+    the optional ``min_sim`` filter applies to the RAW similarity (the
+    rounded value is only for emission)."""
+    pairs, nc = pair_overlap(cand, arrays)
+    jacc = jaccard(nc, F.col("n_a"), F.col("n_b"))
     if min_sim is not None:
-        scored = scored.where(jacc >= min_sim)
-    return scored.select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
+        pairs = pairs.where(jacc >= min_sim)
+    return pairs.select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
 
 
-_ORACLE_SIGS = ",\n".join(
-    f"min(substr(md5({'s' if p < 4 else chr(39) + 'x|' + chr(39) + ' || s'}), "
-    f"{1 + 8 * (p % 4)}, 8)) AS sig{p}"
-    for p in range(N_PERM)
-)
-_ORACLE_BANDS = "\n    UNION ALL ".join(
-    f"SELECT doc_id, {b} AS band_id, sig{b * 2} || sig{b * 2 + 1} AS bv FROM sig"
-    for b in range(N_BANDS)
-)
+def _lsh_jaccard(docs: DataFrame) -> DataFrame:
+    """shingle -> LSH candidates -> exact Jaccard over a documents frame.
+    One map-side shingle pass feeds signatures, banding AND the verify
+    arrays — cached so the tokenize/trigram work runs once."""
+    sa = _shingle_arrays(docs).transform(tracked_cache)
+    return _jaccard_over_candidates(lsh_candidate_pairs(minhash_signatures(sa)), sa)
+
+
+# Shared SQL of the oracle's candidate and verify steps ---------------------
+
+
+def _oracle_sigs(n_perm: int) -> str:
+    """The oracle's minhash_signatures aggregates: permutation p is the
+    min of hex digits [8(p % 4), 8(p % 4) + 8) of digest p // 4."""
+
+    def salted(d: int) -> str:
+        prefix = _digest_prefix(d)
+        return f"'{prefix}' || s" if prefix else "s"
+
+    return ",\n".join(
+        f"min(substr(md5({salted(p // 4)}), {1 + 8 * (p % 4)}, 8)) AS sig{p}"
+        for p in range(n_perm)
+    )
+
+
+def _bands_sql(n_bands: int) -> str:
+    """The oracle's lsh_bands over ``sig``: (doc_id, band_id, bv) rows."""
+    r = N_PERM // n_bands
+    return "\n      UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band_id, "
+        f"{' || '.join(f'sig{b * r + i}' for i in range(r))} AS bv FROM sig"
+        for b in range(n_bands)
+    )
+
+
+def _lsh_ctes(src: str, bandings: tuple[tuple[int, str], ...] = ((N_BANDS, ""),)) -> str:
+    """The oracle's candidate step over ``src(doc_id, s)``: ``sig`` (the
+    twin of minhash_signatures), then for each (n_bands, tag) banding its
+    ``bands<tag>`` and ``cand<tag>(doc_a, doc_b)`` (lsh_candidate_pairs)."""
+    ctes = [f"sig AS (SELECT doc_id, {_oracle_sigs(N_PERM)} FROM {src} GROUP BY doc_id)"]
+    for nb, tag in bandings:
+        ctes.append(
+            f"""bands{tag} AS ({_bands_sql(nb)}),
+    cand{tag} AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM bands{tag} a
+      JOIN bands{tag} b ON a.band_id = b.band_id AND a.bv = b.bv AND a.doc_id < b.doc_id
+    )"""
+        )
+    return ",\n    ".join(ctes)
+
+
+def _overlap_ctes(src: str, cand: str | None = "cand") -> str:
+    """The oracle's verify step over ``src(doc_id, s)``: ``sizes(doc_id,
+    n)`` and ``common(doc_a, doc_b, nc, n_a, n_b)``, the overlap of every
+    ``cand`` pair (the twin of pair_overlap) or, with ``cand=None``, of
+    every pair sharing an element (the twin of exact_pair_counts)."""
+    if cand is None:
+        pairs = f"""SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS nc
+        FROM {src} x JOIN {src} y ON x.s = y.s AND x.doc_id < y.doc_id
+        GROUP BY 1, 2"""
+    else:
+        pairs = f"""SELECT c.doc_a, c.doc_b, count(*) AS nc
+        FROM {cand} c
+        JOIN {src} x ON x.doc_id = c.doc_a
+        JOIN {src} y ON y.doc_id = c.doc_b AND y.s = x.s
+        GROUP BY c.doc_a, c.doc_b"""
+    return f"""sizes AS (SELECT doc_id, count(*) AS n FROM {src} GROUP BY doc_id),
+    common AS (
+      SELECT m.doc_a, m.doc_b, m.nc, sa.n AS n_a, sb.n AS n_b
+      FROM ({pairs}) m
+      JOIN sizes sa ON sa.doc_id = m.doc_a
+      JOIN sizes sb ON sb.doc_id = m.doc_b
+    )"""
+
+
+#: The oracle's jaccard(nc, n_a, n_b) over a row of ``common``.
+_JACC_SQL = "CAST(nc AS DOUBLE) / (n_a + n_b - nc)"
+
+
+def _lsh_jaccard_sql(src: str) -> str:
+    """The oracle's _jaccard_over_candidates of the LSH candidates over
+    ``src(doc_id, s)``: the CTEs after ``src``, then the final SELECT."""
+    return f"""{_lsh_ctes(src)},
+    {_overlap_ctes(src)}
+    SELECT doc_a, doc_b, round({_JACC_SQL}, 6) AS jaccard FROM common
+    """
 
 
 @register(
     "dedup_minhash_lsh",
     oracle=f"""
     WITH {_ORACLE_SHINGLES},
-    sig AS (SELECT doc_id, {_ORACLE_SIGS} FROM sh GROUP BY doc_id),
-    bands AS ({_ORACLE_BANDS}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band_id = b.band_id AND a.bv = b.bv AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS nc
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.doc_a
-      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT m.doc_a, m.doc_b,
-           round(CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc), 6) AS jaccard
-    FROM common m
-    JOIN sizes sa ON sa.doc_id = m.doc_a
-    JOIN sizes sb ON sb.doc_id = m.doc_b
-    """,
+    {_lsh_jaccard_sql("sh")}""",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dedup: candidate pairs from band collisions, then
@@ -291,12 +380,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny fraction of docs, so both pair joins broadcast-to-shuffle-hash
     under AQE.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    # One map-side shingle pass feeds signatures, banding, AND the exact
-    # Jaccard arrays — cached so the tokenize/trigram work runs once.
-    sa = _shingle_arrays(docs).transform(tracked_cache)
-    cand = lsh_candidate_pairs(docs, shingle_arrays=sa)
-    return _jaccard_over_candidates(cand, sa)
+    return _lsh_jaccard(load_table(spark, sf_dir, "documents"))
 
 
 _SIMHASH_BITS = 16
@@ -358,18 +442,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_ngram_jaccard",
     oracle=f"""
     WITH {_ORACLE_SHINGLES},
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS nc
-      FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT m.doc_a, m.doc_b,
-           round(CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc), 6) AS jaccard
-    FROM common m
-    JOIN sizes sa ON sa.doc_id = m.doc_a
-    JOIN sizes sb ON sb.doc_id = m.doc_b
-    WHERE CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc) >= 0.05
+    {_overlap_ctes("sh", cand=None)}
+    SELECT doc_a, doc_b, round({_JACC_SQL}, 6) AS jaccard
+    FROM common WHERE {_JACC_SQL} >= 0.05
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -378,22 +453,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB you run the LSH variant — this one is quadratic in docs *per
     shared shingle*."""
     docs = load_table(spark, sf_dir, "documents")
-    arrs = _shingle_arrays(docs).transform(tracked_cache)
-    sh = arrs.select("doc_id", F.explode("shingles").alias("s"))
-    sizes = arrs.select("doc_id", "n")  # map-side, no groupBy shuffle
-    x, y = sh.alias("x"), sh.alias("y")
-    common = (
-        x.join(y, (F.col("x.s") == F.col("y.s")) & (F.col("x.doc_id") < F.col("y.doc_id")))
-        .groupBy(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("nc"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    jacc = F.col("nc").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("nc"))
-    return (
-        common.join(sa, F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sb, F.col("sb.doc_id") == F.col("doc_b"))
-        .where(jacc >= 0.05)
-        .select("doc_a", "doc_b", F.round(jacc, 6).alias("jaccard"))
+    pairs = exact_pair_counts(_shingle_arrays(docs).transform(tracked_cache))
+    jacc = jaccard(F.col("nc"), F.col("n_a"), F.col("n_b"))
+    return pairs.where(jacc >= 0.05).select(
+        "doc_a", "doc_b", F.round(jacc, 6).alias("jaccard")
     )
 
 
@@ -542,31 +605,12 @@ def _near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CTE chain shared by the cluster-family oracles: LSH candidates -> exact
 # Jaccard edges -> transitive closure (`reach`). Used WITH RECURSIVE.
 _ORACLE_CLUSTER_CTES = f"""{_ORACLE_SHINGLES},
-    sig AS (SELECT doc_id, {_ORACLE_SIGS} FROM sh GROUP BY doc_id),
-    bands AS ({_ORACLE_BANDS}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band_id = b.band_id AND a.bv = b.bv AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS nc
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.doc_a
-      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-      GROUP BY c.doc_a, c.doc_b
-    ),
+    {_lsh_ctes("sh")},
+    {_overlap_ctes("sh")},
     edges AS (
-      SELECT m.doc_a AS src, m.doc_b AS dst FROM common m
-      JOIN sizes sa ON sa.doc_id = m.doc_a
-      JOIN sizes sb ON sb.doc_id = m.doc_b
-      WHERE CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc) >= {_CLUSTER_J}
+      SELECT doc_a AS src, doc_b AS dst FROM common WHERE {_JACC_SQL} >= {_CLUSTER_J}
       UNION ALL
-      SELECT m.doc_b, m.doc_a FROM common m
-      JOIN sizes sa ON sa.doc_id = m.doc_a
-      JOIN sizes sb ON sb.doc_id = m.doc_b
-      WHERE CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc) >= {_CLUSTER_J}
+      SELECT doc_b, doc_a FROM common WHERE {_JACC_SQL} >= {_CLUSTER_J}
     ),
     reach(a, b) AS (
       SELECT doc_id, doc_id FROM documents
@@ -704,11 +748,6 @@ def _propagate_min_labels(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
 # Composed production pipeline: exact dedup first, then near-dup on survivors
 # --------------------------------------------------------------------------
 
-_ORACLE_SHINGLES_SURVIVORS = _ORACLE_SHINGLES.replace(
-    "FROM documents", "FROM survivors"
-)
-
-
 @register(
     "dedup_pipeline_exact_then_lsh",
     oracle=f"""
@@ -718,28 +757,8 @@ _ORACLE_SHINGLES_SURVIVORS = _ORACLE_SHINGLES.replace(
     survivors AS (
       SELECT d.* FROM documents d JOIN keep k ON d.doc_id = k.doc_id
     ),
-    {_ORACLE_SHINGLES_SURVIVORS},
-    sig AS (SELECT doc_id, {_ORACLE_SIGS} FROM sh GROUP BY doc_id),
-    bands AS ({_ORACLE_BANDS}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band_id = b.band_id AND a.bv = b.bv AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS nc
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.doc_a
-      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT m.doc_a, m.doc_b,
-           round(CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc), 6) AS jaccard
-    FROM common m
-    JOIN sizes sa ON sa.doc_id = m.doc_a
-    JOIN sizes sb ON sb.doc_id = m.doc_b
-    """,
+    {shingle_ctes(SHINGLE_K, source="survivors")},
+    {_lsh_jaccard_sql("sh")}""",
 )
 def dedup_pipeline_exact_then_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production dedup ORDER: exact dedup first (cheap digest
@@ -760,10 +779,7 @@ def dedup_pipeline_exact_then_lsh(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    survivors = docs.join(keep, "doc_id", "left_semi")
-    sa = _shingle_arrays(survivors).transform(tracked_cache)
-    cand = lsh_candidate_pairs(survivors, shingle_arrays=sa)
-    return _jaccard_over_candidates(cand, sa)
+    return _lsh_jaccard(docs.join(keep, "doc_id", "left_semi"))
 
 
 # --------------------------------------------------------------------------
@@ -908,28 +924,14 @@ _J_MIN_20 = 1  # exact-pair floor as the integer predicate 20*nc >= union
     "lsh_recall_probe",
     oracle=f"""
     WITH {_ORACLE_SHINGLES},
-    sig AS (SELECT doc_id, {_ORACLE_SIGS} FROM sh GROUP BY doc_id),
-    bands AS ({_ORACLE_BANDS}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band_id = b.band_id AND a.bv = b.bv AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    exact AS (
-      SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS nc
-      FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-      GROUP BY 1, 2
-    ),
+    {_lsh_ctes("sh")},
+    {_overlap_ctes("sh", cand=None)},
     scored AS (
-      SELECT e.doc_a, e.doc_b,
-             (10 * e.nc) // (sa.n + sb.n - e.nc) AS bucket,
+      SELECT (10 * e.nc) // (e.n_a + e.n_b - e.nc) AS bucket,
              CASE WHEN c.doc_a IS NULL THEN 0 ELSE 1 END AS caught
-      FROM exact e
-      JOIN sizes sa ON sa.doc_id = e.doc_a
-      JOIN sizes sb ON sb.doc_id = e.doc_b
+      FROM common e
       LEFT JOIN cand c ON c.doc_a = e.doc_a AND c.doc_b = e.doc_b
-      WHERE 20 * e.nc >= (sa.n + sb.n - e.nc)
+      WHERE 20 * e.nc >= (e.n_a + e.n_b - e.nc)
     )
     SELECT bucket, count(*) AS n_pairs,
            CAST(sum(caught) AS BIGINT) AS n_caught,
@@ -954,29 +956,15 @@ def lsh_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself adds broadcast-sized joins.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sa_arr = _shingle_arrays(docs).transform(tracked_cache)
-    sh = sa_arr.select("doc_id", F.explode("shingles").alias("s"))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    x = sh.alias("x")
-    y = sh.alias("y")
-    exact = (
-        x.join(y, (F.col("x.s") == F.col("y.s")) & (F.col("x.doc_id") < F.col("y.doc_id")))
-        .groupBy(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("nc"))
-    )
-    cand = lsh_candidate_pairs(docs, shingle_arrays=sa_arr).withColumn(
-        "caught", F.lit(1)
-    )
-    union = F.col("na") + F.col("nb") - F.col("nc")
+    sa = _shingle_arrays(docs).transform(tracked_cache)
+    cand = lsh_candidate_pairs(minhash_signatures(sa)).withColumn("caught", F.lit(1))
+    union = F.col("n_a") + F.col("n_b") - F.col("nc")
     scored = (
-        exact.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
+        exact_pair_counts(sa)
         .where(20 * F.col("nc") >= union)
         .join(cand, ["doc_a", "doc_b"], "left")
         .select(
-            F.expr("(10 * nc) div (na + nb - nc)").alias("bucket"),
+            F.expr("(10 * nc) div (n_a + n_b - nc)").alias("bucket"),
             F.coalesce("caught", F.lit(0)).alias("caught"),
         )
     )
@@ -1033,27 +1021,7 @@ LSH_STOP_DF = 5
       FROM sh JOIN dfreq ON dfreq.s = sh.s
       WHERE dfreq.df <= {LSH_STOP_DF}
     ),
-    sig AS (SELECT doc_id, {_ORACLE_SIGS} FROM kept GROUP BY doc_id),
-    bands AS ({_ORACLE_BANDS}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band_id = b.band_id AND a.bv = b.bv AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM kept GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS nc
-      FROM cand c
-      JOIN kept x ON x.doc_id = c.doc_a
-      JOIN kept y ON y.doc_id = c.doc_b AND y.s = x.s
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT m.doc_a, m.doc_b,
-           round(CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc), 6) AS jaccard
-    FROM common m
-    JOIN sizes sa ON sa.doc_id = m.doc_a
-    JOIN sizes sb ON sb.doc_id = m.doc_b
-    """,
+    {_lsh_jaccard_sql("kept")}""",
 )
 def dedup_minhash_lsh_stopfiltered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH with stop-shingle suppression — the 100 TB guard the
@@ -1086,8 +1054,7 @@ def dedup_minhash_lsh_stopfiltered(spark: SparkSession, sf_dir: str) -> DataFram
         .withColumn("n", F.size("shingles"))
         .transform(tracked_cache)
     )
-    cand = lsh_candidate_pairs(docs, shingle_arrays=arrays)
-    return _jaccard_over_candidates(cand, arrays)
+    return _jaccard_over_candidates(lsh_candidate_pairs(minhash_signatures(arrays)), arrays)
 
 
 # Cut point between "existing corpus" and "new arrivals": docs with
@@ -1115,30 +1082,14 @@ NEAR_MATCH_SIM = 0.5
       GROUP BY n.doc_id
     ),
     {_ORACLE_SHINGLES},
-    sig AS (SELECT doc_id, {_ORACLE_SIGS} FROM sh GROUP BY doc_id),
-    bands AS ({_ORACLE_BANDS}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band_id = b.band_id AND a.bv = b.bv AND a.doc_id < b.doc_id
-      CROSS JOIN cut
-      WHERE a.doc_id < cut.cut AND b.doc_id >= cut.cut
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    {_lsh_ctes("sh")},
+    {_overlap_ctes("sh")},
     near AS (
-      SELECT m.doc_b AS new_doc_id, m.doc_a AS match_doc_id,
+      SELECT doc_b AS new_doc_id, doc_a AS match_doc_id,
              'near' AS match_type,
-             round(CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc), 6) AS jaccard
-      FROM (
-        SELECT c.doc_a, c.doc_b, count(*) AS nc
-        FROM cand c
-        JOIN sh x ON x.doc_id = c.doc_a
-        JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-        GROUP BY c.doc_a, c.doc_b
-      ) m
-      JOIN sizes sa ON sa.doc_id = m.doc_a
-      JOIN sizes sb ON sb.doc_id = m.doc_b
-      WHERE CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc) >= {NEAR_MATCH_SIM}
+             round({_JACC_SQL}, 6) AS jaccard
+      FROM common CROSS JOIN cut
+      WHERE doc_a < cut.cut AND doc_b >= cut.cut AND {_JACC_SQL} >= {NEAR_MATCH_SIM}
     )
     SELECT * FROM exact UNION ALL SELECT * FROM near
     """,
@@ -1184,7 +1135,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = _shingle_arrays(docs).transform(tracked_cache)
     cand = (
-        lsh_candidate_pairs(docs, shingle_arrays=sa)
+        lsh_candidate_pairs(minhash_signatures(sa))
         .crossJoin(F.broadcast(cut))
         .where((F.col("doc_a") < F.col("cut")) & (F.col("doc_b") >= F.col("cut")))
         .select("doc_a", "doc_b")
@@ -1331,28 +1282,13 @@ CONTAINMENT_MIN = 0.5
     "dedup_minhash_containment",
     oracle=f"""
     WITH {_ORACLE_SHINGLES},
-    sig AS (SELECT doc_id, {_ORACLE_SIGS} FROM sh GROUP BY doc_id),
-    bands AS ({_ORACLE_BANDS}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands a
-      JOIN bands b ON a.band_id = b.band_id AND a.bv = b.bv AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS nc
-      FROM cand c
-      JOIN sh x ON x.doc_id = c.doc_a
-      JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT m.doc_a, m.doc_b,
-           round(CAST(m.nc AS DOUBLE) / least(sa.n, sb.n), 6) AS containment,
-           round(CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc), 6) AS jaccard
-    FROM common m
-    JOIN sizes sa ON sa.doc_id = m.doc_a
-    JOIN sizes sb ON sb.doc_id = m.doc_b
-    WHERE CAST(m.nc AS DOUBLE) / least(sa.n, sb.n) >= {CONTAINMENT_MIN}
+    {_lsh_ctes("sh")},
+    {_overlap_ctes("sh")}
+    SELECT doc_a, doc_b,
+           round(CAST(nc AS DOUBLE) / least(n_a, n_b), 6) AS containment,
+           round({_JACC_SQL}, 6) AS jaccard
+    FROM common
+    WHERE CAST(nc AS DOUBLE) / least(n_a, n_b) >= {CONTAINMENT_MIN}
     """,
 )
 def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1373,30 +1309,14 @@ def dedup_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-dp round is emission-only."""
     docs = load_table(spark, sf_dir, "documents")
     sa = _shingle_arrays(docs).transform(tracked_cache)
-    cand = lsh_candidate_pairs(docs, shingle_arrays=sa)
-    a = sa.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("n").alias("n_a"),
-    )
-    b = sa.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("n").alias("n_b"),
-    )
-    nc = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    containment = nc / F.least(F.col("n_a"), F.col("n_b"))
-    jaccard = nc / (F.col("n_a") + F.col("n_b") - nc)
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .where(containment >= CONTAINMENT_MIN)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(containment, 6).alias("containment"),
-            F.round(jaccard, 6).alias("jaccard"),
-        )
+    pairs, nc = pair_overlap(lsh_candidate_pairs(minhash_signatures(sa)), sa)
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    containment = nc.cast("double") / F.least(n_a, n_b)
+    return pairs.where(containment >= CONTAINMENT_MIN).select(
+        "doc_a",
+        "doc_b",
+        F.round(containment, 6).alias("containment"),
+        F.round(jaccard(nc, n_a, n_b), 6).alias("jaccard"),
     )
 
 
@@ -1433,20 +1353,9 @@ SETSIM_T = 0.5
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM prefix a JOIN prefix b ON a.token = b.token AND a.doc_id < b.doc_id
     ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY doc_id),
-    common AS (
-      SELECT c.doc_a, c.doc_b, count(*) AS nc
-      FROM cand c
-      JOIN toks x ON x.doc_id = c.doc_a
-      JOIN toks y ON y.doc_id = c.doc_b AND y.token = x.token
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT m.doc_a, m.doc_b,
-           round(CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc), 6) AS jaccard
-    FROM common m
-    JOIN sizes sa ON sa.doc_id = m.doc_a
-    JOIN sizes sb ON sb.doc_id = m.doc_b
-    WHERE CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc) >= {SETSIM_T}
+    {_overlap_ctes("sh")}
+    SELECT doc_a, doc_b, round({_JACC_SQL}, 6) AS jaccard
+    FROM common WHERE {_JACC_SQL} >= {SETSIM_T}
     """,
 )
 def setsim_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1601,28 +1510,9 @@ def setsim_over(docs: DataFrame) -> DataFrame:
     )
     # Verification on hashed arrays (8 B/element vs ~25 B strings
     # through both joins); exact under the guarded injectivity.
-    arrs = sa.select("doc_id", F.col("tsh").alias("ts"), "n")
-    joined = (
-        cand.join(
-            arrs.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("ts").alias("ts_a"),
-                F.col("n").alias("n_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            arrs.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("ts").alias("ts_b"),
-                F.col("n").alias("n_b"),
-            ),
-            "doc_b",
-        )
-    )
-    inter = F.size(F.array_intersect("ts_a", "ts_b"))
-    jac = inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter)
-    out = joined.where(jac >= SETSIM_T).select(
+    pairs, nc = pair_overlap(cand, sa, col="tsh")
+    jac = jaccard(nc, F.col("n_a"), F.col("n_b"))
+    out = pairs.where(jac >= SETSIM_T).select(
         "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
     )
     # Injectivity guard: a 1-row cross join of the corpus-wide collision
@@ -1665,56 +1555,34 @@ _TUNE_CONFIGS = (2, 4, 8)  # n_bands values over N_PERM=8 signatures
 NEAR_TUNE_SIM = 0.5
 
 
-def _tune_band_sql(n_bands: int) -> str:
-    r = N_PERM // n_bands
-    rows = "\n      UNION ALL ".join(
-        "SELECT doc_id, {b} AS band_id, {bv} AS bv FROM sig".format(
-            b=b, bv=" || ".join(f"sig{b * r + i}" for i in range(r))
-        )
-        for b in range(n_bands)
-    )
-    return rows
+def _tune_threshold(n_bands: int) -> tuple[float, int]:
+    """The S-curve midpoint (1/b)^(1/r), r = N_PERM / n_bands = 2^k, as
+    (1/b, k): k nested square roots of 1/b."""
+    return 1 / n_bands, (N_PERM // n_bands).bit_length() - 1
 
 
 def _tune_threshold_sql(n_bands: int) -> str:
-    return {2: "sqrt(sqrt(0.5))", 4: "sqrt(0.25)", 8: "0.125"}[n_bands]
+    base, k = _tune_threshold(n_bands)
+    return "sqrt(" * k + repr(base) + ")" * k
 
 
 @register(
     "lsh_band_tuning_report",
     oracle=f"""
     WITH {_ORACLE_SHINGLES},
-    sig AS (SELECT doc_id, {_ORACLE_SIGS} FROM sh GROUP BY doc_id),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    common AS (
-      SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS nc
-      FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
-      GROUP BY 1, 2
-    ),
-    jacc AS (
-      SELECT m.a, m.b, CAST(m.nc AS DOUBLE) / (sa.n + sb.n - m.nc) AS j
-      FROM common m JOIN sizes sa ON sa.doc_id = m.a
-                    JOIN sizes sb ON sb.doc_id = m.b
-    ),
-    {", ".join(
-        f'''bands{nb} AS ({_tune_band_sql(nb)}),
-    cand{nb} AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bands{nb} a JOIN bands{nb} b
-        ON a.band_id = b.band_id AND a.bv = b.bv AND a.doc_id < b.doc_id
-    )''' for nb in _TUNE_CONFIGS)}
+    {_lsh_ctes("sh", tuple((nb, str(nb)) for nb in _TUNE_CONFIGS))},
+    {_overlap_ctes("sh", cand=None)}
     {" UNION ALL ".join(
         f'''SELECT {nb} AS n_bands, {N_PERM // nb} AS rows_per_band,
            round({_tune_threshold_sql(nb)}, 6) AS approx_threshold,
-           (SELECT count(*) FROM cand{nb}) AS n_candidates,
-           (SELECT count(*) FROM cand{nb} c JOIN jacc j
-             ON j.a = c.doc_a AND j.b = c.doc_b WHERE j.j >= {NEAR_TUNE_SIM})
-             AS n_true_pairs,
-           CAST(floor(1000000.0
-             * (SELECT count(*) FROM cand{nb} c JOIN jacc j
-                 ON j.a = c.doc_a AND j.b = c.doc_b WHERE j.j >= {NEAR_TUNE_SIM})
-             / greatest((SELECT count(*) FROM cand{nb}), 1)) AS BIGINT)
-             AS precision_ppm''' for nb in _TUNE_CONFIGS)}
+           n_candidates, n_true_pairs,
+           CAST(floor(1000000.0 * n_true_pairs / greatest(n_candidates, 1)) AS BIGINT)
+             AS precision_ppm
+    FROM (SELECT (SELECT count(*) FROM cand{nb}) AS n_candidates,
+                 (SELECT count(*) FROM cand{nb} c JOIN common j
+                   ON j.doc_a = c.doc_a AND j.doc_b = c.doc_b
+                   WHERE {_JACC_SQL} >= {NEAR_TUNE_SIM}) AS n_true_pairs)'''
+        for nb in _TUNE_CONFIGS)}
     """,
 )
 def lsh_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1739,45 +1607,23 @@ def lsh_band_tuning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sa = _shingle_arrays(docs).transform(tracked_cache)
     # ONE signature aggregate feeds all three bandings (cached; the band
     # explode + self-join per config derive from it map-side).
-    sig = minhash_signatures(docs, sa).transform(tracked_cache)
-    thresholds = {
-        2: F.sqrt(F.sqrt(F.lit(0.5))),
-        4: F.sqrt(F.lit(0.25)),
-        8: F.lit(0.125),
-    }
+    sig = minhash_signatures(sa).transform(tracked_cache)
     parts = []
     for nb in _TUNE_CONFIGS:
-        cand = lsh_candidate_pairs(
-            docs, sa, n_perm=N_PERM, n_bands=nb, signatures=sig
-        )
-        verified = (
-            cand.join(
-                sa.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.col("shingles").alias("ts_a"),
-                    F.col("n").alias("n_a"),
-                ),
-                "doc_a",
-            )
-            .join(
-                sa.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("shingles").alias("ts_b"),
-                    F.col("n").alias("n_b"),
-                ),
-                "doc_b",
-            )
-        )
-        inter = F.size(F.array_intersect("ts_a", "ts_b"))
-        jac = inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter)
+        cand = lsh_candidate_pairs(sig, nb)
+        pairs, nc = pair_overlap(cand, sa)
+        base, k = _tune_threshold(nb)
+        threshold = F.lit(base)
+        for _ in range(k):
+            threshold = F.sqrt(threshold)
         n_cand = cand.agg(F.count(F.lit(1)).alias("n_candidates"))
-        n_true = verified.where(jac >= NEAR_TUNE_SIM).agg(
-            F.count(F.lit(1)).alias("n_true_pairs")
-        )
+        n_true = pairs.where(
+            jaccard(nc, F.col("n_a"), F.col("n_b")) >= NEAR_TUNE_SIM
+        ).agg(F.count(F.lit(1)).alias("n_true_pairs"))
         row = n_cand.crossJoin(n_true).select(
             F.lit(nb).alias("n_bands"),
             F.lit(N_PERM // nb).alias("rows_per_band"),
-            F.round(thresholds[nb], 6).alias("approx_threshold"),
+            F.round(threshold, 6).alias("approx_threshold"),
             "n_candidates",
             "n_true_pairs",
             F.floor(
@@ -1928,12 +1774,15 @@ def winnowing_fingerprint_sets(docs: DataFrame) -> DataFrame:
 # at its 1-based position (the twin of _kgram_frame), and
 # `comb`/`sel`/`fps` the distinct window-minimum selection (the twin of
 # winnowing_fingerprint_sets). The span family's `ph` sits between them.
-_WINNOW_KGRAM_CTES = f"""{WORDS_CTE},
+def _winnow_kgram_ctes(source: str = "documents") -> str:
+    return f"""{words_cte(source)},
     pos_kg AS (
       SELECT doc_id, i AS pos,
              {kgram_sql(SHINGLE_K)} AS s
       FROM w, unnest(generate_series(1, len(ws) - {SHINGLE_K - 1})) AS t(i)
     )"""
+
+
 _WINNOW_SELECT_CTES = f"""
     comb AS (
       SELECT doc_id, pos,
@@ -1960,7 +1809,7 @@ _WINNOW_SELECT_CTES = f"""
 @register(
     "winnowing_fingerprints",
     oracle=f"""
-    WITH {_WINNOW_KGRAM_CTES},{_WINNOW_SELECT_CTES},
+    WITH {_winnow_kgram_ctes()},{_WINNOW_SELECT_CTES},
     freq AS (SELECT fp, count(*) AS n_docs FROM fps GROUP BY fp),
     sizes AS (SELECT doc_id, count(*) AS n FROM fps GROUP BY doc_id),
     common AS (
@@ -2526,10 +2375,12 @@ def maximal_shared_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-#: Shared oracle CTE chain ending at `runs` (one row per maximal
-#: diagonal run) — used by BOTH span registrations so the two oracles
-#: can never desynchronize on fingerprint selection or span arithmetic.
-_MAXSPAN_RUNS_CTES = f"""{_WINNOW_KGRAM_CTES},
+def _maxspan_runs_ctes(source: str = "documents") -> str:
+    """Shared oracle CTE chain over ``source`` ending at `runs` (one row
+    per maximal diagonal run) — used by every span registration so the
+    oracles can never desynchronize on fingerprint selection or span
+    arithmetic."""
+    return f"""{_winnow_kgram_ctes(source)},
     ph AS (
       SELECT doc_id, pos,
              {md5_int_sql("s", _MAXSPAN_HASH_HEX)} AS h
@@ -2567,7 +2418,7 @@ _MAXSPAN_RUNS_CTES = f"""{_WINNOW_KGRAM_CTES},
 @register(
     "dedup_maximal_spans",
     oracle=f"""
-    WITH {_MAXSPAN_RUNS_CTES}
+    WITH {_maxspan_runs_ctes()}
     SELECT doc_a, doc_b,
            CAST(span_tokens AS BIGINT) AS span_tokens,
            CAST(pos_a AS INTEGER) AS pos_a,
@@ -2682,7 +2533,7 @@ _SPANCUT_ISLANDS_CTES = f"""
 @register(
     "dedup_span_cuts",
     oracle=f"""
-    WITH {_MAXSPAN_RUNS_CTES},{_SPANCUT_ISLANDS_CTES}
+    WITH {_maxspan_runs_ctes()},{_SPANCUT_ISLANDS_CTES}
     SELECT doc_id,
            CAST(MIN(s) AS INTEGER) AS cut_start,
            CAST(MAX(e) AS INTEGER) AS cut_end,
@@ -2786,7 +2637,7 @@ _SPANAPPLY_CTES = """,
 @register(
     "dedup_span_apply",
     oracle=f"""
-    WITH {_MAXSPAN_RUNS_CTES},{_SPANCUT_ISLANDS_CTES}{_SPANAPPLY_CTES}
+    WITH {_maxspan_runs_ctes()},{_SPANCUT_ISLANDS_CTES}{_SPANAPPLY_CTES}
     SELECT doc_id, orig_tokens, cut_tokens, kept_tokens, kept_digest
     FROM applied
     """,
@@ -2803,7 +2654,7 @@ def dedup_span_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_span_attrition_by_source",
     oracle=f"""
-    WITH {_MAXSPAN_RUNS_CTES},{_SPANCUT_ISLANDS_CTES}{_SPANAPPLY_CTES}
+    WITH {_maxspan_runs_ctes()},{_SPANCUT_ISLANDS_CTES}{_SPANAPPLY_CTES}
     SELECT d.source,
            COUNT(*) AS docs,
            CAST(SUM(CASE WHEN a.cut_tokens > 0 THEN 1 ELSE 0 END)
@@ -2862,7 +2713,7 @@ _FUNNEL_ORACLE_SQL = f"""
       FROM documents d
       JOIN keep k ON md5(d.text) = k.h AND d.doc_id = k.keep_id
     ),
-    {_MAXSPAN_RUNS_CTES.replace("FROM documents", "FROM survivors")},{_SPANCUT_ISLANDS_CTES}{_SPANAPPLY_CTES},
+    {_maxspan_runs_ctes("survivors")},{_SPANCUT_ISLANDS_CTES}{_SPANAPPLY_CTES},
     tot AS (
       SELECT source,
              COUNT(*) AS docs_total,

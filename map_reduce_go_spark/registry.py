@@ -69,6 +69,15 @@ _JUMP: dict[str, int] = {
     **dict.fromkeys(
         ["corr_quantity_price", "moment_stats_quantity", "dq_referential_integrity"], 17
     ),
+    # the shared shingle-pair layer: one candidate and one verify step per
+    # side (the cluster trio above reaches it too)
+    **dict.fromkeys(
+        ["dedup_minhash_lsh", "dedup_pipeline_exact_then_lsh", "lsh_recall_probe",
+         "dedup_minhash_lsh_stopfiltered", "dedup_incremental_batch",
+         "dedup_minhash_containment", "dedup_ngram_jaccard", "setsim_prefix_filter_join",
+         "lsh_band_tuning_report"],
+        17,
+    ),
 }
 
 

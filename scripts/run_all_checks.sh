@@ -32,6 +32,12 @@ dedup_pipeline_exact_then_span,dedup_span_apply,dedup_span_attrition_by_source,\
 dedup_span_cuts,doc_repetition_stats,eval_contamination_report,lsh_band_tuning_report,\
 lsh_recall_probe,mixture_budget_correction,near_dup_cluster_sizes,pipeline_stage_attrition,\
 setsim_prefix_filter_join,shingle_novelty_per_doc,winnowing_fingerprints
+echo "== determinism sweep, auto-broadcast on vs off, shingle-pair family =="
+python scripts/determinism_sweep.py --mode=broadcast --only=\
+dedup_clusters,dedup_incremental_batch,dedup_keep_best,dedup_minhash_containment,\
+dedup_minhash_lsh,dedup_minhash_lsh_stopfiltered,dedup_ngram_jaccard,\
+dedup_pipeline_exact_then_lsh,lsh_band_tuning_report,lsh_recall_probe,\
+near_dup_cluster_sizes,setsim_prefix_filter_join
 echo "== determinism sweep, 32 vs 7 partitions, portable-hash family =="
 python scripts/determinism_sweep.py --mode=partitions --only=\
 ann_lsh_cosine,ann_lsh_persisted,ann_ranking_quality,bloom_join_prune_probe,\

@@ -272,10 +272,14 @@ def lsh_bucket_stats(spark, sf_dir: str) -> dict:
     """Band-bucket size distribution of the engine's MinHash-LSH banding
     at this scale — the number the 'banding keeps the self-join
     bucketed' claim rests on."""
-    from map_reduce_go_spark.operators.dedup import lsh_bands, minhash_signatures
+    from map_reduce_go_spark.operators.dedup import (
+        _shingle_arrays,
+        lsh_bands,
+        minhash_signatures,
+    )
 
-    docs = load_table(spark, sf_dir, "documents")
-    return _bucket_size_stats(lsh_bands(minhash_signatures(docs)), "band_id", "bv")
+    arrays = _shingle_arrays(load_table(spark, sf_dir, "documents"))
+    return _bucket_size_stats(lsh_bands(minhash_signatures(arrays)), "band_id", "bv")
 
 
 def setsim_prefix_bucket_stats(spark, sf_dir: str) -> dict:

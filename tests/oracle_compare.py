@@ -63,17 +63,37 @@ def duck_views(sf_dir: str, tables=TABLES):
     return con
 
 
-def compare_on_head_copies(spark, sf_dir: str, out_dir, name: str, tables, rows: int) -> None:
-    """Write pyarrow copies of the first ``rows`` rows of ``tables``
-    (0: empty tables, 1: single rows; schemas from ``sf_dir``) under
-    ``out_dir`` and compare query ``name`` with its DuckDB oracle over
+def _doubled_documents(docs):
+    """``docs`` with every document appearing twice: the copy's doc_id is
+    the original's + max(doc_id) + 1."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    i = docs.schema.get_field_index("doc_id")
+    shift = pc.max(docs["doc_id"]).as_py() + 1
+    copy = docs.set_column(i, docs.schema.field(i), pc.add(docs["doc_id"], shift))
+    return pa.concat_tables([docs, copy])
+
+
+def compare_on_head_copies(
+    spark, sf_dir: str, out_dir, name: str, tables, rows: int | None, dupes: bool = False
+) -> None:
+    """Write pyarrow copies of ``tables`` from ``sf_dir`` under
+    ``out_dir`` — the first ``rows`` rows of each (0: empty tables, 1:
+    single rows, None: every row), with every document doubled when
+    ``dupes`` — and compare query ``name`` with its DuckDB oracle over
     them."""
     import pyarrow.parquet as pq
 
     from map_reduce_go_spark.registry import all_queries
 
     for t in tables:
-        pq.write_table(pq.read_table(f"{sf_dir}/{t}.parquet").slice(0, rows), f"{out_dir}/{t}.parquet")
+        table = pq.read_table(f"{sf_dir}/{t}.parquet")
+        if rows is not None:
+            table = table.slice(0, rows)
+        if dupes and t == "documents":
+            table = _doubled_documents(table)
+        pq.write_table(table, f"{out_dir}/{t}.parquet")
     con = duck_views(str(out_dir), tables)
     spec = all_queries()[name]
     try:

@@ -1,6 +1,7 @@
 """Degenerate inputs for every registered query: each runs on 0-row and
 1-row copies of the fixture tables its oracle names and must return what
-DuckDB returns, or refuse by documented design."""
+DuckDB returns, or refuse by documented design. The shingle-pair family
+also runs on an all-duplicate corpus."""
 
 from __future__ import annotations
 
@@ -52,3 +53,31 @@ def test_query_matches_oracle_on_empty_and_single_row_tables(
     else:
         with pytest.raises(refusal[0], match=refusal[1]):
             compare_on_head_copies(spark, sf_dir, data, name, tables, rows)
+
+
+#: The queries that reach dedup.py's shared candidate and verify steps
+#: (lsh_candidate_pairs, pair_overlap, exact_pair_counts and their oracle
+#: builders).
+SHINGLE_PAIR_QUERIES = [
+    "dedup_minhash_lsh",
+    "dedup_clusters",
+    "dedup_keep_best",
+    "near_dup_cluster_sizes",
+    "dedup_pipeline_exact_then_lsh",
+    "lsh_recall_probe",
+    "dedup_minhash_lsh_stopfiltered",
+    "dedup_incremental_batch",
+    "dedup_minhash_containment",
+    "dedup_ngram_jaccard",
+    "setsim_prefix_filter_join",
+    "lsh_band_tuning_report",
+]
+
+
+@pytest.mark.parametrize("name", SHINGLE_PAIR_QUERIES)
+def test_shingle_pair_query_matches_oracle_on_doubled_documents(spark, sf_dir, tmp_path, name):
+    """Every document appears twice, so every shingle set has an exact
+    copy: each doc's copy is a candidate in every band with Jaccard 1."""
+    data = tmp_path / "sf"
+    data.mkdir()
+    compare_on_head_copies(spark, sf_dir, data, name, ["documents"], None, dupes=True)

@@ -220,14 +220,16 @@ def test_lsh_configurable_bands(spark, sf_dir):
     """Non-default LSH config (16 perms, 8 bands of 2) must still cover
     the exact high-similarity pairs — the knob changes the candidate
     threshold, not correctness of the covered region."""
-    from map_reduce_go_spark.operators.dedup import lsh_candidate_pairs
+    from map_reduce_go_spark.operators.dedup import (
+        _shingle_arrays,
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
     from map_reduce_go_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    cand = {
-        (r["doc_a"], r["doc_b"])
-        for r in lsh_candidate_pairs(docs, n_perm=16, n_bands=8).collect()
-    }
+    sig = minhash_signatures(_shingle_arrays(docs), n_perm=16)
+    cand = {(r["doc_a"], r["doc_b"]) for r in lsh_candidate_pairs(sig, n_bands=8).collect()}
     exact = {
         (r["doc_a"], r["doc_b"])
         for r in dedup_ngram_jaccard(spark, sf_dir).collect()
