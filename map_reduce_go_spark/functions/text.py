@@ -13,6 +13,9 @@ from SQL.
 
 from __future__ import annotations
 
+import re
+from itertools import groupby
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -21,6 +24,22 @@ from pyspark.sql import functions as F
 #: is the same Unicode letter class in Java regex and in DuckDB's RE2, so
 #: engine and oracle share one tokenizer definition (SURVEY.md §7.3).
 WORD_BOUNDARY = r"[^\p{L}]+"
+
+#: Python's ``re`` has no ``\p{L}``. Its nearest class, word characters
+#: minus digits and ``_``, holds every letter and also the Nl/No numerals
+#: (``²``, ``½``, ``Ⅻ``); ``py_words`` splits those off.
+_LETTERS_AND_NUMERALS = re.compile(r"[^\W\d_]+")
+
+
+def py_words(text: str) -> list[str]:
+    """The words of ``text`` in order, for Python hooks: the maximal runs
+    of ``str.isalpha`` characters, which are exactly the Unicode L
+    categories that ``WORD_BOUNDARY`` splits on. One ``findall`` serves
+    the common text with no Nl/No numerals in a word."""
+    ws = _LETTERS_AND_NUMERALS.findall(text)
+    if all(map(str.isalpha, ws)):
+        return ws
+    return ["".join(run) for w in ws for alpha, run in groupby(w, str.isalpha) if alpha]
 
 #: The oracle's split of ``text`` on ``WORD_BOUNDARY``, empty tokens kept.
 SPLIT_WORDS_SQL = f"string_split_regex(text, '{WORD_BOUNDARY}')"

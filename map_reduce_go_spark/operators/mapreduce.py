@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from map_reduce_go_spark.functions.text import py_words
+
 MapFn = Callable[[str, str], Iterable[tuple[str, str]]]
 ReduceFn = Callable[[str, list[str]], str]
 
@@ -144,14 +146,10 @@ def write_text_kv(df: DataFrame, path: str, n_partitions: int | None = None) -> 
 # DataFrame fast paths (mirrors the reference's sequential-vs-distributed
 # comparison, src/main/test-mr.sh:78-144).
 
-import re
-
-_WORD_RE = re.compile(r"[^\W\d_]+", re.UNICODE)  # runs of letters, = \p{L}+
-
 
 def wc_map(filename: str, contents: str):
     """wc: emit (word, "1") per occurrence (reference src/mrapps/wc.go:19-32)."""
-    return [(w, "1") for w in _WORD_RE.findall(contents)]
+    return [(w, "1") for w in py_words(contents)]
 
 
 def wc_reduce(key: str, values: list[str]) -> str:
@@ -160,7 +158,7 @@ def wc_reduce(key: str, values: list[str]) -> str:
 
 def indexer_map(filename: str, contents: str):
     """indexer: distinct words per doc (reference src/mrapps/indexer.go:20-31)."""
-    return [(w, filename) for w in sorted(set(_WORD_RE.findall(contents)))]
+    return [(w, filename) for w in sorted(set(py_words(contents)))]
 
 
 def indexer_reduce(key: str, values: list[str]) -> str:

@@ -1,10 +1,13 @@
 """Event-time windowing over the events table (batch; SURVEY.md §7.2 M4).
 
-Tumbling/sliding windows use Spark's ``window()`` and session windows use
-``session_window()`` — the same operators Structured Streaming uses, so
-these plans port to ``readStream`` unchanged (streaming variants live in
-:mod:`map_reduce_go_spark.streaming`). Window bounds are emitted as BIGINT
-epoch seconds so the DuckDB oracle compares timezone-free.
+The tumbling, sliding and session window queries are the builders of
+:mod:`map_reduce_go_spark.streaming.windows` applied to the events table
+plus a column select: the same code runs on a stream, and the oracle
+checks it here. The session gap is that module's ``SESSION_GAP_SEC``;
+the per-event session numbering exists once per side,
+:func:`session_numbers` (engine) and :func:`session_ctes` (oracle).
+Window bounds are emitted as BIGINT epoch seconds so the DuckDB oracle
+compares timezone-free.
 """
 
 from __future__ import annotations
@@ -15,6 +18,60 @@ from pyspark.sql import functions as F
 from map_reduce_go_spark.plans.relational import _dsum_sql, dsum
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
+from map_reduce_go_spark.streaming.windows import (
+    SESSION_GAP_SEC,
+    session_counts,
+    sliding_avg_value,
+    tumbling_counts,
+)
+
+
+def session_ctes(**extra: str) -> str:
+    """The oracle's gaps-and-islands sessions over ``events``: ``marked``
+    flags each event that opens a session and ``numbered`` adds
+    ``session_no`` — the twin of :func:`session_numbers`. Both carry
+    ``event_id, user_id, ts`` plus one column per ``extra`` name, set to
+    its SQL expression."""
+    cols = "".join(f", {expr} AS {name}" for name, expr in extra.items())
+    names = "".join(f", {name}" for name in extra)
+    return f"""marked AS (
+      SELECT event_id, user_id, ts{cols},
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR ts - lag(ts) OVER w >= INTERVAL {SESSION_GAP_SEC} SECOND
+                  THEN 1 ELSE 0 END AS new_session
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    ),
+    numbered AS (
+      SELECT event_id, user_id, ts{names},
+             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS session_no
+      FROM marked
+    )"""
+
+
+def session_numbers(events: DataFrame) -> DataFrame:
+    """``events`` plus ``session_no``, each user's session ordinal (1, 2,
+    ...) in ``(ts, event_id)`` order: an event opens a session when it is
+    the user's first or comes ``SESSION_GAP_SEC`` or more after the
+    previous one. Classic gaps-and-islands — a lag() marks boundaries, a
+    running sum numbers them; both windows partition by user_id and sort
+    each user's events once. The (ts, event_id) key is unique, so the
+    numbering is deterministic cross-engine."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    # Full-precision gap test (ts carries microseconds): comparing the
+    # timestamps directly matches the oracle's INTERVAL comparison exactly;
+    # unix_timestamp() would truncate to seconds and disagree on
+    # sub-second boundaries.
+    new_session = F.when(
+        F.lag("ts").over(w).isNull()
+        | (F.col("ts") >= F.lag("ts").over(w) + F.expr(f"INTERVAL {SESSION_GAP_SEC} SECOND")),
+        1,
+    ).otherwise(0)
+    return events.withColumn(
+        "session_no", F.sum(new_session).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    )
 
 
 @register(
@@ -29,19 +86,8 @@ from map_reduce_go_spark.sources.readers import load_table
     """,
 )
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour tumbling windows per event type. window() is epoch-aligned,
-    identical to date_trunc('hour') for a 1-hour width."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value"))
-        .select(
-            F.unix_timestamp("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    """1-hour tumbling windows per event type (streaming/windows.py::tumbling_counts)."""
+    return tumbling_counts(load_table(spark, sf_dir, "events"))
 
 
 @register(
@@ -60,36 +106,17 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour windows sliding every 30 min: each event lands in exactly two
-    windows (the oracle materializes both by bucket arithmetic)."""
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.unix_timestamp("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )
+    """1-hour windows sliding every 30 min (streaming/windows.py::sliding_avg_value):
+    each event lands in exactly two windows (the oracle materializes both
+    by bucket arithmetic)."""
+    windows = sliding_avg_value(load_table(spark, sf_dir, "events"))
+    return windows.select("window_start", "event_type", "n_events")
 
 
 @register(
     "events_session_window",
-    oracle="""
-    WITH marked AS (
-      SELECT user_id, ts,
-             CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) >= 600 OR lag(ts) OVER w IS NULL
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), numbered AS (
-      SELECT user_id, ts,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_no
-      FROM marked
-    )
+    oracle=f"""
+    WITH {session_ctes()}
     SELECT user_id,
            -- floor: Spark's timestamp->long cast truncates sub-second
            -- precision, DuckDB's double->bigint cast would round.
@@ -100,33 +127,24 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session windows with a 10-minute inactivity gap.
+    """Per-user session windows with a 10-minute (SESSION_GAP_SEC)
+    inactivity gap (streaming/windows.py::session_counts).
 
     Spark's session_window() merges events closer than the gap; the oracle
-    derives the identical sessions with the classic gaps-and-islands window
-    construction. session_start is the first event's epoch second
-    (session_window start == min event ts).
+    derives the identical sessions with the gaps-and-islands construction
+    of :func:`session_ctes`.
     """
-    e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_timestamp("w.start").alias("session_start"),
-            "n_events",
-        )
-    )
+    return session_counts(load_table(spark, sf_dir, "events"))
 
 
 @register(
     "events_multi_granularity_rollup",
-    oracle="""
+    oracle=f"""
     SELECT date_trunc('day', ts) AS day,
            CASE WHEN GROUPING(date_trunc('hour', ts)) = 0
                 THEN date_trunc('hour', ts) END AS hour,
            count(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(24,6))) AS DOUBLE) AS sum_value
+           {_dsum_sql('value')} AS sum_value
     FROM events
     GROUP BY ROLLUP (date_trunc('day', ts), date_trunc('hour', ts))
     """,
@@ -148,7 +166,7 @@ def events_multi_granularity_rollup(spark: SparkSession, sf_dir: str) -> DataFra
         .agg(
             F.grouping("hour").alias("g_hour"),
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(24,6)")).cast("double").alias("sum_value"),
+            dsum("value").alias("sum_value"),
         )
         .select(
             "day",
@@ -159,27 +177,10 @@ def events_multi_granularity_rollup(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-SESSION_GAP_SEC = 600
-
-
 @register(
     "events_sessionize",
     oracle=f"""
-    WITH marked AS (
-      SELECT event_id, user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL {SESSION_GAP_SEC} SECOND
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    numbered AS (
-      SELECT event_id, user_id, ts,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_no
-      FROM marked
-    )
+    WITH {session_ctes()}
     SELECT event_id, user_id, CAST(session_no AS BIGINT) AS session_no,
            CAST(floor(epoch(min(ts) OVER (PARTITION BY user_id, session_no)))
                 AS BIGINT) AS session_start
@@ -192,34 +193,13 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events_session_window only emits per-session aggregates; this emits
     the session id you attach to each event for downstream attribution).
 
-    Classic gaps-and-islands: a lag() marks session boundaries, a running
-    sum numbers them, a second window keyed by (user, session_no) carries
-    the session start onto each row. All three windows partition by
-    user_id (+ the bounded session_no) and sort each user's events once —
-    the shuffle is one exchange on user_id, reused by every window stage.
-    Ordering key (ts, event_id) is unique, so row numbering is
-    deterministic cross-engine.
+    :func:`session_numbers` numbers the sessions; a third window keyed by
+    (user, session_no) carries the session start onto each row. All three
+    windows partition by user_id (+ the bounded session_no) — the shuffle
+    is one exchange on user_id, reused by every window stage.
     """
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # Full-precision gap test (ts carries microseconds): comparing the
-    # timestamps directly matches the oracle's INTERVAL comparison exactly;
-    # unix_timestamp() would truncate to seconds and disagree on
-    # sub-second boundaries.
-    new_session = F.when(
-        F.lag("ts").over(w).isNull()
-        | (
-            F.col("ts")
-            >= F.lag("ts").over(w) + F.expr(f"INTERVAL {SESSION_GAP_SEC} SECOND")
-        ),
-        1,
-    ).otherwise(0)
-    numbered = e.select("event_id", "user_id", "ts").withColumn(
-        "session_no",
-        F.sum(new_session).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
+    numbered = session_numbers(e.select("event_id", "user_id", "ts"))
     ws = Window.partitionBy("user_id", "session_no")
     return numbered.select(
         "event_id",
@@ -316,7 +296,7 @@ def events_hourly_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "union_by_name_schema_evolution",
-    oracle="""
+    oracle=f"""
     WITH unioned AS (
       SELECT * FROM (
         SELECT event_id, event_type, value
@@ -331,7 +311,7 @@ def events_hourly_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_events,
            CAST(count(*) FILTER (value IS NULL) AS BIGINT) AS n_missing_value,
            CAST(count(*) FILTER (user_id IS NULL) AS BIGINT) AS n_missing_user,
-           CAST(sum(CAST(value AS DECIMAL(24,6))) AS DOUBLE) AS sum_value
+           {_dsum_sql('value')} AS sum_value
     FROM unioned GROUP BY event_type
     """,
 )
@@ -359,7 +339,7 @@ def union_by_name_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFram
         F.count(F.lit(1)).alias("n_events"),
         F.count_if(F.col("value").isNull()).alias("n_missing_value"),
         F.count_if(F.col("user_id").isNull()).alias("n_missing_user"),
-        F.sum(F.col("value").cast("decimal(24,6)")).cast("double").alias("sum_value"),
+        dsum("value").alias("sum_value"),
     )
 
 
@@ -875,21 +855,7 @@ def dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "session_path_patterns",
     oracle=f"""
-    WITH marked AS (
-      SELECT user_id, ts, event_id, substring(event_type, 1, 1) AS ini,
-             CASE WHEN lag(ts) OVER w IS NULL
-                    OR ts - lag(ts) OVER w >= INTERVAL {SESSION_GAP_SEC} SECOND
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    numbered AS (
-      SELECT user_id, ts, event_id, ini,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS session_no
-      FROM marked
-    ),
+    WITH {session_ctes(ini="substring(event_type, 1, 1)")},
     paths AS (
       SELECT user_id, session_no,
              string_agg(ini, '' ORDER BY ts, event_id) AS path
@@ -914,44 +880,17 @@ def session_path_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed aggregates like funnel_view_click_purchase cannot express,
     answered as regular-expression matches over the path encoding.
 
-    Sessionization is the gaps-and-islands chain of events_sessionize
-    (one user shuffle reused by both windows); path assembly sorts only
-    WITHIN a session group (bounded by session length — never a global
-    sort), and the pattern screen is map-side regex over session-count
-    rows. The repeat pattern is spelled as an alternation, not a
-    backreference, because DuckDB's RE2 has no backrefs — the
-    portable-regex subset is part of the operator's contract.
+    Sessionization is :func:`session_numbers` (one user shuffle reused
+    by both windows); path assembly sorts only WITHIN a session group
+    (bounded by session length — never a global sort), and the pattern
+    screen is map-side regex over session-count rows. The repeat
+    pattern is spelled as an alternation, not a backreference, because
+    DuckDB's RE2 has no backrefs — the portable-regex subset is part of
+    the operator's contract.
     """
     e = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    w_run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    marked = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.substring("event_type", 1, 1).alias("ini"),
-        # Full-precision gap test (see events_sessionize): truncating to
-        # seconds flips sub-second boundary gaps vs the oracle INTERVAL.
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.col("ts")
-                >= F.lag("ts").over(w)
-                + F.expr(f"INTERVAL {SESSION_GAP_SEC} SECOND")
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    numbered = marked.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "ini",
-        F.sum("new_session").over(w_run).alias("session_no"),
+    numbered = session_numbers(
+        e.select("user_id", "ts", "event_id", F.substring("event_type", 1, 1).alias("ini"))
     )
     paths = numbered.groupBy("user_id", "session_no").agg(
         F.array_join(

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
+from map_reduce_go_spark.streaming.windows import ATTRIBUTION_LOOKBACK_MIN, purchase_click_join
 
 
 @register(
@@ -208,7 +209,7 @@ def order_month_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "purchase_click_attribution_outer",
-    oracle="""
+    oracle=f"""
     WITH clicks AS (
       SELECT user_id, ts FROM events WHERE event_type = 'click'
     ),
@@ -222,28 +223,27 @@ def order_month_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM purchases p
     LEFT JOIN clicks c
       ON c.user_id = p.user_id
-     AND c.ts >= p.ts - INTERVAL 5 MINUTE
+     AND c.ts >= p.ts - INTERVAL {ATTRIBUTION_LOOKBACK_MIN} MINUTE
      AND c.ts <= p.ts
     """,
 )
 def purchase_click_attribution_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribution interval join, outer form: EVERY purchase, paired with
-    the same user's clicks in the preceding 5 minutes — and emitted with
-    NULL click columns when unattributed (the rows an inner attribution
-    join silently drops, which is exactly the conversion set a marketing
-    report must not lose).
+    the same user's clicks in the preceding 5 minutes
+    (ATTRIBUTION_LOOKBACK_MIN) — and emitted with NULL click columns when
+    unattributed (the rows an inner attribution join silently drops, which
+    is exactly the conversion set a marketing report must not lose).
 
     This registers the SAME transformation the Structured Streaming path
-    runs (streaming/windows.py::purchase_click_outer_join — the
+    runs (streaming/windows.py::purchase_click_join, left outer — the
     stream==batch equality test ties the two executions together), so the
     driver's value-hash gate covers the streaming operator's semantics
     through its batch twin. The join is user-keyed with an event-time
     interval bound — co-partitioned on user_id in batch, watermark-expired
     state in streaming; the bound is the scale contract in both.
     """
-    from map_reduce_go_spark.streaming.windows import purchase_click_outer_join
-
-    return purchase_click_outer_join(load_table(spark, sf_dir, "events"))
+    events = load_table(spark, sf_dir, "events")
+    return purchase_click_join(events, "left_outer").drop("click_id")
 
 
 @register(

@@ -26,7 +26,8 @@ WINDOW = 50  # queries the driver checks per round
 # driver row. An entry is dead once a later round has a row for the query;
 # tests/test_registry_contract.py then fails until it is removed.
 _JUMP: dict[str, int] = {
-    # the pandas reduce walks sorted key runs
+    # the pandas reduce walks sorted key runs; the hooks' word is
+    # functions/text.py::py_words
     "generic_mapreduce_wordcount": 17,
     # one-pass _near_dup_edges, one-hop _converged_labels seed
     **dict.fromkeys(["dedup_clusters", "dedup_keep_best", "near_dup_cluster_sizes"], 17),
@@ -76,6 +77,14 @@ _JUMP: dict[str, int] = {
          "dedup_minhash_lsh_stopfiltered", "dedup_incremental_batch",
          "dedup_minhash_containment", "dedup_ngram_jaccard", "setsim_prefix_filter_join",
          "lsh_band_tuning_report"],
+        17,
+    ),
+    # the one event-time layer: streaming/windows.py's builders and gap,
+    # plans/events.py's session numbering and oracle CTEs, dsum
+    **dict.fromkeys(
+        ["events_tumbling_window", "events_sliding_window", "events_session_window",
+         "events_sessionize", "session_path_patterns", "purchase_click_attribution_outer",
+         "events_multi_granularity_rollup", "union_by_name_schema_evolution"],
         17,
     ),
 }

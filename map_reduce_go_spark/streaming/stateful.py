@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from map_reduce_go_spark.streaming.windows import SESSION_GAP_SEC
+
 RUNNING_SCHEMA = StructType(
     [
         StructField("event_type", StringType()),
@@ -163,7 +165,7 @@ SESSION_OUT_SCHEMA = StructType(
 
 _TS_BUFFER_SCHEMA = StructType([StructField("ts_ms", LongType())])
 
-SESSION_GAP_MS = 600 * 1000  # mirrors plans.events.SESSION_GAP_SEC
+SESSION_GAP_MS = SESSION_GAP_SEC * 1000
 
 
 class _SessionTimerProcessor(StatefulProcessor):

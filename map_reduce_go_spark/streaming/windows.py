@@ -1,12 +1,24 @@
-"""Structured Streaming over the events schema.
+"""Structured Streaming over the events schema: the event-time layer.
 
 The reference engine is strictly batch (SURVEY.md §2.5 — no streaming
-surface exists); this module is the north-star extension. The windowing
-transformations are the *same* expressions the batch queries in
-:mod:`map_reduce_go_spark.plans.events` use — a DataFrame transformation is
-source-agnostic, so each builder here accepts either a batch or a streaming
-DataFrame and the streaming tests assert batch/stream result equality
-(exactly the reference's sequential-vs-distributed oracle philosophy).
+surface exists); this module is the north-star extension. Every
+event-time decision is made once, here, and serves batch, stream and
+oracle alike:
+
+- each builder accepts a batch or a streaming DataFrame (a DataFrame
+  transformation is source-agnostic). ``tumbling_counts``,
+  ``sliding_avg_value`` and ``session_counts`` are the bodies of the
+  registered ``events_tumbling_window``, ``events_sliding_window`` and
+  ``events_session_window`` queries, and ``purchase_click_join`` of
+  ``purchase_click_attribution_outer`` — so the DuckDB oracle checks the
+  streaming builders through their batch runs, and tests/test_streaming.py
+  asserts stream == batch for each (the reference's
+  sequential-vs-distributed oracle philosophy);
+- ``SESSION_GAP_SEC`` and ``ATTRIBUTION_LOOKBACK_MIN`` are the session
+  gap and the attribution interval of every engine plan and oracle that
+  uses them;
+- ``watermarked`` and ``drop_duplicates`` are the one place a builder
+  branches on ``isStreaming``.
 
 Scale notes:
 - watermarks bound state: without one, windowed state grows forever on an
@@ -29,6 +41,19 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from map_reduce_go_spark.plans.relational import dsum
+
+#: A user's session ends after this many seconds without an event: the
+#: next event at or past ``prev ts + gap`` opens a new session.
+SESSION_GAP_SEC = 600
+
+#: A click is attributed to the same user's purchase at most this many
+#: minutes later.
+ATTRIBUTION_LOOKBACK_MIN = 5
+
+#: Default allowed lateness of a stream: bounds windowed and join state.
+WATERMARK = "10 minutes"
 
 EVENTS_SCHEMA = StructType(
     [
@@ -53,33 +78,44 @@ def read_event_stream(spark: SparkSession, src_dir: str, fmt: str = "parquet") -
     )
 
 
-def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """1-hour tumbling counts per event type; watermark bounds state and
-    admits late data up to the threshold."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def watermarked(df: DataFrame, col: str, watermark: str) -> DataFrame:
+    """``df`` with an event-time watermark on ``col`` when it is a stream;
+    a batch frame has no late data and passes through unchanged."""
+    return df.withWatermark(col, watermark) if df.isStreaming else df
+
+
+def drop_duplicates(df: DataFrame, keys: list[str]) -> DataFrame:
+    """First row per ``keys``: within the watermark horizon on a stream,
+    over the whole frame in batch."""
+    return df.dropDuplicatesWithinWatermark(keys) if df.isStreaming else df.dropDuplicates(keys)
+
+
+def tumbling_counts(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+    """1-hour tumbling windows per event type: count and exact value sum.
+    The body of ``events_tumbling_window``. window() is epoch-aligned,
+    identical to date_trunc('hour') for a 1-hour width."""
     return (
-        src.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
+        watermarked(events, "ts", watermark)
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("sum_value"))
         .select(
             F.unix_timestamp("w.start").alias("window_start"),
             "event_type",
             "n_events",
+            "sum_value",
         )
     )
 
 
-def sliding_avg_value(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """1-hour windows sliding every 30 minutes, average value per type."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def sliding_avg_value(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+    """1-hour windows sliding every 30 minutes: count and average value
+    per type. The body of ``events_sliding_window``."""
     return (
-        src.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
+        watermarked(events, "ts", watermark)
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(24,6)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("avg_value"),
+            F.round(dsum("value") / F.count(F.lit(1)), 6).alias("avg_value"),
         )
         .select(
             F.unix_timestamp("w.start").alias("window_start"),
@@ -90,11 +126,13 @@ def sliding_avg_value(events: DataFrame, watermark: str = "10 minutes") -> DataF
     )
 
 
-def session_counts(events: DataFrame, gap: str = "10 minutes", watermark: str = "10 minutes") -> DataFrame:
-    """Per-user session windows (inactivity gap) — streaming sessionization."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def session_counts(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
+    """Per-user session windows: a session ends after ``SESSION_GAP_SEC``
+    of inactivity. The body of ``events_session_window``; session_start
+    is the first event's epoch second (session_window start == min ts)."""
     return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        watermarked(events, "ts", watermark)
+        .groupBy(F.session_window("ts", f"{SESSION_GAP_SEC} seconds").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -119,7 +157,7 @@ def run_to_memory(stream_df: DataFrame, query_name: str, complete: bool = True):
     return q
 
 
-def dedup_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def dedup_stream(events: DataFrame, watermark: str = WATERMARK) -> DataFrame:
     """Streaming exact deduplication: drop records whose (event_id) was
     already seen, keeping state only inside the watermark horizon —
     the streaming form of the batch dedup_exact operator (ingestion
@@ -129,45 +167,58 @@ def dedup_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     evicted as event-time advances — bounded by arrival rate × horizon,
     not by stream length. RocksDB state store on a real cluster.
     """
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    deduped = src.dropDuplicatesWithinWatermark(["event_id"]) if events.isStreaming else src.dropDuplicates(["event_id"])
+    deduped = drop_duplicates(watermarked(events, "ts", watermark), ["event_id"])
     return deduped.select("event_id", "ts", "user_id", "event_type", "value")
 
 
-def click_purchase_interval_join(
-    events: DataFrame, lookback: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Stream-stream interval join: each purchase paired with the same
-    user's clicks in the preceding `lookback` — the streaming form of the
-    batch range join (plans/temporal.py).
+def purchase_click_join(events: DataFrame, how: str, watermark: str = WATERMARK) -> DataFrame:
+    """Stream-stream interval join of each purchase with the same user's
+    clicks in the preceding ``ATTRIBUTION_LOOKBACK_MIN`` minutes — the
+    streaming form of the batch range join (plans/temporal.py).
+
+    ``how`` is the join type: ``"inner"`` (attributed pairs),
+    ``"left_outer"`` (every purchase; NULL click columns when
+    unattributed — ``purchase_click_attribution_outer``) or
+    ``"full_outer"`` (also the orphan clicks, with NULL purchase
+    columns). Rows: ``purchase_id, click_id, user_id, purchase_epoch,
+    click_epoch``.
 
     Both sides carry watermarks and the join condition bounds event-time
     distance, so Spark can expire buffered state: a click older than
     (watermark + lookback) can never match a future purchase and is
     evicted. Unbounded state otherwise — the interval bound IS the scale
-    contract for stream-stream joins.
+    contract for stream-stream joins. An outer row emits only once the
+    watermark proves no match can still arrive, so it trails the
+    watermark; the drained result equals the batch join (asserted in
+    tests/test_streaming.py with the flush-sentinel drain pattern).
     """
     clicks = events.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts")
+        F.col("user_id").alias("c_user"),
+        F.col("event_id").alias("click_id"),
+        F.col("ts").alias("click_ts"),
     )
     purchases = events.where(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user"),
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("purchase_ts"),
     )
-    if events.isStreaming:
-        clicks = clicks.withWatermark("click_ts", watermark)
-        purchases = purchases.withWatermark("purchase_ts", watermark)
-    return purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {lookback}"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-    ).select(
-        "purchase_id",
-        F.col("p_user").alias("user_id"),
-        F.unix_timestamp("purchase_ts").alias("purchase_epoch"),
-        F.unix_timestamp("click_ts").alias("click_epoch"),
+    lookback = F.expr(f"INTERVAL {ATTRIBUTION_LOOKBACK_MIN} minutes")
+    return (
+        watermarked(purchases, "purchase_ts", watermark)
+        .join(
+            watermarked(clicks, "click_ts", watermark),
+            (F.col("p_user") == F.col("c_user"))
+            & (F.col("click_ts") >= F.col("purchase_ts") - lookback)
+            & (F.col("click_ts") <= F.col("purchase_ts")),
+            how,
+        )
+        .select(
+            "purchase_id",
+            "click_id",
+            F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),
+            F.unix_timestamp("purchase_ts").alias("purchase_epoch"),
+            F.unix_timestamp("click_ts").alias("click_epoch"),
+        )
     )
 
 
@@ -198,90 +249,6 @@ def write_stream_idempotent(stream_df: DataFrame, path: str, checkpoint: str):
     )
 
 
-def purchase_click_outer_join(
-    events: DataFrame, lookback: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every purchase, paired with
-    its preceding-`lookback` clicks when they exist and emitted with NULL
-    click columns when none do — the attribution join that must not drop
-    unattributed conversions.
-
-    Outer stream-stream joins are the hard case: a purchase can only be
-    emitted with NULLs once the watermark proves no matching click can
-    still arrive, so results trail the watermark rather than the batch —
-    but the FINAL result set equals the batch left join exactly (asserted
-    in tests/test_streaming.py with availableNow, which drains the source
-    and advances the watermark to the end). Same state-expiry contract as
-    the inner form: the interval bound plus the watermark bounds buffered
-    rows on both sides.
-    """
-    clicks = events.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts")
-    )
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    if events.isStreaming:
-        clicks = clicks.withWatermark("click_ts", watermark)
-        purchases = purchases.withWatermark("purchase_ts", watermark)
-    return purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {lookback}"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "left_outer",
-    ).select(
-        "purchase_id",
-        F.col("p_user").alias("user_id"),
-        F.unix_timestamp("purchase_ts").alias("purchase_epoch"),
-        F.unix_timestamp("click_ts").alias("click_epoch"),
-    )
-
-
-def purchase_click_full_outer_join(
-    events: DataFrame, lookback: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Stream-stream FULL OUTER interval join — the last stream-join
-    shape (VERDICT r9 brief #8): matched purchase/click pairs, plus
-    unattributed purchases (NULL click columns) AND orphan clicks that
-    led to no purchase within `lookback` (NULL purchase columns) — the
-    two-sided attrition view an attribution audit needs.
-
-    Both sides' NULL rows emit only once the watermark proves no match
-    can still arrive, so each side's buffered state is bounded by
-    (watermark + lookback) exactly as in the inner/left forms; the
-    drained result equals the batch full join (asserted in
-    tests/test_streaming.py with the flush-sentinel drain pattern)."""
-    clicks = events.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    purchases = events.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-    )
-    if events.isStreaming:
-        clicks = clicks.withWatermark("click_ts", watermark)
-        purchases = purchases.withWatermark("purchase_ts", watermark)
-    return purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {lookback}"))
-        & (F.col("click_ts") <= F.col("purchase_ts")),
-        "full_outer",
-    ).select(
-        "purchase_id",
-        "click_id",
-        F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),
-        F.unix_timestamp("purchase_ts").alias("purchase_epoch"),
-        F.unix_timestamp("click_ts").alias("click_epoch"),
-    )
-
-
 def daily_distinct_users(events: DataFrame, watermark: str = "1 day") -> DataFrame:
     """Daily distinct active users (the DAU metric) as a streaming
     aggregation. Streaming DataFrames cannot run COUNT(DISTINCT)
@@ -293,15 +260,10 @@ def daily_distinct_users(events: DataFrame, watermark: str = "1 day") -> DataFra
     (plain dropDuplicates), so stream == batch is testable row-for-row;
     this is the streaming twin of the batch dau_mau_stickiness rollup.
     """
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    days = src.select(
+    days = watermarked(events, "ts", watermark).select(
         "user_id", F.window("ts", "1 day").alias("w")
     )
-    deduped = (
-        days.dropDuplicatesWithinWatermark(["user_id", "w"])
-        if events.isStreaming
-        else days.dropDuplicates(["user_id", "w"])
-    )
+    deduped = drop_duplicates(days, ["user_id", "w"])
     return (
         deduped.groupBy("w")
         .agg(F.count(F.lit(1)).alias("dau"))

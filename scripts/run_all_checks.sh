@@ -48,6 +48,10 @@ dedup_span_apply,dedup_span_attrition_by_source,dedup_span_cuts,feature_hashing_
 gdpr_delete_impact,kmv_distinct_merge_probe,length_weighted_sample,mixture_budget_correction,\
 negative_sampling_per_order,quality_classifier_score,shard_balance_audit,shuffle_shards,\
 stratified_sample_by_lang,table_checksum_buckets,winnowing_fingerprints
+echo "== determinism sweep, 32 vs 7 partitions, event-time family =="
+python scripts/determinism_sweep.py --mode=partitions --only=\
+events_tumbling_window,events_sliding_window,events_session_window,events_sessionize,\
+session_path_patterns,purchase_click_attribution_outer
 echo "== bench sf0.1 =="
 python bench.py
 # Optional (slow, ~8 min/mode): value-hash invariance across planner paths.

@@ -75,14 +75,33 @@ def _doubled_documents(docs):
     return pa.concat_tables([docs, copy])
 
 
+def _hot_user_events(events):
+    """``events`` with one hot user: every row whose index % 10 != 0
+    takes row 0's user_id, so that user holds 90% of the rows."""
+    import pyarrow as pa
+
+    i = events.schema.get_field_index("user_id")
+    users = events["user_id"].to_pylist()
+    hot = [u if k % 10 == 0 else users[0] for k, u in enumerate(users)]
+    field = events.schema.field(i)
+    return events.set_column(i, field, pa.array(hot, field.type))
+
+
 def compare_on_head_copies(
-    spark, sf_dir: str, out_dir, name: str, tables, rows: int | None, dupes: bool = False
+    spark,
+    sf_dir: str,
+    out_dir,
+    name: str,
+    tables,
+    rows: int | None,
+    dupes: bool = False,
+    hotkey: bool = False,
 ) -> None:
     """Write pyarrow copies of ``tables`` from ``sf_dir`` under
     ``out_dir`` — the first ``rows`` rows of each (0: empty tables, 1:
     single rows, None: every row), with every document doubled when
-    ``dupes`` — and compare query ``name`` with its DuckDB oracle over
-    them."""
+    ``dupes`` and one user holding 90% of the events when ``hotkey`` —
+    and compare query ``name`` with its DuckDB oracle over them."""
     import pyarrow.parquet as pq
 
     from map_reduce_go_spark.registry import all_queries
@@ -93,6 +112,8 @@ def compare_on_head_copies(
             table = table.slice(0, rows)
         if dupes and t == "documents":
             table = _doubled_documents(table)
+        if hotkey and t == "events":
+            table = _hot_user_events(table)
         pq.write_table(table, f"{out_dir}/{t}.parquet")
     con = duck_views(str(out_dir), tables)
     spec = all_queries()[name]

@@ -1,7 +1,8 @@
 """Degenerate inputs for every registered query: each runs on 0-row and
 1-row copies of the fixture tables its oracle names and must return what
 DuckDB returns, or refuse by documented design. The shingle-pair family
-also runs on an all-duplicate corpus."""
+also runs on an all-duplicate corpus, and the event-time family on events
+where one user holds 90% of the rows."""
 
 from __future__ import annotations
 
@@ -36,13 +37,18 @@ REFUSES = {
 }
 
 
+def _oracle_tables(name: str) -> list[str]:
+    """The fixture tables query ``name``'s oracle reads."""
+    oracle = all_queries()[name].oracle
+    return [t for t in TABLES if re.search(rf"\b{t}\b", oracle)]
+
+
 @pytest.mark.parametrize("rows", [0, 1])
 @pytest.mark.parametrize("name", sorted(all_queries()))
 def test_query_matches_oracle_on_empty_and_single_row_tables(
     spark, sf_dir, tmp_path, monkeypatch, name, rows
 ):
-    oracle = all_queries()[name].oracle
-    tables = [t for t in TABLES if re.search(rf"\b{t}\b", oracle)]
+    tables = _oracle_tables(name)
     # A fresh index dir: the IVF/LSH queries persist their index there.
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "ivf_index"))
     data = tmp_path / "sf"
@@ -81,3 +87,29 @@ def test_shingle_pair_query_matches_oracle_on_doubled_documents(spark, sf_dir, t
     data = tmp_path / "sf"
     data.mkdir()
     compare_on_head_copies(spark, sf_dir, data, name, ["documents"], None, dupes=True)
+
+
+#: The queries that reach the event-time layer (streaming/windows.py's
+#: builders and plans/events.py's session numbering), plus the other
+#: per-user event-time windows and joins.
+EVENT_TIME_QUERIES = [
+    "events_tumbling_window",
+    "events_sliding_window",
+    "events_session_window",
+    "events_sessionize",
+    "session_path_patterns",
+    "purchase_click_attribution_outer",
+    "event_dwell_time_by_type",
+    "funnel_view_click_purchase",
+    "asof_join_purchase_to_click",
+    "range_join_error_click_counts",
+]
+
+
+@pytest.mark.parametrize("name", EVENT_TIME_QUERIES)
+def test_event_time_query_matches_oracle_on_hot_user(spark, sf_dir, tmp_path, name):
+    """One user holds 90% of the events: one per-user window partition,
+    session chain and interval-join key carries almost the whole table."""
+    data = tmp_path / "sf"
+    data.mkdir()
+    compare_on_head_copies(spark, sf_dir, data, name, _oracle_tables(name), None, hotkey=True)

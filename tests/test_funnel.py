@@ -129,14 +129,16 @@ def test_funnel_matches_sequential_evaluator(spark):
 
 
 def test_sessionize_matches_sequential_evaluator(spark):
-    """events_sessionize's gaps-and-islands construction vs a brute-force
-    per-user pass, including boundary cases: gap exactly equal to the
-    threshold (new session), one microsecond under (same session)."""
+    """session_numbers (the numbering of events_sessionize and
+    session_path_patterns) vs a brute-force per-user pass, including
+    boundary cases: gap exactly equal to the threshold (new session), one
+    microsecond under (same session)."""
     import random
     from datetime import datetime, timedelta
 
-    from map_reduce_go_spark.plans.events import SESSION_GAP_SEC
+    from map_reduce_go_spark.plans.events import session_numbers
     from map_reduce_go_spark.registry import all_queries  # noqa: F401 (warm registry)
+    from map_reduce_go_spark.streaming.windows import SESSION_GAP_SEC
 
     rng = random.Random(42)
     base = datetime(2024, 1, 1)
@@ -150,23 +152,7 @@ def test_sessionize_matches_sequential_evaluator(spark):
             eid += 1
     df = spark.createDataFrame(rows, "event_id long, ts timestamp, user_id long")
 
-    # Reuse the registered query's plan by substituting the fixture scan:
-    # rebuild the same construction over the generated frame.
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    new_session = F.when(
-        F.lag("ts").over(w).isNull()
-        | (F.col("ts") >= F.lag("ts").over(w) + F.expr(f"INTERVAL {SESSION_GAP_SEC} SECOND")),
-        1,
-    ).otherwise(0)
-    numbered = df.withColumn(
-        "session_no", F.sum(new_session).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    got = {
-        r["event_id"]: r["session_no"] for r in numbered.collect()
-    }
+    got = {r["event_id"]: r["session_no"] for r in session_numbers(df).collect()}
 
     # Sequential evaluator.
     want = {}

@@ -47,6 +47,32 @@ def test_generic_indexer_matches_native(spark, sf_dir, corpus, strategy):
     assert generic == native
 
 
+@pytest.mark.parametrize("strategy", ["rdd", "pandas"])
+def test_generic_hooks_split_numerals_like_native(spark, sf_dir, tmp_path, strategy):
+    """Nl/No numerals (superscripts, vulgar fractions, Roman numerals) are
+    not letters: the native plans' ``\\p{L}`` splits ``x²`` to ``x``, and
+    the Python hooks must split it the same way."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet").slice(0, 2)
+    i = docs.schema.get_field_index("text")
+    texts = pa.array(["x² ⅫIV ½b", "x²y Ⅻ ab½"], docs.schema.field(i).type)
+    pq.write_table(docs.set_column(i, docs.schema.field(i), texts), f"{tmp_path}/documents.parquet")
+    corpus = corpus_from_documents(spark, str(tmp_path))
+
+    wc = kv_dict(mr.map_reduce(spark, corpus, mr.wc_map, mr.wc_reduce, strategy=strategy))
+    assert wc == {"x": "2", "IV": "1", "b": "1", "y": "1", "ab": "1"}
+    assert wc == {r["word"]: str(r["cnt"]) for r in wordcount(spark, str(tmp_path)).collect()}
+    indexer = kv_dict(
+        mr.map_reduce(spark, corpus, mr.indexer_map, mr.indexer_reduce, strategy=strategy)
+    )
+    assert indexer == {
+        r["word"]: f"{r['doc_count']} {r['docs']}"
+        for r in inverted_index(spark, str(tmp_path)).collect()
+    }
+
+
 def test_generic_crash_dataflow(spark, corpus):
     """A7 dataflow through the generic engine: 4 keys, sorted joined values."""
     out = kv_dict(mr.map_reduce(spark, corpus, mr.crash_map, mr.crash_reduce))

@@ -114,7 +114,8 @@ def test_late_data_dropped_by_watermark(spark, tmp_path):
 
     # Append mode with watermark 12:50 finalizes the 10:00 window.
     first = run_once()
-    assert (1704103200, "click", 1) in first  # 10:00 UTC window emitted
+    # Rows: (window_start, event_type, n_events, sum_value).
+    assert (1704103200, "click", 1, 1.0) in first  # 10:00 UTC window emitted
 
     # Batch 2: a late event at 10:30 (far behind watermark) then a fresh
     # event advancing time; the late event must not resurrect the window.
@@ -125,8 +126,8 @@ def test_late_data_dropped_by_watermark(spark, tmp_path):
     emitted = run_once()
     # 13:00 window finalized with count 1 — the late 10:30 event was
     # discarded, and the 10:00 window was not re-emitted or updated.
-    assert (1704114000, "click", 1) in emitted
-    assert (1704103200, "click", 1) in emitted  # from run 1, unchanged
+    assert (1704114000, "click", 1, 1.0) in emitted
+    assert (1704103200, "click", 1, 1.0) in emitted  # from run 1, unchanged
     assert not any(r[0] == 1704103200 and r[2] != 1 for r in emitted)
 
 
@@ -154,29 +155,6 @@ def test_stream_dedup_drops_redelivered_events(spark, sf_dir, tmp_path):
     assert len(got) == got["event_id"].nunique()
     n_distinct = _batch_events(spark, src).select("event_id").distinct().count()
     assert len(got) == n_distinct
-
-
-def test_stream_stream_interval_join_equals_batch(spark, event_source):
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    stream = windows.read_event_stream(spark, event_source)
-    q = (
-        windows.click_purchase_interval_join(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {tuple(r) for r in spark.table(name).collect()}
-    want = {
-        tuple(r)
-        for r in windows.click_purchase_interval_join(
-            _batch_events(spark, event_source)
-        ).collect()
-    }
-    assert got == want
-    assert len(want) > 0
 
 
 def test_foreachbatch_sink_idempotent_and_restart_safe(spark, sf_dir, tmp_path):
@@ -349,18 +327,20 @@ def test_streaming_cms_sketch_equals_batch(spark, sf_dir, tmp_path):
     assert len(got) <= 4 * 512  # state bounded by the sketch dimensions
 
 
-def test_stream_stream_outer_interval_join_equals_batch(spark, event_source, tmp_path):
-    """LEFT OUTER stream-stream interval join: unmatched purchases must
-    surface with NULL click columns once the watermark closes, and the
-    drained result must equal the batch left join — including the NULL
-    rows, which is the part append-mode inner joins never exercise.
+@pytest.mark.parametrize("how", ["inner", "left_outer", "full_outer"])
+def test_stream_stream_interval_join_equals_batch(spark, event_source, tmp_path, how):
+    """Stream-stream interval join of purchases with their preceding
+    clicks: the drained stream must equal the batch join, including the
+    outer joins' NULL rows — purchases with NULL click columns (left and
+    full outer) and orphan clicks with NULL purchase columns (full
+    outer), the part append-mode inner joins never exercise.
 
-    Outer-join NULLs only emit once the global watermark passes the
-    purchase, so the source carries a FLUSH SENTINEL (one click + one
-    purchase, far past the real data) that drags the watermark beyond
-    every genuine event — the standard drain pattern for outer
-    stream-stream joins; without it the last watermark-window of
-    purchases would stay buffered at availableNow shutdown."""
+    Outer-join NULLs only emit once the global watermark passes the row,
+    so the source carries a FLUSH SENTINEL (one click + one purchase, far
+    past the real data) that drags the watermark beyond every genuine
+    event — the standard drain pattern for outer stream-stream joins;
+    without it the last watermark-window of rows would stay buffered at
+    availableNow shutdown."""
     import pyspark.sql.functions as F
 
     src = str(tmp_path / "events_flush_src")
@@ -376,10 +356,10 @@ def test_stream_stream_outer_interval_join_equals_batch(spark, event_source, tmp
     ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
     sentinel.write.mode("append").parquet(src)
 
-    name = f"soj_{uuid.uuid4().hex[:8]}"
+    name = f"ssj_{uuid.uuid4().hex[:8]}"
     stream = windows.read_event_stream(spark, src)
     q = (
-        windows.purchase_click_outer_join(stream)
+        windows.purchase_click_join(stream, how)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
@@ -390,66 +370,19 @@ def test_stream_stream_outer_interval_join_equals_batch(spark, event_source, tmp
     got = {tuple(r) for r in spark.table(name).collect() if r.user_id != -1}
     want = {
         tuple(r)
-        for r in windows.purchase_click_outer_join(
-            spark.read.schema(windows.EVENTS_SCHEMA).parquet(src)
+        for r in windows.purchase_click_join(
+            spark.read.schema(windows.EVENTS_SCHEMA).parquet(src), how
         ).collect()
         if r.user_id != -1
     }
     assert got == want
-    null_rows = {t for t in want if t[3] is None}
-    assert null_rows, "fixture must contain unattributed purchases"
-    assert null_rows <= got
-
-
-def test_stream_stream_full_outer_interval_join_equals_batch(
-    spark, event_source, tmp_path
-):
-    """FULL OUTER stream-stream interval join: BOTH sides' unmatched rows
-    must surface — purchases with NULL click columns and orphan clicks
-    with NULL purchase columns — and the drained set must equal the
-    batch full join exactly. Same flush-sentinel drain as the left-outer
-    test: two-sided NULL emission trails the global watermark on both
-    inputs."""
-    import pyspark.sql.functions as F
-
-    src = str(tmp_path / "events_fo_src")
-    base = spark.read.schema(windows.EVENTS_SCHEMA).parquet(event_source)
-    base.write.mode("overwrite").parquet(src)
-    far = base.agg(F.max("ts")).first()[0]
-    sentinel = spark.createDataFrame(
-        [
-            (-1, far, -1, "click", 0.0, "{}"),
-            (-2, far, -1, "purchase", 0.0, "{}"),
-        ],
-        windows.EVENTS_SCHEMA,
-    ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
-    sentinel.write.mode("append").parquet(src)
-
-    name = f"foj_{uuid.uuid4().hex[:8]}"
-    stream = windows.read_event_stream(spark, src)
-    q = (
-        windows.purchase_click_full_outer_join(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {tuple(r) for r in spark.table(name).collect() if r.user_id != -1}
-    want = {
-        tuple(r)
-        for r in windows.purchase_click_full_outer_join(
-            spark.read.schema(windows.EVENTS_SCHEMA).parquet(src)
-        ).collect()
-        if r.user_id != -1
-    }
-    assert got == want
+    # Rows: (purchase_id, click_id, user_id, purchase_epoch, click_epoch).
+    matched = {t for t in want if None not in (t[0], t[1])}
     null_click = {t for t in want if t[1] is None}
     null_purchase = {t for t in want if t[0] is None}
-    assert null_click, "fixture must contain unattributed purchases"
-    assert null_purchase, "fixture must contain orphan clicks"
-    assert null_click <= got and null_purchase <= got
+    assert matched, "fixture must contain attributed purchases"
+    assert bool(null_click) == (how != "inner"), "unattributed purchases"
+    assert bool(null_purchase) == (how == "full_outer"), "orphan clicks"
 
 
 def test_microbatch_pacing_with_max_files_per_trigger(spark, event_source):
@@ -526,7 +459,7 @@ def test_tws_session_timers_equal_batch_sessionization(spark, sf_dir, tmp_path):
         pytest.skip("no protobuf runtime for transformWithStateInPandas")
 
     src = str(tmp_path / "sess_src")
-    ev = load_table(spark, sf_dir, "events").select("user_id", "ts").limit(2000)
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts").limit(2000)
     ev.repartition(3).write.mode("overwrite").parquet(src)
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
 
@@ -572,22 +505,13 @@ def test_tws_session_timers_equal_batch_sessionization(spark, sf_dir, tmp_path):
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
 
-    # Batch truth: gaps-and-islands with the same >= gap boundary rule.
-    from map_reduce_go_spark.plans.events import SESSION_GAP_SEC
-    from pyspark.sql import Window
+    # Batch truth: the batch sessions of plans/events.py.
+    from map_reduce_go_spark.plans.events import session_numbers
 
-    w = Window.partitionBy("user_id").orderBy("ts")
-    flag = F.when(
-        F.lag("ts").over(w).isNull()
-        | (F.col("ts") >= F.lag("ts").over(w) + F.expr(f"INTERVAL {SESSION_GAP_SEC} SECOND")),
-        1,
-    ).otherwise(0)
-    islands = ev.withColumn(
-        "sid", F.sum(flag).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
+    islands = session_numbers(ev)
     want = {
         (r.user_id, r.s, r.e, r.n)
-        for r in islands.groupBy("user_id", "sid")
+        for r in islands.groupBy("user_id", "session_no")
         .agg(
             F.unix_timestamp(F.min("ts")).alias("s"),
             F.unix_timestamp(F.max("ts")).alias("e"),
