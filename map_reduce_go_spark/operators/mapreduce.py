@@ -30,12 +30,21 @@ Two execution strategies:
   reduce task: AQE splits skew only in joins and rebalances. Data moves
   Python-side in columnar batches instead of pickled rows.
 
+Either way the result is laid out as its reduce tasks: partition *i* holds
+bucket *i*, one row per key. :func:`write_text_kv` writes such a result
+as it stands, so each reduce task writes its own ``part-i`` file, like the
+reference's ``mr-out-X`` (src/mr/worker.go:138-165); in the ``pandas``
+strategy its keys come in sorted order. Any other frame, a derived one
+(``select``, ``filter``, ``cache``) or a different file count, is shuffled
+by key once more before the write.
+
 Prefer the native DataFrame queries in :mod:`.mrapps` whenever semantics
 allow; this module exists for arbitrary user hooks.
 """
 
 from __future__ import annotations
 
+import weakref
 from collections.abc import Callable, Iterable
 from itertools import groupby
 from operator import itemgetter
@@ -52,6 +61,9 @@ ReduceFn = Callable[[str, list[str]], str]
 KV_SCHEMA = StructType(
     [StructField("key", StringType(), False), StructField("value", StringType(), True)]
 )
+
+# map_reduce result -> its n_reduce: the frames partitioned by key already.
+_reduce_buckets: weakref.WeakKeyDictionary[DataFrame, int] = weakref.WeakKeyDictionary()
 
 
 def _as_corpus(spark: SparkSession, inputs) -> DataFrame:
@@ -84,8 +96,8 @@ def map_reduce(
             .groupByKey(numPartitions=n_reduce)
             .map(lambda kv: (kv[0], reduce_fn(kv[0], list(kv[1]))))
         )
-        return spark.createDataFrame(reduced, KV_SCHEMA)
-    if strategy == "pandas":
+        out = spark.createDataFrame(reduced, KV_SCHEMA)
+    elif strategy == "pandas":
         import pandas as pd
 
         def map_partition(batches):
@@ -117,12 +129,15 @@ def map_reduce(
                 )
 
         kv = corpus.mapInPandas(map_partition, schema=KV_SCHEMA)
-        return (
+        out = (
             kv.repartition(n_reduce, "key")
             .sortWithinPartitions("key")
             .mapInPandas(reduce_partition, schema=KV_SCHEMA)
         )
-    raise ValueError(f"unknown strategy {strategy!r}")
+    else:
+        raise ValueError(f"unknown strategy {strategy!r}")
+    _reduce_buckets[out] = n_reduce
+    return out
 
 
 def write_text_kv(df: DataFrame, path: str, n_partitions: int | None = None) -> None:
@@ -130,12 +145,18 @@ def write_text_kv(df: DataFrame, path: str, n_partitions: int | None = None) -> 
     format (src/mr/worker.go:161). ``n_partitions`` mirrors nReduce file
     layout (mr-out-0..N-1); Spark's FileOutputCommitter provides the
     atomic-rename commit the reference hand-rolls (src/mr/worker.go:99,165).
+
+    A :func:`map_reduce` result, unchanged and not cached, with ``n_reduce
+    == n_partitions`` is written as it stands: its reduce tasks write the
+    files. Anything else is first shuffled by key.
     """
     # Partition by KEY, mirroring the reference's ihash(key) % nReduce
     # file assignment (src/mr/worker.go:75): all lines for one key land in
     # one mr-out-N file. Partitioning by the concatenated line would split
     # a key across files whenever values differ.
-    if n_partitions is not None:
+    if n_partitions is not None and (
+        _reduce_buckets.get(df) != n_partitions or df.is_cached
+    ):
         df = df.repartition(n_partitions, F.col("key"))
     out = df.select(F.concat_ws(" ", F.col("key"), F.col("value")).alias("value"))
     out.write.mode("overwrite").text(path)

@@ -115,7 +115,8 @@ def register(name: str, *, oracle: str):
 def driver_window(names: Iterable[str], rows: Mapping, jump: Mapping[str, int]) -> list[str]:
     """The first ``WINDOW`` of ``names`` (in registration order) by driver
     priority, from ``rows`` (round -> query -> driver row) and ``jump``:
-    no green latest row, then pending jumpers, then oldest latest round."""
+    no green latest row, then pending jumpers, then oldest latest round.
+    Jumpers, too, go oldest latest round first."""
     latest = {name: rnd for rnd in sorted(rows) for name in rows[rnd]}
 
     def group(name: str) -> tuple[int, int]:
@@ -124,7 +125,7 @@ def driver_window(names: Iterable[str], rows: Mapping, jump: Mapping[str, int]) 
         green = all(row.get(c) for c in ("rows_match", "schema_match", "hash_match"))
         if not green or row.get("err") is not None:
             return (0, 0)
-        return (1, 0) if name in jump and rnd <= jump[name] else (2, rnd)
+        return (1, rnd) if name in jump and rnd <= jump[name] else (2, rnd)
 
     return sorted(names, key=group)[:WINDOW]  # stable: ties keep registration order
 

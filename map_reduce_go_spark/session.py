@@ -21,12 +21,26 @@ imported from it (14 or more re-reads per task on CPython below 3.13). The daemo
 package, so :func:`get_spark` appends the package root to ``PYTHONPATH``
 before the JVM starts; workers then import the engine from any working
 directory.
+
+Python workers talk to the JVM over Unix domain sockets
+(``spark.python.unix.domain.socket.enabled``), Spark's own transport for
+the worker daemon, its workers and the driver's accumulator server. Over
+loopback TCP every task's last read (the JVM's end-of-stream marker) blocked
+20-48 ms on a 4-vCPU VM, the Nagle-plus-delayed-ACK stall; over a Unix socket
+it takes under 1 ms, which cut a trivial 10-task RDD ``map`` stage from 510
+to 184 ms of task time. A socket path is ``<dir>/.<uuid>.sock``, the
+directory plus 43 bytes, and ``sun_path`` holds at most 107: the sockets go
+in the temp directory when that fits, else in ``/tmp`` (the JVM's default
+``java.io.tmpdir``). There is no TCP fallback.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import sys
+import tempfile
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -104,6 +118,18 @@ def _append_to_pythonpath(path: str) -> None:
         os.environ["PYTHONPATH"] = os.pathsep.join([*entries, path])
 
 
+_SUN_PATH_MAX = 107  # bytes of a socket path, less sun_path's trailing NUL
+_SOCKET_NAME = len(f"/.{uuid.UUID(int=0)}.sock")  # what Spark appends to the dir
+
+
+def unix_socket_dir() -> str:
+    """The directory for the Python workers' Unix domain sockets: the temp
+    directory when a socket path under it fits in ``sun_path``, else
+    ``/tmp``."""
+    tmp = tempfile.gettempdir()
+    return tmp if len(os.fsencode(tmp)) + _SOCKET_NAME <= _SUN_PATH_MAX else "/tmp"
+
+
 def get_spark(
     app_name: str = "map_reduce_go_spark",
     master: str | None = None,
@@ -148,7 +174,21 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "map_reduce_go_spark.pyworker")
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", unix_socket_dir())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Registered after the JVM launch, so it runs before pyspark's exit
+    # hook kills the JVM: a session still running at exit would leave its
+    # daemon's and accumulator server's socket files behind.
+    atexit.unregister(_stop_active_session)
+    atexit.register(_stop_active_session)
+    return spark
+
+
+def _stop_active_session() -> None:
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        spark.stop()

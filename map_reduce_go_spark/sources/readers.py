@@ -190,8 +190,12 @@ def read_wholetext(spark: SparkSession, paths: list[str] | str) -> DataFrame:
 
     Mirrors the reference map-task input contract (one record per file,
     entire contents as one string — reference src/mr/worker.go:59-71) while
-    remaining fully distributed: each file is one input partition, exactly
-    the reference's map granularity (src/mr/coordinator.go:146-150).
+    remaining fully distributed. A file is never split, but it is not one
+    partition either, as a reference map task is (src/mr/coordinator.go:146-150):
+    Spark packs small files into one input partition up to
+    ``spark.sql.files.maxPartitionBytes``, counting
+    ``spark.sql.files.openCostInBytes`` per file, so 16 small files can
+    scan as 4 map tasks.
     """
     df = spark.read.format("text").option("wholetext", "true").load(paths)
     return df.select(

@@ -6,6 +6,15 @@ cd "$(dirname "$0")/.."
 echo "== pytest =="
 python -m pytest tests/ -q
 python -m pytest perfbench/tests -q
+echo "== Python workers, accumulators and streaming runners under a 100+ character TMPDIR =="
+# No Unix socket path fits under this temp dir: session.unix_socket_dir
+# falls back to /tmp.
+long_root="$(mktemp -d)"
+long_tmp="$long_root/$(printf 'd%.0s' {1..100})"
+mkdir "$long_tmp"
+TMPDIR="$long_tmp" python -m pytest tests/test_pyworker.py tests/test_mapreduce_generic.py \
+    tests/test_streaming.py -q
+rm -rf "$long_root"
 echo "== oracle verify sf0.01 =="
 python scripts/verify_driver.py
 echo "== oracle verify sf0.1 =="

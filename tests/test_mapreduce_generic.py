@@ -166,6 +166,72 @@ def test_text_sink_co_partitions_by_key(spark, tmp_path):
     assert key_files and all(len(fs) == 1 for fs in key_files.values()), key_files
 
 
+_SINK_DOCS = [(f"d{i}", " ".join(["ant", "bee", "cat", "dog", "elk"][: i % 5 + 1] * (i + 1)))
+              for i in range(12)]
+
+
+def _sink_run(spark, tmp_path, strategy, n_partitions, derive=lambda df: df):
+    """``write_text_kv(derive(map_reduce(n_reduce=4)), n_partitions)`` as one
+    bench.run_query record; returns (record, part file name -> lines)."""
+    from bench import run_query
+
+    corpus = spark.createDataFrame(_SINK_DOCS, "filename string, contents string")
+    out = str(tmp_path / f"{strategy}-{n_partitions}")
+
+    def build(spark, _):
+        return derive(mr.map_reduce(spark, corpus, mr.wc_map, mr.wc_reduce, 4, strategy))
+
+    def sink(df):
+        mr.write_text_kv(df, out, n_partitions=n_partitions)
+
+    rec = run_query(spark, "text_sink", build, None, cold=True, sink=sink)
+    assert "error" not in rec, rec
+    files = {}
+    for name in sorted(os.listdir(out)):
+        if name.startswith("part-"):
+            with open(os.path.join(out, name)) as fh:
+                files[name] = fh.read().splitlines()
+    return rec, files
+
+
+@pytest.mark.parametrize("strategy", ["rdd", "pandas"])
+def test_reduce_tasks_write_their_own_files(spark, tmp_path, strategy):
+    """A map_reduce result written with n_partitions == n_reduce is not
+    shuffled again: map stage, reduce-and-write stage. In the pandas
+    strategy part-0000i holds bucket i, pmod(hash(key), 4) == i, its keys
+    sorted like the reference's mr-out-X."""
+    rec, files = _sink_run(spark, tmp_path, strategy, 4)
+    assert rec["stages"] == 2
+    want = sequential_map_reduce(_SINK_DOCS, mr.wc_map, mr.wc_reduce)
+    assert sorted(line for lines in files.values() for line in lines) == sorted(
+        f"{k} {v}" for k, v in want.items()
+    )
+    if strategy == "pandas":
+        keys = {name: [line.split(" ", 1)[0] for line in lines] for name, lines in files.items()}
+        bucket = {
+            r["key"]: r["b"]
+            for r in spark.createDataFrame([(k,) for k in want], "key string")
+            .selectExpr("key", "pmod(hash(key), 4) AS b")
+            .collect()
+        }
+        for name, ks in keys.items():
+            assert ks == sorted(ks)
+            assert {bucket[k] for k in ks} == {int(name[len("part-"):][:5])}
+
+
+@pytest.mark.parametrize("strategy", ["rdd", "pandas"])
+@pytest.mark.parametrize(
+    "n_partitions, derive",
+    [(4, lambda df: df.filter(df.key != "bee")), (3, lambda df: df)],
+    ids=["filtered", "three_files"],
+)
+def test_other_frames_are_shuffled_by_key_first(spark, tmp_path, strategy, n_partitions, derive):
+    rec, files = _sink_run(spark, tmp_path, strategy, n_partitions, derive)
+    assert rec["stages"] == 3
+    keys = [line.split(" ", 1)[0] for lines in files.values() for line in lines]
+    assert len(keys) == len(set(keys)) and keys  # every key in one file
+
+
 def test_map_parallelism_probe(spark):
     """A3/A4 analog: the scheduler really runs tasks in parallel."""
     assert spark.sparkContext.defaultParallelism >= 2

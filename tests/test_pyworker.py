@@ -1,10 +1,11 @@
 """The worker bootstrap (map_reduce_go_spark.pyworker): its zip-import
 guard in-process, without Spark, and its presence in the session's Python
-workers."""
+workers; and the workers' Unix-domain-socket transport."""
 
 import importlib
 import os
 import sys
+import tempfile
 import zipfile
 import zipimport
 
@@ -12,6 +13,7 @@ import pandas as pd
 import pytest
 
 from map_reduce_go_spark import pyworker
+from map_reduce_go_spark.session import unix_socket_dir
 
 
 def _write_zip(path, files: dict[str, str]) -> None:
@@ -116,3 +118,42 @@ def test_get_spark_puts_the_package_on_the_workers_path(spark):
     it whatever the working directory."""
     root = os.path.dirname(os.path.dirname(pyworker.__file__))
     assert root in os.environ["PYTHONPATH"].split(os.pathsep)
+
+
+def test_workers_talk_over_unix_sockets(spark):
+    """The JVM passes ``True``; pyspark.daemon reads it case-insensitively."""
+
+    def transport(_):
+        import os
+
+        return [os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED", "").lower()]
+
+    assert spark.sparkContext.parallelize([0], 1).flatMap(transport).collect() == ["true"]
+
+
+@pytest.mark.parametrize("length, kept", [(8, True), (64, True), (65, False), (120, False)])
+def test_socket_dir_is_the_temp_dir_while_a_socket_path_fits(monkeypatch, length, kept):
+    """<dir>/.<uuid>.sock is the dir plus 43 bytes; sun_path holds 107."""
+    tmp = "/" + "t" * (length - 1)
+    monkeypatch.setattr(tempfile, "tempdir", tmp)
+    assert unix_socket_dir() == (tmp if kept else "/tmp")
+
+
+def test_a_session_left_running_at_exit_leaves_no_socket_files(tmp_path):
+    """get_spark stops the session at interpreter exit; the daemon and the
+    accumulator server remove their socket files on stop."""
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(pyworker.__file__))
+    script = (
+        f"import sys; sys.path.insert(0, {root!r})\n"
+        "from map_reduce_go_spark import get_spark\n"
+        "sc = get_spark(master='local[1]').sparkContext\n"
+        "acc = sc.accumulator(0)\n"
+        "sc.parallelize([1, 2], 1).foreach(lambda x: acc.add(x))\n"
+        "assert acc.value == 3\n"
+    )
+    env = {**os.environ, "TMPDIR": str(tmp_path), "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    subprocess.run([sys.executable, "-c", script], env=env, check=True, timeout=300,
+                   capture_output=True)
+    assert not list(tmp_path.glob(".*.sock"))

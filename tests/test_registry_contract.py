@@ -60,6 +60,15 @@ def test_jump_entry_is_dropped_once_a_newer_round_has_its_row():
     assert "q59" not in driver_window(names, rows, {"q59": 2})
 
 
+def test_jumpers_go_oldest_latest_round_first():
+    """More pending jumpers than slots: the ones whose latest row is oldest
+    get in; within one round, registration order decides."""
+    names = [f"q{i}" for i in range(70)]
+    rows = {12: {n: GREEN for n in names[60:]}, 16: {n: GREEN for n in names[:60]}}
+    window = driver_window(names, rows, dict.fromkeys(names, 17))
+    assert window == names[60:] + names[:40]
+
+
 def test_window_ties_keep_registration_order():
     names = [f"q{i}" for i in range(70)]
     rows = {10: {n: GREEN for n in names[1::2]}, 9: {n: GREEN for n in names[::2]}}
