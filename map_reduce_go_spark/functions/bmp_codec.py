@@ -1,23 +1,21 @@
 """Minimal pure-Python BMP codec (encode + decode), stdlib-only.
 
-The third REAL container behind the multimodal quarantine dispatch
-(VERDICT r11 #7): PNG and WAV were the two formats the dispatch was
-built with, and a format seam proven on exactly the formats it was
-shaped around proves little — BMP (Windows DIB, a public format) is
-deliberately different in every structural way: little-endian where PNG
-is big-endian, palette-indexed where PNG carries raw samples, bottom-up
-row order, 4-byte row padding, and no compression or checksums at all.
+An image container of the multimodal decoder table
+(``operators/multimodal.py::decode_blob``). BMP (Windows DIB, a public
+format) differs from PNG in every structural way: little-endian where
+PNG is big-endian, palette-indexed where PNG carries raw samples,
+bottom-up row order, 4-byte row padding, and no checksums.
 
 Scope — exactly enough to execute real bytes:
 
 - ``encode_bmp``: 8-bit grayscale (H, W) uint8 array as an uncompressed
-  BI_RGB DIB with a 256-entry linear gray palette, or (late r13) an
+  BI_RGB DIB with a 256-entry linear gray palette, or an
   (H, W, 3) uint8 RGB array as a 24-bit BI_RGB DIB (BGR byte order, no
   palette); both open in any viewer.
 - ``decode_bmp``: the inverse — 8-bit palette or 24-bit true-color
   uncompressed BI_RGB, validating the structural fields it depends on.
 
-Late r13 also decodes top-down (negative-height) images and BI_RLE8
+It also decodes top-down (negative-height) images and BI_RLE8
 run-length compression (runs, end-of-line/bitmap escapes, deltas,
 word-aligned absolute mode — skipped pixels decode as 0 per spec);
 ``encode_bmp_rle8`` emits the compressed form so fixtures are
@@ -50,8 +48,8 @@ _INFO_HEADER_SIZES = frozenset({40, 52, 56, 108, 124})
 def is_bmp(raw: bytes) -> bool:
     """Sniff a BMP container. 'BM' alone is 2 ASCII bytes — far weaker
     than PNG's 8-byte or WAV's 12-byte magic, and a text blob starting
-    with 'BM' would misroute into decode_bmp and read as corrupt_data
-    (ADVICE r12). Require a full header's worth of bytes and a
+    with 'BM' would misroute into decode_bmp and read as corrupt_data.
+    Require a full header's worth of bytes and a
     plausible little-endian DIB header size at offset 14; ASCII text at
     that offset decodes to a huge u32, never a known header size."""
     if len(raw) < _FILE_HEADER_LEN + 12 or raw[:2] != b"BM":
@@ -140,7 +138,7 @@ def encode_bmp_rle8(img: np.ndarray) -> bytes:
 
 def decode_bmp(raw: bytes) -> np.ndarray:
     """Decode an uncompressed BMP: 8-bit palette to an (H, W) uint8
-    array, 24-bit true-color to (H, W, 3) uint8 RGB (late r13).
+    array, 24-bit true-color to (H, W, 3) uint8 RGB.
 
     ValueError for malformed/truncated bytes (quarantine class
     ``corrupt_data``); NotImplementedError for well-formed files using
@@ -149,8 +147,7 @@ def decode_bmp(raw: bytes) -> np.ndarray:
         raise ValueError("not a BMP: missing BM signature or DIB header")
     # Classify the DIB header family BEFORE parsing INFO-layout fields:
     # BITMAPCOREHEADER (12) and the OS/2 v2 sizes are well-formed files
-    # using an unimplemented header variant, not corruption (VERDICT r12
-    # #6 — was ValueError/corrupt_data, wrongly).
+    # using an unimplemented header variant, not corruption.
     (hdr_size,) = struct.unpack_from("<I", raw, _FILE_HEADER_LEN)
     if hdr_size in _CORE_HEADER_SIZES:
         raise NotImplementedError(
@@ -185,7 +182,7 @@ def decode_bmp(raw: bytes) -> np.ndarray:
         raise ValueError("pixel offset inside headers")
     top_down = h < 0
     h = abs(h)
-    if compression == 1:  # BI_RLE8 (late r13)
+    if compression == 1:  # BI_RLE8
         if bpp != 8:
             raise ValueError("BI_RLE8 requires 8 bits/pixel")
         if top_down:
@@ -220,8 +217,7 @@ def decode_bmp(raw: bytes) -> np.ndarray:
 #: Hard RLE8 grid-allocation budget: 64 MiB of uint8 pixels. Any real
 #: BI_RLE8 image sits far below this; a crafted header claiming more is
 #: rejected before np.zeros. Spec-valid skip-heavy encodings (delta
-#: skips / early EOB over mostly-blank images) stay decodable (ADVICE
-#: r14 — the old 255*stream_len proportion gate reclassified them).
+#: skips / early EOB over mostly-blank images) stay decodable.
 _RLE8_MAX_PIXELS = 64 * 1024 * 1024
 
 
@@ -233,7 +229,7 @@ def _decode_rle8(raw: bytes, offset: int, h: int, w: int) -> np.ndarray:
     Overruns of the pixel grid or the byte stream raise ValueError
     (corrupt_data).
 
-    Allocation guard (ADVICE r13, re-gated per ADVICE r14): the grid is
+    Allocation guard: the grid is
     sized from header-claimed dimensions, so a ~1 KiB crafted blob
     claiming 2^20 x 2^20 would otherwise trigger a 1 TiB np.zeros before
     a single stream byte is read — defeating the quarantine path's

@@ -1,10 +1,9 @@
 """Minimal pure-Python baseline JPEG codec (encode + decode), stdlib+numpy.
 
-The FOURTH real container behind the multimodal quarantine dispatch
-(VERDICT r12 #5): JPEG is the single most common image container in any
-real crawl, and it was the largest remaining honest seam
-(multimodal.py's decode_image raised NotImplementedError for it). This
-module implements exactly the baseline-sequential slice of the public
+An image container of the multimodal decoder table
+(``operators/multimodal.py::decode_blob``): JPEG is the single most
+common image container in any real crawl. This module implements the
+baseline-sequential slice of the public
 ITU-T T.81 spec — Huffman entropy coding, dequantization, 8x8 inverse
 DCT — for 8-bit single-component (grayscale) JFIF files, plus the
 matching encoder so fixtures are self-contained spec-conformant bytes.
@@ -13,8 +12,8 @@ Everything here is public knowledge: marker structure, zigzag order,
 the Annex K example Huffman tables, and the type-II DCT definition all
 come from the published JPEG standard (ITU-T T.81 / ISO 10918-1).
 
-Structurally unlike the other three containers on purpose — the seam is
-proven format-general only if each container stresses a different shape:
+Structurally unlike the other three containers, so the decoder table is
+exercised on four different shapes:
 
 - PNG: big-endian chunks, zlib DEFLATE, per-chunk CRC
 - WAV: little-endian RIFF, raw PCM, no compression
@@ -42,7 +41,7 @@ implemented: the encoder can emit them (``restart_interval=``), the
 decoder byte-aligns at each boundary, checks the cyclic marker number,
 and resets the DC predictor.
 
-Progressive (SOF2) is implemented as of late r13, both directions:
+Progressive (SOF2) is implemented in both directions:
 the encoder emits a spectral-selection + successive-approximation
 progression (interleaved DC first, banded AC first scans, AC and DC
 refinements), and the decoder runs the general multi-scan model — a
@@ -339,7 +338,7 @@ def encode_jpeg(
     many MCUs, resetting DC prediction — the error-resilience /
     parallel-decode unit real encoders produce.
 
-    Color (r13): RGB converts to JFIF YCbCr; ``subsampling`` picks the
+    Color: RGB converts to JFIF YCbCr; ``subsampling`` picks the
     luma sampling factors — "444" (no subsampling), "422" (chroma
     halved horizontally), "420" (halved both ways, the near-universal
     camera/web default); chroma downsamples by box mean and carries its
@@ -347,7 +346,7 @@ def encode_jpeg(
     chrominance Huffman tables. MCUs interleave Hy*Vy luma blocks + Cb +
     Cr exactly per the spec's interleaved-scan order.
 
-    Progressive (r13): ``progressive=True`` emits SOF2 with a
+    Progressive: ``progressive=True`` emits SOF2 with a
     spectral-selection + one-level successive-approximation progression
     (interleaved DC first at Al=1, banded single-component AC first
     scans at Al=1, the matching AC refinements to Al=0, then the DC
@@ -510,7 +509,7 @@ def encode_jpeg(
 
 
 # --------------------------------------------------------------------------
-# Progressive encoder (r13): spectral selection + successive approximation
+# Progressive encoder: spectral selection + successive approximation
 # --------------------------------------------------------------------------
 
 
@@ -960,7 +959,7 @@ def decode_jpeg(raw: bytes) -> np.ndarray:
             if not progressive and 1 < ns < len(comps):
                 # Subset-interleaved scans change the MCU geometry to the
                 # subset's sampling factors — a corner real encoders do
-                # not emit; ns==1 (non-interleaved, late r13) and
+                # not emit; ns==1 (non-interleaved) and
                 # ns==ncomp (fully interleaved) are both supported.
                 raise NotImplementedError(
                     "subset-interleaved baseline scans not implemented"

@@ -1,10 +1,10 @@
 """Minimal pure-Python PNG codec (encode + decode) on stdlib zlib.
 
-The container ships no image libraries (PIL/imageio), but PNG is a public
-format (RFC 2083 / ISO 15948) whose only heavy dependency is DEFLATE —
-which the Python stdlib provides. This module implements exactly enough
-of it to make the multimodal operators' ``decode_mode="real"`` branches
-EXECUTE on real, spec-conformant image bytes:
+PNG is a public format (RFC 2083 / ISO 15948) whose only heavy
+dependency is DEFLATE, which the Python stdlib provides. This module
+implements enough of it for the multimodal decoder table
+(``operators/multimodal.py::decode_blob``) to decode real,
+spec-conformant image bytes:
 
 - ``encode_png``: 8-bit grayscale (color type 0) or RGB (color type 2),
   filter type 0 (None) per scanline — the simplest valid encoder; its
@@ -13,22 +13,19 @@ EXECUTE on real, spec-conformant image bytes:
   palette-indexed (3, PLTE lookup -> RGB), grayscale+alpha (4), and
   RGBA (6) — with ALL five scanline filters (None/Sub/Up/Average/
   Paeth), so it also decodes PNGs produced by real encoders that
-  choose per-row filters and color models, not just our own — and,
-  late r13, Adam7 INTERLACED images (seven sub-image passes, each
-  filtered independently, scattered back on the pass grid), the other
-  layout real web encoders emit. ``encode_png(interlaced=True)`` and
+  choose per-row filters and color models, not just our own — and
+  Adam7 INTERLACED images (seven sub-image passes, each filtered
+  independently, scattered back on the pass grid), the other layout
+  real web encoders emit. ``encode_png(interlaced=True)`` and
   ``encode_png_palette`` emit the same so fixtures are self-contained.
 
 Deliberately out of scope (NotImplementedError — the well-formed-but-
 unimplemented class, routed to quarantine ``unsupported_format`` like
-the BMP/JPEG/WAV codecs' seams): bit depths other than 8, tRNS
+the BMP/JPEG/WAV codecs' seams): bit depths other than 8, and tRNS
 transparency on every color type that may carry it (palette indices
-AND grayscale/truecolor keys — ADVICE r13 closed the inconsistency
-where non-palette keys were silently dropped; tRNS on the alpha color
-types 4/6 is spec-forbidden and stays ValueError). Structural damage
-stays ValueError
-(``corrupt_data``). Perceptual audio/video stay NotImplementedError in
-the operators: those genuinely require external libraries.
+and grayscale/truecolor keys alike; tRNS on the alpha color types 4/6
+is spec-forbidden and raises ValueError). Structural damage raises
+ValueError (``corrupt_data``).
 """
 
 from __future__ import annotations
@@ -280,11 +277,8 @@ def decode_png(data: bytes) -> np.ndarray:
         if plte is None:
             raise ValueError("palette image missing PLTE chunk")
     if trns:
-        # ADVICE r13: the transparency chunk was previously honest only
-        # over palettes (NotImplementedError) while being silently
-        # DROPPED for grayscale/truecolor keys — inconsistent with the
-        # seam discipline. Well-formed-but-unimplemented -> unsupported;
-        # spec-forbidden (color types with a real alpha channel shall
+        # Never silently dropped: well-formed-but-unimplemented ->
+        # unsupported; spec-forbidden (color types with a real alpha channel shall
         # not carry tRNS, PNG spec 11.3.2.1) -> corrupt.
         if color_type in (4, 6):
             raise ValueError("tRNS forbidden for alpha color types")

@@ -1,10 +1,9 @@
 """Pure-Python RIFF/WAVE codec: PCM16, G.711 u-law/A-law, IMA ADPCM.
 
-Closes the multimodal AUDIO decode seam the same way functions/png_codec.py
-closed the image seam — and, as of r13, closes the NON-PCM half of it:
-the container ships no audio libraries, but the three compressed formats
-real telephony/crawl corpora actually carry in RIFF containers are
-pure-integer public specs:
+The audio container of the multimodal decoder table
+(``operators/multimodal.py::decode_blob``). Besides 16-bit PCM, the
+three compressed formats real telephony/crawl corpora carry in RIFF
+containers are pure-integer public specs, so they decode here too:
 
 - **G.711 u-law / A-law** (ITU-T G.711, format tags 7 / 6): 8-bit
   logarithmic companding; decode is a 256-entry integer table derived
@@ -18,14 +17,13 @@ pure-integer public specs:
   shards on block boundaries the way the JPEG decoder shards on restart
   markers.
 
-Perceptual-codec audio (mp3/ogg/flac/aac) genuinely needs external
-decoders and still raises NotImplementedError at the operator seam.
+Perceptual-codec audio (mp3/ogg/flac/aac) needs external decoders; its
+RIFF format tags raise NotImplementedError.
 
 The stdlib ``wave`` module only parses PCM, so decoding uses a manual
-RIFF chunk walk (~30 lines): this also upgrades the error taxonomy —
-an unknown format tag is now ``unsupported_format`` (NotImplementedError)
-in the quarantine path instead of the blanket parse failure stdlib
-``wave`` produced.
+RIFF chunk walk, which also keeps the error classes apart: an unknown
+format tag is ``unsupported_format`` (NotImplementedError) in the
+quarantine path, structural damage ``corrupt_data`` (ValueError).
 
 Reference disposition: the reference engine (MIT 6.5840 MapReduce lab)
 has no media surface at all; this exists for the north-star multimodal
@@ -414,7 +412,7 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
         out = np.vstack(blocks)
         fact = chunks.get(b"fact")
         if fact is not None:
-            # ADVICE r13: real encoders pad the FINAL block (n is rarely
+            # Real encoders pad the FINAL block (n is rarely
             # a multiple of samples_per_block) and record the true frame
             # count in the fact chunk; honoring it returns the real
             # frames instead of trailing pad samples. A fact count that
@@ -469,7 +467,7 @@ def encode_wav_ima_adpcm(
     """Compress int16 samples (n,) or (n, ch) to an IMA ADPCM WAV blob.
     The final block is zero-padded to samples_per_block and the TRUE
     frame count goes in the fact chunk — the normal real-encoder shape
-    (ADVICE r13; ``decode_wav`` truncates to the fact count, so the
+    (``decode_wav`` truncates to the fact count, so the
     roundtrip is exact for any n). samples_per_block must be 8k+1 so
     nibbles pack into whole 4-byte words (505 is the canonical
     mono-256-byte-block value)."""

@@ -1,38 +1,33 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-The container has no image/audio libraries, so the registered fixture
-queries use deterministic stub decodes (oracle-checkable). But
-``decode_mode="real"`` now EXECUTES for PNG input via the repo's
-pure-Python codec (:mod:`map_reduce_go_spark.functions.png_codec`,
-stdlib zlib only) — real pixel decode for feature extraction, real 2-D
-resampling for resize, and per-frame decode over concatenated-PNG
-streams for frame sampling — AND for WAV audio via the pure-Python
-RIFF codec (:mod:`map_reduce_go_spark.functions.wav_codec`): 16-bit
-PCM plus, as of r13, G.711 u-law/A-law and IMA ADPCM (pure-integer
-public specs) — real sample decode with an amplitude histogram in
-feature extraction, format-dispatched per blob. 8-bit BMP and baseline
-JPEG decode through their own pure-Python codecs. All covered by
-``tests/test_multimodal_real.py``. Formats that genuinely require
-external libraries (perceptual audio codecs, mp4/webm) still raise
-NotImplementedError at the same seams. The Spark-side plumbing is real
-and tested either way: binary columns, metadata structs, Arrow-batched
-``mapInPandas`` with a bounded batch size, and a schema that holds at
-any scale.
+Blobs ride through scans and shuffles as parquet binary next to typed
+metadata; metadata extraction is columnar and never Python-side. Every
+decode, resize, resample and frame-sampling kernel is an Arrow-batched
+``mapInPandas`` (one Python worker per core;
+``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds the memory per
+batch whatever the blob sizes), built by :func:`_map_rows` from a
+per-row function.
 
-Scale notes:
-- blobs ride through scans/shuffles as parquet binary; metadata extraction
-  is columnar and never Python-side.
-- feature extraction is mapInPandas over Arrow batches: one Python worker
-  per core, ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds peak
-  memory per batch regardless of blob size distribution.
-- at 100 TB you partition by the modality/shard column so decode failures
-  quarantine per-partition.
+Each operator has two decode modes. ``stub`` reads the raw bytes with
+deterministic arithmetic that a DuckDB oracle replays, so the registered
+fixture queries are oracle-checked. ``real`` decodes the container
+through :func:`decode_blob`, whose one table covers PNG, BMP and JPEG
+images and WAV audio (PCM16, G.711 u-law/A-law, IMA ADPCM) with the
+repo's pure-Python codecs (``functions/*_codec.py``); any other container
+(perceptual audio codecs, mp4/webm video) needs external libraries and
+raises ``NotImplementedError``. :func:`decode_blobs_with_quarantine`
+turns those failures into per-row quarantine records instead.
+
+At 100 TB the blobs partition by the modality or shard column, so decode
+failures quarantine per partition.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from functools import cache
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -50,6 +45,87 @@ from map_reduce_go_spark.registry import register
 from map_reduce_go_spark.sources.readers import load_table
 
 MODALITIES = ("image", "audio", "video")
+
+#: The blob frame every kernel reads: one opaque payload per document.
+BLOB_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType(), False),
+        StructField("blob", BinaryType(), True),
+    ]
+)
+
+# DuckDB: the modality blobs_from_documents assigns by doc_id.
+_MODALITY_SQL = (
+    "CASE CAST(doc_id % 3 AS INTEGER)"
+    " WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END"
+)
+
+
+@cache
+def _codecs() -> tuple:
+    """The decoder table, one ``(kind, sniff, decode)`` row per container.
+    Imported on first use, so only the Python workers that decode load
+    the codecs."""
+    from map_reduce_go_spark.functions.bmp_codec import decode_bmp, is_bmp
+    from map_reduce_go_spark.functions.jpeg_codec import decode_jpeg, is_jpeg
+    from map_reduce_go_spark.functions.png_codec import decode_png, is_png
+    from map_reduce_go_spark.functions.wav_codec import decode_wav, is_wav
+
+    return (
+        ("image", is_png, decode_png),
+        ("audio", is_wav, decode_wav),
+        ("image", is_bmp, decode_bmp),
+        ("image", is_jpeg, decode_jpeg),
+    )
+
+
+def _codec_name(decode) -> str:
+    return decode.__name__.removeprefix("decode_").upper()
+
+
+def decode_blob(raw: bytes, kind: str | None = None) -> tuple[str, np.ndarray, int | None]:
+    """Decode one blob by its leading bytes into ``(kind, array, rate)``:
+    ``("image", pixels, None)`` with (H, W) or (H, W, C) uint8 pixels, or
+    ``("audio", samples, rate)`` with (frames, channels) int16 samples.
+
+    ``kind`` names the one kind the caller can use. A container no codec
+    implements, or one of another kind, raises ``NotImplementedError``; a
+    sniffed container passes on its codec's own errors
+    (``NotImplementedError`` for a feature outside the codec's scope,
+    ``ValueError`` and friends for damaged bytes)."""
+    found = "an unknown container"
+    for k, sniff, decode in _codecs():
+        if sniff(raw):
+            if kind in (None, k):
+                out = decode(raw)
+                return (k, *out) if k == "audio" else (k, out, None)
+            found = f"{_codec_name(decode)} {k}"
+            break
+    supported = ", ".join(_codec_name(d) for k, _, d in _codecs() if kind in (None, k))
+    raise NotImplementedError(f"real {kind or 'media'} decode supports {supported}; got {found}")
+
+
+def _real(decode_mode: str) -> bool:
+    """Validate ``decode_mode``: True for ``"real"``, False for ``"stub"``."""
+    if decode_mode not in ("stub", "real"):
+        raise ValueError(f"unknown decode_mode {decode_mode!r}")
+    return decode_mode == "real"
+
+
+def _map_rows(df: DataFrame, cols: tuple[str, ...], schema: StructType, row_fn) -> DataFrame:
+    """``mapInPandas`` from a per-row function: ``row_fn(*values of cols)``
+    yields output rows as tuples in ``schema`` order — none drops the
+    input row, several fan it out."""
+    names = schema.fieldNames()
+
+    def batches(it):
+        import pandas as pd
+
+        for pdf in it:
+            rows = [out for row in zip(*(pdf[c] for c in cols)) for out in row_fn(*row)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(batches, schema=schema)
 
 
 def blobs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,10 +146,9 @@ def blobs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_blob_meta",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CASE CAST(doc_id % 3 AS INTEGER)
-             WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
+           {_MODALITY_SQL} AS modality,
            octet_length(encode(text)) AS byte_len,
            sha256(text) AS content_sha256
     FROM documents
@@ -110,104 +185,37 @@ FEATURES_SCHEMA = StructType(
 
 
 def extract_features(blobs: DataFrame, decode_mode: str = "stub") -> DataFrame:
-    """Arrow-batched feature extraction over binary blobs.
+    """Arrow-batched feature extraction over ``(doc_id, blob, modality)``:
+    a 16-bin histogram (counts and normalized) plus a width and height.
 
-    ``stub`` mode computes a deterministic 16-bin byte histogram (normalized)
-    plus fake width/height from the first bytes — the real decode
-    (PIL.Image.open / soundfile / frame sampling) plugs into the marked seam
-    with the same signature and schema.
-    """
-    if decode_mode not in ("stub", "real"):
-        raise ValueError(f"unknown decode_mode {decode_mode!r}")
+    ``stub`` bins the raw bytes by high nibble, and reads the width and
+    height off the first and last byte. ``real`` decodes any container
+    :func:`decode_blob` knows: an image bins its 8-bit pixel values and
+    reports its pixel width and height; audio bins its int16 samples
+    shifted to uint16 and reports (channels, frames)."""
+    real = _real(decode_mode)
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(doc_id, blob, modality):
+        data = np.frombuffer(blob, dtype=np.uint8)
+        if real:
+            kind, arr, _rate = decode_blob(bytes(blob))
+            h, w = arr.shape[:2]
+            if kind == "image":
+                nibbles = arr.reshape(-1) >> 4
+            else:
+                nibbles = (arr.astype(np.int32).reshape(-1) + 32768) >> 12
+        else:
+            w = int(data[0]) + 1 if len(data) else 1
+            h = int(data[-1]) + 1 if len(data) else 1
+            nibbles = data >> 4
+        hist = np.bincount(nibbles, minlength=FEATURE_DIM).astype(np.float64)
+        total = hist.sum() or 1.0
+        yield (
+            int(doc_id), modality, len(data), int(w), int(h),
+            (hist / total).astype(np.float32), hist.astype(np.int32),
+        )
 
-        for pdf in it:
-            rows = {k: [] for k in (
-                "doc_id", "modality", "byte_len", "fake_width", "fake_height",
-                "features", "bin_counts",
-            )}
-            for doc_id, blob, modality in zip(
-                pdf["doc_id"], pdf["blob"], pdf["modality"]
-            ):
-                data = np.frombuffer(blob, dtype=np.uint8)
-                if decode_mode == "real":
-                    # Real decode: PNG via the repo's pure-Python codec
-                    # (stdlib zlib), 8-bit BMP (pure struct/numpy),
-                    # baseline JPEG (pure-Python Huffman+IDCT, r13), and
-                    # WAV — 16-bit PCM plus, r13, G.711 u-law/A-law and
-                    # IMA ADPCM (pure-integer public specs). Remaining
-                    # perceptual codecs (mp3/mp4/ogg) genuinely need
-                    # external libraries this container lacks.
-                    from map_reduce_go_spark.functions.bmp_codec import (
-                        decode_bmp,
-                        is_bmp,
-                    )
-                    from map_reduce_go_spark.functions.jpeg_codec import (
-                        decode_jpeg,
-                        is_jpeg,
-                    )
-                    from map_reduce_go_spark.functions.png_codec import (
-                        decode_png,
-                        is_png,
-                    )
-                    from map_reduce_go_spark.functions.wav_codec import (
-                        decode_wav,
-                        is_wav,
-                    )
-
-                    raw = bytes(blob)
-                    if is_png(raw) or is_bmp(raw) or is_jpeg(raw):
-                        px = (
-                            decode_png(raw)
-                            if is_png(raw)
-                            else decode_bmp(raw) if is_bmp(raw) else decode_jpeg(raw)
-                        )
-                        h, w = px.shape[:2]
-                        # 16 bins over the 8-bit pixel range (high nibble).
-                        hist = np.bincount(
-                            px.reshape(-1) >> 4, minlength=FEATURE_DIM
-                        ).astype(np.float64)
-                    elif is_wav(raw):
-                        samples, _rate = decode_wav(raw)
-                        h, w = samples.shape  # (n_frames, n_channels)
-                        # 16 bins over the int16 amplitude range: shift to
-                        # uint16 then take the high nibble — the audio
-                        # analog of the pixel histogram.
-                        hist = np.bincount(
-                            (samples.astype(np.int32).reshape(-1) + 32768) >> 12,
-                            minlength=FEATURE_DIM,
-                        ).astype(np.float64)
-                    else:
-                        raise NotImplementedError(
-                            "real decode supports PNG (pure-Python codec), "
-                            "8-bit BMP, baseline JPEG, and WAV (16-bit PCM, "
-                            "G.711 u-law/A-law, IMA ADPCM); perceptual "
-                            "codecs need external libraries"
-                        )
-                    total = hist.sum() or 1.0
-                    rows["doc_id"].append(int(doc_id))
-                    rows["modality"].append(modality)
-                    rows["byte_len"].append(len(data))
-                    rows["fake_width"].append(int(w))   # real dims in real mode
-                    rows["fake_height"].append(int(h))  # (channels, frames for audio)
-                    rows["features"].append((hist / total).astype(np.float32))
-                    rows["bin_counts"].append(hist.astype(np.int32))
-                    continue
-                hist = np.bincount(data >> 4, minlength=FEATURE_DIM).astype(np.float64)
-                total = hist.sum() or 1.0
-                rows["doc_id"].append(int(doc_id))
-                rows["modality"].append(modality)
-                rows["byte_len"].append(len(data))
-                rows["fake_width"].append(int(data[0]) + 1 if len(data) else 1)
-                rows["fake_height"].append(int(data[-1]) + 1 if len(data) else 1)
-                rows["features"].append((hist / total).astype(np.float32))
-                rows["bin_counts"].append(hist.astype(np.int32))
-            yield pd.DataFrame(rows)
-
-    return blobs.mapInPandas(batches, schema=FEATURES_SCHEMA)
+    return _map_rows(blobs, ("doc_id", "blob", "modality"), FEATURES_SCHEMA, row)
 
 
 def _bin_count_sql(j: int) -> str:
@@ -224,8 +232,7 @@ def _bin_count_sql(j: int) -> str:
     "multimodal_feature_stub",
     oracle=f"""
     SELECT doc_id,
-           CASE CAST(doc_id % 3 AS INTEGER)
-             WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS modality,
+           {_MODALITY_SQL} AS modality,
            length(text) AS byte_len,
            CASE WHEN length(text) = 0 THEN 1
                 ELSE ascii(substring(text, 1, 1)) + 1 END AS fake_width,
@@ -268,60 +275,34 @@ RESIZE_SCHEMA = StructType(
 def resize_images(
     blobs: DataFrame, width: int = 8, height: int = 8, decode_mode: str = "stub"
 ) -> DataFrame:
-    """Image resize plumbing: blob -> fixed (height×width) float grid.
+    """Image resize: blob -> fixed (height×width) float grid in [0, 1],
+    one row per image.
 
-    Stub decode treats the byte stream as a 1-D 'image' and nearest-
-    neighbor samples it to width*height normalized values — deterministic,
-    so the dataflow (Arrow batches, fixed output shape, one row per image)
-    is testable; PIL's Image.resize plugs into the marked seam.
-    """
-    if decode_mode not in ("stub", "real"):
-        raise ValueError(f"unknown decode_mode {decode_mode!r}")
+    ``stub`` treats the byte stream as a 1-D image and nearest-neighbor
+    samples width*height bytes from it. ``real`` decodes any image
+    container :func:`decode_blob` knows, averages color channels to
+    gray, and nearest-neighbor samples the 2-D grid."""
+    real = _real(decode_mode)
     n_px = width * height
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(doc_id, blob):
+        if real:
+            _, px, _ = decode_blob(bytes(blob), "image")
+            if px.ndim == 3:
+                px = px.mean(axis=2).astype(np.uint8)
+            sh, sw = px.shape
+            ys = (np.arange(height) * sh) // height
+            xs = (np.arange(width) * sw) // width
+            pixels = (px[np.ix_(ys, xs)].astype(np.float32) / 255.0).reshape(-1)
+        else:
+            data = np.frombuffer(blob, dtype=np.uint8)
+            if len(data) == 0:
+                data = np.zeros(1, dtype=np.uint8)
+            idx = (np.arange(n_px) * len(data)) // n_px
+            pixels = (data[idx] / 255.0).astype(np.float32)
+        yield (int(doc_id), width, height, pixels)
 
-        for pdf in it:
-            rows = {"doc_id": [], "out_width": [], "out_height": [], "pixels": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                if decode_mode == "real":
-                    # Real decode: PNG -> grayscale -> 2-D nearest-
-                    # neighbor resample (pure-Python codec, stdlib zlib).
-                    from map_reduce_go_spark.functions.png_codec import (
-                        decode_png,
-                        is_png,
-                    )
-
-                    if not is_png(bytes(blob)):
-                        raise NotImplementedError(
-                            "real decode supports PNG (pure-Python codec); "
-                            "other image formats need external libraries"
-                        )
-                    px = decode_png(bytes(blob))
-                    if px.ndim == 3:
-                        px = px.mean(axis=2).astype(np.uint8)
-                    sh, sw = px.shape
-                    ys = (np.arange(height) * sh) // height
-                    xs = (np.arange(width) * sw) // width
-                    grid = px[np.ix_(ys, xs)].astype(np.float32) / 255.0
-                    rows["doc_id"].append(int(doc_id))
-                    rows["out_width"].append(width)
-                    rows["out_height"].append(height)
-                    rows["pixels"].append(grid.reshape(-1))
-                    continue
-                data = np.frombuffer(blob, dtype=np.uint8)
-                if len(data) == 0:
-                    data = np.zeros(1, dtype=np.uint8)
-                idx = (np.arange(n_px) * len(data)) // n_px  # nearest-neighbor
-                rows["doc_id"].append(int(doc_id))
-                rows["out_width"].append(width)
-                rows["out_height"].append(height)
-                rows["pixels"].append((data[idx] / 255.0).astype(np.float32))
-            yield pd.DataFrame(rows)
-
-    return blobs.mapInPandas(batches, schema=RESIZE_SCHEMA)
+    return _map_rows(blobs, ("doc_id", "blob"), RESIZE_SCHEMA, row)
 
 
 _RESIZE_W = 8
@@ -331,25 +312,24 @@ _RESIZE_H = 8
 @register(
     "multimodal_resize_stub",
     oracle=f"""
+    WITH r AS (
+      SELECT doc_id,
+             CAST(CASE WHEN length(text) = 0 THEN 0
+                  ELSE list_sum(list_transform(
+                         generate_series(0, {_RESIZE_W * _RESIZE_H - 1}),
+                         k -> ascii(substring(text,
+                                CAST((k * length(text)) // {_RESIZE_W * _RESIZE_H} AS BIGINT) + 1,
+                                1))))
+             END AS BIGINT) AS px_sum
+      FROM documents
+      WHERE {_MODALITY_SQL} = 'image'
+    )
     SELECT doc_id,
            {_RESIZE_W} AS out_width,
            {_RESIZE_H} AS out_height,
-           CAST(CASE WHEN length(text) = 0 THEN 0
-                ELSE list_sum(list_transform(
-                       generate_series(0, {_RESIZE_W * _RESIZE_H - 1}),
-                       k -> ascii(substring(text,
-                              CAST((k * length(text)) // {_RESIZE_W * _RESIZE_H} AS BIGINT) + 1,
-                              1))))
-           END AS BIGINT) AS px_sum,
-           round(CAST(CASE WHEN length(text) = 0 THEN 0
-                 ELSE list_sum(list_transform(
-                        generate_series(0, {_RESIZE_W * _RESIZE_H - 1}),
-                        k -> ascii(substring(text,
-                               CAST((k * length(text)) // {_RESIZE_W * _RESIZE_H} AS BIGINT) + 1,
-                               1))))
-           END AS BIGINT) / {_RESIZE_W * _RESIZE_H}.0 / 255.0, 6) AS px_mean
-    FROM documents
-    WHERE CAST(doc_id % 3 AS INTEGER) = 0
+           px_sum,
+           round(px_sum / {_RESIZE_W * _RESIZE_H}.0 / 255.0, 6) AS px_mean
+    FROM r
     """,
 )
 def multimodal_resize_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -395,83 +375,35 @@ def resample_audio(
     blobs: DataFrame, out_rate: int = AUDIO_STUB_OUT_RATE, decode_mode: str = "stub"
 ) -> DataFrame:
     """Audio resample + channel downmix — the transform analog of
-    :func:`resize_images` on the WAV path (VERDICT r8/r9 brief: the
-    image/audio asymmetry in multimodal).
+    :func:`resize_images` for audio.
 
-    Real mode decodes WAV — 16-bit PCM plus (r13) G.711 u-law/A-law and
-    IMA ADPCM through the pure-integer codec — downmixes channels
-    by integer floor-mean, and nearest-neighbor resamples to ``out_rate``
-    (output length ``n_in * out_rate // in_rate``, index stride
-    ``(k * n_in) // n_out`` — the resize grid arithmetic in 1-D).
-    Perceptual-codec audio (mp3/ogg/flac) raises NotImplementedError at
-    the same seam. Stub mode runs the IDENTICAL downmix+stride math over the
-    raw byte stream read as interleaved 2-channel unsigned 8-bit — fully
-    deterministic, so the registered query's oracle replays it in SQL.
-    All integer arithmetic end to end: no resampling filter state, no
-    float accumulation, bit-stable on any engine and any partitioning.
-    """
-    if decode_mode not in ("stub", "real"):
-        raise ValueError(f"unknown decode_mode {decode_mode!r}")
+    Both modes downmix channels by integer floor-mean and nearest-neighbor
+    resample to ``out_rate`` (output length ``max(n_in * out_rate //
+    in_rate, 1)``, index stride ``(k * n_in) // n_out`` — the resize grid
+    arithmetic in 1-D); a blob with no frames gives no row. ``real``
+    decodes any audio container :func:`decode_blob` knows; ``stub`` reads
+    the raw bytes as interleaved 2-channel unsigned 8-bit at
+    :data:`AUDIO_STUB_IN_RATE`, so the registered query's oracle replays
+    it in SQL. Integer arithmetic end to end: no filter state, no float
+    accumulation, bit-stable on any engine and any partitioning."""
+    real = _real(decode_mode)
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(doc_id, blob):
+        if real:
+            _, frames, in_rate = decode_blob(bytes(blob), "audio")
+            mono = frames.astype(np.int32).sum(axis=1) // frames.shape[1]
+        else:
+            data = np.frombuffer(blob, dtype=np.uint8)
+            in_rate = AUDIO_STUB_IN_RATE
+            n = len(data) // 2
+            mono = (data[0 : 2 * n : 2].astype(np.int32) + data[1 : 2 * n : 2]) // 2
+        n_in = len(mono)
+        if n_in:
+            n_out = max(n_in * out_rate // in_rate, 1)
+            idx = (np.arange(n_out, dtype=np.int64) * n_in) // n_out
+            yield (int(doc_id), int(in_rate), int(out_rate), n_in, n_out, mono[idx].astype(np.int32))
 
-        def stride(mono: "np.ndarray", n_out: int) -> "np.ndarray":
-            idx = (np.arange(n_out, dtype=np.int64) * len(mono)) // n_out
-            return mono[idx]
-
-        for pdf in it:
-            rows = {
-                "doc_id": [],
-                "in_rate": [],
-                "out_rate": [],
-                "n_in": [],
-                "n_out": [],
-                "samples": [],
-            }
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                if decode_mode == "real":
-                    from map_reduce_go_spark.functions.wav_codec import (
-                        decode_wav,
-                        is_wav,
-                    )
-
-                    raw = bytes(blob)
-                    if not is_wav(raw):
-                        raise NotImplementedError(
-                            "real decode supports WAV (16-bit PCM, G.711, "
-                            "IMA ADPCM); perceptual codecs need external "
-                            "decoders"
-                        )
-                    frames, in_rate = decode_wav(raw)
-                    # Downmix: integer floor-mean across channels (exact,
-                    # order-free — no float mixing bus).
-                    mono = frames.astype(np.int32).sum(axis=1) // frames.shape[1]
-                    n_in = len(mono)
-                    if n_in == 0:
-                        continue
-                    n_out = max(n_in * out_rate // in_rate, 1)
-                else:
-                    data = np.frombuffer(blob, dtype=np.uint8)
-                    in_rate = AUDIO_STUB_IN_RATE
-                    n_in = len(data) // 2  # interleaved 2-channel frames
-                    if n_in == 0:
-                        continue
-                    mono = (
-                        data[0 : 2 * n_in : 2].astype(np.int32)
-                        + data[1 : 2 * n_in : 2]
-                    ) // 2
-                    n_out = max(n_in * out_rate // in_rate, 1)
-                rows["doc_id"].append(int(doc_id))
-                rows["in_rate"].append(int(in_rate))
-                rows["out_rate"].append(int(out_rate))
-                rows["n_in"].append(n_in)
-                rows["n_out"].append(n_out)
-                rows["samples"].append(stride(mono, n_out).astype(np.int32))
-            yield pd.DataFrame(rows)
-
-    return blobs.mapInPandas(batches, schema=RESAMPLE_AUDIO_SCHEMA)
+    return _map_rows(blobs, ("doc_id", "blob"), RESAMPLE_AUDIO_SCHEMA, row)
 
 
 # Shared stub-oracle fragment: the downmixed sample at output index k —
@@ -488,25 +420,27 @@ _AUDIO_STUB_SAMPLE = (
     WITH a AS (
       SELECT doc_id, text, length(text) // 2 AS n_in
       FROM documents
-      WHERE CAST(doc_id % 3 AS INTEGER) = 1 AND length(text) >= 2
+      WHERE {_MODALITY_SQL} = 'audio' AND length(text) >= 2
     ),
     b AS (
       SELECT doc_id, text, n_in,
              greatest(n_in * {AUDIO_STUB_OUT_RATE} // {AUDIO_STUB_IN_RATE}, 1)
                AS n_out
       FROM a
+    ),
+    c AS (
+      SELECT doc_id, n_in, n_out,
+             list_sum(list_transform(
+               generate_series(0, CAST(n_out - 1 AS BIGINT)),
+               k -> {_AUDIO_STUB_SAMPLE})) AS s
+      FROM b
     )
     SELECT doc_id,
            CAST(n_in AS BIGINT) AS n_in,
            CAST(n_out AS BIGINT) AS n_out,
-           CAST(list_sum(list_transform(
-                  generate_series(0, CAST(n_out - 1 AS BIGINT)),
-                  k -> {_AUDIO_STUB_SAMPLE})) AS BIGINT) AS sample_sum,
-           round(CAST(list_sum(list_transform(
-                  generate_series(0, CAST(n_out - 1 AS BIGINT)),
-                  k -> {_AUDIO_STUB_SAMPLE})) AS DOUBLE) / n_out, 6)
-             AS sample_mean
-    FROM b
+           CAST(s AS BIGINT) AS sample_sum,
+           round(CAST(s AS DOUBLE) / n_out, 6) AS sample_mean
+    FROM c
     """,
 )
 def multimodal_audio_resample_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -545,89 +479,49 @@ FRAMES_SCHEMA = StructType(
 N_FRAMES = 4
 
 
+def _sha16(data: bytes) -> str:
+    return hashlib.sha256(data).hexdigest()[:16]
+
+
 def sample_frames(blobs: DataFrame, n_frames: int = N_FRAMES, decode_mode: str = "stub") -> DataFrame:
-    """Video frame sampling: one input row -> n_frames output rows
-    (uniform temporal stride). The 1->N expansion inside mapInPandas is
-    the real contract (schema, row fanout, per-frame digest); pyav frame
-    decode plugs into the marked seam.
-    """
-    if decode_mode not in ("stub", "real"):
-        raise ValueError(f"unknown decode_mode {decode_mode!r}")
+    """Frame sampling: one input row -> ``n_frames`` output rows at a
+    uniform stride, each with its offset and a 16-hex sha256 digest.
 
-    def batches(it: Iterator) -> Iterator:
-        import hashlib
+    ``stub`` digests a 64-byte window at each stride point of the raw
+    bytes. ``real`` takes a concatenated-PNG stream (an MJPEG-style video:
+    one PNG per frame, back to back) and digests the decoded pixels of the
+    sampled frames, or takes audio and digests fixed-length sample
+    windows (offsets are then sample indexes)."""
+    real = _real(decode_mode)
 
-        import numpy as np
-        import pandas as pd
+    def row(doc_id, blob):
+        raw = bytes(blob)
+        if not real:
+            n = max(len(raw), 1)
+            for k in range(n_frames):
+                off = (k * n) // n_frames
+                yield (int(doc_id), k, off, _sha16(raw[off : off + 64]))
+            return
+        from map_reduce_go_spark.functions.png_codec import is_png, png_stream_offsets
 
-        for pdf in it:
-            rows = {"doc_id": [], "frame_idx": [], "frame_offset": [], "frame_sha": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                if decode_mode == "real":
-                    # Real decode: an MJPEG-style concatenated-PNG stream
-                    # (frame = one PNG image, frames back-to-back), or a
-                    # 16-bit PCM WAV blob sampled as uniform fixed-length
-                    # windows — the audio analog of frame sampling. Real
-                    # video containers (mp4/webm) genuinely need
-                    # pyav/ffmpeg; the per-frame decode below is real.
-                    from map_reduce_go_spark.functions.png_codec import (
-                        decode_png,
-                        is_png,
-                        png_stream_offsets,
-                    )
-                    from map_reduce_go_spark.functions.wav_codec import (
-                        decode_wav,
-                        is_wav,
-                    )
+        if is_png(raw):
+            # A structural chunk walk: the 8-byte signature can occur
+            # inside compressed IDAT payload, so raw.find() would mis-split.
+            offs = png_stream_offsets(raw)
+            nf = len(offs) - 1
+            for k in range(n_frames):
+                fi = (k * nf) // n_frames
+                _, frame, _ = decode_blob(raw[offs[fi] : offs[fi + 1]], "image")
+                yield (int(doc_id), k, offs[fi], _sha16(frame.tobytes()))
+            return
+        _, samples, _ = decode_blob(raw, "audio")
+        ns = max(len(samples), 1)
+        win = max(ns // n_frames, 1)
+        for k in range(n_frames):
+            s0 = (k * ns) // n_frames
+            yield (int(doc_id), k, s0, _sha16(samples[s0 : s0 + win].tobytes()))
 
-                    raw = bytes(blob)
-                    if is_wav(raw):
-                        samples, _rate = decode_wav(raw)
-                        ns = max(len(samples), 1)
-                        win = max(ns // n_frames, 1)
-                        for k in range(n_frames):
-                            s0 = (k * ns) // n_frames
-                            window = samples[s0 : s0 + win]
-                            rows["doc_id"].append(int(doc_id))
-                            rows["frame_idx"].append(k)
-                            rows["frame_offset"].append(s0)  # sample index
-                            rows["frame_sha"].append(
-                                hashlib.sha256(window.tobytes()).hexdigest()[:16]
-                            )
-                        continue
-                    if not is_png(raw):
-                        raise NotImplementedError(
-                            "real decode supports concatenated-PNG streams "
-                            "and PCM WAV window sampling; mp4/webm need "
-                            "pyav/ffmpeg"
-                        )
-                    # Structural chunk walk (length+tag+payload+CRC to
-                    # IEND per frame) — the 8-byte signature can legally
-                    # occur INSIDE compressed IDAT payload, so splitting
-                    # on raw.find(signature) would mis-split frames.
-                    offs = png_stream_offsets(raw)
-                    nf = len(offs) - 1
-                    for k in range(n_frames):
-                        fi = (k * nf) // n_frames
-                        frame = decode_png(raw[offs[fi] : offs[fi + 1]])
-                        rows["doc_id"].append(int(doc_id))
-                        rows["frame_idx"].append(k)
-                        rows["frame_offset"].append(offs[fi])
-                        rows["frame_sha"].append(
-                            hashlib.sha256(frame.tobytes()).hexdigest()[:16]
-                        )
-                    continue
-                n = max(len(blob), 1)
-                for k in range(n_frames):
-                    off = (k * n) // n_frames
-                    chunk = bytes(blob[off : off + 64])
-                    rows["doc_id"].append(int(doc_id))
-                    rows["frame_idx"].append(k)
-                    rows["frame_offset"].append(off)
-                    rows["frame_sha"].append(hashlib.sha256(chunk).hexdigest()[:16])
-            yield pd.DataFrame(rows)
-
-    return blobs.mapInPandas(batches, schema=FRAMES_SCHEMA)
+    return _map_rows(blobs, ("doc_id", "blob"), FRAMES_SCHEMA, row)
 
 
 @register(
@@ -640,7 +534,7 @@ def sample_frames(blobs: DataFrame, n_frames: int = N_FRAMES, decode_mode: str =
                 CAST((k * greatest(length(text), 1)) // {N_FRAMES} AS BIGINT) + 1,
                 64)), 16) AS frame_sha
     FROM documents, range(0, {N_FRAMES}) AS r(k)
-    WHERE CAST(doc_id % 3 AS INTEGER) = 2
+    WHERE {_MODALITY_SQL} = 'video'
     """,
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -668,11 +562,20 @@ QUARANTINE_SCHEMA = StructType(
     ]
 )
 
-#: Planted-corruption geometry: every healthy fixture blob is a
-#: PLANT_W x PLANT_H grayscale PNG whose pixel bytes are the document's
-#: first PLANT_W*PLANT_H UTF-8 bytes, zero-padded — so the decoded pixel
-#: sum equals a SQL-computable function of the text.
+#: Planted-corruption geometry: every healthy image plant is a
+#: PLANT_W x PLANT_H grayscale picture, and every plant payload is the
+#: document's first PLANT_W*PLANT_H UTF-8 bytes, zero-padded — so the
+#: decoded sum is a SQL-computable function of the text.
 PLANT_W, PLANT_H = 8, 4
+
+
+def _plant_class(doc_id):
+    """The fixture class of a document: works on an int and on a Column."""
+    return doc_id % 8
+
+
+# DuckDB: _plant_class.
+_PLANT_SQL = "CAST(doc_id % 8 AS INTEGER)"
 
 
 def _mulaw_val_sql(byte_expr: str) -> str:
@@ -686,112 +589,68 @@ def _mulaw_val_sql(byte_expr: str) -> str:
     return f"(CASE WHEN {u} >= 128 THEN 132 - {t} ELSE {t} - 132 END)"
 
 
-class _Quarantine(Exception):
-    def __init__(self, error_class: str):
-        super().__init__(error_class)
-        self.error_class = error_class
+# DuckDB: the decoded samples of a class-7 plant, one per payload byte.
+_MULAW_VALS_SQL = (
+    f"list_transform(range(1, {PLANT_W * PLANT_H} + 1), i -> "
+    + _mulaw_val_sql("COALESCE(ascii(substring(text, CAST(i AS BIGINT), 1)), 0)")
+    + ")"
+)
+
+
+def _plant_blob(doc_id: int, text: str | None) -> bytes:
+    """The planted blob of one document, by :func:`_plant_class`:
+
+    - ``0`` — a valid PNG truncated at half its length (signature intact,
+      chunk walk fails mid-IDAT): the partially-fetched blob.
+    - ``1`` — GIF87a magic in front of the text: a container no codec
+      implements.
+    - ``2`` — zero-length payload: the upstream-wrote-nothing case.
+    - ``3``/``4`` — a healthy grayscale PNG of the payload.
+    - ``5`` — the same pixels as a healthy 8-bit BMP.
+    - ``6`` — a healthy JPEG, 2*PLANT_W wide and PLANT_H tall: two 8x8
+      blocks, each constant at the text's first/second byte, progressive
+      (SOF2) when ``doc_id % 16 == 14`` and baseline otherwise. Both
+      forms carry the same quantized coefficients, and constant blocks
+      survive DCT -> quantize(1) -> IDCT exactly, so the pixel sum is one
+      SQL formula.
+    - ``7`` — a healthy G.711 u-law mono WAV whose compressed samples are
+      the payload, so the decoded sample sum is the G.711 expansion per
+      byte (:func:`_mulaw_val_sql`)."""
+    from map_reduce_go_spark.functions.bmp_codec import encode_bmp
+    from map_reduce_go_spark.functions.jpeg_codec import encode_jpeg
+    from map_reduce_go_spark.functions.png_codec import encode_png
+    from map_reduce_go_spark.functions.wav_codec import wrap_g711_payload
+
+    raw = (text or "").encode("utf-8")
+    cls = _plant_class(doc_id)
+    if cls == 2:
+        return b""
+    if cls == 1:
+        return b"GIF87a" + raw
+    if cls == 6:
+        img = np.hstack([np.full((PLANT_H, PLANT_W), b, dtype=np.uint8) for b in (raw + b"\0\0")[:2]])
+        return encode_jpeg(img, progressive=doc_id % 16 == 14)
+    n_px = PLANT_W * PLANT_H
+    payload = raw[:n_px].ljust(n_px, b"\0")
+    if cls == 7:
+        return wrap_g711_payload(payload, "mulaw", 8_000, 1)
+    img = np.frombuffer(payload, dtype=np.uint8).reshape(PLANT_H, PLANT_W)
+    if cls == 5:
+        return encode_bmp(img)
+    png = encode_png(img)
+    return png[: len(png) // 2] if cls == 0 else png
 
 
 def planted_corrupt_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixture builder for the quarantine path: deterministic per-doc
-    corruption classes over real, spec-conformant image/audio bytes (the
-    repo's pure-Python codecs), keyed by ``doc_id % 8``:
-
-    - ``0`` — a valid PNG truncated at half its length (signature intact,
-      chunk walk fails mid-IDAT): the classic partially-fetched blob.
-    - ``1`` — GIF87a magic in front of raw bytes: a foreign container
-      this engine's codecs don't implement (was JPEG magic through r12;
-      r13 implements JPEG for real, so the foreign-container class moved
-      to a format that is still genuinely foreign).
-    - ``2`` — zero-length payload: the upstream-wrote-nothing case.
-    - ``3``/``4`` — a healthy PLANT_W x PLANT_H grayscale PNG of the
-      document's leading bytes.
-    - ``5`` — the SAME pixels as a healthy 8-bit BMP (r12: the third
-      real container — proves the decode dispatch generalizes beyond
-      the two formats it was built with; identical px/pix_sum facts
-      through a structurally alien container: little-endian, palette,
-      bottom-up rows, no checksums).
-    - ``6`` — a healthy JPEG (r13: the fourth container, and the first
-      with a bit-level entropy-coded stream): 2*PLANT_W wide, PLANT_H
-      tall, two 8x8 blocks each CONSTANT at the document's first/second
-      byte value; alternating BASELINE and PROGRESSIVE (SOF2, multi-
-      scan successive approximation) by ``doc_id % 16`` — both forms
-      carry identical quantized coefficients, so the SQL prediction is
-      one formula while the decode exercises both real paths. Constant
-      blocks survive DCT->quantize(1)->Huffman->IDCT exactly, so even a
-      lossy-family container yields a SQL-predictable pixel sum.
-    - ``7`` — a healthy G.711 u-law mono WAV (r13: the fifth container,
-      and the first AUDIO one in the fixture): the compressed payload is
-      the document's first PLANT_W*PLANT_H bytes zero-padded, so the
-      decoded int16 sample sum is the ITU-T G.711 expansion formula
-      applied per byte — pure integer arithmetic the oracle replays in
-      SQL (:func:`_mulaw_val_sql`), proving the quarantine decode is
-      format-general across modalities, not just image containers.
-
-    Every 100 TB crawl contains all these shapes; the fixture makes
-    their mix deterministic so the DuckDB oracle can predict each row's
-    fate from the text alone."""
+    """Fixture builder for the quarantine path: one :func:`_plant_blob` per
+    document, over real, spec-conformant image/audio bytes from the repo's
+    codecs. Every 100 TB crawl contains all these shapes; the fixture
+    makes their mix deterministic so the DuckDB oracle can predict each
+    row's fate from the text alone."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        from map_reduce_go_spark.functions.bmp_codec import encode_bmp
-        from map_reduce_go_spark.functions.jpeg_codec import encode_jpeg
-        from map_reduce_go_spark.functions.png_codec import encode_png
-        from map_reduce_go_spark.functions.wav_codec import wrap_g711_payload
-
-        n_px = PLANT_W * PLANT_H
-        for pdf in it:
-            ids, blobs = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = (text or "").encode("utf-8")
-                kind = int(doc_id) % 8
-                if kind == 2:
-                    blob = b""
-                elif kind == 1:
-                    blob = b"GIF87a" + raw
-                elif kind == 7:
-                    payload = raw[:n_px] + bytes(n_px - min(len(raw), n_px))
-                    blob = wrap_g711_payload(payload, "mulaw", 8_000, 1)
-                elif kind == 6:
-                    b1 = raw[0] if len(raw) >= 1 else 0
-                    b2 = raw[1] if len(raw) >= 2 else 0
-                    img = np.hstack(
-                        [
-                            np.full((PLANT_H, PLANT_W), b1, dtype=np.uint8),
-                            np.full((PLANT_H, PLANT_W), b2, dtype=np.uint8),
-                        ]
-                    )
-                    # Alternate baseline / progressive (late r13): the
-                    # two forms carry identical quantized coefficients,
-                    # so the oracle's pixel prediction is UNCHANGED
-                    # while the driver-hashed path exercises the real
-                    # multi-scan SOF2 decoder on half the JPEG plants.
-                    blob = encode_jpeg(img, progressive=(int(doc_id) % 16 == 14))
-                else:
-                    px = np.zeros(n_px, dtype=np.uint8)
-                    head = np.frombuffer(raw[:n_px], dtype=np.uint8)
-                    px[: len(head)] = head
-                    img = px.reshape(PLANT_H, PLANT_W)
-                    if kind == 5:
-                        blob = encode_bmp(img)
-                    else:
-                        png = encode_png(img)
-                        blob = png[: len(png) // 2] if kind == 0 else png
-                ids.append(int(doc_id))
-                blobs.append(blob)
-            yield pd.DataFrame({"doc_id": ids, "blob": blobs})
-
-    return docs.mapInPandas(
-        batches,
-        schema=StructType(
-            [
-                StructField("doc_id", LongType(), False),
-                StructField("blob", BinaryType(), True),
-            ]
-        ),
+    return _map_rows(
+        docs, ("doc_id", "text"), BLOB_SCHEMA,
+        lambda doc_id, text: [(int(doc_id), _plant_blob(int(doc_id), text))],
     )
 
 
@@ -813,13 +672,9 @@ ENERGY_SCHEMA = StructType(
     "mulaw_audio_energy_windows",
     oracle=f"""
     WITH s AS (
-      SELECT doc_id,
-             list_transform(range(1, {PLANT_W * PLANT_H} + 1),
-               i -> {_mulaw_val_sql(
-                   "COALESCE(ascii(substring(text, CAST(i AS BIGINT), 1)), 0)"
-               )}) AS vals
+      SELECT doc_id, {_MULAW_VALS_SQL} AS vals
       FROM documents
-      WHERE CAST(doc_id % 8 AS INTEGER) = 7
+      WHERE {_PLANT_SQL} = 7
     )
     SELECT doc_id,
            CAST(k AS INTEGER) AS window_idx,
@@ -835,79 +690,58 @@ ENERGY_SCHEMA = StructType(
     """,
 )
 def mulaw_audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed audio feature extraction over REAL compressed audio
-    (r13): each 'audio' plant (the quarantine fixture's class-7 G.711
-    u-law WAV) round-trips through actual container bytes — wrap the
-    payload, walk the RIFF chunks, expand the companded samples — then
-    frames into 4 windows of 8 samples with exact integer energy
-    (sum of squares) and peak (max absolute sample) per window. The
-    oracle replays the ITU-T G.711 expansion per byte in SQL and windows
-    with list_slice, so the driver value-hashes real codec math, not a
-    stub. Plan shape: scan -> mapInPandas -> result, zero shuffle —
-    embarrassingly parallel at any corpus size, the 100 TB audio
-    -featurization shape (reference disposition: the MapReduce lab has
-    no media surface; this extends the north-star multimodal set)."""
+    """Windowed audio feature extraction over real compressed audio: each
+    class-7 plant (a G.711 u-law WAV, :func:`_plant_blob`) round-trips
+    through actual container bytes — wrap the payload, walk the RIFF
+    chunks, expand the companded samples — then frames into 4 windows of
+    8 samples with exact integer energy (sum of squares) and peak (max
+    absolute sample) per window. The oracle replays the ITU-T G.711
+    expansion per byte in SQL and windows with list_slice, so the driver
+    value-hashes real codec math, not a stub. Plan shape: scan ->
+    mapInPandas -> result, zero shuffle — embarrassingly parallel at any
+    corpus size (reference disposition: the MapReduce lab has no media
+    surface; this extends the north-star multimodal set)."""
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .where((F.col("doc_id") % 8) == 7)
+        .where(_plant_class(F.col("doc_id")) == 7)
     )
-    n_px = PLANT_W * PLANT_H
+    win = PLANT_W * PLANT_H // AUDIO_ENERGY_WINDOWS
 
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def row(doc_id, text):
+        _, samples, _ = decode_blob(_plant_blob(int(doc_id), text), "audio")
+        v = samples[:, 0].astype(np.int64)
+        for k in range(AUDIO_ENERGY_WINDOWS):
+            wv = v[win * k : win * (k + 1)]
+            yield (int(doc_id), k, int((wv * wv).sum()), int(np.abs(wv).max()))
 
-        from map_reduce_go_spark.functions.wav_codec import (
-            decode_wav,
-            wrap_g711_payload,
-        )
-
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "window_idx", "energy", "peak")}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = (text or "").encode("utf-8")
-                payload = raw[:n_px] + bytes(n_px - min(len(raw), n_px))
-                samples, _rate = decode_wav(
-                    wrap_g711_payload(payload, "mulaw", 8_000, 1)
-                )
-                v = samples[:, 0].astype(np.int64)
-                win = n_px // AUDIO_ENERGY_WINDOWS
-                for k in range(AUDIO_ENERGY_WINDOWS):
-                    wv = v[win * k : win * (k + 1)]
-                    rows["doc_id"].append(int(doc_id))
-                    rows["window_idx"].append(k)
-                    rows["energy"].append(int((wv * wv).sum()))
-                    rows["peak"].append(int(np.abs(wv).max()))
-            yield pd.DataFrame(rows)
-
-    return docs.mapInPandas(batches, schema=ENERGY_SCHEMA)
+    return _map_rows(docs, ("doc_id", "text"), ENERGY_SCHEMA, row)
 
 
 def decode_blobs_with_quarantine(blobs: DataFrame) -> DataFrame:
-    """Row-level fault tolerance for the real decode path (VERDICT r10
-    brief #2): a per-blob try/except INSIDE the Arrow batch loop routes
-    each failure to a ``(doc_id, error_class)`` quarantine row instead of
-    failing the task — the row-level analog of the reference
-    coordinator's task re-execution (src/mr/coordinator.go:114-138, where
-    a bad task is retried/reassigned rather than killing the job; here a
-    bad ROW is recorded and skipped, because retrying deterministic
-    corruption is useless). Healthy rows carry real decode facts (pixel
-    dims + pixel sum for PNG; channels/frames + sample sum for WAV), so
-    downstream feature extraction consumes ``status = 'ok'`` rows only
-    and a separate audit sink keeps the quarantined ones.
+    """Row-level fault tolerance for the real decode path: each blob's
+    :func:`decode_blob` failure becomes a ``(doc_id, error_class)``
+    quarantine row instead of failing the task — the row-level analog of
+    the reference coordinator's task re-execution
+    (src/mr/coordinator.go:114-138, where a bad task is reassigned rather
+    than killing the job; here a bad ROW is recorded and skipped, because
+    retrying deterministic corruption is useless). Healthy rows carry
+    real decode facts: ``px_w``/``px_h`` are the pixel width and height
+    of an image, or the channels and frames of audio, and ``pix_sum`` is
+    the sum of every decoded value. Downstream feature extraction
+    consumes ``status = 'ok'`` rows only, and a separate audit sink keeps
+    the quarantined ones.
 
     Deterministic error classes:
 
-    - ``empty_blob``          zero-length payload (pre-decode check)
-    - ``unsupported_format``  magic matches none of PNG/WAV/BMP/JPEG, or
-                              a recognized container uses features
-                              outside the codec's scope (e.g. 16-bit or
-                              RLE BMP, lossless/CMYK JPEG, float-PCM or
-                              perceptual-codec WAV tags) — the same seam
-                              that raises NotImplementedError in the
-                              fail-fast operators
-    - ``corrupt_data``        a supported container whose parse or
+    - ``empty_blob``          zero-length or NULL payload
+    - ``unsupported_format``  a container no codec implements, or a
+                              known container using features outside
+                              its codec's scope (e.g. 16-bit or RLE4
+                              BMP, lossless/CMYK JPEG, float-PCM WAV) —
+                              the ``NotImplementedError`` the fail-fast
+                              operators raise
+    - ``corrupt_data``        a known container whose parse or
                               decompress fails (truncation, bad CRC,
                               malformed chunks)
 
@@ -915,110 +749,66 @@ def decode_blobs_with_quarantine(blobs: DataFrame) -> DataFrame:
     like the input: re-ingest retries read it, and its error_class
     histogram is the crawl-health dashboard."""
 
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
+    def row(doc_id, blob):
+        err, facts = None, (None, None, None)
+        if blob is None or len(blob) == 0:
+            err = "empty_blob"
+        else:
+            try:
+                _, arr, _ = decode_blob(bytes(blob))
+                facts = (int(arr.shape[1]), int(arr.shape[0]), int(arr.astype(np.int64).sum()))
+            except NotImplementedError:
+                err = "unsupported_format"
+            except Exception:  # parse/zlib/struct failures
+                err = "corrupt_data"
+        yield (int(doc_id), "ok" if err is None else "quarantined", err, *facts)
 
-        from map_reduce_go_spark.functions.bmp_codec import decode_bmp, is_bmp
-        from map_reduce_go_spark.functions.jpeg_codec import decode_jpeg, is_jpeg
-        from map_reduce_go_spark.functions.png_codec import decode_png, is_png
-        from map_reduce_go_spark.functions.wav_codec import decode_wav, is_wav
-
-        cols = ("doc_id", "status", "error_class", "px_w", "px_h", "pix_sum")
-        for pdf in it:
-            rows = {k: [] for k in cols}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                status, err = "ok", None
-                w = h = s = None
-                try:
-                    raw = bytes(blob) if blob is not None else b""
-                    if len(raw) == 0:
-                        raise _Quarantine("empty_blob")
-                    if is_png(raw):
-                        px = decode_png(raw)
-                        h, w = int(px.shape[0]), int(px.shape[1])
-                        s = int(px.astype("int64").sum())
-                    elif is_wav(raw):
-                        samples, _rate = decode_wav(raw)
-                        h, w = int(samples.shape[0]), int(samples.shape[1])
-                        s = int(samples.astype("int64").sum())
-                    elif is_bmp(raw):
-                        px = decode_bmp(raw)
-                        h, w = int(px.shape[0]), int(px.shape[1])
-                        s = int(px.astype("int64").sum())
-                    elif is_jpeg(raw):
-                        px = decode_jpeg(raw)
-                        h, w = int(px.shape[0]), int(px.shape[1])
-                        s = int(px.astype("int64").sum())
-                    else:
-                        raise NotImplementedError("unknown container magic")
-                except _Quarantine as q:
-                    status, err, w, h, s = "quarantined", q.error_class, None, None, None
-                except NotImplementedError:
-                    status, err, w, h, s = "quarantined", "unsupported_format", None, None, None
-                except Exception:  # parse/zlib/struct failures: corrupt row
-                    status, err, w, h, s = "quarantined", "corrupt_data", None, None, None
-                rows["doc_id"].append(int(doc_id))
-                rows["status"].append(status)
-                rows["error_class"].append(err)
-                rows["px_w"].append(w)
-                rows["px_h"].append(h)
-                rows["pix_sum"].append(s)
-            yield pd.DataFrame(rows)
-
-    return blobs.mapInPandas(batches, schema=QUARANTINE_SCHEMA)
+    return _map_rows(blobs, ("doc_id", "blob"), QUARANTINE_SCHEMA, row)
 
 
 @register(
     "multimodal_quarantine_audit",
     oracle=f"""
+    WITH p AS (SELECT doc_id, text, {_PLANT_SQL} AS plant FROM documents)
     SELECT doc_id,
-           CASE WHEN CAST(doc_id % 8 AS INTEGER) IN (0, 1, 2)
-                THEN 'quarantined' ELSE 'ok' END AS status,
-           CASE CAST(doc_id % 8 AS INTEGER)
+           CASE WHEN plant IN (0, 1, 2) THEN 'quarantined' ELSE 'ok' END AS status,
+           CASE plant
              WHEN 0 THEN 'corrupt_data'
              WHEN 1 THEN 'unsupported_format'
              WHEN 2 THEN 'empty_blob'
              ELSE NULL END AS error_class,
-           CASE WHEN CAST(doc_id % 8 AS INTEGER) IN (3, 4, 5) THEN {PLANT_W}
-                WHEN CAST(doc_id % 8 AS INTEGER) = 6 THEN {2 * PLANT_W}
-                WHEN CAST(doc_id % 8 AS INTEGER) = 7 THEN 1
+           CASE WHEN plant IN (3, 4, 5) THEN {PLANT_W}
+                WHEN plant = 6 THEN {2 * PLANT_W}
+                WHEN plant = 7 THEN 1
            END AS px_w,
-           CASE WHEN CAST(doc_id % 8 AS INTEGER) IN (3, 4, 5, 6)
-                THEN {PLANT_H}
-                WHEN CAST(doc_id % 8 AS INTEGER) = 7 THEN {PLANT_W * PLANT_H}
+           CASE WHEN plant IN (3, 4, 5, 6) THEN {PLANT_H}
+                WHEN plant = 7 THEN {PLANT_W * PLANT_H}
            END AS px_h,
-           CASE WHEN CAST(doc_id % 8 AS INTEGER) IN (3, 4, 5)
+           CASE WHEN plant IN (3, 4, 5)
                 THEN CAST(COALESCE(list_sum(list_transform(
                        range(1, least(length(text), {PLANT_W * PLANT_H}) + 1),
                        i -> ascii(substring(text, i, 1)))), 0) AS BIGINT)
-                WHEN CAST(doc_id % 8 AS INTEGER) = 6
+                WHEN plant = 6
                 THEN CAST({PLANT_W * PLANT_H} * (
                        COALESCE(ascii(substring(text, 1, 1)), 0)
                        + COALESCE(ascii(substring(text, 2, 1)), 0)) AS BIGINT)
-                WHEN CAST(doc_id % 8 AS INTEGER) = 7
-                THEN CAST(list_sum(list_transform(
-                       range(1, {PLANT_W * PLANT_H} + 1),
-                       i -> {_mulaw_val_sql(
-                           "COALESCE(ascii(substring(text,"
-                           " CAST(i AS BIGINT), 1)), 0)"
-                       )})) AS BIGINT)
+                WHEN plant = 7
+                THEN CAST(list_sum({_MULAW_VALS_SQL}) AS BIGINT)
            END AS pix_sum
-    FROM documents
+    FROM p
     """,
 )
 def multimodal_quarantine_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end row-level resilience over a planted-corruption corpus:
-    REAL decode per blob across FIVE container classes (PNG, BMP,
-    baseline JPEG — the first entropy-coded one, r13 — and, also r13,
-    G.711 u-law WAV, the first compressed AUDIO one), failures
-    quarantined with a deterministic error class, healthy rows emitting
-    real pixel/sample facts. The oracle
-    predicts every row's fate in SQL because the fixture's corruption is
-    a pure function of doc_id and the payload is the document's
-    leading ASCII bytes: for PNG/BMP the decoded pixel sum equals the
-    char-code sum DuckDB computes; for JPEG the two constant 8x8 blocks
-    round-trip exactly (quant=1), so the sum is 32*(byte1+byte2); for
-    u-law WAV the oracle applies the actual ITU-T G.711 expansion
-    arithmetic per compressed byte — the driver value-hashes the whole
-    decode-or-quarantine decision, not just the happy path."""
+    real decode per blob across every container :func:`decode_blob`
+    knows (PNG, BMP, JPEG baseline and progressive, G.711 u-law WAV),
+    failures quarantined with a deterministic error class, healthy rows
+    emitting real pixel/sample facts. The oracle predicts every row's
+    fate in SQL because the plant is a pure function of doc_id and the
+    payload is the document's leading ASCII bytes: for PNG/BMP the
+    decoded pixel sum equals the char-code sum DuckDB computes; for JPEG
+    the two constant 8x8 blocks round-trip exactly (quant=1), so the sum
+    is 32*(byte1+byte2); for u-law WAV the oracle applies the ITU-T G.711
+    expansion arithmetic per compressed byte — the driver value-hashes
+    the whole decode-or-quarantine decision, not just the happy path."""
     return decode_blobs_with_quarantine(planted_corrupt_blobs(spark, sf_dir))

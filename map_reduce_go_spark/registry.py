@@ -87,6 +87,13 @@ _JUMP: dict[str, int] = {
          "events_multi_granularity_rollup", "union_by_name_schema_evolution"],
         17,
     ),
+    # the one media-decode layer: decode_blob, the row helper, the plant
+    # and the oracles' modality/plant/G.711 fragments
+    **dict.fromkeys(
+        ["multimodal_feature_stub", "multimodal_resize_stub", "multimodal_audio_resample_stub",
+         "multimodal_frame_sample", "mulaw_audio_energy_windows", "multimodal_quarantine_audit"],
+        17,
+    ),
 }
 
 

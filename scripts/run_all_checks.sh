@@ -61,6 +61,11 @@ echo "== determinism sweep, 32 vs 7 partitions, event-time family =="
 python scripts/determinism_sweep.py --mode=partitions --only=\
 events_tumbling_window,events_sliding_window,events_session_window,events_sessionize,\
 session_path_patterns,purchase_click_attribution_outer
+echo "== determinism sweep, 32 vs 7 partitions, multimodal family =="
+python scripts/determinism_sweep.py --mode=partitions --only=\
+multimodal_blob_meta,multimodal_feature_stub,multimodal_resize_stub,\
+multimodal_audio_resample_stub,multimodal_frame_sample,mulaw_audio_energy_windows,\
+multimodal_quarantine_audit
 echo "== bench sf0.1 =="
 python bench.py
 # Optional (slow, ~8 min/mode): value-hash invariance across planner paths.

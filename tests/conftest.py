@@ -28,6 +28,22 @@ def sf_dir():
     return TEST_SF_DIR
 
 
+@pytest.fixture(scope="session")
+def blob_frame(spark):
+    """``blob_frame(items, modality=None)``: a frame on the multimodal blob
+    schema from ``(doc_id, bytes or None)`` pairs, plus a constant
+    ``modality`` column when one is given (``extract_features`` reads it)."""
+    from pyspark.sql import functions as F
+
+    from map_reduce_go_spark.operators.multimodal import BLOB_SCHEMA
+
+    def make(items, modality=None):
+        df = spark.createDataFrame([(int(i), b) for i, b in items], BLOB_SCHEMA)
+        return df if modality is None else df.withColumn("modality", F.lit(modality))
+
+    return make
+
+
 @pytest.fixture(autouse=True)
 def _release_tracked_caches():
     """Query-owned caches release after every test — the same hygiene the

@@ -9,7 +9,6 @@ from __future__ import annotations
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from map_reduce_go_spark.functions.png_codec import encode_png
 from map_reduce_go_spark.operators.multimodal import (
@@ -19,18 +18,6 @@ from map_reduce_go_spark.operators.multimodal import (
     extract_features,
     planted_corrupt_blobs,
 )
-
-_BLOB_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("blob", BinaryType(), True),
-    ]
-)
-
-
-def _blob_df(spark, rows):
-    return spark.createDataFrame(rows, schema=_BLOB_SCHEMA)
-
 
 def test_planted_fixture_fates_are_exhaustive(spark, sf_dir):
     """Every input doc produces exactly one output row; statuses and
@@ -101,7 +88,7 @@ def test_ok_rows_carry_real_decode_facts(spark, sf_dir):
     assert checked > 50 and jpeg_checked > 10 and wav_checked > 10
 
 
-def test_error_classes_per_corruption_shape(spark):
+def test_error_classes_per_corruption_shape(blob_frame):
     """Hand-built blobs hit each class: bad-CRC PNG (supported container,
     corrupt payload), foreign magic, empty, a 16-bit WAV that must
     decode on the ok path, and — r13 — JPEG in all three fates:
@@ -151,8 +138,7 @@ def test_error_classes_per_corruption_shape(spark):
     out = {
         r["doc_id"]: r
         for r in decode_blobs_with_quarantine(
-            _blob_df(
-                spark,
+            blob_frame(
                 [
                     (0, bytes(good)),
                     (1, bytes(bad_crc)),

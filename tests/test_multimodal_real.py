@@ -73,20 +73,7 @@ def test_png_decoder_rejects_unsupported():
 # ---------------------------------------------------------------- operators
 
 
-def _blob_df(spark, items, with_modality=True):
-    rows = [
-        (int(i), bytearray(b), "image") if with_modality else (int(i), bytearray(b))
-        for i, b in items
-    ]
-    schema = (
-        "doc_id long, blob binary, modality string"
-        if with_modality
-        else "doc_id long, blob binary"
-    )
-    return spark.createDataFrame(rows, schema)
-
-
-def test_extract_features_real_decodes_png_pixels(spark):
+def test_extract_features_real_decodes_png_pixels(blob_frame):
     from map_reduce_go_spark.operators.multimodal import extract_features
 
     rng = _rng(1)
@@ -94,7 +81,7 @@ def test_extract_features_real_decodes_png_pixels(spark):
         0: rng.integers(0, 256, size=(12, 8), dtype=np.uint8),
         1: rng.integers(0, 256, size=(5, 9, 3), dtype=np.uint8),
     }
-    df = _blob_df(spark, [(i, encode_png(a)) for i, a in imgs.items()])
+    df = blob_frame([(i, encode_png(a)) for i, a in imgs.items()], "image")
     out = {r["doc_id"]: r for r in extract_features(df, decode_mode="real").collect()}
     for i, a in imgs.items():
         r = out[i]
@@ -107,23 +94,30 @@ def test_extract_features_real_decodes_png_pixels(spark):
         )
 
 
-def test_resize_real_matches_numpy_nearest_neighbor(spark):
+def test_resize_real_matches_numpy_nearest_neighbor(blob_frame):
+    """Every image container resizes: the grid is the nearest-neighbor
+    sample of the codec's own decoded pixels, averaged to gray."""
+    from map_reduce_go_spark.functions.bmp_codec import decode_bmp, encode_bmp
+    from map_reduce_go_spark.functions.jpeg_codec import decode_jpeg, encode_jpeg
     from map_reduce_go_spark.operators.multimodal import resize_images
 
     rng = _rng(2)
     img = rng.integers(0, 256, size=(32, 24, 3), dtype=np.uint8)
-    df = _blob_df(spark, [(0, encode_png(img))], with_modality=False)
-    row = resize_images(df, width=8, height=8, decode_mode="real").collect()[0]
-    gray = img.mean(axis=2).astype(np.uint8)
+    codecs = ((encode_png, decode_png), (encode_bmp, decode_bmp), (encode_jpeg, decode_jpeg))
+    blobs = [encode(img) for encode, _ in codecs]
+    df = blob_frame(enumerate(blobs))
+    rows = {r["doc_id"]: r for r in resize_images(df, width=8, height=8, decode_mode="real").collect()}
     ys = (np.arange(8) * 32) // 8
     xs = (np.arange(8) * 24) // 8
-    expect = gray[np.ix_(ys, xs)].astype(np.float32) / 255.0
-    np.testing.assert_allclose(
-        np.array(row["pixels"]).reshape(8, 8), expect, rtol=1e-6
-    )
+    for i, ((_, decode), blob) in enumerate(zip(codecs, blobs)):
+        gray = decode(blob).mean(axis=2).astype(np.uint8)
+        expect = gray[np.ix_(ys, xs)].astype(np.float32) / 255.0
+        np.testing.assert_allclose(
+            np.array(rows[i]["pixels"]).reshape(8, 8), expect, rtol=1e-6
+        )
 
 
-def test_sample_frames_real_decodes_concatenated_png_stream(spark):
+def test_sample_frames_real_decodes_concatenated_png_stream(blob_frame):
     from map_reduce_go_spark.operators.multimodal import sample_frames
 
     rng = _rng(3)
@@ -131,7 +125,7 @@ def test_sample_frames_real_decodes_concatenated_png_stream(spark):
         rng.integers(0, 256, size=(6, 6), dtype=np.uint8) for _ in range(3)
     ]
     stream = b"".join(encode_png(f) for f in frames)
-    df = _blob_df(spark, [(0, stream)], with_modality=False)
+    df = blob_frame([(0, stream)])
     rows = sorted(
         sample_frames(df, n_frames=4, decode_mode="real").collect(),
         key=lambda r: r["frame_idx"],
@@ -211,7 +205,7 @@ def test_png_stream_offsets_ignores_embedded_signature():
         png_stream_offsets(before + b"garbage" + after)
 
 
-def test_sample_frames_real_survives_signature_in_idat(spark):
+def test_sample_frames_real_survives_signature_in_idat(blob_frame):
     """End-to-end: sample_frames real mode over a stream whose middle
     frame embeds the signature in IDAT still yields the correct
     per-frame boundaries, offsets, and pixel digests."""
@@ -222,7 +216,7 @@ def test_sample_frames_real_survives_signature_in_idat(spark):
     f0 = rng.integers(0, 256, size=(4, 4), dtype=np.uint8)
     f2 = rng.integers(0, 256, size=(3, 5), dtype=np.uint8)
     stream = encode_png(f0) + evil + encode_png(f2)
-    df = _blob_df(spark, [(0, stream)], with_modality=False)
+    df = blob_frame([(0, stream)])
     rows = sorted(
         sample_frames(df, n_frames=3, decode_mode="real").collect(),
         key=lambda r: r["frame_idx"],
@@ -236,7 +230,7 @@ def test_sample_frames_real_survives_signature_in_idat(spark):
     assert [r["frame_offset"] for r in rows] == offs
 
 
-def test_real_mode_still_raises_for_foreign_formats(spark):
+def test_real_mode_still_raises_for_foreign_formats(blob_frame):
     from map_reduce_go_spark.operators.multimodal import (
         extract_features,
         resize_images,
@@ -247,8 +241,8 @@ def test_real_mode_still_raises_for_foreign_formats(spark):
     # GIF: a real container none of the repo's codecs implement (JPEG
     # stopped being foreign in r13 — extract_features now decodes it).
     foreign = b"GIF87a" + bytes(64)
-    df3 = _blob_df(spark, [(0, foreign)])
-    df2 = _blob_df(spark, [(0, foreign)], with_modality=False)
+    df3 = blob_frame([(0, foreign)], "image")
+    df2 = blob_frame([(0, foreign)])
     for frame in (
         extract_features(df3, decode_mode="real"),
         resize_images(df2, decode_mode="real"),
@@ -323,7 +317,7 @@ def test_wav_decoder_rejects_non_pcm16():
         decode_wav(b"RIFX" + bytes(16))
 
 
-def test_extract_features_real_decodes_wav_samples(spark):
+def test_extract_features_real_decodes_wav_samples(blob_frame):
     """The audio seam EXECUTES: 16-bit PCM WAV blobs decode through the
     stdlib codec inside the Arrow-batched operator, and the 16-bin
     amplitude histogram matches numpy ground truth — including a mixed
@@ -341,7 +335,7 @@ def test_extract_features_real_decodes_wav_samples(spark):
     out = {
         r["doc_id"]: r
         for r in extract_features(
-            _blob_df(spark, items), decode_mode="real"
+            blob_frame(items, "image"), decode_mode="real"
         ).collect()
     }
     for i, a in wavs.items():
@@ -359,7 +353,7 @@ def test_extract_features_real_decodes_wav_samples(spark):
     assert out[2]["fake_width"] == 7 and out[2]["fake_height"] == 6
 
 
-def test_resample_audio_real_downmixes_and_strides(spark):
+def test_resample_audio_real_downmixes_and_strides(blob_frame):
     """The audio transform seam EXECUTES (VERDICT r9 brief #6): stereo
     16-bit PCM decodes, downmixes by integer floor-mean, and
     nearest-neighbor resamples to the target rate — against numpy ground
@@ -372,7 +366,7 @@ def test_resample_audio_real_downmixes_and_strides(spark):
     stereo = rng.integers(-32768, 32768, size=(300, 2), dtype=np.int16)
     mono = rng.integers(-32768, 32768, size=(101, 1), dtype=np.int16)
     items = [(0, encode_wav(stereo, rate=16_000)), (1, encode_wav(mono, rate=12_000))]
-    df = _blob_df(spark, items, with_modality=False)
+    df = blob_frame(items)
     out = {
         r["doc_id"]: r
         for r in resample_audio(df, out_rate=8_000, decode_mode="real").collect()
@@ -388,17 +382,20 @@ def test_resample_audio_real_downmixes_and_strides(spark):
         assert list(r["samples"]) == dm[idx].tolist()
 
 
-def test_resample_audio_real_rejects_foreign_formats(spark):
+def test_resample_audio_real_rejects_foreign_formats(blob_frame):
     from map_reduce_go_spark.operators.multimodal import resample_audio
     from pyspark.errors.exceptions.captured import PythonException
 
-    df = _blob_df(spark, [(0, b"\xff\xfb" + bytes(64))], with_modality=False)
-    with pytest.raises(PythonException) as ei:
-        resample_audio(df, decode_mode="real").collect()
-    assert "NotImplementedError" in str(ei.value)
+    # An mp3 frame header (no codec) and a PNG (a codec of the wrong kind).
+    png = encode_png(np.zeros((2, 2), dtype=np.uint8))
+    for blob in (b"\xff\xfb" + bytes(64), png):
+        with pytest.raises(PythonException) as ei:
+            resample_audio(blob_frame([(0, blob)]), decode_mode="real").collect()
+        assert "NotImplementedError" in str(ei.value)
+        assert "audio decode supports WAV" in str(ei.value)
 
 
-def test_sample_frames_real_windows_wav_audio(spark):
+def test_sample_frames_real_windows_wav_audio(blob_frame):
     """Audio window sampling: a PCM WAV blob fans out to n uniform
     fixed-length sample windows with per-window digests — the audio
     analog of video frame sampling, same schema and fanout contract."""
@@ -407,7 +404,7 @@ def test_sample_frames_real_windows_wav_audio(spark):
 
     rng = _rng(13)
     samples = rng.integers(-32768, 32768, size=(240, 1), dtype=np.int16)
-    df = _blob_df(spark, [(0, encode_wav(samples))], with_modality=False)
+    df = blob_frame([(0, encode_wav(samples))])
     rows = sorted(
         sample_frames(df, n_frames=4, decode_mode="real").collect(),
         key=lambda r: r["frame_idx"],
@@ -520,7 +517,7 @@ def test_bmp_sniff_rejects_bm_prefixed_text():
     assert is_bmp(bytes(core))
 
 
-def test_extract_features_real_decodes_bmp_pixels(spark):
+def test_extract_features_real_decodes_bmp_pixels(blob_frame):
     """The real feature extractor consumes BMP through the same dispatch
     as PNG: same pixels -> same histogram either way."""
     from map_reduce_go_spark.functions.bmp_codec import encode_bmp
@@ -528,10 +525,7 @@ def test_extract_features_real_decodes_bmp_pixels(spark):
     from map_reduce_go_spark.operators.multimodal import extract_features
 
     img = (np.arange(32, dtype=np.uint8) * 3).reshape(4, 8)
-    df = spark.createDataFrame(
-        [(1, bytes(encode_png(img)), "image"), (2, bytes(encode_bmp(img)), "image")],
-        "doc_id long, blob binary, modality string",
-    )
+    df = blob_frame([(1, encode_png(img)), (2, encode_bmp(img))], "image")
     rows = {r["doc_id"]: r for r in extract_features(df, decode_mode="real").collect()}
     assert rows[1]["bin_counts"] == rows[2]["bin_counts"]
     assert (rows[2]["fake_width"], rows[2]["fake_height"]) == (8, 4)
@@ -681,7 +675,7 @@ def test_jpeg_sniff_needs_marker_structure():
     assert is_jpeg(encode_jpeg(np.zeros((1, 1), dtype=np.uint8)))
 
 
-def test_extract_features_real_decodes_jpeg_pixels(spark):
+def test_extract_features_real_decodes_jpeg_pixels(blob_frame):
     """The real feature extractor consumes JPEG through the same dispatch
     as PNG/BMP: same (constant-block) pixels -> same histogram."""
     from map_reduce_go_spark.functions.jpeg_codec import encode_jpeg
@@ -691,10 +685,7 @@ def test_extract_features_real_decodes_jpeg_pixels(spark):
     img = np.hstack(
         [np.full((4, 8), 65, np.uint8), np.full((4, 8), 200, np.uint8)]
     )
-    df = spark.createDataFrame(
-        [(1, bytes(encode_png(img)), "image"), (2, bytes(encode_jpeg(img)), "image")],
-        "doc_id long, blob binary, modality string",
-    )
+    df = blob_frame([(1, encode_png(img)), (2, encode_jpeg(img))], "image")
     rows = {r["doc_id"]: r for r in extract_features(df, decode_mode="real").collect()}
     assert rows[1]["bin_counts"] == rows[2]["bin_counts"]
     assert (rows[2]["fake_width"], rows[2]["fake_height"]) == (16, 4)
@@ -1021,7 +1012,7 @@ def test_png_trns_seams_by_color_type():
             decode_png(blob[:i] + chunk(b"tRNS", payload) + blob[i:])
 
 
-def test_resample_audio_real_handles_g711(spark):
+def test_resample_audio_real_handles_g711(blob_frame):
     """The registered resample surface consumes non-PCM WAV through the
     same decode_wav dispatch: a u-law stereo blob downmixes and strides
     exactly like the equivalent pre-decoded PCM blob."""
@@ -1039,9 +1030,7 @@ def test_resample_audio_real_handles_g711(spark):
     # decode to identical arrays and must resample identically.
     decoded, _ = decode_wav(g711_blob)
     pcm_blob = encode_wav(decoded, rate=8000)
-    df = spark.createDataFrame(
-        [(1, g711_blob), (2, pcm_blob)], "doc_id long, blob binary"
-    )
+    df = blob_frame([(1, g711_blob), (2, pcm_blob)])
     rows = {
         r["doc_id"]: r
         for r in resample_audio(df, decode_mode="real").collect()
@@ -1182,7 +1171,7 @@ def test_jpeg_color_scope_seams():
         decode_jpeg(bytes(dup_ids))
 
 
-def test_extract_features_and_quarantine_consume_color_jpeg(spark):
+def test_extract_features_and_quarantine_consume_color_jpeg(blob_frame):
     """Color blobs flow through the same operator dispatch: the
     histogram covers all three channels, quarantine reports the 2-D
     geometry plus the all-channel sum."""
@@ -1196,9 +1185,7 @@ def test_extract_features_and_quarantine_consume_color_jpeg(spark):
     img = rng.integers(0, 256, (12, 10, 3), dtype=np.uint8)
     blob = encode_jpeg(img, subsampling="420")
     px = decode_jpeg(blob)  # ground truth through the public API
-    df = spark.createDataFrame(
-        [(1, bytes(blob), "image")], "doc_id long, blob binary, modality string"
-    )
+    df = blob_frame([(1, blob)], "image")
     feat = extract_features(df, decode_mode="real").collect()[0]
     want_hist = np.bincount(px.reshape(-1) >> 4, minlength=16)
     assert feat["bin_counts"] == [int(x) for x in want_hist]
@@ -1330,7 +1317,7 @@ def test_jpeg_progressive_scan_structure_seams():
         decode_jpeg(bytes(blob))
 
 
-def test_jpeg_progressive_flows_through_operators(spark):
+def test_jpeg_progressive_flows_through_operators(blob_frame):
     """A progressive blob decodes through the quarantine dispatch with
     the same facts as its baseline twin."""
     from map_reduce_go_spark.functions.jpeg_codec import decode_jpeg, encode_jpeg
@@ -1344,7 +1331,7 @@ def test_jpeg_progressive_flows_through_operators(spark):
         (1, bytes(encode_jpeg(img, subsampling="420"))),
         (2, bytes(encode_jpeg(img, subsampling="420", progressive=True))),
     ]
-    df = spark.createDataFrame(pair, "doc_id long, blob binary")
+    df = blob_frame(pair)
     rows = {r["doc_id"]: r for r in decode_blobs_with_quarantine(df).collect()}
     assert rows[1]["status"] == rows[2]["status"] == "ok"
     assert rows[1]["pix_sum"] == rows[2]["pix_sum"]
@@ -1477,7 +1464,7 @@ def test_bmp_24bit_roundtrip_and_cross_codec_agreement():
         decode_bmp(blob[: len(blob) - 2])
 
 
-def test_png_adam7_interlaced_roundtrip_and_operator_flow(spark):
+def test_png_adam7_interlaced_roundtrip_and_operator_flow(blob_frame):
     """Adam7 interlaced PNG (late r13: the other layout real web
     encoders emit) round-trips bit-exactly across shapes where passes
     go empty (1x1, single row/column) and across all five filters —
@@ -1498,9 +1485,7 @@ def test_png_adam7_interlaced_roundtrip_and_operator_flow(spark):
     seq = encode_png(img)
     lace = encode_png(img, interlaced=True)
     assert seq != lace  # genuinely different layouts on the wire
-    df = spark.createDataFrame(
-        [(1, bytes(seq)), (2, bytes(lace))], "doc_id long, blob binary"
-    )
+    df = blob_frame([(1, seq), (2, lace)])
     rows = {r["doc_id"]: r for r in decode_blobs_with_quarantine(df).collect()}
     assert rows[1]["status"] == rows[2]["status"] == "ok"
     assert rows[1]["pix_sum"] == rows[2]["pix_sum"] == int(img.astype("int64").sum())
@@ -1509,9 +1494,7 @@ def test_png_adam7_interlaced_roundtrip_and_operator_flow(spark):
     # Shrink the IDAT payload by rebuilding with truncated raw stream:
     # simplest adversarial form — chop the file mid-IDAT.
     assert decode_blobs_with_quarantine(
-        spark.createDataFrame(
-            [(3, bytes(short[: len(short) // 2]))], "doc_id long, blob binary"
-        )
+        blob_frame([(3, short[: len(short) // 2])])
     ).collect()[0]["status"] == "quarantined"
 
 

@@ -23,22 +23,11 @@ _STATUSES = {"ok", "quarantined"}
 _CLASSES = {None, "empty_blob", "unsupported_format", "corrupt_data"}
 
 
-def _decode_all(spark, blobs: list[bytes | None]):
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
-
-    df = spark.createDataFrame(
-        list(enumerate(blobs)),
-        StructType(
-            [
-                StructField("doc_id", LongType(), False),
-                StructField("blob", BinaryType(), True),
-            ]
-        ),
-    )
-    return decode_blobs_with_quarantine(df).collect()
+def _decode_all(blob_frame, blobs: list[bytes | None]):
+    return decode_blobs_with_quarantine(blob_frame(enumerate(blobs))).collect()
 
 
-def test_fuzz_random_blobs_never_fail_the_task(spark):
+def test_fuzz_random_blobs_never_fail_the_task(blob_frame):
     """512 adversarial blobs in one pass: pure random bytes, PNG/WAV/JPEG
     magic over garbage, and every-offset truncations of a valid PNG —
     exactly one output row per input, status/error_class from the closed
@@ -52,7 +41,7 @@ def test_fuzz_random_blobs_never_fail_the_task(spark):
     blobs += [b"\xff\xd8\xff\xe0" + rng.bytes(int(n)) for n in rng.integers(0, 60, size=40)]
     blobs += [bytes(png[:k]) for k in range(len(png))]  # every truncation point
     blobs += [bytes(png)]  # and the one valid file
-    rows = _decode_all(spark, blobs)
+    rows = _decode_all(blob_frame, blobs)
     assert len(rows) == len(blobs)
     ok = 0
     for r in rows:
@@ -74,7 +63,7 @@ def test_fuzz_random_blobs_never_fail_the_task(spark):
         assert by_id[first_trunc + k]["status"] == "quarantined", k
 
 
-def test_fuzz_bmp_truncations_and_garbage_never_fail_the_task(spark):
+def test_fuzz_bmp_truncations_and_garbage_never_fail_the_task(blob_frame):
     """BMP twin of the PNG fuzz (the r12 third container): every-offset
     truncations of a valid 8-bit BMP, BM-magic over garbage, and a
     well-formed-but-out-of-scope 24-bit header. BMP has no checksums, so
@@ -95,7 +84,7 @@ def test_fuzz_bmp_truncations_and_garbage_never_fail_the_task(spark):
     deep = bytearray(bmp)
     deep[28] = 16
     blobs += [bytes(deep)]
-    rows = _decode_all(spark, blobs)
+    rows = _decode_all(blob_frame, blobs)
     assert len(rows) == len(blobs)
     by_id = {r["doc_id"]: r for r in rows}
     for k in range(len(bmp)):
@@ -113,7 +102,7 @@ def test_fuzz_bmp_truncations_and_garbage_never_fail_the_task(spark):
         assert r["status"] in _STATUSES and r["error_class"] in _CLASSES
 
 
-def test_fuzz_jpeg_truncations_and_garbage_never_fail_the_task(spark):
+def test_fuzz_jpeg_truncations_and_garbage_never_fail_the_task(blob_frame):
     """JPEG twin of the PNG/BMP fuzz (the r13 fourth container): every-
     offset truncations of a valid baseline JPEG, JFIF magic over
     garbage, and a well-formed-but-lossless (SOF3) file. The entropy
@@ -138,7 +127,7 @@ def test_fuzz_jpeg_truncations_and_garbage_never_fail_the_task(spark):
     lossless = bytearray(jpg)
     lossless[jpg.find(b"\xff\xc0") + 1] = 0xC3
     blobs += [bytes(lossless)]
-    rows = _decode_all(spark, blobs)
+    rows = _decode_all(blob_frame, blobs)
     assert len(rows) == len(blobs)
     by_id = {r["doc_id"]: r for r in rows}
     for k in range(len(jpg) - 2):  # strictly before the EOI marker
@@ -154,7 +143,7 @@ def test_fuzz_jpeg_truncations_and_garbage_never_fail_the_task(spark):
         assert r["status"] in _STATUSES and r["error_class"] in _CLASSES
 
 
-def test_fuzz_color_jpeg_truncations_never_fail_the_task(spark):
+def test_fuzz_color_jpeg_truncations_never_fail_the_task(blob_frame):
     """Color-JPEG twin of the grayscale JPEG fuzz (r13: 3-component
     YCbCr, 4:2:0): the interleaved MCU scan adds chroma blocks, a second
     quant table, and four Huffman tables to the byte surface — every
@@ -168,7 +157,7 @@ def test_fuzz_color_jpeg_truncations_never_fail_the_task(spark):
     blobs: list[bytes | None] = [bytes(jpg[:k]) for k in range(len(jpg))]
     full_idx = len(blobs)
     blobs += [bytes(jpg)]
-    rows = _decode_all(spark, blobs)
+    rows = _decode_all(blob_frame, blobs)
     by_id = {r["doc_id"]: r for r in rows}
     for k in range(len(jpg) - 2):  # strictly before the EOI marker
         assert by_id[k]["status"] == "quarantined", k
@@ -180,7 +169,7 @@ def test_fuzz_color_jpeg_truncations_never_fail_the_task(spark):
         assert r["status"] in _STATUSES and r["error_class"] in _CLASSES
 
 
-def test_fuzz_progressive_jpeg_truncations_never_fail_the_task(spark):
+def test_fuzz_progressive_jpeg_truncations_never_fail_the_task(blob_frame):
     """Progressive-JPEG twin (late r13: SOF2 multi-scan decode): the
     byte surface now includes multiple SOS headers, per-scan entropy
     segments, refinement raw-bit streams, and EOB codes — a cut can
@@ -196,7 +185,7 @@ def test_fuzz_progressive_jpeg_truncations_never_fail_the_task(spark):
     blobs: list[bytes | None] = [bytes(jpg[:k]) for k in range(len(jpg))]
     full_idx = len(blobs)
     blobs += [bytes(jpg)]
-    rows = _decode_all(spark, blobs)
+    rows = _decode_all(blob_frame, blobs)
     by_id = {r["doc_id"]: r for r in rows}
     for k in range(len(jpg)):  # every cut (EOI required by the decoder)
         assert by_id[k]["status"] == "quarantined", k
@@ -207,7 +196,7 @@ def test_fuzz_progressive_jpeg_truncations_never_fail_the_task(spark):
         assert r["status"] in _STATUSES and r["error_class"] in _CLASSES
 
 
-def test_fuzz_wav_truncations_and_garbage_never_fail_the_task(spark):
+def test_fuzz_wav_truncations_and_garbage_never_fail_the_task(blob_frame):
     """WAV twin of the image fuzzes, now that the RIFF walk is the repo's
     own (r13, non-PCM support): every-offset truncations of a valid
     G.711 u-law WAV and of an IMA ADPCM WAV. The RIFF layout is
@@ -234,7 +223,7 @@ def test_fuzz_wav_truncations_and_garbage_never_fail_the_task(spark):
         blobs += [bytes(wav[:k]) for k in range(len(wav))]
         blobs += [bytes(wav)]
         marks.append((start, len(wav)))
-    rows = _decode_all(spark, blobs)
+    rows = _decode_all(blob_frame, blobs)
     assert len(rows) == len(blobs)
     by_id = {r["doc_id"]: r for r in rows}
     for start, n in marks:
